@@ -14,10 +14,15 @@ via ``schema=`` exactly like the reference's ``:parser-fn``.
 
 from __future__ import annotations
 
+import glob as _glob
 import os
+import threading
+from collections import OrderedDict
 from collections.abc import Iterable, Mapping
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 # suffix -> (format, default reader options); mirrors str->file-info sniffing
@@ -182,6 +187,147 @@ def _peek_csv_header(spark, path, opts, n_skip: int):
         return None
 
 
+def _hidden(name: str) -> bool:
+    """Spark's rule for the file and directory names its file index skips
+    (``PartitioningAwareFileIndex.shouldFilterOutPathName``): a ``_`` or
+    ``.`` prefix (``_SUCCESS``, ``_temporary/``, ``.part-0.parquet.crc``)
+    or an unfinished ``._COPYING_`` copy. ``_key=value`` partition
+    directories and parquet's ``_metadata`` summaries are read."""
+    if name.startswith(("_metadata", "_common_metadata")):
+        return False
+    return ((name.startswith("_") and "=" not in name)
+            or name.startswith(".") or name.endswith("._COPYING_"))
+
+
+def _visible_files(path: str) -> list[tuple[str, os.stat_result]]:
+    """``(file, stat)`` of every file Spark reads at a local ``path``: the
+    file itself, or the tree under a directory without hidden entries, in
+    sorted order. A missing path has none."""
+    if not os.path.isdir(path):
+        return [(path, os.stat(path))] if os.path.isfile(path) else []
+    out = []
+    for root, dirs, files in os.walk(path, followlinks=True):
+        dirs[:] = sorted(d for d in dirs if not _hidden(d))
+        for f in sorted(files):
+            if not _hidden(f):
+                p = os.path.join(root, f)
+                out.append((p, os.stat(p)))
+    return out
+
+
+class _Learned(NamedTuple):
+    """What a read learns from its input files: the Spark schema, the
+    parquet TIMESTAMP(NANOS) columns and the csv header line."""
+    schema: StructType
+    ns_cols: tuple[str, ...]
+    header: tuple[str, ...] | None
+
+
+# Session confs that change the schema Spark infers from the same files.
+_INFERENCE_CONFS = (
+    "spark.sql.caseSensitive",
+    "spark.sql.timestampType",
+    "spark.sql.legacy.timeParserPolicy",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.orc.mergeSchema",
+)
+# Formats whose inferred schema, handed back through ``reader.schema``,
+# gives the same DataFrame as inferring again.
+_CACHED_FORMATS = ("parquet", "csv", "json", "orc")
+_SCHEMA_CACHE_SIZE = 256
+_schema_cache: OrderedDict[tuple, _Learned] = OrderedDict()
+_schema_cache_lock = threading.Lock()
+
+
+def _input_files(path, fmt: str) -> list[tuple[str, os.stat_result]] | None:
+    """The visible files of a local read input, or None for inputs the
+    schema cache skips: other formats, remote URIs, globs, path lists and
+    missing or empty inputs (scheme-less paths are local, as in
+    :func:`_require_local_path`)."""
+    if fmt not in _CACHED_FORMATS or not isinstance(path, str) \
+            or _glob.has_magic(path) or "{" in path:
+        return None
+    scheme, sep, _ = path.partition(":")
+    if sep and "/" not in scheme:
+        if scheme != "file":
+            return None
+        from urllib.parse import urlparse
+        path = urlparse(path).path
+    try:
+        return _visible_files(path) or None
+    except OSError:  # a file vanished mid-walk: let Spark list the input
+        return None
+
+
+def _schema_key(spark, fmt, opts, files) -> tuple:
+    """Cache key of one read: the format, the sorted reader options, the
+    ``(file, size, mtime_ns)`` fingerprint of the input and the values of
+    the session confs that change inference."""
+    return (fmt, tuple(sorted((k, str(v)) for k, v in opts.items())),
+            tuple((p, st.st_size, st.st_mtime_ns) for p, st in files),
+            tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS))
+
+
+def _nanos_columns(files, path) -> tuple[str, ...]:
+    """TIMESTAMP(NANOS) columns of a parquet input, from the footer of its
+    first data file (driver-side metadata only, no data read)."""
+    target = next((p for p, _ in files
+                   if not os.path.basename(p).startswith("_")), path)
+    try:
+        import pyarrow.parquet as pq
+        schema = pq.read_schema(target)
+    except Exception:
+        return ()
+    return tuple(f.name for f in schema
+                 if str(f.type).startswith("timestamp[ns"))
+
+
+def _load_inferred(spark, fmt: str, opts: dict, path,
+                   *, nanos_as_long: bool = False
+                   ) -> tuple[DataFrame, _Learned]:
+    """``spark.read.format(fmt).options(**opts).load(path)`` with the
+    schema inferred once per input. Inference is a Spark job for parquet
+    (footer read) and a pass over the data for csv/json, so the first
+    read of an input stores what it learned (:class:`_Learned`) under
+    :func:`_schema_key` and later reads of the unchanged input load with
+    ``reader.schema(cached)``: no job, the same DataFrame. Inputs
+    :func:`_input_files` does not list bypass the cache. Parquet reads
+    note the input's nanosecond columns; ``nanos_as_long`` turns on
+    ``spark.sql.legacy.parquet.nanosAsLong`` when there are any."""
+    files = _input_files(path, fmt)
+    key = None if files is None else _schema_key(spark, fmt, opts, files)
+    reader = spark.read.format(fmt).options(**opts)
+    with _schema_cache_lock:
+        learned = _schema_cache.get(key)
+        if learned is not None:
+            _schema_cache.move_to_end(key)
+    if learned is not None:
+        return reader.schema(learned.schema).load(path), learned
+    ns_cols = _nanos_columns(files or (), path) if fmt == "parquet" else ()
+    if ns_cols and nanos_as_long:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        if key is not None:  # the schema below is inferred under it
+            key = _schema_key(spark, fmt, opts, files)
+    df = reader.load(path)
+    header = None
+    if fmt == "csv" and str(opts.get("header", "")).lower() == "true":
+        header = _peek_csv_header(spark, path, opts, 0)
+    # a copy: the cached value must not alias the caller's df.schema
+    learned = _Learned(StructType.fromJson(df.schema.jsonValue()), ns_cols,
+                       None if header is None else tuple(header))
+    if key is not None and learned.schema.fields:
+        with _schema_cache_lock:
+            _schema_cache[key] = learned
+            if len(_schema_cache) > _SCHEMA_CACHE_SIZE:
+                _schema_cache.popitem(last=False)
+    return df, learned
+
+
 def _render_column_key(k) -> str:
     """Spark column names are strings: render non-string mapseq/colmap
     keys the way ``cast(string)`` would (True -> 'true', so the
@@ -297,6 +443,22 @@ def to_dataset(
     Detection reads the header line once driver-side (a one-line text
     job) — only on path-based csv reads with a header.
 
+    Path reads infer each input's schema once. The first read of a local
+    parquet/csv/json/orc file or directory stores the inferred schema
+    (and, for csv with a header, the peeked header line) in a bounded
+    in-process cache; a later read of the unchanged input loads with that
+    schema and launches no Spark job (inference is a footer job for
+    parquet and a full data pass for csv/json). The key is the format,
+    the sorted reader options, the ``(file, size, mtime_ns)`` of every
+    file Spark would read (hidden ``_``/``.`` entries excluded) and the
+    session confs that change inference (``spark.sql.caseSensitive``,
+    ``spark.sql.timestampType``, the parquet type-mapping confs, ...), so
+    a rewritten file, an added partition or a flipped conf infers again.
+    Remote URIs, globs, path lists, explicit ``schema=`` reads and the
+    ``n_initial_skip_rows``/``ragged`` text path bypass the cache. The
+    duplicate-header law and the ``_cN`` -> ``column-N`` renaming run on
+    every read.
+
     ``ragged=True`` mirrors the reference's ragged-row parse
     (parse_test.clj:337-349): the table widens to the LONGEST row (Spark's
     native reader sizes columns from the first row and silently DROPS
@@ -341,6 +503,7 @@ def to_dataset(
                     out_f.write(chunk)
             data = local
         fmt, opts = (file_type, {}) if file_type else sniff_format(data)
+        learned = None  # what a cached-schema load learned from the files
         opts.update({k: v for k, v in options.items() if v is not None})
         if bad_row_policy is not None:
             opts["mode"] = {"skip": "DROPMALFORMED", "error": "FAILFAST",
@@ -379,13 +542,15 @@ def to_dataset(
             if ragged and not opts.get("header"):
                 df = df.toDF(*[f"column-{i}" for i in range(len(df.columns))])
         else:
-            reader = spark.read.format(fmt).options(**opts)
-            if schema is not None:
-                reader = reader.schema(schema)
-                if fmt == "csv":
-                    reader = reader.option("inferSchema", "false")
             try:
-                df = reader.load(data)
+                if schema is None:
+                    df, learned = _load_inferred(spark, fmt, opts, data)
+                else:
+                    reader = spark.read.format(fmt).options(**opts) \
+                        .schema(schema)
+                    if fmt == "csv":
+                        reader = reader.option("inferSchema", "false")
+                    df = reader.load(data)
             except Exception as exc:
                 # avro ships as an EXTERNAL Spark module: the raw failure
                 # is an opaque DATA_SOURCE_NOT_FOUND / ClassNotFound. r7:
@@ -427,8 +592,9 @@ def to_dataset(
             # when the caller's schema names are what the frame exposes
             if schema is None \
                     and str(opts.get("header", "")).lower() == "true":
-                hdr = _peek_csv_header(spark, data, opts,
-                                       n_initial_skip_rows)
+                hdr = (learned.header if learned is not None
+                       else _peek_csv_header(spark, data, opts,
+                                             n_initial_skip_rows))
                 if hdr is not None and len(hdr) == len(df.columns):
                     names = [h if h else f"column-{i}"
                              for i, h in enumerate(hdr)]
@@ -601,30 +767,26 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Parquet read that tolerates TIMESTAMP(NANOS) columns.
 
     Spark's TimestampType is microseconds and its parquet reader rejects
-    nanosecond columns outright. We detect them from the footer (driver-side
-    metadata only — no data read), read them as raw int64 via
+    nanosecond columns outright. We detect them from the footer of the
+    first data file (driver-side metadata only — no data read; partitioned
+    directories included), read them as raw int64 via
     ``spark.sql.legacy.parquet.nanosAsLong``, and truncate ns -> us with
     integer division (plain ``/`` would round-trip through double and lose
     precision at 1e18). Truncation matches DuckDB, whose TIMESTAMP is also us.
+
+    The schema is inferred once per input (see :func:`to_dataset`): a
+    repeated read of an unchanged local file or directory reuses the
+    schema and nanosecond columns of the first one and launches no Spark
+    job. The key is the ``(file, size, mtime_ns)`` of every file Spark
+    would read plus the session confs that change inference
+    (``nanosAsLong``, ``binaryAsString``, ``int96AsTimestamp``,
+    ``mergeSchema``, ...); remote URIs and globs are inferred every time.
     """
     from pyspark.sql import functions as F
 
-    ns_cols: list[str] = []
-    try:
-        import pyarrow.parquet as pq
-        target = path
-        if os.path.isdir(path):
-            inner = [f for f in os.listdir(path) if f.endswith(".parquet")]
-            target = os.path.join(path, inner[0]) if inner else path
-        schema = pq.read_schema(target)
-        ns_cols = [f.name for f in schema if str(f.type).startswith("timestamp[ns")]
-    except Exception:
-        pass
-    if not ns_cols:
-        return spark.read.parquet(path)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    for c in ns_cols:
+    df, learned = _load_inferred(spark, "parquet", {}, path,
+                                 nanos_as_long=True)
+    for c in learned.ns_cols:
         df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
     return df
 
@@ -1055,16 +1217,13 @@ def parquet_row_count(path: str) -> int:
     build_columnar_index precedent, shared in r12): a count() action
     over a freshly written table costs a full scheduler round trip just
     to read back a number every footer already stores. Recurses so
-    partitioned (``key=value`` subdirectory) layouts count too."""
+    partitioned (``key=value`` subdirectory) layouts count too. Files
+    and directories Spark's reader skips (``_temporary/``, ``.``-prefixed
+    copies) are not counted."""
     import pyarrow.parquet as pq
 
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += pq.ParquetFile(
-                    os.path.join(root, f)).metadata.num_rows
-    return total
+    return sum(pq.ParquetFile(p).metadata.num_rows
+               for p, _ in _visible_files(path) if p.endswith(".parquet"))
 
 
 def merge_upsert(spark: SparkSession, target_path: str, source: DataFrame,

@@ -160,6 +160,38 @@ def test_duplicate_headers_throw_and_suffix(spark, tmp_path):
     assert dfd.columns == ["a-0", "b", "a-2"]
 
 
+def test_duplicate_headers_law_holds_on_a_cache_hit(spark, count_jobs,
+                                                    tmp_path):
+    """The second read of an unchanged file reuses the inferred schema and
+    the peeked header (no Spark job), and the duplicate-header law still
+    raises or suffixes on it."""
+    import pytest as _pt
+
+    p = tmp_path / "dup.csv"
+    p.write_text("a,b,a,column,column,column-1\n1,2,3,4,5,6\n")
+    pb = tmp_path / "banner.csv"
+    pb.write_text("# banner\n\na,b,a\n1,2,3\n")
+    pd_ = tmp_path / "semi.csv"
+    pd_.write_text("a;b;a\n1;2;3\n")
+
+    def raises(path, **kw):
+        with _pt.raises(ValueError, match="duplicate csv headers"):
+            to_dataset(spark, str(path), **kw)
+
+    for path, kw in ((p, {}), (pb, {}), (pd_, {"delimiter": ";"})):
+        assert count_jobs(lambda: raises(path, **kw))[1] >= 1
+        assert count_jobs(lambda: raises(path, **kw))[1] == 0
+    df, n_jobs = count_jobs(lambda: to_dataset(
+        spark, str(p), ensure_unique_column_names=True))
+    assert n_jobs == 0
+    assert df.columns == ["a-0", "b", "a-2", "column-3", "column-4",
+                          "column-1"]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, 2, 3, 4, 5, 6)]
+    dfd = to_dataset(spark, str(pd_), delimiter=";",
+                     ensure_unique_column_names=True)
+    assert dfd.columns == ["a-0", "b", "a-2"]
+
+
 def test_explicit_schema_owns_column_names(spark, tmp_path):
     """r4 review: the header-peek rename ran even with an explicit schema,
     clobbering the schema's names with the file's header cells (and

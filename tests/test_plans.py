@@ -364,6 +364,28 @@ _SCALE_AUDIT_EXEMPT = {
 }
 
 
+# Builders of the benchmark's relational workload. Each builds its plan
+# from the tables' cached schemas, so a second build launches no Spark
+# job; the only jobs left are the fits a builder runs eagerly.
+_REBUILD_JOBS = dict.fromkeys(
+    ("q1_pricing_summary", "q3_segment_revenue", "q18_large_orders",
+     "filter_project", "rolling_user_value", "asof_purchase_click",
+     "ffill_events", "pivot_status_priority", "lineitem_except",
+     "validate_orders"), 0)
+# fit_std_scale collects one aggregate: with adaptive execution that is a
+# shuffle-map job plus a result job
+_REBUILD_JOBS["std_scale_acctbal"] = 2
+
+
+def test_rebuild_launches_only_fit_jobs(spark, sf_dir, count_jobs):
+    qs = entry.queries()
+    for name in _REBUILD_JOBS:
+        qs[name](spark, sf_dir)
+    launched = {name: count_jobs(lambda: qs[name](spark, sf_dir))[1]
+                for name in _REBUILD_JOBS}
+    assert launched == _REBUILD_JOBS
+
+
 def test_scale_audit_exemptions_are_real_queries():
     names = set(entry.queries())
     for kind in ("single_partition", "cartesian"):

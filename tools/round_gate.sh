@@ -6,20 +6,23 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.01}"
 
-echo "== 1/5 full-registry vanilla sweep (the canonical correctness gate)"
+echo "== 1/6 full-registry vanilla sweep (the canonical correctness gate)"
 python tools/verify_local.py --vanilla "$SF" 2>&1 | tr '\r' '\n' \
     | grep -E "queries checked"
 
-echo "== 2/5 thorough codec fuzz (1000 Hypothesis examples)"
+echo "== 2/6 thorough codec fuzz (1000 Hypothesis examples)"
 SPARK_GRAFT_HYP_EXAMPLES=1000 python -m pytest tests/test_properties.py \
     -q -k "avro or pdf or warc or cdx or flac" 2>&1 | tail -1
 
-echo "== 3/5 registry-wide plan audits (scale killers + schema contract)"
+echo "== 3/6 registry-wide plan audits (scale killers + schema contract)"
 python -m pytest tests/test_plans.py -q 2>&1 | tail -1
 
-echo "== 4/5 whole test suite"
+echo "== 4/6 whole test suite"
 python -m pytest tests/ -q 2>&1 | tail -1
 
-echo "== 5/5 bench (diff against git show HEAD:BENCH_full.json; re-measure"
+echo "== 5/6 benchmark self-test (names, units, seeds, corrupted-output check)"
+python3 perfbench/selftest.py 2>&1 | tail -1
+
+echo "== 6/6 bench (diff against git show HEAD:BENCH_full.json; re-measure"
 echo "   outliers ISOLATED before believing any regression — +-25% ambient)"
 python bench.py
