@@ -42,6 +42,15 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
+def _doc_slice(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
+    """The ids of the first ``n`` documents (``doc_id < n``), spread for a
+    CPU-bound decode with ``n`` as the row bound — the slice and the bound
+    are one literal, so they cannot drift apart."""
+    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < n) \
+        .select("doc_id")
+    return dtu.ensure_parallelism(docs, "doc_id", n_rows=n)
+
+
 def _r4(c) -> F.Column:
     return F.round(c, 4)
 
@@ -1120,9 +1129,7 @@ def image_pipeline_png_docs(spark, sf_dir):
     checksum. The oracle recomputes the checksum from the pixel FORMULA —
     validating encode->decode->resize->features end-to-end while the
     oracle never touches a codec."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200) \
-        .select("doc_id")
-    binned = mmod.repartition_for_decode(docs, "doc_id", n_rows=200)
+    binned = _doc_slice(spark, sf_dir, 200)
     pngs = mmod.synthesize_png(binned, "doc_id", height=8, width=8)
     feats = mmod.image_pipeline(pngs, "png", resize_hw=(4, 4),
                                 feature_dtype="float64")
@@ -1148,9 +1155,7 @@ def image_pipeline_jpeg_docs(spark, sf_dir):
     recompute every feature from the block formula — proving the real
     encode->huffman->IDCT->resize->features path end-to-end with
     decode_real hash-checked TRUE."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200) \
-        .select("doc_id")
-    binned = mmod.repartition_for_decode(docs, "doc_id", n_rows=200)
+    binned = _doc_slice(spark, sf_dir, 200)
     jpgs = mmod.synthesize_jpeg(binned, "doc_id", height=16, width=16)
     feats = mmod.image_pipeline(jpgs, "jpg", resize_hw=(4, 4),
                                 feature_dtype="float64")
@@ -1175,9 +1180,7 @@ def image_pipeline_jpeg420_docs(spark, sf_dir):
     still equals the gray formula bit-exactly; the oracle replays the
     identical 14-feature law as the 4:4:4 query, proving the subsampled
     decode path end-to-end with decode_real hash-checked TRUE."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 240) \
-        .select("doc_id")
-    binned = mmod.repartition_for_decode(docs, "doc_id", n_rows=240)
+    binned = _doc_slice(spark, sf_dir, 240)
     jpgs = mmod.synthesize_jpeg(binned, "doc_id", height=16, width=16,
                                 subsampling="420", color=True)
     feats = mmod.image_pipeline(jpgs, "jpg", resize_hw=(4, 4),
@@ -1967,9 +1970,7 @@ def mime_route_docs(spark, sf_dir):
     multimodal decoders chain from."""
     from tech_ml_dataset_spark.sources import warc as warcmod
 
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 120) \
-        .select("doc_id")
-    binned = mmod.repartition_for_decode(docs, "doc_id", n_rows=120)
+    binned = _doc_slice(spark, sf_dir, 120)
     import pandas as pd
 
     def build(d: int) -> bytes:
@@ -2066,9 +2067,7 @@ def pdf_extract_docs(spark, sf_dir):
     string-escape decoding, or the Td line-break replay changes the
     md5. Everything stays executor-side (two fused mapInPandas stages,
     embarrassingly parallel)."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300) \
-        .select("doc_id")
-    binned = mmod.repartition_for_decode(docs, "doc_id", n_rows=300)
+    binned = _doc_slice(spark, sf_dir, 300)
     pdfs = mmod.synthesize_pdf(binned, "doc_id", n_lines=4)
     out = mmod.pdf_text(pdfs, "pdf")
     return _ckpt_sort(out.select(
@@ -2092,9 +2091,7 @@ def pdf_filters_cmap_docs(spark, sf_dir):
     each arm through the right decode chain; the oracle rebuilds the
     exact law text per arm, so one hash mismatch pins any filter,
     predictor, CMap, or encoding defect."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 280) \
-        .select("doc_id")
-    binned = mmod.repartition_for_decode(docs, "doc_id", n_rows=280)
+    binned = _doc_slice(spark, sf_dir, 280)
     pdfs = mmod.synthesize_pdf(binned, "doc_id", n_lines=4,
                                flavors=["lzw", "a85", "a85+flate",
                                         "cmap", "cmap_objstm",
@@ -2152,9 +2149,7 @@ def image_pipeline_jpeg_prog_docs(spark, sf_dir):
     the codec: one green row covers DC/AC first+refine scans, EOB-run
     decode, 4:2:0 MCU walk, chroma upsample, and the feature
     pipeline."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 220) \
-        .select("doc_id")
-    binned = mmod.repartition_for_decode(docs, "doc_id", n_rows=220)
+    binned = _doc_slice(spark, sf_dir, 220)
     jpgs = mmod.synthesize_jpeg(binned, "doc_id", height=16, width=16,
                                 subsampling="420", color=True,
                                 progressive=True)
@@ -2215,9 +2210,7 @@ def image_pipeline_gif_docs(spark, sf_dir):
     oracle replays the per-pixel formula directly — proving
     encode->LZW->palette->resize->features with decode_real hash-checked
     TRUE."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200) \
-        .select("doc_id")
-    binned = mmod.repartition_for_decode(docs, "doc_id", n_rows=200)
+    binned = _doc_slice(spark, sf_dir, 200)
     gifs = mmod.synthesize_gif(binned, "doc_id", height=8, width=8)
     feats = mmod.image_pipeline(gifs, "gifb", resize_hw=(4, 4),
                                 feature_dtype="float64")
@@ -2239,9 +2232,7 @@ def media_dims_docs(spark, sf_dir):
     no pixel decode: a 100 TB dimensions audit reads a few header bytes
     per row. Fixture dims vary per doc (h/w formulas below), so the
     oracle checks the PARSE, not a constant."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 120) \
-        .select("doc_id")
-    binned = mmod.repartition_for_decode(docs, "doc_id", n_rows=120)
+    binned = _doc_slice(spark, sf_dir, 120)
     # ONE fused fixture stage switching (format, dims) per row — the
     # original 3-formats x 5-variants enumeration built a 15-branch
     # union (15 parquet scans + 15 Python stages) that cost 16.8 s at
@@ -2764,9 +2755,10 @@ def image_dhash_dedup_docs(spark, sf_dir):
     left<right gradient bits) from the pixel FORMULA — proving
     encode->decode->gray->resize->bit-pack->band-join end-to-end while
     never touching a codec."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200) \
+    n = 200
+    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < n) \
         .select("doc_id", (F.col("doc_id") % 80).alias("img_id"))
-    binned = mmod.repartition_for_decode(docs, "doc_id", n_rows=200)
+    binned = dtu.ensure_parallelism(docs, "doc_id", n_rows=n)
     pngs = mmod.synthesize_png(binned, "img_id", height=8, width=8)
     hashed = mmod.image_dhash(pngs, "png")
     pairs = dd.hamming_dedup_pairs(hashed, "dhash", "doc_id",
@@ -2788,9 +2780,7 @@ def video_dedup_docs(spark, sf_dir):
     exact integer byte sums, and replays resize/gradient/pairing. The
     `decode_real=false` story stays honest via vfp_real (pytest-pinned;
     the pair output carries no pixels either way)."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 150) \
-        .select("doc_id")
-    binned = mmod.repartition_for_decode(docs, "doc_id", n_rows=150)
+    binned = _doc_slice(spark, sf_dir, 150)
     vids = binned.select(
         "doc_id",
         F.encode(F.concat(F.lit("vid:"),
@@ -2812,9 +2802,10 @@ def audio_fingerprint_dedup_docs(spark, sf_dir):
     frame assignment i*65//n, exact integer energies in float64,
     E[f]<E[f+1] gradient bits, then brute-forces pairs — an exact twin
     of the banded join at max_distance=3 (pigeonhole recall)."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200) \
+    n = 200
+    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < n) \
         .select("doc_id", (F.col("doc_id") % 80).alias("aid"))
-    binned = mmod.repartition_for_decode(docs, "doc_id", n_rows=200)
+    binned = dtu.ensure_parallelism(docs, "doc_id", n_rows=n)
     wavs = mmod.synthesize_wav(binned, "aid", n_samples=2048)
     fps = mmod.audio_fingerprint(wavs, "wav")
     pairs = dd.hamming_dedup_pairs(fps.filter(F.col("afp").isNotNull()),
@@ -2830,9 +2821,10 @@ def image_dedup_survivors_docs(spark, sf_dir):
     regroups the replayed dHash bitstrings and keeps min(doc_id) per
     group, proving the survivor selection against any formula-collision
     structure the fixtures happen to have."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200) \
+    n = 200
+    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < n) \
         .select("doc_id", (F.col("doc_id") % 80).alias("img_id"))
-    binned = mmod.repartition_for_decode(docs, "doc_id", n_rows=200)
+    binned = dtu.ensure_parallelism(docs, "doc_id", n_rows=n)
     pngs = mmod.synthesize_png(binned, "img_id", height=8, width=8)
     hashed = mmod.image_dhash(pngs, "png")
     out = dd.fingerprint_dedup(hashed, "dhash", "doc_id")
@@ -3211,14 +3203,12 @@ def audio_features_docs(spark, sf_dir):
     audio_features): encode an integer-law PCM16 fixture per doc, decode
     with stdlib wave, extract features in one fused Python pass. The
     integer PCM law makes the oracle exact (sum of squares < 2^53 —
-    no float-associativity drift).
-
-    r7: repartition_for_decode was missing here (the ONLY media query
-    without it) — the whole Python codec chain ran in the scan's split
-    count (ONE task at sf0.1), the root cause of the r6 bench watch
-    item (2.58 s) and a 1000-executor-cluster serialization point."""
+    no float-associativity drift). The whole table is decoded, so the
+    input is spread to one partition per core first: without it the
+    Python codec chain runs in the scan's split count (ONE task at
+    sf0.1)."""
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    docs = mmod.repartition_for_decode(docs, "doc_id")
+    docs = dtu.ensure_parallelism(docs, "doc_id")
     wav = mmod.synthesize_wav(docs, "doc_id", n_samples=2048,
                               sample_rate=8000)
     out = mmod.audio_features(wav, "wav")
@@ -3239,9 +3229,7 @@ def audio_features_flac_docs(spark, sf_dir):
     feature set. The oracle is the WAV arm's, verbatim — lossless
     compression is transparent to the law, so a single hash mismatch
     pins any defect in rice/fixed-predictor/CRC/bit-reader plumbing."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 400) \
-        .select("doc_id")
-    docs = mmod.repartition_for_decode(docs, "doc_id", n_rows=400)
+    docs = _doc_slice(spark, sf_dir, 400)
     flc = mmod.synthesize_flac(docs, "doc_id", n_samples=2048,
                                sample_rate=8000, subframe="fixed2")
     out = mmod.audio_features(flc, "flc")
@@ -3367,9 +3355,10 @@ def image_pipeline_docs(spark, sf_dir):
     """Multimodal decode->resize->features pipeline over mapInPandas
     (rows-only: fake decoder is Spark-side only). Returns per-doc feature
     vector stats so the driver gets a stable scalar schema."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
+    n = 200
+    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < n)
     binned = docs.select("doc_id", F.encode(F.col("text"), "UTF-8").alias("data"))
-    binned = mmod.repartition_for_decode(binned, "doc_id", n_rows=200)
+    binned = dtu.ensure_parallelism(binned, "doc_id", n_rows=n)
     feats = mmod.image_pipeline(binned, "data", resize_hw=(4, 4), fake_hw=(8, 8))
     return feats.select(
         "doc_id",
@@ -4001,7 +3990,7 @@ def winnow_docs(spark, sf_dir):
     reinterpretation. Returns per-doc fingerprint count + min — the
     inverted-index feed for substring-level near-dup detection."""
     docs = _t(spark, sf_dir, "documents")
-    docs = mmod.repartition_for_decode(docs, "doc_id")  # CPU-bound fan-out
+    docs = dtu.ensure_parallelism(docs, "doc_id")  # CPU-bound fan-out
     fp = txt.winnow_fingerprints(F.col("text"), k=8, w=4)
     # NOTE (r8): deliberately NO final orderBy, unlike the other five
     # order-nondeterministic queries — a total sort here either

@@ -1,4 +1,4 @@
-"""NTZ-safe datetime/epoch helpers.
+"""NTZ-safe datetime/epoch helpers and partition sizing.
 
 Spark forbids direct numeric casts on TIMESTAMP_NTZ columns
 (``DATATYPE_MISMATCH``: ``CAST(ntz AS BIGINT)``, ``unix_micros(ntz)``), while
@@ -11,6 +11,10 @@ DuckDB's ``epoch()`` on the same naive values agrees.
 Reference parity: the reference does datetime->epoch conversion inside its
 column-math layer (src/tech/v3/dataset/math.clj:160, rolling.clj:281-301);
 these helpers are the Spark expression equivalent.
+
+The module also holds the engine's one partition-sizing helper,
+:func:`ensure_parallelism` (the reference sizes its parallel work with one
+fork-join pool, reductions.clj ``pgroups``).
 """
 
 from __future__ import annotations
@@ -85,115 +89,40 @@ def from_epoch_micros(col: str | Column, target_dtype: str) -> Column:
     return F.timestamp_micros(_c(col).cast("long")).cast(target_dtype)
 
 
-def ensure_parallelism(df: DataFrame, *key_cols: str) -> DataFrame:
+# fewest rows worth one Python/Arrow task: below this, per-task dispatch
+# and batch set-up cost more than the rows' work (a 280-row decode ran
+# 0.79 s across 32 nine-row tasks and 0.49 s across 8)
+_MIN_ROWS_PER_TASK = 32
+
+
+def ensure_parallelism(df: DataFrame, *key_cols: str,
+                       n_rows: int | None = None) -> DataFrame:
     """Repartition up to one partition per core when the input has fewer.
 
     A stage cannot split an input partition mid-flight: a small parquet
     file (< maxPartitionBytes) scans as ONE partition, so CPU-heavy
-    per-row work layered on it (tokenize/explode/hash) runs on one core
-    no matter how wide the cluster. Call this BEFORE the heavy expression
-    when the downstream cost is per-row compute, not I/O. No-op when the
-    scan is already wide (the 100 TB case — many splits).
+    per-row work layered on it (tokenize/explode/hash/decode) runs on one
+    core no matter how wide the cluster. Call this BEFORE the heavy
+    expression when the downstream cost is per-row compute, not I/O.
+    No-op when the input is already wide (the 100 TB case — many splits).
 
-    Streaming-safe (r5): ``.rdd`` is illegal on a streaming DataFrame, so
-    streaming inputs pass through unchanged (micro-batch parallelism is
-    the source's concern — maxFilesPerTrigger / partition count).
-    Plan-cheap (r5): for a plain file scan the partition count is derived
-    from file sizes and the session's split config — no physical planning
-    and no Python->JVM RDD conversion; ``.rdd.getNumPartitions()`` (which
-    plans the query twice per call) is the fallback for non-scan plans
-    (post-shuffle inputs are shuffle.partitions-wide and return early)."""
+    ``n_rows`` is an optional upper bound on the input's row count (e.g.
+    the ``N`` of a ``doc_id < N`` slice). It caps the target at
+    ``ceil(n_rows / 32)`` so a tiny input does not fan out into
+    near-empty tasks; at corpus scale the per-core target always wins, so
+    the plan shape there is unchanged. No count job is run.
+
+    The partition count comes from ``.rdd.getNumPartitions()``, which
+    plans the query but runs no job (except under AQE on a post-shuffle
+    input). Streaming inputs pass through unchanged: ``.rdd`` is illegal
+    on them, and micro-batch parallelism is the source's concern
+    (maxFilesPerTrigger / partition count)."""
     if df.isStreaming:
         return df
     target = df.sparkSession.sparkContext.defaultParallelism
-    if _scan_partition_estimate(df) >= target:
+    if n_rows is not None:
+        target = max(1, min(target, -(-n_rows // _MIN_ROWS_PER_TASK)))
+    if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target, *key_cols) if key_cols \
         else df.repartition(target)
-
-
-_SIZE_UNITS = {"": 1, "b": 1, "k": 1 << 10, "kb": 1 << 10,
-               "m": 1 << 20, "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30,
-               "t": 1 << 40, "tb": 1 << 40}
-
-# plan nodes that change row/partition structure above a scan — if any
-# appears in the ANALYZED logical plan, file sizes say nothing about the
-# DataFrame's actual partitioning and the estimate must not be used
-_NON_SCAN_NODES = ("Repartition", "Coalesce", "Limit", "Sample", "Join",
-                   "Aggregate", "Window", "Sort", "Distinct", "Union",
-                   "Deduplicate", "MapInPandas", "FlatMapGroupsInPandas",
-                   "Generate", "Offset")
-
-# whole-file compression codecs Hadoop cannot split: one file = ONE scan
-# partition no matter its size, so ceil(total/maxPartitionBytes) is NOT a
-# lower bound (a 10*mpb .csv.gz scans as a single task). bz2 is splittable
-# and columnar container files (.snappy.parquet, .zstd.orc) keep their
-# container suffix last, so a plain suffix check is sufficient.
-_NON_SPLITTABLE_SUFFIXES = (".gz", ".gzip", ".zst", ".zstd", ".lz4",
-                            ".snappy", ".deflate", ".br")
-
-
-def _parse_bytes(s: str) -> int | None:
-    s = s.strip().lower()
-    i = len(s)
-    while i > 0 and not s[i - 1].isdigit():
-        i -= 1
-    num, unit = s[:i], s[i:].strip()
-    if not num or unit not in _SIZE_UNITS:
-        return None
-    return int(num) * _SIZE_UNITS[unit]
-
-
-def _scan_partition_estimate(df: DataFrame) -> int:
-    """Partition count of ``df``, avoiding ``.rdd`` when the plan is a
-    BARE file scan (projections/filters only — anything that reshapes
-    partitioning above the scan disqualifies the estimate, r5 review:
-    ``ensure_parallelism(df.coalesce(1))`` must not be fooled by wide
-    source files). Spark packs file splits into at-most-maxPartitionBytes
-    partitions, so ceil(total_size/maxPartitionBytes) is a LOWER bound on
-    scan partitions (file COUNT is not — many small files pack into one
-    partition): if even the lower bound clears the target, skip the
-    repartition; any doubt — remote files, unparseable size conf, a
-    non-scan plan node — falls back to the exact (but planning-
-    triggering) ``.rdd.getNumPartitions()``."""
-    try:
-        files = df.inputFiles()
-        plan = df._jdf.queryExecution().analyzed().toString()
-    except Exception:
-        files, plan = [], None
-    if files and plan is not None \
-            and not any(n in plan for n in _NON_SCAN_NODES):
-        import os
-        from urllib.parse import urlparse
-        spark = df.sparkSession
-        mpb = None
-        try:
-            mpb = _parse_bytes(
-                spark.conf.get("spark.sql.files.maxPartitionBytes"))
-        except Exception:
-            pass
-        if mpb:
-            total = 0
-            local = True
-            for f in files:
-                p = urlparse(f)
-                if p.scheme not in ("file", ""):
-                    local = False
-                    break
-                if p.path.lower().endswith(_NON_SPLITTABLE_SUFFIXES):
-                    # non-splittable codec: one partition per file however
-                    # large, so the size-based lower bound is invalid —
-                    # use the exact (planning) fallback below
-                    local = False
-                    break
-                try:
-                    total += os.path.getsize(p.path)
-                except OSError:
-                    local = False
-                    break
-            if local:
-                est = -(-total // mpb)
-                target = spark.sparkContext.defaultParallelism
-                if est >= target:
-                    return est
-    return df.rdd.getNumPartitions()

@@ -741,8 +741,8 @@ def pdf_text(df: DataFrame, bin_col: str, out_col: str = "pdf_text",
     in one fused ``mapInPandas`` pass. Unparseable/encrypted payloads
     yield NULL with ``flag_col`` False — the in-band real-vs-failed
     contract of the image/audio decoders. At 100 TB this is a map-only
-    Python pass; use :func:`repartition_for_decode` ahead of it when
-    the scan yields fewer splits than cores."""
+    Python pass; use :func:`~tech_ml_dataset_spark.dtutil.ensure_parallelism`
+    ahead of it when the scan yields fewer splits than cores."""
     from . import pdf as pdfmod
 
     for name in (out_col, flag_col):
@@ -833,32 +833,6 @@ def frame_sample(df: DataFrame, bin_col: str, *, every_n: int = 10,
             yield pd.DataFrame(rows, columns=names + ["frame_idx", out_col])
 
     return df.mapInPandas(batches, out_schema)
-
-
-def repartition_for_decode(df: DataFrame, *cols: str,
-                           n_rows: int | None = None,
-                           min_rows_per_task: int = 32) -> DataFrame:
-    """Media decode is CPU-bound: ensure at least one partition per core
-    before entering the Python stages (an input split can't be subdivided
-    mid-stage).
-
-    When the caller statically knows a row-count BOUND (e.g. a
-    ``doc_id < N`` slice), pass ``n_rows`` so tiny inputs don't fan out
-    into near-empty Arrow tasks: the target becomes
-    ``ceil(n_rows / min_rows_per_task)`` capped at one partition per core
-    (r12, guide §2.2 — size partitions from the data, not from the core
-    count alone; measured: a 280-row decode ran 0.79 s across 32
-    nine-row tasks vs 0.49 s across 8 — per-task scheduling + Arrow batch
-    setup dominated). At real corpus sizes the per-core cap always wins,
-    so the scale shape is unchanged; no count job is ever run — the hint
-    is the caller's slice literal."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if n_rows is not None:
-        target = max(1, min(target,
-                            -(-int(n_rows) // max(1, int(min_rows_per_task)))))
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target, *cols) if cols else df.repartition(target)
-    return df
 
 
 # --------------------------------------------------------------------------

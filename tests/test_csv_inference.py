@@ -262,12 +262,10 @@ def test_avro_vendored_fallback_handles_missing_package(spark, tmp_path):
 
 
 def test_scan_estimate_nonsplittable_gz(spark, tmp_path):
-    """r5 advice (medium): a large non-splittable .csv.gz scans as ONE
-    partition per file regardless of size, so the size-based lower bound
-    must not be trusted — the estimate falls back to the exact partition
-    count and ensure_parallelism repartitions."""
-    from tech_ml_dataset_spark.dtutil import (_scan_partition_estimate,
-                                              ensure_parallelism)
+    """A large non-splittable .csv.gz scans as ONE partition per file
+    regardless of size (its bytes / maxPartitionBytes says nothing about
+    the scan), so ensure_parallelism must still repartition it."""
+    from tech_ml_dataset_spark.dtutil import ensure_parallelism
     gz = tmp_path / "wide"
     (spark.range(200_000).selectExpr("id", "id * 2 AS v")
         .coalesce(1).write.mode("overwrite")
@@ -275,12 +273,11 @@ def test_scan_estimate_nonsplittable_gz(spark, tmp_path):
     df = spark.read.options(header=True).csv(str(gz))
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
-        # make the size bound claim "wide": bytes/mpb >> defaultParallelism
+        # bytes/mpb >> defaultParallelism, yet the one gzip file is one
+        # scan partition
         spark.conf.set("spark.sql.files.maxPartitionBytes", "1024")
         df2 = spark.read.options(header=True).csv(str(gz))
-        est = _scan_partition_estimate(df2)
         actual = df2.rdd.getNumPartitions()
-        assert est == actual  # fell back to exact, not ceil(size/mpb)
         target = spark.sparkContext.defaultParallelism
         if actual < target:
             out = ensure_parallelism(df2)

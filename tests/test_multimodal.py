@@ -84,9 +84,20 @@ def test_frame_sample_fanout(spark, media):
     assert px[0] != px[10]  # different frames decode differently
 
 
-def test_repartition_for_decode(spark, media):
-    out = mm.repartition_for_decode(media, "id")
-    assert out.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+def test_ensure_parallelism_row_bound(spark, media):
+    """Decode inputs are spread to one partition per core; a row bound
+    caps the target at ceil(n_rows / 32) so a tiny slice does not fan out
+    into near-empty Arrow tasks, and never binds on a wide input."""
+    from tech_ml_dataset_spark.dtutil import ensure_parallelism
+    cores = spark.sparkContext.defaultParallelism
+    one = media.coalesce(1)
+    assert ensure_parallelism(one, "id").rdd.getNumPartitions() >= cores
+    assert ensure_parallelism(one, "id", n_rows=40) \
+        .rdd.getNumPartitions() == min(2, cores)
+    assert ensure_parallelism(one, "id", n_rows=10_000) \
+        .rdd.getNumPartitions() == cores
+    stream = spark.readStream.format("rate").load()
+    assert ensure_parallelism(stream, "value", n_rows=40) is stream
 
 
 def test_fused_pipeline_matches_staged(spark, media):

@@ -1283,9 +1283,9 @@ def test_r5_review_fixes_selection(spark):
 
 
 def test_ensure_parallelism_not_fooled_by_coalesce(spark, tmp_path):
-    """r5 review: the file-size fast path must not skip the repartition
-    when a plan operator above the scan (coalesce) reduced partitioning —
-    only bare scans qualify for the estimate."""
+    """A coalesce above a wide scan narrows the input: ensure_parallelism
+    must size from the coalesced partition count, not from the scan's
+    files."""
     from tech_ml_dataset_spark.dtutil import ensure_parallelism
     p = str(tmp_path / "wide")
     spark.range(100000).repartition(32).write.parquet(p)
@@ -1293,6 +1293,33 @@ def test_ensure_parallelism_not_fooled_by_coalesce(spark, tmp_path):
     widened = ensure_parallelism(narrow)
     assert widened.rdd.getNumPartitions() == \
         spark.sparkContext.defaultParallelism
+
+
+def test_ensure_parallelism_not_fooled_by_partition_pruning(spark, tmp_path):
+    """A filter on the partition column prunes a partitioned table down to
+    one tiny file, however large the pruned-away partitions are: the
+    input is ONE scan partition and must be widened to one per core
+    (``inputFiles()`` still lists every file of the table, so file sizes
+    overstate the pruned scan)."""
+    from tech_ml_dataset_spark.dtutil import ensure_parallelism
+    p = str(tmp_path / "parted")
+    spark.range(10).select(F.lit(0).cast("long").alias("k"),
+                           F.rand(7).alias("v")) \
+        .coalesce(1).write.partitionBy("k").parquet(p)
+    spark.range(400_000).select((F.col("id") % 2 + 1).alias("k"),
+                                F.rand(7).alias("v")) \
+        .write.mode("append").partitionBy("k").parquet(p)
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "64k")
+        pruned = spark.read.parquet(p).filter(F.col("k") == 0)
+        assert pruned.rdd.getNumPartitions() == 1
+        widened = ensure_parallelism(pruned)
+        assert widened.rdd.getNumPartitions() == \
+            spark.sparkContext.defaultParallelism
+        assert widened.count() == 10
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
 def test_datetime_ingest_and_epoch_mapping_laws(spark):

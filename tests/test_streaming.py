@@ -453,10 +453,9 @@ def test_parser_fn_na_as_missing_law(spark):
 
 
 def test_ensure_parallelism_streaming_safe_and_plan_cheap(spark, tmp_path):
-    """r4 verdict #3: ensure_parallelism must (a) pass a streaming
-    DataFrame through unchanged (.rdd is illegal on streaming plans) and
-    (b) answer wide file scans from file metadata without forcing
-    physical planning; narrow inputs still repartition to full width."""
+    """ensure_parallelism must pass a streaming DataFrame through
+    unchanged (.rdd is illegal on streaming plans); narrow batch inputs
+    still repartition to full width."""
     from tech_ml_dataset_spark.dtutil import ensure_parallelism
 
     src = str(tmp_path / "stream_src")
@@ -471,8 +470,8 @@ def test_ensure_parallelism_streaming_safe_and_plan_cheap(spark, tmp_path):
     assert widened.rdd.getNumPartitions() == \
         spark.sparkContext.defaultParallelism
 
-    # estimator lower bound: many tiny files must NOT be mistaken for a
-    # wide scan (file count is not a lower bound on scan partitions)
+    # many tiny files must NOT be mistaken for a wide scan (Spark packs
+    # small files into few scan partitions)
     many = str(tmp_path / "many_files")
     spark.range(200).repartition(64).write.parquet(many)
     packed = spark.read.parquet(many)

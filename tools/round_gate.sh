@@ -17,8 +17,9 @@ SPARK_GRAFT_HYP_EXAMPLES=1000 python -m pytest tests/test_properties.py \
 echo "== 3/6 registry-wide plan audits (scale killers + schema contract)"
 python -m pytest tests/test_plans.py -q 2>&1 | tail -1
 
-echo "== 4/6 whole test suite"
-python -m pytest tests/ -q 2>&1 | tail -1
+echo "== 4/6 whole test suite (the 15 slowest tests, then the summary line)"
+python -m pytest tests/ -q --durations=15 2>&1 | tr '\r' '\n' \
+    | sed -n '/slowest 15 durations/,$p'
 
 echo "== 5/6 benchmark self-test (names, units, seeds, corrupted-output check)"
 python3 perfbench/selftest.py 2>&1 | tail -1
