@@ -1083,7 +1083,7 @@ def test_bpe_encode_fixed_table_priority_and_chaining(spark):
     (o,w) inside 'row'), chained merges (d->da->dat->data->data</w>),
     EOW rules, and the greedy==rank-order-fixpoint equivalence the
     oracle relies on (well-ordered table)."""
-    from __spark_entry__ import _BPE_FIXED_MERGES
+    from registry.text import _BPE_FIXED_MERGES
     from tech_ml_dataset_spark.functions import text as txt
     df = spark.createDataFrame(
         [(1, "the data row window slow a")], "doc_id int, text string")

@@ -667,15 +667,14 @@ def test_driver_window_integrity():
     window is never spent on a rows-only check); (2) no oracle-able
     query sits below position 50 without a prior driver-green record —
     otherwise it would silently never be driver-checked; (3) no
-    duplicate registry keys (a dict literal would mask the earlier
-    entry)."""
+    duplicate names in ``ORDER`` (the contract order)."""
     import glob
     import json
     import os
 
     qs = list(entry.queries())
     osql = entry.oracle_sql()
-    assert len(qs) == len(set(qs))
+    assert len(entry.ORDER) == len(set(entry.ORDER))
     missing = [q for q in qs[:50] if q not in osql]
     assert not missing, f"window entries without oracles: {missing}"
     prior = set()
@@ -685,3 +684,22 @@ def test_driver_window_integrity():
     hidden = [q for q in qs[50:] if q in osql and q not in prior]
     assert not hidden, ("oracle-able queries below position 50 with no "
                         f"prior driver record: {hidden}")
+
+
+def test_registry_structure():
+    """Every registered query is in the contract exactly once and in
+    ``ORDER``'s order, and a name cannot be registered twice (the second
+    record would otherwise replace the first)."""
+    from registry import REGISTRY, query
+
+    assert len(entry.ORDER) == len(set(entry.ORDER))
+    assert set(entry.ORDER) == set(REGISTRY)
+    assert list(entry.queries()) == list(entry.ORDER)
+
+    def q1_pricing_summary(spark, sf_dir):
+        raise AssertionError("never built")
+
+    before = dict(REGISTRY)
+    with pytest.raises(ValueError, match="q1_pricing_summary"):
+        query(oracle="SELECT 1")(q1_pricing_summary)
+    assert REGISTRY == before
