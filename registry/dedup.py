@@ -244,12 +244,13 @@ def similarity_join_docs(spark, sf_dir):
         """)
 def incremental_dedup_docs(spark, sf_dir):
     """Incremental dedup of a new crawl batch against a historical corpus
-    (dedup.py incremental_dedup): broadcast bloom bitmap built from one
-    historical scan, vectorized probe on the new batch — neither side
-    shuffles. The id ranges overlap (historical < 300, batch >= 200) to
-    model re-crawl overlap: the 100 shared docs are exact dups and must
-    drop. exact_verify=True makes the result exact, hence SQL-oracleable
-    as NOT IN over normalized text."""
+    (dedup.py incremental_dedup): with exact_verify=True the batch's
+    md5 fingerprints are broadcast into a semi join over one historical
+    scan, and the batch anti-joins the seen set — neither side shuffles
+    and no Python runs. The id ranges overlap (historical < 300, batch
+    >= 200) to model re-crawl overlap: the 100 shared docs are exact
+    dups and must drop. The result is exact, hence SQL-oracleable as
+    NOT IN over normalized text."""
     docs = _t(spark, sf_dir, "documents")
     hist = docs.filter(F.col("doc_id") < 300)
     new = docs.filter(F.col("doc_id") >= 200)

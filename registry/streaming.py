@@ -25,13 +25,13 @@ def streaming_text_dedup_replay_docs(spark, sf_dir):
     """THIRD streaming surface in the oracle gate (completes the sink
     family: media fingerprints, CDC upsert, now crawl text dedup):
     drive streaming/windows.py's text_dedup_batch_apply — the exact
-    foreachBatch body, incl. the bloom-probed incremental_dedup history
-    pass — through replay_text_dedup at fixed boundaries (batch =
-    doc_id // 50 over doc_id < 200) with a colliding text law
-    ('txt ' || doc_id % 45). Accept law closed form: each distinct text
-    accepted exactly once, in its earliest batch, by the exact_dedup
-    min-id survivor — since batch index grows with doc_id, that is
-    simply the minimum doc_id of the class."""
+    foreachBatch body, incl. the exact incremental_dedup history pass
+    (semi + anti join on md5 fingerprints) — through replay_text_dedup
+    at fixed boundaries (batch = doc_id // 50 over doc_id < 200) with a
+    colliding text law ('txt ' || doc_id % 45). Accept law closed form:
+    each distinct text accepted exactly once, in its earliest batch, by
+    the exact_dedup min-id survivor — since batch index grows with
+    doc_id, that is simply the minimum doc_id of the class."""
     from tech_ml_dataset_spark.streaming.windows import replay_text_dedup
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200) \

@@ -1110,21 +1110,40 @@ def incremental_dedup(new_batch: DataFrame, historical: DataFrame,
     """Keep only rows of ``new_batch`` whose normalized text was NOT seen
     in ``historical`` — the daily-ingest primitive: dedup a new crawl
     batch against a 100 TB historical corpus WITHOUT shuffling either
-    side.
+    side. NULL text is never a duplicate: those rows always pass.
 
-    Plan shape: one historical scan builds a broadcast bloom bitmap
-    (:func:`build_bloom`); one new-batch scan probes it in a vectorized
-    pandas UDF (numpy bit tests, no Python loop). With
-    ``exact_verify=False`` (default) a ~fpp fraction of genuinely-new rows
-    is falsely dropped — the right trade for training dedup. With
-    ``exact_verify=True`` bloom-positive rows (tiny under any realistic
-    dup rate) are re-checked with an exact broadcast-able semi join
-    against historical fingerprints, making the result exact: then only
-    the maybe-set joins, and the historical side of that join is
-    hash-partitioned once.
+    ``exact_verify=True``: a row drops iff its fingerprint (md5 of the
+    normalized text, shared with :func:`exact_dedup`) occurs in
+    ``historical``. One JVM plan, no Python: the batch's fingerprints
+    are broadcast into a semi join that scans the history once and
+    keeps the (at most batch-sized) seen set, and the batch anti-joins
+    that set, broadcast too. The build side is the fingerprints as they
+    come, not their distinct set: a semi join only tests membership,
+    and a distinct would cost a shuffle per batch. 128-bit fingerprints
+    keep collision odds below 1e-18 at 1e10 docs, and full text never
+    crosses a join.
 
-    Beyond-reference (training-pipeline mandate); fingerprint definition
-    shared with :func:`exact_dedup` (md5 of normalized text)."""
+    ``exact_verify=False`` (default): one historical scan builds a
+    broadcast bloom bitmap (:func:`build_bloom`, sized by
+    ``expected_items``/``fpp``); one new-batch scan probes it in a
+    vectorized pandas UDF (numpy bit tests, no Python loop), and every
+    bloom-positive row drops. A ~fpp fraction of genuinely-new rows is
+    falsely dropped — the right trade for training dedup.
+
+    Beyond-reference (training-pipeline mandate)."""
+    if exact_verify:
+        fp = new_batch.withColumn(
+            "__fp__", F.md5(normalize_text(F.col(text_col))))
+        nn = fp.filter(F.col("__fp__").isNotNull())
+        seen = (historical
+                .select(F.md5(normalize_text(F.col(text_col)))
+                        .alias("__fp__"))
+                .join(F.broadcast(nn.select("__fp__")),
+                      "__fp__", "left_semi"))
+        return (nn.join(F.broadcast(seen), "__fp__", "left_anti")
+                  .unionByName(fp.filter(F.col("__fp__").isNull()))
+                  .select(*new_batch.columns))
+
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -1156,26 +1175,9 @@ def incremental_dedup(new_batch: DataFrame, historical: DataFrame,
         return pd.Series(hit)
 
     flagged = fp_new.withColumn("__maybe__", _maybe_seen(F.col("__h__")))
-    if not exact_verify:
-        return flagged.filter(~F.col("__maybe__")) \
-                      .drop("__h__", "__maybe__") \
-                      .unionByName(null_new)
-    fresh = flagged.filter(~F.col("__maybe__"))
-    # the verify join compares the 128-bit md5 FINGERPRINT (the shared
-    # exact_dedup law), not the probe's 64-bit xxhash: at the corpus
-    # scales this module advertises (1e9+ docs) xxhash64 birthday
-    # collisions are expected, and a 64-bit re-check would silently drop
-    # a genuinely-new doc whose hash collides. 128 bits keeps collision
-    # odds below 1e-18 at 1e10 docs while the historical exchange stays
-    # 32 bytes/row — full text never crosses the join.
-    maybe = flagged.filter(F.col("__maybe__")) \
-                   .withColumn("__fp__", F.md5(normalize_text(F.col(text_col))))
-    hist_fp = historical.select(
-        F.md5(normalize_text(F.col(text_col))).alias("__fp__")) \
-        .filter(F.col("__fp__").isNotNull()).distinct()
-    confirmed_new = maybe.join(hist_fp, "__fp__", "left_anti").drop("__fp__")
-    return fresh.unionByName(confirmed_new).drop("__h__", "__maybe__") \
-                .unionByName(null_new)
+    return flagged.filter(~F.col("__maybe__")) \
+                  .drop("__h__", "__maybe__") \
+                  .unionByName(null_new)
 
 
 def minhash_pairs_between(new_batch: DataFrame, historical: DataFrame,

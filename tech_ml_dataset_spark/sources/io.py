@@ -1211,21 +1211,6 @@ def compact_files(spark: SparkSession, path: str, *,
     return report
 
 
-def parquet_row_count(path: str) -> int:
-    """Row count of a parquet directory tree from the file FOOTERS —
-    driver-side metadata only, no Spark job (the r11
-    build_columnar_index precedent, shared in r12): a count() action
-    over a freshly written table costs a full scheduler round trip just
-    to read back a number every footer already stores. Recurses so
-    partitioned (``key=value`` subdirectory) layouts count too. Files
-    and directories Spark's reader skips (``_temporary/``, ``.``-prefixed
-    copies) are not counted."""
-    import pyarrow.parquet as pq
-
-    return sum(pq.ParquetFile(p).metadata.num_rows
-               for p, _ in _visible_files(path) if p.endswith(".parquet"))
-
-
 def merge_upsert(spark: SparkSession, target_path: str, source: DataFrame,
                  keys, *, fmt: str = "parquet",
                  when_matched: str = "update",
@@ -1236,21 +1221,60 @@ def merge_upsert(spark: SparkSession, target_path: str, source: DataFrame,
     the target row ("delete"); unmatched source rows are inserted when
     ``insert_unmatched``. Unmatched target rows always survive. A missing
     target bootstraps: the first merge against a not-yet-existing path
-    writes the (key-unique) source as the initial table.
+    writes the (key-unique) source as the initial table. An empty source
+    leaves the target (or its absence) untouched.
 
-    Plan shape: ONE key-hashed anti/semi join between target and the
-    (usually much smaller) source — Spark broadcasts the source key set
-    when it fits — then a full rewrite to a staging dir swapped in by the
-    same two-rename crash-safe protocol as :func:`compact_files` (backup
-    dir restored automatically by the next run if a crash lands between
-    renames). Copy-on-write rewrites the whole target: the right shape
-    for bulk daily upserts; high-frequency trickle updates belong in a
-    table format with file-level pruning (Delta/Iceberg), not raw parquet.
+    Plan shape: ONE write of the merged rows to a staging dir — the target
+    left-joined to the source keys (Spark broadcasts the source key set
+    when it fits) beside the source split into matched (semi join) and
+    unmatched (anti join) rows — swapped in by the same two-rename
+    crash-safe protocol as :func:`compact_files` (backup dir restored
+    automatically by the next run if a crash lands between renames).
+    Copy-on-write rewrites the whole target: the right shape for bulk
+    daily upserts; high-frequency trickle updates belong in a table
+    format with file-level pruning (Delta/Iceberg), not raw parquet.
 
-    Source must be key-unique (checked with one tiny aggregate action —
-    ambiguous multi-update otherwise). Column sets must match by name
-    (order-insensitive). Returns {"matched", "inserted", "rows_after"}."""
+    Source must be key-unique: a ``count(*) over (partition by keys)``
+    window rides the staging write, and a duplicate raises before the
+    swap. All returned counts are observed on that same write
+    (``DataFrame.observe``), so the merge runs no other Spark action.
+    Column sets must match by name (order-insensitive). Returns
+    {"matched", "inserted", "rows_after"}; ``matched`` counts target rows
+    whose key is in the source."""
+    stats = _merge_observed(spark, target_path, source, keys, fmt=fmt,
+                            when_matched=when_matched,
+                            insert_unmatched=insert_unmatched)
+    return {k: stats[k] for k in ("matched", "inserted", "rows_after")}
+
+
+def _observe_on_clone(df: DataFrame, *metrics, confs=None):
+    """``(df.observe(obs, *metrics), obs)`` with ``df`` rebound to a
+    throwaway clone of its session: same SparkContext and catalog, a
+    copy of every SQL conf at call time, plus ``confs``. Spark 4.1 keeps
+    an unserializable ObservationManager on a session once it has run
+    an Observation, and any task that captures that session then fails
+    to serialize (a binary LogisticRegression model's training summary
+    holds it); observing on the clone leaves the caller's session as it
+    was. Actions on the returned frame run on the clone."""
+    from pyspark.sql import Observation
+
+    s = df.sparkSession
+    clone = s._jsparkSession.cloneSession()
+    for key, value in (confs or {}).items():
+        clone.conf().set(key, value)
+    jdf = s._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        clone, df._jdf.logicalPlan())
+    obs = Observation()
+    return DataFrame(jdf, s).observe(obs, *metrics), obs
+
+
+def _merge_observed(spark: SparkSession, target_path: str,
+                    source: DataFrame, keys, *, fmt: str,
+                    when_matched: str, insert_unmatched: bool) -> dict:
+    """:func:`merge_upsert`; the result also holds ``source_rows``."""
     import shutil
+
+    from pyspark.sql import Window, functions as F
 
     target_path = _require_local_path(target_path, "merge_upsert")
     keys = [keys] if isinstance(keys, str) else list(keys)
@@ -1270,82 +1294,82 @@ def merge_upsert(spark: SparkSession, target_path: str, source: DataFrame,
             shutil.rmtree(backup)
     if os.path.isdir(staging):
         shutil.rmtree(staging)
-    if not os.path.isdir(target_path):
-        # first-run bootstrap: no target yet (the natural first state of a
-        # CDC-apply sink) — every source row is an unmatched insert, so
-        # MERGE degenerates to a plain write; streaming_upsert_sink's
-        # batch 0 lands here instead of dying on a missing-path read
-        from pyspark.sql import functions as F
-        dup = (source.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n__"))
-                     .filter(F.col("__n__") > 1).limit(1).count())
-        if dup:
+    # first-run bootstrap: no target yet (the natural first state of a
+    # CDC-apply sink) — merging into an empty target makes every source
+    # row an unmatched insert
+    bootstrap = not os.path.isdir(target_path)
+    if bootstrap:
+        target = spark.createDataFrame([], source.schema)
+    else:
+        target = spark.read.format(fmt).load(target_path)
+        if set(target.columns) != set(source.columns):
             raise ValueError(
-                "merge_upsert: source has duplicate merge keys — a "
-                "bootstrap write would seed a key-ambiguous target; "
-                "dedupe the source first")
-        init = source if insert_unmatched else source.limit(0)
-        init.write.format(fmt).mode("overwrite").save(target_path)
-        rows_after = (parquet_row_count(target_path) if fmt == "parquet"
-                      else spark.read.format(fmt).load(target_path).count())
-        return {"matched": 0, "inserted": rows_after,
-                "rows_after": rows_after}
-    target = spark.read.format(fmt).load(target_path)
-    if set(target.columns) != set(source.columns):
+                f"merge_upsert: column sets differ: target-only "
+                f"{sorted(set(target.columns) - set(source.columns))}, "
+                f"source-only "
+                f"{sorted(set(source.columns) - set(target.columns))}")
+    cols = target.columns
+    source = source.select(*cols)
+
+    # Every source row flows up to the observation, as a matched (__b__
+    # 1) or an unmatched (__b__ 2) row, whether or not its mode writes
+    # it; __w__ marks the rows written, and the filter on it sits above
+    # the observation. Target rows (__b__ 0) carry __hit__ when their
+    # key is in the source.
+    src = source.withColumn(
+        "__kn__", F.count(F.lit(1)).over(Window.partitionBy(*keys)))
+    hits = source.select(*keys, F.lit(True).alias("__hit__"))
+    tkeys = target.select(*keys)
+    no_hit = F.lit(None).cast("boolean").alias("__hit__")
+    merged = (
+        target.join(hits, keys, "left").select(
+            *cols, F.lit(0).alias("__b__"), "__hit__",
+            F.lit(None).cast("long").alias("__kn__"),
+            (F.col("__hit__").isNull() | F.lit(when_matched == "ignore"))
+            .alias("__w__"))
+        .unionByName(src.join(tkeys, keys, "left_semi").select(
+            *cols, F.lit(1).alias("__b__"), no_hit, "__kn__",
+            F.lit(when_matched == "update").alias("__w__")))
+        .unionByName(src.join(tkeys, keys, "left_anti").select(
+            *cols, F.lit(2).alias("__b__"), no_hit, "__kn__",
+            F.lit(insert_unmatched).alias("__w__"))))
+    b = F.col("__b__")
+    # Inferred IS NOT NULL filters reach the semi branch's source scan
+    # but not the anti branch's, so the two would shuffle the source
+    # separately; without constraint propagation they share one shuffle
+    # (one Spark job less per merge).
+    merged, obs = _observe_on_clone(
+        merged,
+        F.count_if((b == 0) & F.col("__hit__").isNotNull()).alias("matched"),
+        F.count_if(b == 2).alias("unmatched"),
+        F.count_if(b > 0).alias("source_rows"),
+        F.max("__kn__").alias("dup"),
+        F.count_if("__w__").alias("rows_after"),
+        confs={"spark.sql.constraintPropagation.enabled": "false"})
+    (merged.filter("__w__").select(*cols)
+           .write.format(fmt).mode("overwrite").save(staging))
+    m = obs.get
+    if (m["dup"] or 0) > 1:
+        shutil.rmtree(staging)
         raise ValueError(
-            f"merge_upsert: column sets differ: target-only "
-            f"{sorted(set(target.columns) - set(source.columns))}, "
-            f"source-only {sorted(set(source.columns) - set(target.columns))}")
-    source = source.select(*target.columns)  # align order for unionByName
-    from pyspark.sql import functions as F
-
-    # ONE stats aggregate replaces the former THREE pre-swap count actions
-    # (duplicate-key probe, matched count, inserted count — r12; each was
-    # its own scheduler round trip, and the CDC replay sink pays them per
-    # micro-batch): group the source by key, left-join the target's key
-    # multiplicities, and read dup/matched/inserted off a single row.
-    # matched = Σ target multiplicity over source keys (identical to the
-    # semi-join count); inserted = source keys with no target match
-    # (identical to the anti-join row count once the dup check passes,
-    # since every source key then holds exactly one row). The aggregate
-    # still runs BEFORE the swap, like every plan reading target_path.
-    tk = target.groupBy(*keys).agg(F.count(F.lit(1)).alias("__tn__"))
-    sk = source.groupBy(*keys).agg(F.count(F.lit(1)).alias("__sn__"))
-    stats = (sk.join(tk, keys, "left")
-               .agg(F.max("__sn__").alias("__dup__"),
-                    F.coalesce(F.sum(F.coalesce(F.col("__tn__"), F.lit(0))),
-                               F.lit(0)).alias("__matched__"),
-                    F.coalesce(F.sum(F.when(F.col("__tn__").isNull(), 1)
-                                      .otherwise(0)),
-                               F.lit(0)).alias("__inserted__"))
-               .first())
-    if (stats["__dup__"] or 0) > 1:
-        raise ValueError("merge_upsert: source has duplicate merge keys — "
-                         "ambiguous update; dedupe the source first "
-                         "(e.g. unique_by_column with keep_order_by)")
-    matched_cnt = int(stats["__matched__"])
-    inserted = int(stats["__inserted__"]) if insert_unmatched else 0
-
-    src_keys = source.select(*keys)
-    unmatched_src = source.join(target.select(*keys), keys, "left_anti")
-    survivors = (target if when_matched == "ignore"
-                 else target.join(src_keys, keys, "left_anti"))
-    parts = [survivors]
-    if when_matched == "update":
-        parts.append(source.join(target.select(*keys), keys, "left_semi"))
-    if insert_unmatched:
-        parts.append(unmatched_src)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-
-    out.write.format(fmt).mode("overwrite").save(staging)
-    os.rename(target_path, backup)
-    os.rename(staging, target_path)
-    shutil.rmtree(backup)
-    rows_after = (parquet_row_count(target_path) if fmt == "parquet"
-                  else spark.read.format(fmt).load(target_path).count())
-    return {"matched": matched_cnt, "inserted": inserted,
-            "rows_after": rows_after}
+            "merge_upsert: source has duplicate merge keys — "
+            + ("a bootstrap write would seed a key-ambiguous target; "
+               "dedupe the source first" if bootstrap else
+               "ambiguous update; dedupe the source first "
+               "(e.g. unique_by_column with keep_order_by)"))
+    stats = {"matched": m["matched"],
+             "inserted": m["unmatched"] if insert_unmatched else 0,
+             "rows_after": m["rows_after"],
+             "source_rows": m["source_rows"]}
+    if not m["source_rows"]:
+        shutil.rmtree(staging)
+    elif bootstrap:
+        os.rename(staging, target_path)
+    else:
+        os.rename(target_path, backup)
+        os.rename(staging, target_path)
+        shutil.rmtree(backup)
+    return stats
 
 
 def write_training_shards(df: DataFrame, path: str, *, n_shards: int,

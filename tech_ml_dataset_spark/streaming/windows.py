@@ -11,11 +11,27 @@ correctness oracle checks; the streaming form is the production path.
 
 from __future__ import annotations
 
+import logging
+import time
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..operators.aggregate import resolve_reducer
+
+_log = logging.getLogger("tech_ml_dataset_spark")
+
+
+def _log_batch(op: str, batch_id, rows_in: int, rows_out: int,
+               t0: float, **counts) -> None:
+    """One INFO record per sink micro-batch; the fields are also record
+    attributes (``op``, ``batch_id``, ``rows_in``, ``rows_out``,
+    ``seconds`` and any ``counts``)."""
+    seconds = time.perf_counter() - t0
+    _log.info("%s batch %s: %d rows in, %d rows out, %.3f s", op, batch_id,
+              rows_in, rows_out, seconds,
+              extra={"op": op, "batch_id": batch_id, "rows_in": rows_in,
+                     "rows_out": rows_out, "seconds": seconds, **counts})
 
 
 def with_watermark(df: DataFrame, ts_col: str, delay: str) -> DataFrame:
@@ -227,8 +243,6 @@ def streaming_upsert_sink(df: DataFrame, target_path: str, keys, *,
     a real table format.
 
     Returns the started query handle (availableNow trigger)."""
-    from ..sources.io import merge_upsert
-
     keys = [keys] if isinstance(keys, str) else list(keys)
     if dedupe_batch and sequence_by is None:
         import warnings
@@ -243,7 +257,7 @@ def streaming_upsert_sink(df: DataFrame, target_path: str, keys, *,
         upsert_batch_apply(batch_df, target_path, keys, fmt=fmt,
                            when_matched=when_matched,
                            dedupe_batch=dedupe_batch,
-                           sequence_by=sequence_by)
+                           sequence_by=sequence_by, batch_id=batch_id)
 
     return foreach_batch_sink(df, _apply, checkpoint=checkpoint)
 
@@ -252,18 +266,21 @@ def upsert_batch_apply(batch_df: DataFrame, target_path: str, keys, *,
                        fmt: str = "parquet",
                        when_matched: str = "update",
                        dedupe_batch: bool = True,
-                       sequence_by: str | None = None) -> None:
+                       sequence_by: str | None = None,
+                       batch_id: int | None = None) -> None:
     """ONE micro-batch of the CDC upsert sink — the exact function
     :func:`streaming_upsert_sink`'s foreachBatch invokes, exposed so
     :func:`replay_upsert` can drive the identical code path at
     deterministic batch boundaries (the fingerprint-dedup two-arm
     pattern): within-batch last-change-wins by ``sequence_by``, then
-    the crash-safe copy-on-write MERGE."""
-    from ..sources.io import merge_upsert
+    the crash-safe copy-on-write MERGE (an empty batch leaves the
+    target untouched). Logs one INFO record: ``rows_in`` is the changes
+    merged (after last-change-wins), ``rows_out`` matched + inserted;
+    every count is observed on the merge's one write."""
+    from ..sources.io import _merge_observed
 
+    t0 = time.perf_counter()
     keys = [keys] if isinstance(keys, str) else list(keys)
-    if not batch_df.take(1):
-        return
     src = batch_df
     if dedupe_batch:
         from pyspark.sql import Window as W, functions as SF
@@ -272,8 +289,12 @@ def upsert_batch_apply(batch_df: DataFrame, target_path: str, keys, *,
         w = W.partitionBy(*keys).orderBy(order)
         src = (src.withColumn("__rn__", SF.row_number().over(w))
                   .filter(SF.col("__rn__") == 1).drop("__rn__"))
-    merge_upsert(batch_df.sparkSession, target_path, src, keys,
-                 fmt=fmt, when_matched=when_matched)
+    st = _merge_observed(batch_df.sparkSession, target_path, src, keys,
+                         fmt=fmt, when_matched=when_matched,
+                         insert_unmatched=True)
+    _log_batch("upsert_batch", batch_id, st["source_rows"],
+               st["matched"] + st["inserted"], t0,
+               matched=st["matched"], inserted=st["inserted"])
 
 
 def replay_upsert(batches, target_path: str, keys, *,
@@ -288,10 +309,10 @@ def replay_upsert(batches, target_path: str, keys, *,
     ``sequence_by``) — which hash-checks the sink's merge law
     end-to-end; the production streaming arm keeps its e2e pytest
     evidence (real readStream, replay idempotency)."""
-    for b in batches:
+    for i, b in enumerate(batches):
         upsert_batch_apply(b, target_path, keys, fmt=fmt,
                            when_matched=when_matched,
-                           sequence_by=sequence_by)
+                           sequence_by=sequence_by, batch_id=i)
 
 
 
@@ -326,7 +347,7 @@ def streaming_dedup_sink(df: DataFrame, corpus_path: str, *,
     ``corpus_path``, then the surviving docs are appended — so the corpus
     stays exactly-deduped as the stream runs. The streaming face of
     :func:`~tech_ml_dataset_spark.functions.dedup.incremental_dedup`
-    (same bloom-filter history probe: NEITHER side shuffles).
+    (same history probe: NEITHER side shuffles).
 
     Replay idempotency (the part foreachBatch does NOT give for free):
     accepted docs land under ``batch_id=N`` partition directories, written
@@ -340,13 +361,14 @@ def streaming_dedup_sink(df: DataFrame, corpus_path: str, *,
     the corpus-existence probe and partition listing use os.path); an
     object-store corpus needs a real table format underneath.
 
-    Cost model: each batch re-scans the accepted corpus to rebuild the
-    bloom filter (one column, predicate-pruned — cheap relative to the
-    crawl itself, and correct under replay because the corpus IS the
-    state). Right for minutes-cadence ingest; a seconds-cadence trickle
-    should persist and OR-merge the bloom bitmaps instead of rebuilding —
-    at that point reach for the batch ``incremental_dedup`` API with a
-    cached history frame.
+    Cost model: each batch scans the accepted corpus' text column once,
+    fingerprinting it on the fly into a semi join against the batch's
+    broadcast fingerprints — no shuffle of the corpus, no Python, and a
+    job count that does not grow with the corpus; correct under replay
+    because the corpus IS the state. The scan still grows with the
+    corpus: a seconds-cadence trickle over a large corpus should keep a
+    persisted fingerprint column (or table) to probe instead of
+    re-normalizing every accepted text per batch.
 
     Returns the started query handle (availableNow trigger).
 
@@ -370,11 +392,15 @@ def text_dedup_batch_apply(batch_df: DataFrame, batch_id: int,
     """ONE micro-batch of the crawl-ingest text-dedup sink — the exact
     function :func:`streaming_dedup_sink`'s foreachBatch invokes,
     exposed for the :func:`replay_text_dedup` deterministic arm (the
-    two-arm pattern shared with the fingerprint and upsert sinks)."""
+    two-arm pattern shared with the fingerprint and upsert sinks).
+    Logs one INFO record (``rows_in`` batch rows, ``rows_out`` rows
+    accepted), both observed on the corpus write."""
     import os as _os
 
     from ..functions.dedup import exact_dedup, incremental_dedup
+    from ..sources.io import _observe_on_clone
 
+    t0 = time.perf_counter()
     if not batch_df.take(1):
         return
     spark = batch_df.sparkSession
@@ -386,28 +412,23 @@ def text_dedup_batch_apply(batch_df: DataFrame, batch_id: int,
     if hist_dirs:
         hist = (spark.read.parquet(corpus_path)
                      .filter(F.col("batch_id") != batch_id))
-        kw = {}
-        if exact_verify:
-            # Bloom SIZING from the corpus parquet footers (r12): with
-            # exact_verify the bloom is a pure prefilter — any m/k gives
-            # the identical row set — so the default sizing count()
-            # (a full normalize+scan of the history PER MICRO-BATCH,
-            # inside build_bloom) is a scheduler round trip spent
-            # reading back a number the footers already store. The
-            # footer count over-counts NULL-text rows, which only makes
-            # the bitmap marginally larger. exact_verify=False keeps
-            # the exact count: there the fpp actually picks which rows
-            # are (falsely) dropped, and sizing must stay bit-stable.
-            from ..sources.io import parquet_row_count
-            kw["expected_items"] = max(1, sum(
-                parquet_row_count(_os.path.join(corpus_path, d))
-                for d in hist_dirs))
         fresh = incremental_dedup(fresh, hist, text_col,
-                                  exact_verify=exact_verify, **kw)
-    out = fresh.withColumn("batch_id", F.lit(batch_id))
-    with _dynamic_partition_overwrite(spark):
-        (out.write.mode("overwrite").partitionBy("batch_id")
-            .parquet(corpus_path))
+                                  exact_verify=exact_verify)
+    # the batch's own rows ride along to the observation (__w__ false)
+    # and are filtered out right after it
+    tagged = (fresh.withColumn("__w__", F.lit(True))
+                   .unionByName(batch_df.withColumn("__w__", F.lit(False))))
+    out, obs = _observe_on_clone(
+        tagged, F.count_if("__w__").alias("accepted"),
+        F.count_if(~F.col("__w__")).alias("rows_in"),
+        confs={"spark.sql.sources.partitionOverwriteMode": "dynamic"})
+    (out.filter("__w__").drop("__w__")
+        .withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite").partitionBy("batch_id")
+        .parquet(corpus_path))
+    m = obs.get
+    _log_batch("text_dedup_batch", batch_id, m["rows_in"], m["accepted"],
+               t0)
 
 
 def replay_text_dedup(batches, corpus_path: str, *,
@@ -419,7 +440,7 @@ def replay_text_dedup(batches, corpus_path: str, *,
     distinct text accepted exactly once — in its earliest batch, by the
     exact_dedup survivor within that batch), which a SQL oracle
     replays; the production streaming arm keeps its e2e pytest
-    evidence (bloom-filter history probe, replay idempotency)."""
+    evidence (history probe, replay idempotency)."""
     for i, b in enumerate(batches):
         text_dedup_batch_apply(b, i, corpus_path, text_col=text_col,
                                id_col=id_col, exact_verify=exact_verify)

@@ -748,20 +748,90 @@ def test_merge_upsert_modes(spark, tmp_path):
     assert rows == {1: 10.0}                    # 2 deleted, 3 not inserted
 
 
+def _tree(root):
+    """Every directory and file under ``root`` with the file bytes."""
+    import os
+    out = {}
+    for d, dirs, files in os.walk(root):
+        out[os.path.relpath(d, root)] = None
+        for f in files:
+            with open(os.path.join(d, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(d, f), root)] = fh.read()
+    return out
+
+
 def test_merge_upsert_guards(spark, tmp_path):
     import pytest as _pt
 
     from tech_ml_dataset_spark.sources.io import merge_upsert
     tgt = str(tmp_path / "tg")
     spark.createDataFrame([(1, 1.0)], ["id", "v"]).write.parquet(tgt)
-    dup = spark.createDataFrame([(1, 2.0), (1, 3.0)], ["id", "v"])
+    before = _tree(str(tmp_path))
+    dup = spark.createDataFrame([(1, 2.0), (1, 3.0), (2, 4.0)], ["id", "v"])
     with _pt.raises(ValueError, match="duplicate merge keys"):
         merge_upsert(spark, tgt, dup, "id")
+    # the duplicate check left the target's files byte-identical and no
+    # staging or backup dir behind
+    assert _tree(str(tmp_path)) == before
     bad_cols = spark.createDataFrame([(1, 2.0)], ["id", "other"])
     with _pt.raises(ValueError, match="column sets differ"):
         merge_upsert(spark, tgt, bad_cols, "id")
     # guards must not have touched the target
-    assert spark.read.parquet(tgt).count() == 1
+    assert _tree(str(tmp_path)) == before
+
+
+# Target rows (id, v); the dups target repeats key 2 and holds a NULL key.
+_UNIQUE = [(1, 10.0), (2, 20.0), (3, 30.0), (4, 40.0)]
+_DUPS = _UNIQUE + [(2, 21.0), (2, 22.0), (None, 0.0)]
+_SRC = [(2, 99.0), (4, 98.0), (5, 50.0), (6, 60.0), (None, 7.0)]
+# (target, when_matched, insert_unmatched) -> (matched, inserted,
+# rows_after); matched counts target rows whose key is in the source
+_MERGE_STATS = {
+    ("unique", "update", True): (2, 3, 7),
+    ("unique", "update", False): (2, 0, 4),
+    ("unique", "ignore", True): (2, 3, 7),
+    ("unique", "ignore", False): (2, 0, 4),
+    ("unique", "delete", True): (2, 3, 5),
+    ("unique", "delete", False): (2, 0, 2),
+    ("dups", "update", True): (4, 3, 8),
+    ("dups", "update", False): (4, 0, 5),
+    ("dups", "ignore", True): (4, 3, 10),
+    ("dups", "ignore", False): (4, 0, 7),
+    ("dups", "delete", True): (4, 3, 6),
+    ("dups", "delete", False): (4, 0, 3),
+}
+
+
+def test_merge_upsert_returned_stats_every_mode(spark, tmp_path):
+    from tech_ml_dataset_spark.sources.io import merge_upsert
+    for (tname, wm, ins), (matched, inserted, after) in _MERGE_STATS.items():
+        tgt = str(tmp_path / f"{tname}_{wm}_{ins}")
+        spark.createDataFrame(_UNIQUE if tname == "unique" else _DUPS,
+                              "id long, v double").write.parquet(tgt)
+        src = spark.createDataFrame(_SRC, "id long, v double")
+        rep = merge_upsert(spark, tgt, src, "id", when_matched=wm,
+                           insert_unmatched=ins)
+        assert rep == {"matched": matched, "inserted": inserted,
+                       "rows_after": after}, (tname, wm, ins)
+        assert spark.read.parquet(tgt).count() == after
+
+
+def test_merge_upsert_empty_source_leaves_filesystem_unchanged(spark,
+                                                                tmp_path):
+    from tech_ml_dataset_spark.sources.io import merge_upsert
+    tgt = str(tmp_path / "t")
+    spark.createDataFrame(_UNIQUE, "id long, v double").write.parquet(tgt)
+    empty = str(tmp_path / "empty_src")
+    spark.createDataFrame([], "id long, v double").write.parquet(empty)
+    before = _tree(str(tmp_path))
+    for src in (spark.read.parquet(empty),
+                spark.createDataFrame([], "id long, v double")):
+        rep = merge_upsert(spark, tgt, src, "id")
+        assert rep == {"matched": 0, "inserted": 0, "rows_after": 4}
+        # bootstrap: a missing target stays missing
+        rep = merge_upsert(spark, str(tmp_path / "fresh"), src, "id")
+        assert rep == {"matched": 0, "inserted": 0, "rows_after": 0}
+        assert _tree(str(tmp_path)) == before
 
 
 def test_merge_upsert_recovers_from_crashed_swap(spark, tmp_path):

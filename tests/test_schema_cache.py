@@ -8,11 +8,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import types as T
 
-from tech_ml_dataset_spark.sources.io import (
-    parquet_row_count,
-    read_parquet,
-    to_dataset,
-)
+from tech_ml_dataset_spark.sources.io import read_parquet, to_dataset
 
 
 def _rows(df):
@@ -124,20 +120,3 @@ def test_partitioned_nanos_table_reads(spark, tmp_path):
     finally:
         if before is not None:
             spark.conf.set(key, before)
-
-
-def test_parquet_row_count_skips_hidden_files(tmp_path):
-    """Spark's reader skips ``_``/``.``-prefixed files and directories, so
-    the footer count must too."""
-    root = tmp_path / "t"
-    (root / "_temporary" / "0").mkdir(parents=True)
-    (root / "k=1").mkdir()
-    three = pa.table({"v": [1, 2, 3]})
-    pq.write_table(three, str(root / "part-0.parquet"))
-    pq.write_table(three, str(root / "k=1" / "part-1.parquet"))
-    pq.write_table(three, str(root / "_temporary" / "0" / "part-2.parquet"))
-    pq.write_table(three, str(root / ".part-3.parquet"))
-    pq.write_table(three, str(root / "_part-4.parquet"))
-    assert parquet_row_count(str(root)) == 6
-    assert parquet_row_count(str(root / "part-0.parquet")) == 3
-    assert parquet_row_count(str(root / "missing")) == 0

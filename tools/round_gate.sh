@@ -6,28 +6,32 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.01}"
 
-echo "== 1/7 registry structure and driver window (no Spark, seconds)"
+echo "== 1/8 registry structure and driver window (no Spark, seconds)"
 python -m pytest tests/test_plans.py -q -p no:cacheprovider \
     -k "test_registry_structure or test_driver_window_integrity" 2>&1 | tail -1
 
-echo "== 2/7 full-registry vanilla sweep (the canonical correctness gate)"
+echo "== 2/8 sinks: fault replays, merge_upsert contract, jobs per batch (~4 min)"
+python -m pytest tests/test_sinks.py tests/test_models_io.py -q \
+    -x -p no:cacheprovider -k "test_sinks or merge_upsert" 2>&1 | tail -1
+
+echo "== 3/8 full-registry vanilla sweep (the canonical correctness gate)"
 python tools/verify_local.py --vanilla "$SF" 2>&1 | tr '\r' '\n' \
     | grep -E "queries checked"
 
-echo "== 3/7 thorough codec fuzz (1000 Hypothesis examples)"
+echo "== 4/8 thorough codec fuzz (1000 Hypothesis examples)"
 SPARK_GRAFT_HYP_EXAMPLES=1000 python -m pytest tests/test_properties.py \
     -q -k "avro or pdf or warc or cdx or flac" 2>&1 | tail -1
 
-echo "== 4/7 registry-wide plan audits (scale killers + schema contract)"
+echo "== 5/8 registry-wide plan audits (scale killers + schema contract)"
 python -m pytest tests/test_plans.py -q 2>&1 | tail -1
 
-echo "== 5/7 whole test suite (the 15 slowest tests, then the summary line)"
+echo "== 6/8 whole test suite (the 15 slowest tests, then the summary line)"
 python -m pytest tests/ -q --durations=15 2>&1 | tr '\r' '\n' \
     | sed -n '/slowest 15 durations/,$p'
 
-echo "== 6/7 benchmark self-test (names, units, seeds, corrupted-output check)"
+echo "== 7/8 benchmark self-test (names, units, seeds, corrupted-output check)"
 python3 perfbench/selftest.py 2>&1 | tail -1
 
-echo "== 7/7 bench (diff against git show HEAD:BENCH_full.json; re-measure"
+echo "== 8/8 bench (diff against git show HEAD:BENCH_full.json; re-measure"
 echo "   outliers ISOLATED before believing any regression — +-25% ambient)"
 python bench.py
