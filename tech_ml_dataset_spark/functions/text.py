@@ -109,14 +109,6 @@ def lang_id(text: Column) -> Column:
     return F.when(has_cjk, F.lit("zh")).otherwise(expr)
 
 
-def fingerprint64(text: Column) -> Column:
-    """64-bit document fingerprint: xxhash64 of normalized text (lowercased,
-    whitespace-collapsed). Stable across partitions/engines that implement
-    xxhash64 identically; for cross-engine oracles use md5 instead."""
-    norm = F.regexp_replace(F.lower(F.trim(text)), _WS, " ")
-    return F.xxhash64(norm)
-
-
 # GPT-2-style pre-tokenizer pattern, restricted to constructs RE2 (DuckDB)
 # and Java regex share: no lookahead, ASCII classes. Counts contractions,
 # letter runs, digit runs, punctuation runs, whitespace runs as tokens —
@@ -487,20 +479,6 @@ def _lang_from(text: Column, toks: Column) -> Column:
         expr = F.when(score > best, F.lit(lang)).otherwise(expr)
         best = F.greatest(best, score)
     return F.when(has_cjk, F.lit("zh")).otherwise(expr)
-
-
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the standard text-stat columns; tokenizes once (one projection,
-    shared token array) regardless of feature count."""
-    t = F.col(text_col)
-    staged, toks, n_tok, pr, atl = _staged_features(df, text_col)
-    return staged.withColumns({
-        "n_chars_calc": char_count(t),
-        "n_tokens": n_tok,
-        "avg_token_len": atl,
-        "punct_ratio": pr,
-        "quality": _quality_from(n_tok, pr, atl),
-    }).drop("__t__", "__toks__")
 
 
 def with_quality_lang(df: DataFrame, text_col: str = "text", *,

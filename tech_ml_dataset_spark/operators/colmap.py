@@ -2,8 +2,9 @@
 
 Reference semantics: column-map (src/tech/v3/dataset_api.clj:705-816),
 row-map (dataset_api.clj:885), pmap-ds (dataset_api.clj:855), column-cast
-with parse-failure tracking (dataset_api.clj:1026), update/update-columnwise/
-update-elemwise (dataset_api.clj:560,587,641), column filters
+with parse-failure tracking (dataset_api.clj:1026), update/update-columnwise
+(dataset_api.clj:560,587; update-elemwise, :641, is ``column_map(df, c, fn,
+[c])``), column filters
 (src/tech/v3/dataset/column_filters.clj:44-149), induction
 (dataset_api.clj:1402).
 
@@ -54,11 +55,6 @@ def column_map(df: DataFrame, out_col: str, fn, src_cols: Sequence[str], *,
         return pd.Series([fn(*vals) for vals in zip(*series)])
 
     return df.withColumn(out_col, _udf(*cols))
-
-
-def update_elemwise(df: DataFrame, colname: str, fn) -> DataFrame:
-    """``update-elemwise`` (dataset_api.clj:641): map a fn over one column."""
-    return column_map(df, colname, fn, [colname])
 
 
 def row_map(df: DataFrame, fn, schema) -> DataFrame:

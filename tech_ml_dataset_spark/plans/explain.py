@@ -22,31 +22,6 @@ def optimized_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
-def num_shuffles(df: DataFrame) -> int:
-    """Count of exchange (shuffle) operators in the physical plan."""
-    plan = physical_plan(df)
-    return sum(line.lstrip("+- :").startswith("Exchange")
-               for line in plan.splitlines())
-
-
-def has_python_stage(df: DataFrame) -> bool:
-    """True when the plan crosses into Python (UDF / Arrow eval stages) —
-    the slow path that JVM-only operators must never take."""
-    plan = physical_plan(df)
-    return any(m in plan for m in
-               ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
-                "FlatMapGroupsInPandas", "PythonMapInArrow"))
-
-
-def pushed_filters(df: DataFrame) -> str:
-    """The `PushedFilters: [...]` fragment of the scan, or '' when absent."""
-    plan = physical_plan(df)
-    if "PushedFilters" not in plan:
-        return ""
-    frag = plan.split("PushedFilters:", 1)[1]
-    return frag.split("]", 1)[0] + "]"
-
-
 def skew_report(df: DataFrame, keys, *, top_k: int = 10,
                 sample_fraction: float | None = None, seed: int = 42) -> dict:
     """Join/aggregation key-skew diagnostic: per-key share of the (optionally

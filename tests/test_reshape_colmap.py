@@ -7,6 +7,7 @@ from pyspark.sql import functions as F, types as T
 from tech_ml_dataset_spark.ml import preprocess as mlp
 from tech_ml_dataset_spark.operators import colmap as cm
 from tech_ml_dataset_spark.operators import reshape as rs
+from tech_ml_dataset_spark.plans.explain import physical_plan
 
 
 def test_unroll_column(spark):
@@ -74,6 +75,28 @@ def test_row_map(spark):
     out = cm.row_map(df, lambda r: {"a": r["a"], "b": r["b"], "c": r["a"] * r["b"]},
                      "a int, b int, c int")
     assert out.collect()[0]["c"] == 2
+
+
+def test_pmap_ds_applies_fn_per_partition(spark):
+    df = spark.createDataFrame([(i, float(i)) for i in range(10)],
+                               "id long, x double").repartition(3)
+    out = cm.pmap_ds(df, lambda pdf: pdf.assign(x=pdf["x"] * 2))
+    assert "MapInPandas" in physical_plan(out)
+    assert out.schema == df.schema
+    assert sorted((r["id"], r["x"]) for r in out.collect()) == \
+        [(i, 2.0 * i) for i in range(10)]
+    counted = cm.pmap_ds(df, lambda pdf: pdf.assign(x=float(len(pdf))),
+                         schema="id long, x double")
+    sizes = df.groupBy(F.spark_partition_id().alias("p")).count().collect()
+    assert sorted(r["x"] for r in counted.collect()) == \
+        sorted(float(r["count"]) for r in sizes for _ in range(r["count"]))
+
+
+def test_of_datatype(spark):
+    df = spark.createDataFrame([(1, "s", 1.5, 2)], "i int, s string, d double, j int")
+    assert cm.of_datatype(df, "int") == ["i", "j"]
+    assert cm.of_datatype(df, "string") == ["s"]
+    assert cm.of_datatype(df, "date") == []
 
 
 def test_column_filters(spark):
