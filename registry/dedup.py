@@ -244,18 +244,16 @@ def similarity_join_docs(spark, sf_dir):
         """)
 def incremental_dedup_docs(spark, sf_dir):
     """Incremental dedup of a new crawl batch against a historical corpus
-    (dedup.py incremental_dedup): with exact_verify=True the batch's
-    md5 fingerprints are broadcast into a semi join over one historical
-    scan, and the batch anti-joins the seen set — neither side shuffles
-    and no Python runs. The id ranges overlap (historical < 300, batch
+    (dedup.py incremental_dedup): the batch's md5 fingerprints are
+    broadcast into a semi join over one historical scan, and the batch
+    anti-joins the seen set — neither side shuffles and no Python runs. The id ranges overlap (historical < 300, batch
     >= 200) to model re-crawl overlap: the 100 shared docs are exact
     dups and must drop. The result is exact, hence SQL-oracleable as
     NOT IN over normalized text."""
     docs = _t(spark, sf_dir, "documents")
     hist = docs.filter(F.col("doc_id") < 300)
     new = docs.filter(F.col("doc_id") >= 200)
-    out = dd.incremental_dedup(new, hist, "text", fpp=0.01,
-                               exact_verify=True)
+    out = dd.incremental_dedup(new, hist, "text")
     return _ckpt_sort(out.select("doc_id", "lang", "n_chars"), "doc_id")
 
 

@@ -424,10 +424,10 @@ class Dataset:
         from .functions import text as _txt
         return self._wrap(_txt.heavy_hitters(self.df, col, **kw))
 
-    def incremental_dedup(self, historical, text_col="text", **kw):
+    def incremental_dedup(self, historical, text_col="text"):
         from .functions import dedup as _dd
         return self._wrap(_dd.incremental_dedup(self.df, _unwrap(historical),
-                                                text_col, **kw))
+                                                text_col))
 
     def pack_sequences(self, budget, *, by, order_by, **kw):
         from .functions import text as _txt

@@ -42,8 +42,9 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     groupBy carrying a (score, id) struct instead of the bare id.
 
     NULL text is NOT a duplicate of other NULL text: missing-content rows
-    route around the dedup untouched (pre-r3 they vanished entirely — the
-    NULL fingerprint never matched the semi join's equality)."""
+    route around the dedup untouched (a NULL fingerprint never matches
+    the semi join's equality, so without the separate NULL branch those
+    rows would vanish)."""
     keep_fn = F.min if keep == "min" else F.max
     fp = df.withColumn("__fp__", F.md5(normalize_text(F.col(text_col))))
     nulls = fp.filter(F.col("__fp__").isNull()).drop("__fp__")
@@ -60,8 +61,8 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
 
 def _argmax_survivors(nn: DataFrame, fp_col: str, id_col: str,
                       keep_by: str, keep_fn) -> DataFrame:
-    """argmax(keep_by)-per-fingerprint survivor election, skew-safe
-    (r8): a `row_number over (partition by fp)` window funnels a hot
+    """argmax(keep_by)-per-fingerprint survivor election, skew-safe:
+    a `row_number over (partition by fp)` window funnels a hot
     fingerprint's FULL rows through one reducer; here only SLIM
     (fp, id, score) rows ever key on the bare fingerprint — best score
     per fp (map-side-combined agg), score-tied candidates, keep-order
@@ -77,7 +78,7 @@ def _argmax_survivors(nn: DataFrame, fp_col: str, id_col: str,
     row_number window this replaced kept exactly one arbitrary row;
     electing among indistinguishable duplicates has no meaningful
     'one' to keep, so the precondition is documented rather than
-    papered over with a dropDuplicates shuffle (r9, ADVICE)."""
+    papered over with a dropDuplicates shuffle."""
     slim = nn.select(fp_col, id_col, keep_by)
     best = slim.groupBy(fp_col).agg(F.max(keep_by).alias("__s__"))
     cand = (slim.join(best, fp_col)
@@ -95,7 +96,7 @@ def shingles(text: Column, k: int = 5, *, mode: str = "char") -> Column:
     inlined, it re-ran at every reference — ~2k+4 times in word mode and,
     far worse, once per generated index in char mode (the substr lambda's
     body re-evaluated its whole subtree per element: O(len²) per row).
-    Measured r11 (sf0.1 corpus, isolated min-of-5 A/B): char-shingle
+    Measured on the sf0.1 corpus (isolated min-of-5 A/B): char-shingle
     projection 3.13s -> 0.64s (4.9x; 0.15s in a quiet window), word mode
     0.108s -> 0.067s (1.6x); outputs verified identical (exceptAll both
     directions empty, both modes)."""
@@ -106,8 +107,8 @@ def _shingles_of(norm: Column, k: int, mode: str) -> Column:
     if mode == "word":
         # k shifted slices folded with zip_with — O(k) array copies, not
         # the O(n·k) per-index slice form (same rewrite as text.py
-        # _word_ngrams, measured 7.6x on the sf0.1 corpus in r4).
-        # r5: toks is a bare split — normalize_text already trims and
+        # _word_ngrams, measured 7.6x on the sf0.1 corpus).
+        # toks is a bare split — normalize_text already trims and
         # collapses whitespace, so the only empty token is the ""-input
         # case, guarded at the top. The previous filter(split, len>0)
         # wrapper copied its lambda into every toks reference (k+3 sites),
@@ -122,7 +123,7 @@ def _shingles_of(norm: Column, k: int, mode: str) -> Column:
                                  lambda a, b: F.concat(a, F.lit(" "), b))
             # docs with 1..k-1 tokens emit ONE partial gram (all tokens
             # joined) — the original law the DuckDB oracles replay
-            # (clamping slice over greatest(n-k+1, 1)). Without it the r4
+            # (clamping slice over greatest(n-k+1, 1)). Without it the
             # zip_with rewrite gave short docs ZERO features: identical
             # sub-k-word docs could never match in the Jaccard family,
             # and simhash collapsed every short doc to 0, pairing
@@ -254,7 +255,7 @@ def minhash_candidates(df: DataFrame, id_col: str = "doc_id",
     Scale shape: the band self-join carries ONLY (id, band, band_hash) —
     document-sized shingle arrays never enter the ×bands fan-out or the
     band exchange (they used to, replicating each doc's k-gram set 16×
-    through the shuffle — the r1 verdict's scale-killer). The distinct
+    through the shuffle, a corpus-scale killer). The distinct
     pair-id set is resolved first, then shingles are joined back once per
     side for the Jaccard verify.
 
@@ -273,9 +274,9 @@ def minhash_candidates(df: DataFrame, id_col: str = "doc_id",
     # localCheckpoint): the self-join references it from both sides and
     # Catalyst duplicates shared subtrees, so the shingle + n_hashes-wide
     # minhash-signature expression — the expensive per-row work of this
-    # operator — ran TWICE per action (measured r11: 4 parquet scans in
-    # plans/r11/minhash_pairs_docs_before.txt, 2 + the one-time checkpoint
-    # after). bands × ~16 bytes per doc — the slim LSH key table, exactly
+    # operator — ran TWICE per action (measured on minhash_pairs_docs'
+    # physical plan: 4 parquet scans without the checkpoint, 2 plus the
+    # one-time checkpoint with it). bands × ~16 bytes per doc — the slim LSH key table, exactly
     # what minhash_index_write already persists for cross-run probes; the
     # document-sized shingle arrays stay streamed (re-derived per verify
     # side), preserving the at-scale no-materialization contract.
@@ -320,7 +321,7 @@ def minhash_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     longest text per near-dup cluster), same law as
     :func:`exact_dedup`'s ``keep_by``: max score, min-id tiebreak, NULL
     scores lose. Elected by the same skew-safe map-side-combining
-    argmax as exact_dedup (r8) over the slim (id, cluster, score) node
+    argmax as exact_dedup over the slim (id, cluster, score) node
     table — a degenerate mega-cluster never funnels one reducer."""
     pairs = minhash_dedup_pairs(df, id_col, text_col, **kw)
     if keep_by is not None and not transitive:
@@ -534,8 +535,9 @@ def hamming_dedup_pairs(df: DataFrame, hash_col: str,
     localCheckpoint) before banding: the self-join references it from both
     sides and Catalyst duplicates shared subtrees, so whatever computed the
     fingerprint — the fused image/audio decode mapInPandas, the simhash
-    aggregation — ran TWICE per action (measured r11: 4 MapInPandas nodes
-    in plans/r11/image_dhash_dedup_docs_before.txt, 2 after). 16 bytes/row
+    aggregation — ran TWICE per action (measured on
+    image_dhash_dedup_docs' physical plan: 4 MapInPandas nodes without
+    the checkpoint, 2 with it). 16 bytes/row
     bounded by document count — the 'fingerprint once, shuffle 8-byte
     hashes, never pixels' promise the fingerprint docstrings make, now
     true of the compute as well as the shuffle."""
@@ -610,7 +612,7 @@ def fingerprint_dedup(df: DataFrame, fp_col: str, id_col: str = "doc_id",
     nulls = df.filter(F.col(fp_col).isNull())
     nn = df.filter(F.col(fp_col).isNotNull())
     if keep_by is not None:
-        # skew-safe argmax election, same as exact_dedup (r8)
+        # skew-safe argmax election, same as exact_dedup
         return _argmax_survivors(nn, fp_col, id_col, keep_by, keep_fn) \
             .unionByName(nulls)
     survivors = nn.groupBy(fp_col).agg(keep_fn(id_col).alias(id_col))
@@ -644,9 +646,9 @@ def shared_fingerprint_pairs(df: DataFrame, fp_col: str,
     localCheckpoint): the self-join (and the ``max_df`` aggregation)
     reference it from multiple branches and Catalyst duplicates shared
     subtrees, so the upstream fingerprint pass — e.g. the fused video
-    frame-decode mapInPandas — ran once PER REFERENCE (measured r11:
-    2 MapInPandas nodes in plans/r11/video_dedup_docs_before.txt, 1
-    after). 16 bytes/row bounded by total fingerprint count, the same
+    frame-decode mapInPandas — ran once PER REFERENCE (measured on
+    video_dedup_docs' physical plan: 2 MapInPandas nodes without the
+    checkpoint, 1 with it). 16 bytes/row bounded by total fingerprint count, the same
     order as what already crossed the distinct's exchange."""
     inv = df.select(F.col(id_col), F.explode(fp_col).alias("__fp__")) \
             .distinct().localCheckpoint(eager=True)
@@ -706,8 +708,8 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     plan references it from SIX branches (a-side, b-side, the admitted-gram
     aggregation under each, and both `_attach_shingles` joins), and Spark
     re-plans a self-joined subtree per reference — measured as six full
-    parquet scans each recomputing the shingling expression (r11,
-    plans/r11/ngram_jaccard_docs_before.txt). The materialized frame is
+    parquet scans each recomputing the shingling expression in
+    ngram_jaccard_docs' physical plan. The materialized frame is
     corpus-sized (id + shingle set), the same order as one shuffle of the
     corpus — acceptable for the verification/small-corpus role this
     operator documents; MinHash remains the at-scale path."""
@@ -765,9 +767,9 @@ def winnow_dedup_pairs(df: DataFrame, id_col: str = "doc_id",
     localCheckpoint): the inverted-index self-join references it from
     both sides, the ``max_df`` aggregation from both of those, and the
     optimizer additionally re-evaluates the UDF around pushed filters
-    (guide §4.4) — measured r11: EIGHT ArrowEvalPython nodes in
-    plans/r11/winnow_pairs_docs_before.txt for one logical fingerprint
-    pass, 1 after. The frame is (id, array<long>) — one long per winnow
+    (guide §4.4) — measured: EIGHT ArrowEvalPython nodes in
+    winnow_pairs_docs' physical plan for one logical fingerprint pass
+    without the checkpoint, 1 with it. The frame is (id, array<long>) — one long per winnow
     window, ~w× smaller than the text it fingerprints, the same
     metadata-not-payload class as the banded minhash table."""
     from ..dtutil import ensure_parallelism
@@ -835,7 +837,7 @@ def similarity_join(left: DataFrame, right: DataFrame,
                       shingles(F.col(text_col), k, mode="word").alias("__sh__"))
     # __n__ = |A| from the (distinct) shingle array BEFORE exploding: the
     # prefix-length law |A| - ceil(t*|A|) + 1 is defined over the FULL
-    # token set. Computing it after the dfreq join (the pre-r4 shape)
+    # token set. Computing it after the dfreq join (an earlier shape)
     # undercounted |A| when max_df dropped tokens, shrinking prefixes and
     # losing candidate pairs beyond the documented index-truncation
     # effect. Carrying the size through the explode costs no shuffle.
@@ -856,8 +858,8 @@ def similarity_join(left: DataFrame, right: DataFrame,
     # Materialized ONCE (the ngram_jaccard_pairs idiom): _prefix references
     # dfreq from BOTH sides and Catalyst duplicates shared subtrees, so the
     # union + count aggregation — i.e. a full shingle+explode pass over BOTH
-    # tables — ran twice (measured r11: 8 parquet scans in the plan,
-    # plans/r11/similarity_join_docs_before.txt). The materialized frame is
+    # tables — ran twice (measured: 8 parquet scans in
+    # similarity_join_docs' physical plan without the checkpoint). The materialized frame is
     # the PPJoin global token order itself (distinct gram, df) — vocab-sized,
     # the table the published algorithm computes in its first pass — while
     # the corpus sides stay streamed (re-shingled per reference, never
@@ -967,7 +969,7 @@ def dedup_clusters(pairs: DataFrame, nodes: DataFrame, id_col: str = "doc_id",
     # localCheckpoint): the threshold count and the fast path's collect —
     # or, on the propagation path, the edges build — are separate actions,
     # so the whole upstream pair pipeline (banded join + exact verify)
-    # re-executed per action (r11). Two longs per pair, the same volume
+    # re-executed per action. Two longs per pair, the same volume
     # the propagation path already localCheckpoints as `edges`.
     pairs = pairs.select("id_a", "id_b").localCheckpoint(eager=True)
     n_pairs = pairs.limit(driver_threshold + 1).count() \
@@ -1007,7 +1009,7 @@ def dedup_clusters(pairs: DataFrame, nodes: DataFrame, id_col: str = "doc_id",
     edges = edges.localCheckpoint(eager=False)
     # eager: iteration 1's action references `labels` in BOTH the neighbor
     # join and the new-labels join — a lazy checkpoint could let the forked
-    # branches race on an uncached nondeterministic source (review r3)
+    # branches race on an uncached nondeterministic source
     labels = (nodes.select(F.col(id_col).alias("node")).distinct()
                    .withColumn("label", F.col("node"))
                    .localCheckpoint(eager=True))
@@ -1040,144 +1042,36 @@ def dedup_clusters(pairs: DataFrame, nodes: DataFrame, id_col: str = "doc_id",
 
 
 # --------------------------------------------------------------------------
-# Incremental dedup against a historical corpus (bloom-filter broadcast)
+# Incremental dedup against a historical corpus (exact fingerprint probe)
 # --------------------------------------------------------------------------
 
-def _bloom_params(expected_items: int, fpp: float) -> tuple[int, int]:
-    """Standard bloom sizing: m = -n·ln(p)/ln(2)^2 bits, k = m/n·ln(2)."""
-    import math
-    n = max(expected_items, 1)
-    m = int(math.ceil(-n * math.log(fpp) / (math.log(2) ** 2)))
-    m = max(64, (m + 63) // 64 * 64)  # whole 64-bit words
-    k = max(1, int(round(m / n * math.log(2))))
-    return m, k
-
-
-def _bloom_positions(h, m: int, k: int):
-    """k double-hash bit positions from one signed-64 hash (numpy int64
-    array): pos_i = (h1 + i*h2) mod m with h1/h2 the two 32-bit halves.
-    Kirsch-Mitzenmacher double hashing — standard bloom construction."""
-    import numpy as np
-    u = h.astype(np.uint64)
-    h1 = (u & np.uint64(0xFFFFFFFF)).astype(np.int64)
-    h2 = ((u >> np.uint64(32)) | np.uint64(1)).astype(np.int64)
-    return [((h1 + np.int64(i) * h2) % np.int64(m)).astype(np.int64)
-            for i in range(k)]
-
-
-def build_bloom(df: DataFrame, col: str, *, expected_items: int | None = None,
-                fpp: float = 0.001):
-    """Distributed bloom-filter build over ``xxhash64(col)``: each partition
-    folds its rows into a local numpy bitmap inside ONE mapInPandas pass,
-    emits the bitmap as a single binary row, and the driver ORs the
-    ~numPartitions bitmaps streamed through toLocalIterator (peak driver
-    memory 2 bitmaps, never the corpus).
-
-    At 100 TB the corpus is scanned once with no shuffle at all; only
-    compact bitmaps (m/8 bytes each) cross to the driver. Sizing is the
-    caller's contract: 1e9 items at fpp=1e-3 is ~1.7 GiB — broadcastable;
-    beyond ~1e10 items prefer the exact anti-join (:func:`exact_dedup`
-    composition) because no bloom fits an executor. Returns an opaque
-    ``(bitmap_bytes, m, k)`` triple for :func:`incremental_dedup`."""
-    import numpy as np
-    if expected_items is None:
-        expected_items = df.count()
-    m, k = _bloom_params(expected_items, fpp)
-    n_words = m // 64
-    hashed = df.select(F.xxhash64(F.col(col)).alias("h"))
-
-    def _partition_bitmap(batches):
-        import pandas as pd
-        words = np.zeros(n_words, dtype=np.uint64)
-        for pdf in batches:
-            h = pdf["h"].to_numpy(dtype=np.int64)
-            for pos in _bloom_positions(h, m, k):
-                np.bitwise_or.at(words, (pos // 64).astype(np.int64),
-                                 np.uint64(1) << (pos % 64).astype(np.uint64))
-        yield pd.DataFrame({"bm": [words.tobytes()]})
-
-    merged = np.zeros(n_words, dtype=np.uint64)
-    for row in hashed.mapInPandas(_partition_bitmap,
-                                  "bm binary").toLocalIterator():
-        merged |= np.frombuffer(row["bm"], dtype=np.uint64)
-    return merged.tobytes(), m, k
-
-
 def incremental_dedup(new_batch: DataFrame, historical: DataFrame,
-                      text_col: str = "text", *, fpp: float = 0.001,
-                      expected_items: int | None = None,
-                      exact_verify: bool = False) -> DataFrame:
+                      text_col: str = "text") -> DataFrame:
     """Keep only rows of ``new_batch`` whose normalized text was NOT seen
     in ``historical`` — the daily-ingest primitive: dedup a new crawl
     batch against a 100 TB historical corpus WITHOUT shuffling either
     side. NULL text is never a duplicate: those rows always pass.
 
-    ``exact_verify=True``: a row drops iff its fingerprint (md5 of the
-    normalized text, shared with :func:`exact_dedup`) occurs in
-    ``historical``. One JVM plan, no Python: the batch's fingerprints
-    are broadcast into a semi join that scans the history once and
-    keeps the (at most batch-sized) seen set, and the batch anti-joins
-    that set, broadcast too. The build side is the fingerprints as they
-    come, not their distinct set: a semi join only tests membership,
-    and a distinct would cost a shuffle per batch. 128-bit fingerprints
-    keep collision odds below 1e-18 at 1e10 docs, and full text never
-    crosses a join.
-
-    ``exact_verify=False`` (default): one historical scan builds a
-    broadcast bloom bitmap (:func:`build_bloom`, sized by
-    ``expected_items``/``fpp``); one new-batch scan probes it in a
-    vectorized pandas UDF (numpy bit tests, no Python loop), and every
-    bloom-positive row drops. A ~fpp fraction of genuinely-new rows is
-    falsely dropped — the right trade for training dedup.
+    A row drops iff its fingerprint (md5 of the normalized text, shared
+    with :func:`exact_dedup`) occurs in ``historical``. One JVM plan, no
+    Python: the batch's fingerprints are broadcast into a semi join that
+    scans the history once and keeps the (at most batch-sized) seen set,
+    and the batch anti-joins that set, broadcast too. The build side is
+    the fingerprints as they come, not their distinct set: a semi join
+    only tests membership, and a distinct would cost a shuffle per
+    batch. 128-bit fingerprints keep collision odds below 1e-18 at 1e10
+    docs, and full text never crosses a join.
 
     Beyond-reference (training-pipeline mandate)."""
-    if exact_verify:
-        fp = new_batch.withColumn(
-            "__fp__", F.md5(normalize_text(F.col(text_col))))
-        nn = fp.filter(F.col("__fp__").isNotNull())
-        seen = (historical
-                .select(F.md5(normalize_text(F.col(text_col)))
-                        .alias("__fp__"))
-                .join(F.broadcast(nn.select("__fp__")),
-                      "__fp__", "left_semi"))
-        return (nn.join(F.broadcast(seen), "__fp__", "left_anti")
-                  .unionByName(fp.filter(F.col("__fp__").isNull()))
-                  .select(*new_batch.columns))
-
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    # NULL text never counts as a duplicate: xxhash64 maps NULL input to
-    # the seed hash, which would falsely match every other NULL — route
-    # NULL-text rows straight through and keep them out of the bloom
-    norm_new = normalize_text(F.col(text_col))
-    null_new = new_batch.filter(norm_new.isNull())
-    fp_new = new_batch.filter(norm_new.isNotNull()).withColumn(
-        "__h__", F.xxhash64(normalize_text(F.col(text_col))))
-    hist_norm = historical.select(
-        normalize_text(F.col(text_col)).alias("__t__")) \
-        .filter(F.col("__t__").isNotNull())
-    bitmap, m, k = build_bloom(hist_norm, "__t__",
-                               expected_items=expected_items, fpp=fpp)
-    spark = new_batch.sparkSession
-    bc = spark.sparkContext.broadcast(bitmap)
-
-    @pandas_udf("boolean")
-    def _maybe_seen(h):
-        words = np.frombuffer(bc.value, dtype=np.uint64)
-        hv = h.to_numpy(dtype=np.int64)
-        hit = np.ones(len(hv), dtype=bool)
-        for pos in _bloom_positions(hv, m, k):
-            bits = (words[(pos // 64).astype(np.int64)]
-                    >> (pos % 64).astype(np.uint64)) & np.uint64(1)
-            hit &= bits.astype(bool)
-        import pandas as pd
-        return pd.Series(hit)
-
-    flagged = fp_new.withColumn("__maybe__", _maybe_seen(F.col("__h__")))
-    return flagged.filter(~F.col("__maybe__")) \
-                  .drop("__h__", "__maybe__") \
-                  .unionByName(null_new)
+    fp = new_batch.withColumn(
+        "__fp__", F.md5(normalize_text(F.col(text_col))))
+    nn = fp.filter(F.col("__fp__").isNotNull())
+    seen = (historical
+            .select(F.md5(normalize_text(F.col(text_col))).alias("__fp__"))
+            .join(F.broadcast(nn.select("__fp__")), "__fp__", "left_semi"))
+    return (nn.join(F.broadcast(seen), "__fp__", "left_anti")
+              .unionByName(fp.filter(F.col("__fp__").isNull()))
+              .select(*new_batch.columns))
 
 
 def minhash_pairs_between(new_batch: DataFrame, historical: DataFrame,
@@ -1363,8 +1257,8 @@ def fuzzy_join(left: DataFrame, right: DataFrame, text_col: str = "text",
         # guard |s| < q with CASE, not greatest(,0): sequence(1, 0) DESCENDS
         # to [1, 0] (Spark auto-steps -1), which emitted two spurious
         # truncated grams per short string — every short string then hit
-        # the gram index under hot keys like '' (review late-r4; results
-        # stayed correct only because the levenshtein verify filtered it)
+        # the gram index under hot keys like '' (results stayed
+        # correct only because the levenshtein verify filtered them)
         grams = F.expr(
             f"CASE WHEN {la} >= {q} THEN "
             f"transform(sequence(1, {la} - {q - 1}),"

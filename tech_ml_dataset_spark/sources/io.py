@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import glob as _glob
 import os
+import shutil
 import threading
 from collections import OrderedDict
 from collections.abc import Iterable, Mapping
@@ -553,7 +554,7 @@ def to_dataset(
                     df = reader.load(data)
             except Exception as exc:
                 # avro ships as an EXTERNAL Spark module: the raw failure
-                # is an opaque DATA_SOURCE_NOT_FOUND / ClassNotFound. r7:
+                # is an opaque DATA_SOURCE_NOT_FOUND / ClassNotFound, so
                 # fall through to the vendored pure-python OCF codec
                 # (sources/avro.py — the xlsx/jpeg pattern) instead of
                 # failing; a real spark-avro jar on the classpath still
@@ -562,8 +563,8 @@ def to_dataset(
                 if fmt == "avro" and ("DATA_SOURCE_NOT_FOUND" in str(exc)
                                       or "Failed to find" in str(exc)
                                       or "ClassNotFound" in str(exc)):
-                    # r8 (r7 ADVICE): options/schema the vendored codec
-                    # cannot honor fail loudly instead of being dropped
+                    # options/schema the vendored codec cannot honor
+                    # fail loudly instead of being dropped
                     if opts:
                         raise RuntimeError(
                             "vendored avro codec ignores reader options "
@@ -678,7 +679,7 @@ def write(df: DataFrame, path: str, *, file_type: str | None = None,
         df = df.sortWithinPartitions(*list(sort_by))
     writer = df.write.format(fmt).mode(mode)
     if fmt in ("csv", "json") and "timestampFormat" not in options:
-        # fidelity default (r5, found by the json write->read oracle):
+        # fidelity default (found by the json write->read oracle):
         # Spark's text-sink default timestampFormat carries MILLIseconds
         # only, silently truncating the microsecond component on write —
         # at pipeline scale that is irreversible data loss, not a
@@ -706,7 +707,7 @@ def write(df: DataFrame, path: str, *, file_type: str | None = None,
         if fmt == "avro" and ("DATA_SOURCE_NOT_FOUND" in str(exc)
                               or "Failed to find" in str(exc)
                               or "ClassNotFound" in str(exc)):
-            # r7: vendored pure-python OCF writer (sources/avro.py)
+            # vendored pure-python OCF writer (sources/avro.py)
             # instead of a hard failure; native spark-avro still wins
             # when its jar is present. Partitioned avro layout needs the
             # real datasource — keep that loud.
@@ -716,7 +717,7 @@ def write(df: DataFrame, path: str, *, file_type: str | None = None,
                     "install spark-avro (spark.jars.packages="
                     "org.apache.spark:spark-avro_2.13:<spark-version>) "
                     "or write parquet") from exc
-            # r8 (r7 ADVICE): the fallback must not silently diverge
+            # the fallback must not silently diverge
             # from Spark writer semantics — honor every mode, reject
             # options the vendored codec cannot apply.
             if options:
@@ -729,14 +730,12 @@ def write(df: DataFrame, path: str, *, file_type: str | None = None,
                 x.endswith(".avro") for x in os.listdir(path))
             if mode == "overwrite":
                 if os.path.isdir(path):
-                    import shutil as _sh
-                    _sh.rmtree(path)
+                    shutil.rmtree(path)
             elif mode == "append":
                 # appending would reuse Spark's partition-id part-NNNNN
                 # names and overwrite existing part files — refuse
-                # loudly rather than lose data (r9, ADVICE: comment now
-                # matches the raise; offsetting ids was rejected
-                # because a concurrent writer still collides)
+                # loudly rather than lose data (offsetting the ids
+                # would not help: a concurrent writer still collides)
                 if exists:
                     raise RuntimeError(
                         "vendored avro codec cannot append to an "
@@ -746,7 +745,7 @@ def write(df: DataFrame, path: str, *, file_type: str | None = None,
                         "or install spark-avro") from exc
             elif mode in ("error", "errorifexists", "default"):
                 # Spark's ErrorIfExists tests bare path existence (an
-                # empty directory still errors) — match it (r9, ADVICE)
+                # empty directory still errors) — match it
                 if os.path.exists(path):
                     raise RuntimeError(
                         f"path {path} already exists (mode={mode!r})"
@@ -941,7 +940,7 @@ def read_excel(spark: SparkSession, path: str, *, sheet=0,
     they are an ingest convenience, never a scan path. Prefers pandas'
     engines (openpyxl/xlrd) when installed; otherwise falls through to
     the vendored stdlib codecs — :mod:`.xlsx` for .xlsx and :mod:`.xls`
-    (BIFF8/CFB, r4) for legacy binary .xls — so both formats ingest in a
+    (BIFF8/CFB) for legacy binary .xls — so both formats ingest in a
     bare environment.
 
     ``n_initial_skip_rows`` drops sheet rows before the header (reference
@@ -1124,11 +1123,13 @@ def register_views(spark: SparkSession, sf_dir: str, names: Iterable[str] = TPCH
 
 def _require_local_path(path: str, op: str) -> str:
     """The rename-swap utilities (compact_files / merge_upsert / the shard
-    manifest) mutate the filesystem with os.rename/shutil, which only works
-    for LOCAL paths: on an object store or HDFS the staging write would
-    succeed and the swap then fail, leaving an orphaned staging dir. Fail
-    fast and clearly BEFORE any write instead (ADVICE r3). Scheme-less
-    paths and file:// are local (file:// is returned STRIPPED so os.* and
+    manifest) mutate the filesystem with os.rename/shutil, and the
+    ``batch_id`` corpus sinks find earlier batches with os.listdir; both
+    only work for LOCAL paths: on an object store or HDFS the staging
+    write would succeed and the swap then fail, leaving an orphaned
+    staging dir, and a corpus sink would see no history. Fail fast and
+    clearly BEFORE any write instead. Scheme-less paths and file:// are
+    local (file:// is returned STRIPPED so os.* and
     Spark agree on one spelling); anything like s3://, hdfs://, abfs://,
     gs:// is not — those targets belong in a table format (Delta/Iceberg)
     whose commit protocol is object-store-native."""
@@ -1144,6 +1145,38 @@ def _require_local_path(path: str, op: str) -> str:
     return path
 
 
+def _recover_swap(path: str, tag: str) -> tuple[str, str]:
+    """The staging and backup dirs of the crash-safe swap of ``path``
+    (``<path>.__<tag>_tmp__`` / ``<path>.__<tag>_old__``), after undoing
+    what a previous run left behind. A run that died between the two
+    renames left the intact data at the backup path and possibly no
+    ``path`` at all: the backup is restored if ``path`` is missing and
+    dropped otherwise. A stale staging dir from a failed write is
+    removed. Call it before any read of ``path``. One maintainer per
+    path: concurrent runs against one path are not supported."""
+    base = path.rstrip("/")
+    staging, backup = f"{base}.__{tag}_tmp__", f"{base}.__{tag}_old__"
+    if os.path.isdir(backup):
+        if not os.path.isdir(path):
+            os.rename(backup, path)
+        else:
+            shutil.rmtree(backup)
+    if os.path.isdir(staging):
+        shutil.rmtree(staging)
+    return staging, backup
+
+
+def _swap_in(path: str, staging: str, backup: str) -> None:
+    """Replace ``path`` by the fully written ``staging`` dir with two
+    renames: ``path`` to ``backup``, then ``staging`` to ``path``. A crash
+    between them leaves the data intact at ``backup`` (never half
+    deleted, but briefly absent at ``path``), which the next
+    :func:`_recover_swap` restores."""
+    os.rename(path, backup)
+    os.rename(staging, path)
+    shutil.rmtree(backup)
+
+
 def compact_files(spark: SparkSession, path: str, *,
                   target_file_bytes: int = 512 * 1024 * 1024,
                   fmt: str = "parquet", sort_within_by=None,
@@ -1155,41 +1188,23 @@ def compact_files(spark: SparkSession, path: str, *,
 
     Sizes the rewrite from FILE METADATA only (no data scan): target
     partition count = ceil(total_bytes / target_file_bytes), then one
-    round-robin repartition write to a staging dir, swapped in by rename
-    on success. The swap is two renames — source-to-backup then
-    staging-to-source — so a crash in the gap leaves the data intact in
-    ``<path>.__compact_old__`` (never half-deleted, but briefly absent at
-    ``path``); the NEXT run detects and restores it automatically, and
-    stale staging dirs from failed writes are cleaned up front. Optional
+    round-robin repartition write to ``<path>.__compact_tmp__``, swapped
+    in by the two-rename protocol of :func:`_swap_in`; the next run
+    restores a backup left by a crash between the renames and removes
+    stale staging dirs first (:func:`_recover_swap`). Optional
     ``sort_within_by`` re-sorts rows within each output file to restore
     min/max data-skipping after the merge. Returns
     ``{"n_files_before", "n_files_after", "total_bytes", "target_parts"}``;
-    ``dry_run`` reports without rewriting."""
-    import glob as globmod
+    ``dry_run`` reports without rewriting and changes nothing on disk,
+    recovery included."""
     import math
-    import shutil
 
     path = _require_local_path(path, "compact_files")
-    staging = path.rstrip("/") + ".__compact_tmp__"
-    backup = path.rstrip("/") + ".__compact_old__"
-    # crash recovery: a previous run that died mid-swap left the source at
-    # the backup path; restore it rather than wedging on the next rename.
-    # dry_run performs NO filesystem mutation (its contract), so recovery
-    # and stale-staging cleanup only run on a real compaction. Compaction
-    # is a single-maintainer job: concurrent runs against one path are
-    # not supported (the staging/backup dirs are per-path).
     if not dry_run:
-        if os.path.isdir(backup):
-            if not os.path.isdir(path):
-                os.rename(backup, path)
-            else:
-                shutil.rmtree(backup)
-        if os.path.isdir(staging):
-            shutil.rmtree(staging)
-
-    files = [f for f in globmod.glob(os.path.join(path, f"*.{fmt}"))
+        staging, backup = _recover_swap(path, "compact")
+    files = [f for f in _glob.glob(os.path.join(path, f"*.{fmt}"))
              if os.path.isfile(f)] or \
-        [f for f in globmod.glob(os.path.join(path, "part-*")) if os.path.isfile(f)]
+        [f for f in _glob.glob(os.path.join(path, "part-*")) if os.path.isfile(f)]
     total = sum(os.path.getsize(f) for f in files)
     parts = max(1, math.ceil(total / target_file_bytes))
     report = {"n_files_before": len(files), "total_bytes": total,
@@ -1203,9 +1218,7 @@ def compact_files(spark: SparkSession, path: str, *,
             else list(sort_within_by)
         out = out.sortWithinPartitions(*cols)
     out.write.format(fmt).mode("overwrite").save(staging)
-    os.rename(path, backup)
-    os.rename(staging, path)
-    shutil.rmtree(backup)
+    _swap_in(path, staging, backup)
     report["n_files_after"] = len(
         [f for f in os.listdir(path) if f.startswith("part-")])
     return report
@@ -1228,8 +1241,8 @@ def merge_upsert(spark: SparkSession, target_path: str, source: DataFrame,
     left-joined to the source keys (Spark broadcasts the source key set
     when it fits) beside the source split into matched (semi join) and
     unmatched (anti join) rows — swapped in by the same two-rename
-    crash-safe protocol as :func:`compact_files` (backup dir restored
-    automatically by the next run if a crash lands between renames).
+    crash-safe protocol as :func:`compact_files` (:func:`_swap_in`; the
+    next run restores the backup if a crash lands between the renames).
     Copy-on-write rewrites the whole target: the right shape for bulk
     daily upserts; high-frequency trickle updates belong in a table
     format with file-level pruning (Delta/Iceberg), not raw parquet.
@@ -1272,8 +1285,6 @@ def _merge_observed(spark: SparkSession, target_path: str,
                     source: DataFrame, keys, *, fmt: str,
                     when_matched: str, insert_unmatched: bool) -> dict:
     """:func:`merge_upsert`; the result also holds ``source_rows``."""
-    import shutil
-
     from pyspark.sql import Window, functions as F
 
     target_path = _require_local_path(target_path, "merge_upsert")
@@ -1281,19 +1292,7 @@ def _merge_observed(spark: SparkSession, target_path: str,
     if when_matched not in ("update", "ignore", "delete"):
         raise ValueError(f"when_matched must be update/ignore/delete, "
                          f"got {when_matched!r}")
-    staging = target_path.rstrip("/") + ".__merge_tmp__"
-    backup = target_path.rstrip("/") + ".__merge_old__"
-    # crash recovery FIRST — before any read of target_path: a run that
-    # died between the two renames left the (intact) target at the backup
-    # path and possibly no target dir at all (same contract as
-    # compact_files; single-maintainer per path).
-    if os.path.isdir(backup):
-        if not os.path.isdir(target_path):
-            os.rename(backup, target_path)
-        else:
-            shutil.rmtree(backup)
-    if os.path.isdir(staging):
-        shutil.rmtree(staging)
+    staging, backup = _recover_swap(target_path, "merge")
     # first-run bootstrap: no target yet (the natural first state of a
     # CDC-apply sink) — merging into an empty target makes every source
     # row an unmatched insert
@@ -1366,9 +1365,7 @@ def _merge_observed(spark: SparkSession, target_path: str,
     elif bootstrap:
         os.rename(staging, target_path)
     else:
-        os.rename(target_path, backup)
-        os.rename(staging, target_path)
-        shutil.rmtree(backup)
+        _swap_in(target_path, staging, backup)
     return stats
 
 
@@ -1396,7 +1393,7 @@ def write_training_shards(df: DataFrame, path: str, *, n_shards: int,
     from pyspark.sql import functions as F
 
     # the shard WRITE itself is engine-native (any scheme works), but the
-    # manifest is written with plain open() — local paths only (ADVICE r3)
+    # manifest is written with plain open() — local paths only
     path = _require_local_path(path, "write_training_shards")
     order_by = [order_by] if isinstance(order_by, str) else list(order_by)
     (df.repartitionByRange(n_shards, *[F.col(c) for c in order_by])

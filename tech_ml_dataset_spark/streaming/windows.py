@@ -12,6 +12,7 @@ correctness oracle checks; the streaming form is the production path.
 from __future__ import annotations
 
 import logging
+import os
 import time
 from collections.abc import Mapping, Sequence
 
@@ -315,33 +316,58 @@ def replay_upsert(batches, target_path: str, keys, *,
                            sequence_by=sequence_by, batch_id=i)
 
 
+def _batch_history(spark, corpus_path: str, batch_id: int, op: str,
+                   sub: str = "") -> DataFrame | None:
+    """The earlier batches of the ``batch_id``-partitioned corpus table at
+    ``corpus_path + sub``, or ``None`` when no other batch is written.
+    The current batch is left out (a partition filter), so a replayed
+    batch never dedups against its own half-written partition. The
+    earlier batches are found with ``os.listdir``, so the path must be
+    local: :func:`~tech_ml_dataset_spark.sources.io._require_local_path`
+    raises for any other scheme before anything is written, and a
+    ``file://`` path is listed without its scheme."""
+    from ..sources.io import _require_local_path
 
-from contextlib import contextmanager
+    path = _require_local_path(corpus_path, op) + sub
+    current = f"batch_id={batch_id}"
+    if not os.path.isdir(path) or not any(
+            f.startswith("batch_id=") and f != current
+            for f in os.listdir(path)):
+        return None
+    return spark.read.parquet(path).filter(F.col("batch_id") != batch_id)
 
 
-@contextmanager
-def _dynamic_partition_overwrite(spark):
-    """Scope spark.sql.sources.partitionOverwriteMode=dynamic to a block,
-    restoring EXACTLY the prior state: when the session never set the key,
-    conf.get returns None and a bare skip would leak 'dynamic'
-    session-wide — a later unrelated overwrite+partitionBy write would
-    then keep stale partitions instead of truncating the table."""
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "dynamic")
-    try:
-        yield
-    finally:
-        if prev is not None:
-            spark.conf.set(key, prev)
-        else:
-            spark.conf.unset(key)
+def _write_batch(rows: DataFrame, path: str, batch_id: int,
+                 batch: DataFrame | None = None) -> dict:
+    """Write ``rows`` as partition ``batch_id=N`` of the table at
+    ``path`` with dynamic partition overwrite, so a replayed batch
+    rewrites its own partition and no other. The conf is set on the
+    session clone the write runs on
+    (:func:`~tech_ml_dataset_spark.sources.io._observe_on_clone`), never
+    on the caller's session. Returns the write's observation:
+    ``rows_out``, the rows written, and with ``batch`` also ``rows_in``,
+    the batch's row count. The batch's rows ride the write plan up to
+    the observation and are filtered out right after it, so no extra
+    job counts them."""
+    from ..sources.io import _observe_on_clone
+
+    tagged = rows.withColumn("__w__", F.lit(True))
+    metrics = [F.count_if("__w__").alias("rows_out")]
+    if batch is not None:
+        tagged = tagged.unionByName(batch.withColumn("__w__", F.lit(False)))
+        metrics.append(F.count_if(~F.col("__w__")).alias("rows_in"))
+    out, obs = _observe_on_clone(
+        tagged, *metrics,
+        confs={"spark.sql.sources.partitionOverwriteMode": "dynamic"})
+    (out.filter("__w__").drop("__w__")
+        .withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite").partitionBy("batch_id").parquet(path))
+    return obs.get
 
 
 def streaming_dedup_sink(df: DataFrame, corpus_path: str, *,
                          checkpoint: str, text_col: str = "text",
-                         id_col: str = "doc_id",
-                         exact_verify: bool = True):
+                         id_col: str = "doc_id"):
     """Continuous crawl-ingest dedup: each micro-batch is deduplicated
     (a) within itself and (b) against everything already ACCEPTED into
     ``corpus_path``, then the surviving docs are appended — so the corpus
@@ -351,11 +377,12 @@ def streaming_dedup_sink(df: DataFrame, corpus_path: str, *,
 
     Replay idempotency (the part foreachBatch does NOT give for free):
     accepted docs land under ``batch_id=N`` partition directories, written
-    with dynamic partition OVERWRITE — and the history read EXCLUDES the
-    current batch id (partition-pruned), so a replayed batch N never
-    deduplicates against its own failed half-write and simply rewrites
-    its directory. At-least-once delivery therefore converges to exactly
-    the same corpus.
+    with dynamic partition OVERWRITE (:func:`_write_batch`) — and the
+    history read EXCLUDES the current batch id (:func:`_batch_history`),
+    so a replayed batch N never deduplicates against its own failed
+    half-write and simply rewrites its directory. At-least-once delivery
+    therefore converges to exactly the same corpus. The fingerprint and
+    near-dup sinks share this layout.
 
     Local-filesystem target only (same contract as ``merge_upsert`` —
     the corpus-existence probe and partition listing use os.path); an
@@ -379,71 +406,48 @@ def streaming_dedup_sink(df: DataFrame, corpus_path: str, *,
 
     def _apply(batch_df: DataFrame, batch_id: int):
         text_dedup_batch_apply(batch_df, batch_id, corpus_path,
-                               text_col=text_col, id_col=id_col,
-                               exact_verify=exact_verify)
+                               text_col=text_col, id_col=id_col)
 
     return foreach_batch_sink(df, _apply, checkpoint=checkpoint)
 
 
 def text_dedup_batch_apply(batch_df: DataFrame, batch_id: int,
                            corpus_path: str, *, text_col: str = "text",
-                           id_col: str = "doc_id",
-                           exact_verify: bool = True) -> None:
+                           id_col: str = "doc_id") -> None:
     """ONE micro-batch of the crawl-ingest text-dedup sink — the exact
     function :func:`streaming_dedup_sink`'s foreachBatch invokes,
     exposed for the :func:`replay_text_dedup` deterministic arm (the
     two-arm pattern shared with the fingerprint and upsert sinks).
     Logs one INFO record (``rows_in`` batch rows, ``rows_out`` rows
     accepted), both observed on the corpus write."""
-    import os as _os
-
     from ..functions.dedup import exact_dedup, incremental_dedup
-    from ..sources.io import _observe_on_clone
 
     t0 = time.perf_counter()
     if not batch_df.take(1):
         return
-    spark = batch_df.sparkSession
+    hist = _batch_history(batch_df.sparkSession, corpus_path, batch_id,
+                          "text_dedup_batch")
     fresh = exact_dedup(batch_df, text_col, id_col)
-    hist_dirs = ([f for f in _os.listdir(corpus_path)
-                  if f.startswith("batch_id=")
-                  and f != f"batch_id={batch_id}"]
-                 if _os.path.isdir(corpus_path) else [])
-    if hist_dirs:
-        hist = (spark.read.parquet(corpus_path)
-                     .filter(F.col("batch_id") != batch_id))
-        fresh = incremental_dedup(fresh, hist, text_col,
-                                  exact_verify=exact_verify)
-    # the batch's own rows ride along to the observation (__w__ false)
-    # and are filtered out right after it
-    tagged = (fresh.withColumn("__w__", F.lit(True))
-                   .unionByName(batch_df.withColumn("__w__", F.lit(False))))
-    out, obs = _observe_on_clone(
-        tagged, F.count_if("__w__").alias("accepted"),
-        F.count_if(~F.col("__w__")).alias("rows_in"),
-        confs={"spark.sql.sources.partitionOverwriteMode": "dynamic"})
-    (out.filter("__w__").drop("__w__")
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite").partitionBy("batch_id")
-        .parquet(corpus_path))
-    m = obs.get
-    _log_batch("text_dedup_batch", batch_id, m["rows_in"], m["accepted"],
+    if hist is not None:
+        fresh = incremental_dedup(fresh, hist, text_col)
+    m = _write_batch(fresh, corpus_path, batch_id, batch_df)
+    _log_batch("text_dedup_batch", batch_id, m["rows_in"], m["rows_out"],
                t0)
 
 
 def replay_text_dedup(batches, corpus_path: str, *,
-                      text_col: str = "text", id_col: str = "doc_id",
-                      exact_verify: bool = True) -> None:
+                      text_col: str = "text",
+                      id_col: str = "doc_id") -> None:
     """Deterministic batch-replay arm of :func:`streaming_dedup_sink`:
     the same per-batch function over an explicit ordered batch list.
-    With exact matching the accepted corpus has a closed form (each
-    distinct text accepted exactly once — in its earliest batch, by the
-    exact_dedup survivor within that batch), which a SQL oracle
-    replays; the production streaming arm keeps its e2e pytest
-    evidence (history probe, replay idempotency)."""
+    The accepted corpus has a closed form (each distinct text accepted
+    exactly once — in its earliest batch, by the exact_dedup survivor
+    within that batch), which a SQL oracle replays; the production
+    streaming arm keeps its e2e pytest evidence (history probe, replay
+    idempotency)."""
     for i, b in enumerate(batches):
         text_dedup_batch_apply(b, i, corpus_path, text_col=text_col,
-                               id_col=id_col, exact_verify=exact_verify)
+                               id_col=id_col)
 
 
 def fingerprint_dedup_batch_apply(batch_df: DataFrame, batch_id: int,
@@ -458,35 +462,32 @@ def fingerprint_dedup_batch_apply(batch_df: DataFrame, batch_id: int,
     production/replay pattern): dedup within the batch (greedy
     keep-lowest-id over the banded Hamming pairs), probe the accepted
     corpus' fingerprints excluding this batch_id, append survivors under
-    ``batch_id=N`` with dynamic partition overwrite."""
-    import os as _os
-
+    ``batch_id=N`` with dynamic partition overwrite. Logs one INFO
+    record (``rows_in`` batch rows, ``rows_out`` rows accepted), both
+    observed on the corpus write."""
     from ..functions.dedup import hamming_dedup_pairs, hamming_pairs_between
 
+    t0 = time.perf_counter()
     if not batch_df.take(1):
         return
-    spark = batch_df.sparkSession
-    fresh = batch_df
-    dup_ids = (hamming_dedup_pairs(fresh, fp_col, id_col,
+    hist = _batch_history(batch_df.sparkSession, corpus_path, batch_id,
+                          "fingerprint_dedup_batch")
+    dup_ids = (hamming_dedup_pairs(batch_df, fp_col, id_col,
                                    max_distance=max_distance,
                                    band_bits=band_bits)
                .select(F.col("id_b").alias(id_col)).distinct())
-    fresh = fresh.join(dup_ids, id_col, "left_anti")
-    if _os.path.isdir(corpus_path) and any(
-            f.startswith("batch_id=") for f in _os.listdir(corpus_path)):
-        hist = (spark.read.parquet(corpus_path)
-                     .filter(F.col("batch_id") != batch_id)
-                     .select(id_col, fp_col))
-        matched = (hamming_pairs_between(fresh, hist, fp_col,
-                                         new_id=id_col, hist_id=id_col,
+    fresh = batch_df.join(dup_ids, id_col, "left_anti")
+    if hist is not None:
+        matched = (hamming_pairs_between(fresh, hist.select(id_col, fp_col),
+                                         fp_col, new_id=id_col,
+                                         hist_id=id_col,
                                          max_distance=max_distance,
                                          band_bits=band_bits)
                    .select(F.col("new_id").alias(id_col)).distinct())
         fresh = fresh.join(matched, id_col, "left_anti")
-    out = fresh.withColumn("batch_id", F.lit(batch_id))
-    with _dynamic_partition_overwrite(spark):
-        (out.write.mode("overwrite").partitionBy("batch_id")
-            .parquet(corpus_path))
+    m = _write_batch(fresh, corpus_path, batch_id, batch_df)
+    _log_batch("fingerprint_dedup_batch", batch_id, m["rows_in"],
+               m["rows_out"], t0)
 
 
 def replay_fingerprint_dedup(batches, corpus_path: str, *, fp_col: str,
@@ -529,10 +530,9 @@ def streaming_fingerprint_dedup_sink(df: DataFrame, corpus_path: str, *,
     — the history side is the already-written slim (id, fp) rows, so
     accepted MEDIA BYTES are never re-read, let alone re-decoded.
 
-    Replay idempotency mirrors streaming_dedup_sink exactly: accepted
-    rows land under ``batch_id=N`` with dynamic partition overwrite and
-    the history read excludes the current batch id. Local-filesystem
-    target only (same contract). Returns the started query handle.
+    Replay idempotency: the same ``batch_id=N`` corpus layout as
+    :func:`streaming_dedup_sink`. Local-filesystem target only (same
+    contract). Returns the started query handle.
 
     The per-batch logic lives in :func:`fingerprint_dedup_batch_apply`
     (shared with the oracle-able :func:`replay_fingerprint_dedup`
@@ -565,11 +565,10 @@ def streaming_neardup_sink(df: DataFrame, corpus_path: str, *,
     ``<corpus_path>/docs/batch_id=N`` and their bands/shingles are
     appended to the index under the same batch_id.
 
-    Replay idempotency mirrors streaming_dedup_sink: every table is
-    batch_id-partitioned and written with dynamic partition overwrite,
-    and the index read EXCLUDES the current batch id — a replayed batch
-    never dedups against its own failed half-write and converges to the
-    same corpus and index.
+    Replay idempotency: all three tables use the ``batch_id=N`` corpus
+    layout of :func:`streaming_dedup_sink`, and the index read EXCLUDES
+    the current batch id — a replayed batch never dedups against its own
+    failed half-write and converges to the same corpus and index.
 
     Scale shape: the accepted corpus is shingled ONCE, when accepted —
     each batch reads only the slim (id, band, band_key) table for the
@@ -577,30 +576,30 @@ def streaming_neardup_sink(df: DataFrame, corpus_path: str, *,
     verify; the 100 TB of accepted text is never re-scanned.
 
     Local-filesystem target only (directory probe uses os.path — the
-    streaming_dedup_sink contract). Returns the started query handle
-    (availableNow trigger)."""
-    import os as _os
-
+    streaming_dedup_sink contract). Each batch logs one INFO record
+    (op ``neardup_batch``; ``rows_in`` batch rows, ``rows_out`` docs
+    accepted), observed on the docs write. Returns the started query
+    handle (availableNow trigger)."""
     from ..functions.dedup import (_shingle_and_band, _verified_cross_pairs,
                                    minhash_dedup)
     from ..sources.io import _require_local_path
-    corpus_path = _require_local_path(corpus_path, "streaming_neardup_sink")
+    op = "streaming_neardup_sink"
+    corpus_path = _require_local_path(corpus_path, op)
     params = dict(k=k, n_hashes=n_hashes, bands=bands, seed=seed,
                   hash_fn=hash_fn)
 
     def _apply(batch_df: DataFrame, batch_id: int):
+        t0 = time.perf_counter()
         if not batch_df.take(1):
             return
         spark = batch_df.sparkSession
         fresh = minhash_dedup(batch_df, id_col, text_col,
                               threshold=threshold, **params)
-        bands_dir = corpus_path + "/index/bands"
-        if _os.path.isdir(bands_dir) and any(
-                f.startswith("batch_id=") for f in _os.listdir(bands_dir)):
-            band_h = (spark.read.parquet(bands_dir)
-                           .filter(F.col("batch_id") != batch_id))
-            sh_h = (spark.read.parquet(corpus_path + "/index/shingles")
-                         .filter(F.col("batch_id") != batch_id))
+        band_h = _batch_history(spark, corpus_path, batch_id, op,
+                                "/index/bands")
+        if band_h is not None:
+            sh_h = _batch_history(spark, corpus_path, batch_id, op,
+                                  "/index/shingles")
             sh_n, band_n = _shingle_and_band(fresh, id_col, text_col,
                                              **params)
             matched = (_verified_cross_pairs(sh_n, band_n, sh_h, band_h,
@@ -608,11 +607,10 @@ def streaming_neardup_sink(df: DataFrame, corpus_path: str, *,
                        .select(F.col("new_id").alias(id_col)).distinct())
             fresh = fresh.join(matched, id_col, "left_anti")
         sh, banded = _shingle_and_band(fresh, id_col, text_col, **params)
-        with _dynamic_partition_overwrite(spark):
-            for frame, sub in ((fresh, "/docs"), (banded, "/index/bands"),
-                               (sh, "/index/shingles")):
-                (frame.withColumn("batch_id", F.lit(batch_id))
-                      .write.mode("overwrite").partitionBy("batch_id")
-                      .parquet(corpus_path + sub))
+        m = _write_batch(fresh, corpus_path + "/docs", batch_id, batch_df)
+        _write_batch(banded, corpus_path + "/index/bands", batch_id)
+        _write_batch(sh, corpus_path + "/index/shingles", batch_id)
+        _log_batch("neardup_batch", batch_id, m["rows_in"], m["rows_out"],
+                   t0)
 
     return foreach_batch_sink(df, _apply, checkpoint=checkpoint)

@@ -372,7 +372,7 @@ def test_winnow_dedup_pairs_substring_level(spark):
     assert dd.winnow_dedup_pairs(df, min_shared=1, max_df=1).count() == 0
 
 
-def test_incremental_dedup_bloom_exact_verify(spark):
+def test_incremental_dedup_exact(spark):
     hist = spark.createDataFrame(
         [(i, f"historical document number {i} about topic {i % 7}")
          for i in range(100)], ["doc_id", "text"])
@@ -382,39 +382,17 @@ def test_incremental_dedup_bloom_exact_verify(spark):
          for i in range(40)]
         + [(2000 + i, f"fresh never-seen article {i}") for i in range(20)],
         ["doc_id", "text"])
-    out = dd.incremental_dedup(new, hist, fpp=0.01, exact_verify=True)
+    out = dd.incremental_dedup(new, hist)
     ids = sorted(r["doc_id"] for r in out.collect())
     assert ids == [2000 + i for i in range(20)]
     assert out.columns == ["doc_id", "text"]  # helper columns dropped
 
 
-def test_incremental_dedup_bloom_probabilistic(spark):
-    """Without exact_verify: no false negatives (every true dup drops);
-    false-positive rate on fresh rows stays within a loose fpp bound."""
-    hist = spark.createDataFrame(
-        [(i, f"seen text {i}") for i in range(500)], ["doc_id", "text"])
-    new = spark.createDataFrame(
-        [(i, f"seen text {i}") for i in range(250)]          # all dups
-        + [(10_000 + i, f"unseen text {i}") for i in range(500)],
-        ["doc_id", "text"])
-    out = dd.incremental_dedup(new, hist, fpp=0.001, exact_verify=False)
-    kept = {r["doc_id"] for r in out.collect()}
-    assert not any(i in kept for i in range(250))            # no false negs
-    n_fresh_kept = sum(1 for i in kept if i >= 10_000)
-    assert n_fresh_kept >= 490  # <=2% false-positive drop at fpp=1e-3
-
-
-def test_build_bloom_params_monotone(spark):
-    m1, k1 = dd._bloom_params(1000, 0.01)
-    m2, _ = dd._bloom_params(1000, 0.0001)
-    assert m2 > m1 and m1 % 64 == 0 and k1 >= 1
-
-
 def test_null_text_is_never_a_duplicate(spark):
     """Missing content routes around dedup untouched: NULL text rows all
-    survive exact_dedup AND incremental_dedup (pre-r3, exact_dedup
-    dropped every NULL-text row — NULL fp never matched the semi join —
-    and the bloom's seed-hash of NULL matched every other NULL)."""
+    survive exact_dedup AND incremental_dedup (a NULL fingerprint never
+    matches a join's equality, so both route those rows around the
+    dedup rather than dropping them or pairing them with each other)."""
     df = spark.createDataFrame(
         [(1, None), (2, None), (3, "real text"), (4, "real text")],
         "doc_id long, text string")
@@ -425,11 +403,9 @@ def test_null_text_is_never_a_duplicate(spark):
                                  "doc_id long, text string")
     new = spark.createDataFrame([(1, None), (2, "seen"), (3, "fresh")],
                                 "doc_id long, text string")
-    for ev in (False, True):
-        kept = sorted(r["doc_id"] for r in
-                      dd.incremental_dedup(new, hist,
-                                           exact_verify=ev).collect())
-        assert kept == [1, 3], f"exact_verify={ev}: {kept}"
+    kept = sorted(r["doc_id"] for r in
+                  dd.incremental_dedup(new, hist).collect())
+    assert kept == [1, 3]
 
 
 def test_semdedup_min_id_and_far_rules(spark):

@@ -68,8 +68,6 @@ def test_empty_incremental_dedup_both_ways(spark, empty_li):
     assert dd.incremental_dedup(docs, full).count() == 0
     # non-empty new batch vs EMPTY historical: everything is fresh
     assert dd.incremental_dedup(full, docs).count() == 1
-    assert dd.incremental_dedup(full, docs,
-                                exact_verify=True).count() == 1
 
 
 def test_empty_text_pipeline(spark, empty_li):

@@ -1,11 +1,16 @@
 """Sink micro-batches under injected faults, per-batch job counts and the
 per-batch log record.
 
-The two sinks are ``streaming.windows.upsert_batch_apply`` (copy-on-write
-MERGE through ``sources.io.merge_upsert``) and
-``streaming.windows.text_dedup_batch_apply`` (exact text dedup appended
-under ``batch_id=N``). A fault at any step followed by a replay of the
-same batch must give the table an uninterrupted run gives.
+Two protocols are under test. The crash-safe swap (``sources.io``
+``_recover_swap`` / ``_swap_in``) has two users: the copy-on-write MERGE
+``merge_upsert`` (behind ``streaming.windows.upsert_batch_apply``) and
+``compact_files``. The ``batch_id=N`` corpus layout
+(``streaming.windows`` ``_batch_history`` / ``_write_batch``) has three:
+``text_dedup_batch_apply`` (exact text dedup),
+``fingerprint_dedup_batch_apply`` (64-bit media fingerprints) and
+``streaming_neardup_sink`` (MinHash, corpus plus LSH index). A fault at
+any step followed by a replay of the same batch or call must give the
+table an uninterrupted run gives.
 """
 
 import logging
@@ -27,9 +32,13 @@ def _rows(spark, path):
     return sorted(tuple(r) for r in spark.read.parquet(path).collect())
 
 
-def _leftovers(path):
-    return [p for p in (path + ".__merge_tmp__", path + ".__merge_old__")
+def _leftovers(path, tag):
+    return [p for p in (f"{path}.__{tag}_tmp__", f"{path}.__{tag}_old__")
             if os.path.exists(p)]
+
+
+def _part_files(path):
+    return len([f for f in os.listdir(path) if f.startswith("part-")])
 
 
 def _orders(spark, path, n=60):
@@ -44,6 +53,11 @@ def _changes(spark):
         "id long, v double, tag string")
 
 
+def _small_files(spark, path):
+    spark.range(0, 120).select("id", (F.col("id") * 1.5).alias("v")) \
+         .repartition(6).write.parquet(path)
+
+
 def _staging_save_raises(monkeypatch):
     """The staging write lands its files, then raises once."""
     real = DataFrameWriter.save
@@ -51,7 +65,7 @@ def _staging_save_raises(monkeypatch):
 
     def save(self, path=None, *a, **kw):
         real(self, path, *a, **kw)
-        if state["armed"] and str(path).endswith(".__merge_tmp__"):
+        if state["armed"] and str(path).endswith("_tmp__"):
             state["armed"] = False
             raise Injected("staging write")
 
@@ -80,23 +94,30 @@ def _second_rename_raises(monkeypatch, *, after: bool):
                                    "after_second_rename"])
 def test_merge_upsert_replay_after_fault_matches_clean_run(
         spark, tmp_path, monkeypatch, fault):
-    clean = str(tmp_path / "clean")
-    _orders(spark, clean)
-    io.merge_upsert(spark, clean, _changes(spark), "id")
-    want = _rows(spark, clean)
+    """Both users of the swap: merge_upsert and compact_files."""
+    ops = {"merge": (_orders, lambda p: io.merge_upsert(
+               spark, p, _changes(spark), "id")),
+           "compact": (_small_files, lambda p: io.compact_files(spark, p))}
+    for tag, (make, run) in ops.items():
+        clean = str(tmp_path / f"{tag}_clean")
+        make(spark, clean)
+        run(clean)
+        want = _rows(spark, clean)
 
-    tgt = str(tmp_path / "faulted")
-    _orders(spark, tgt)
-    with monkeypatch.context() as m:
-        if fault == "staging_write":
-            _staging_save_raises(m)
-        else:
-            _second_rename_raises(m, after=fault == "after_second_rename")
-        with pytest.raises(Injected):
-            io.merge_upsert(spark, tgt, _changes(spark), "id")
-    io.merge_upsert(spark, tgt, _changes(spark), "id")
-    assert _rows(spark, tgt) == want
-    assert _leftovers(tgt) == []
+        tgt = str(tmp_path / f"{tag}_faulted")
+        make(spark, tgt)
+        with monkeypatch.context() as m:
+            if fault == "staging_write":
+                _staging_save_raises(m)
+            else:
+                _second_rename_raises(m, after=fault == "after_second_rename")
+            with pytest.raises(Injected):
+                run(tgt)
+        run(tgt)
+        assert _rows(spark, tgt) == want, tag
+        assert _leftovers(tgt, tag) == [], tag
+        if tag == "compact":
+            assert _part_files(tgt) == _part_files(clean) == 1
 
 
 def _doc_batches(spark):
@@ -107,34 +128,76 @@ def _doc_batches(spark):
         for b in range(4)]
 
 
-def _corpus(spark, path):
-    return sorted((r["doc_id"], r["text"], int(r["batch_id"]))
-                  for r in spark.read.parquet(path).collect())
+def _fp_batches(spark):
+    # the same law on 64-bit fingerprints: fp = i % 7
+    return [spark.createDataFrame(
+        [(i, i % 7) for i in range(b * 6, b * 6 + 6)], "doc_id long, fp long")
+        for b in range(4)]
+
+
+def _fp_apply(batch, batch_id, corpus):
+    windows.fingerprint_dedup_batch_apply(batch, batch_id, corpus,
+                                          fp_col="fp")
+
+
+# (batches, one batch, replay) per batch_id corpus sink
+_CORPUS_SINKS = {
+    "text": (_doc_batches, windows.text_dedup_batch_apply,
+             windows.replay_text_dedup),
+    "fingerprint": (_fp_batches, _fp_apply,
+                    lambda bs, corpus: windows.replay_fingerprint_dedup(
+                        bs, corpus, fp_col="fp")),
+}
 
 
 @pytest.mark.parametrize("land_files", [False, True])
 def test_text_dedup_replay_after_failed_write_matches_clean_run(
         spark, tmp_path, monkeypatch, land_files):
-    batches = _doc_batches(spark)
-    clean = str(tmp_path / "clean")
-    windows.replay_text_dedup(batches, clean)
-    want = _corpus(spark, clean)
-
-    corpus = str(tmp_path / "faulted")
+    """Also run on the fingerprint sink: the same corpus layout."""
     real = DataFrameWriter.parquet
-    for i, b in enumerate(batches):
-        if i == 2:
-            def parquet(self, path, *a, **kw):
-                if land_files:
-                    real(self, path, *a, **kw)
-                raise Injected("corpus write")
+    for sink, (make, apply, replay) in _CORPUS_SINKS.items():
+        batches = make(spark)
+        clean = str(tmp_path / f"{sink}_clean")
+        replay(batches, clean)
+        want = _rows(spark, clean)
 
-            with monkeypatch.context() as m:
-                m.setattr(DataFrameWriter, "parquet", parquet)
-                with pytest.raises(Injected):
-                    windows.text_dedup_batch_apply(b, i, corpus)
-        windows.text_dedup_batch_apply(b, i, corpus)
-    assert _corpus(spark, corpus) == want
+        corpus = str(tmp_path / f"{sink}_faulted")
+        for i, b in enumerate(batches):
+            if i == 2:
+                def parquet(self, path, *a, **kw):
+                    if land_files:
+                        real(self, path, *a, **kw)
+                    raise Injected("corpus write")
+
+                with monkeypatch.context() as m:
+                    m.setattr(DataFrameWriter, "parquet", parquet)
+                    with pytest.raises(Injected):
+                        apply(b, i, corpus)
+            apply(b, i, corpus)
+        assert _rows(spark, corpus) == want, sink
+
+
+@pytest.mark.parametrize("sink", sorted(_CORPUS_SINKS))
+def test_corpus_sink_path_schemes(spark, tmp_path, monkeypatch, sink):
+    """A file:// corpus dedups across batches exactly like the plain
+    path (its earlier batches used to go unseen: os.path.isdir does not
+    read URIs), and a remote corpus raises before anything is written."""
+    _, apply, replay = _CORPUS_SINKS[sink]
+    value, schema = (("same text", "doc_id long, text string")
+                     if sink == "text" else (42, "doc_id long, fp long"))
+    batches = [spark.createDataFrame([(i, value)], schema) for i in (1, 2)]
+    plain, uri = str(tmp_path / "plain"), str(tmp_path / "uri")
+    replay(batches, plain)
+    replay(batches, "file://" + uri)
+    assert [r["doc_id"] for r in spark.read.parquet(plain).collect()] == [1]
+    assert _rows(spark, uri) == _rows(spark, plain)
+
+    def parquet(self, path, *a, **kw):
+        raise Injected(f"write to {path}")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    with pytest.raises(ValueError, match="s3a"):
+        apply(batches[0], 0, "s3a://bucket/corpus")
 
 
 def _text_batches(spark, n_batches, per_batch=40):
@@ -162,7 +225,7 @@ def test_exact_incremental_dedup_plan_runs_no_python(spark):
     from tech_ml_dataset_spark.functions.dedup import incremental_dedup
 
     hist, new = _text_batches(spark, 2)
-    out = incremental_dedup(new, hist, exact_verify=True)
+    out = incremental_dedup(new, hist)
     plan = out._jdf.queryExecution().executedPlan().toString()
     for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
         assert node not in plan, node
@@ -188,22 +251,25 @@ def test_upsert_batch_jobs(spark, tmp_path, count_jobs):
 def test_sink_batches_log_one_record_each(spark, tmp_path, caplog):
     tgt = str(tmp_path / "t")
     _orders(spark, tgt)
-    corpus = str(tmp_path / "corpus")
-    docs = _doc_batches(spark)
+    docs, fps = _doc_batches(spark), _fp_batches(spark)
     with caplog.at_level(logging.INFO, logger="tech_ml_dataset_spark"):
         windows.upsert_batch_apply(_changes(spark), tgt, "id", batch_id=3)
-        windows.text_dedup_batch_apply(docs[0], 0, corpus)
-        windows.text_dedup_batch_apply(docs[1], 1, corpus)
+        for i in (0, 1):
+            windows.text_dedup_batch_apply(docs[i], i,
+                                           str(tmp_path / "corpus"))
+        for i in (0, 1):
+            _fp_apply(fps[i], i, str(tmp_path / "fp_corpus"))
     recs = [r for r in caplog.records if r.name == "tech_ml_dataset_spark"]
-    assert [r.op for r in recs] == ["upsert_batch", "text_dedup_batch",
-                                    "text_dedup_batch"]
-    up, d0, d1 = recs
+    assert [r.op for r in recs] == ["upsert_batch"] + \
+        ["text_dedup_batch"] * 2 + ["fingerprint_dedup_batch"] * 2
+    up, d0, d1, f0, f1 = recs
     assert (up.batch_id, up.rows_in, up.rows_out) == (3, 20, 20)
     assert (up.matched, up.inserted) == (10, 10)
     # batch 0 keeps one doc per text class 0..5; batch 1 re-sends classes
-    # 6, 0..4 and accepts only class 6
-    assert (d0.batch_id, d0.rows_in, d0.rows_out) == (0, 6, 6)
-    assert (d1.batch_id, d1.rows_in, d1.rows_out) == (1, 6, 1)
+    # 6, 0..4 and accepts only class 6; the fingerprints follow suit
+    for r0, r1 in ((d0, d1), (f0, f1)):
+        assert (r0.batch_id, r0.rows_in, r0.rows_out) == (0, 6, 6)
+        assert (r1.batch_id, r1.rows_in, r1.rows_out) == (1, 6, 1)
     assert all(r.levelno == logging.INFO and r.seconds > 0 for r in recs)
 
 
@@ -225,3 +291,50 @@ def test_session_still_serializes_after_sink_batches(spark, tmp_path):
     fit = mdl.train_classification(labeled, "label", ["x1", "x2"])
     pred = mdl.predict(labeled, fit)
     assert pred.filter(F.col("prediction") == F.col("label")).count() == 60
+
+
+_SINK_SCHEMA = "doc_id long, text string, fp long"
+
+_STREAMING_SINKS = {
+    "text": lambda stream, corpus, ck: windows.streaming_dedup_sink(
+        stream, corpus, checkpoint=ck),
+    "fingerprint": lambda stream, corpus, ck:
+        windows.streaming_fingerprint_dedup_sink(
+            stream, corpus, checkpoint=ck, fp_col="fp"),
+    "neardup": lambda stream, corpus, ck: windows.streaming_neardup_sink(
+        stream, corpus, checkpoint=ck),
+}
+
+
+@pytest.mark.parametrize("sink", sorted(_STREAMING_SINKS))
+def test_streaming_dedup_sink_restores_overwrite_mode(spark, tmp_path, sink):
+    """A corpus sink's dynamic partitionOverwriteMode must not reach the
+    caller's session: when unset (the common case) a leaked 'dynamic'
+    would make a later unrelated overwrite+partitionBy write keep stale
+    partitions instead of truncating, and a value the caller set must
+    stay as it was."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    start = _STREAMING_SINKS[sink]
+    src, corpus = str(tmp_path / "crawl"), str(tmp_path / "corpus")
+    ck = str(tmp_path / "ck")
+    spark.conf.unset(key)
+    assert spark.conf.get(key, None) is None
+    spark.createDataFrame([(1, "only doc in the crawl", 1)], _SINK_SCHEMA) \
+         .coalesce(1).write.mode("overwrite").parquet(src)
+    start(windows.read_stream(spark, src, _SINK_SCHEMA), corpus,
+          ck).awaitTermination()
+    assert spark.conf.get(key, None) is None  # not leaked
+
+    spark.conf.set(key, "static")
+    try:
+        spark.createDataFrame([(2, "a second, different doc", 2)],
+                              _SINK_SCHEMA) \
+             .coalesce(1).write.mode("append").parquet(src)
+        start(windows.read_stream(spark, src, _SINK_SCHEMA), corpus,
+              ck).awaitTermination()
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.unset(key)
+    docs = corpus + "/docs" if sink == "neardup" else corpus
+    assert sorted(r["doc_id"] for r in spark.read.parquet(docs).collect()) \
+        == [1, 2]

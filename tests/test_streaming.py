@@ -282,8 +282,7 @@ def test_streaming_dedup_sink_builds_deduped_corpus(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(src)
     stream = sw.read_stream(spark, src, "doc_id long, text string")
     q = sw.streaming_dedup_sink(stream, corpus,
-                                checkpoint=str(tmp_path / "ck1"),
-                                exact_verify=True)
+                                checkpoint=str(tmp_path / "ck1"))
     q.awaitTermination()
     kept1 = sorted(r["doc_id"] for r in spark.read.parquet(corpus).collect())
     assert kept1 == [1, 3]  # intra-batch dup 2 collapsed
@@ -294,8 +293,7 @@ def test_streaming_dedup_sink_builds_deduped_corpus(spark, tmp_path):
     ).coalesce(1).write.mode("append").parquet(src)
     stream2 = sw.read_stream(spark, src, "doc_id long, text string")
     q2 = sw.streaming_dedup_sink(stream2, corpus,
-                                 checkpoint=str(tmp_path / "ck1"),
-                                 exact_verify=True)
+                                 checkpoint=str(tmp_path / "ck1"))
     q2.awaitTermination()
     rows = spark.read.parquet(corpus).collect()
     kept2 = sorted(r["doc_id"] for r in rows)
@@ -392,8 +390,8 @@ def test_streaming_sinks_replay_idempotent(spark, tmp_path):
 
     def run2():
         stream = sw.read_stream(spark, src, "doc_id long, text string")
-        sw.streaming_dedup_sink(stream, corpus2, checkpoint=ck2,
-                                exact_verify=True).awaitTermination()
+        sw.streaming_dedup_sink(stream, corpus2,
+                                checkpoint=ck2).awaitTermination()
 
     run2()
     s1 = sorted((r["doc_id"], r["batch_id"])
@@ -403,35 +401,6 @@ def test_streaming_sinks_replay_idempotent(spark, tmp_path):
     s2 = sorted((r["doc_id"], r["batch_id"])
                 for r in spark.read.parquet(corpus2).collect())
     assert s2 == s1
-
-
-def test_streaming_dedup_sink_restores_overwrite_mode(spark, tmp_path):
-    """r4 review: the sink restored partitionOverwriteMode only when it
-    had been set explicitly — when unset (the common case) 'dynamic'
-    leaked session-wide, so a later unrelated overwrite+partitionBy
-    write would keep stale partitions instead of truncating."""
-    key = "spark.sql.sources.partitionOverwriteMode"
-    spark.conf.unset(key)
-    assert spark.conf.get(key, None) is None
-    src = str(tmp_path / "crawl_conf")
-    spark.createDataFrame([(1, "only doc")], ["doc_id", "text"]) \
-         .coalesce(1).write.mode("overwrite").parquet(src)
-    stream = sw.read_stream(spark, src, "doc_id long, text string")
-    q = sw.streaming_dedup_sink(stream, str(tmp_path / "corpus_conf"),
-                                checkpoint=str(tmp_path / "ck_conf"))
-    q.awaitTermination()
-    assert spark.conf.get(key, None) is None  # not leaked
-
-    # and an explicitly-set prior value is restored verbatim
-    spark.conf.set(key, "static")
-    spark.createDataFrame([(2, "second doc")], ["doc_id", "text"]) \
-         .coalesce(1).write.mode("append").parquet(src)
-    stream2 = sw.read_stream(spark, src, "doc_id long, text string")
-    q2 = sw.streaming_dedup_sink(stream2, str(tmp_path / "corpus_conf"),
-                                 checkpoint=str(tmp_path / "ck_conf"))
-    q2.awaitTermination()
-    assert spark.conf.get(key) == "static"
-    spark.conf.unset(key)
 
 
 def test_parser_fn_na_as_missing_law(spark):
