@@ -4,8 +4,8 @@ Implements the public GIF87a/GIF89a format (CompuServe spec / W3C note):
 LZW-compressed palette-indexed images, global/local color tables,
 interlaced and non-interlaced rows, extension blocks skipped (the first
 image frame is decoded; animation frames beyond it are out of scope —
-production pipelines swap in Pillow through multimodal's
-``decode_image_bytes`` hook for animated GIFs).
+when Pillow is importable it takes over inside
+:func:`.multimodal.decode_image_bytes`, the one image codec hook).
 
 Purpose: completes the r5 verdict's "real decode for JPEG/GIF" item —
 png.py (lossless filters+zlib), jpeg.py (lossy huffman+DCT), and this

@@ -10,9 +10,10 @@ EOB runs — the Annex G procedures), 8-bit AND 12-bit precision (r8:
 YCbCr with any sampling factors 1..4 — 4:4:4, 4:2:2, and the
 real-web-majority 4:2:0 — restart-marker tolerant decoding,
 replication chroma upsample. Arithmetic coding (SOF9-11) raises a
-clear error naming the unsupported feature — production pipelines
-swap in Pillow through the same ``decode_image_bytes`` hook
-(multimodal.py) without touching callers. :func:`encode` emits baseline
+clear error naming the unsupported feature (the payload then takes
+the marked fake decode; when Pillow is importable it takes over inside
+:func:`.multimodal.decode_image_bytes`, the one image codec hook,
+without touching callers). :func:`encode` emits baseline
 (with a ``subsampling=`` lever); :func:`encode_progressive` emits a
 full libjpeg-style progressive scan script and :func:`encode_12bit`
 a 12-bit SOF1 stream, primarily as self-contained test sources for

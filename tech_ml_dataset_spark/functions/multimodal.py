@@ -9,28 +9,42 @@ resize, frame sampling, feature extraction) run as Arrow-batched
 ``mapInPandas`` passes so each executor processes whole record batches,
 never row-at-a-time.
 
-Codec (the actual :func:`_try_real_decode` routing): Pillow wins when
-importable (not in this container); otherwise the VENDORED pure-python
-codecs do REAL decodes — :mod:`.png` (stdlib zlib, all five scanline
-filters), :mod:`.jpeg` (baseline + progressive SOF2, any chroma
+Every stage that appends columns runs through one per-row map
+(:func:`_append_columns`): the caller gives the output fields and a
+function of one input cell, and the helper owns the output schema, the
+``batches`` generator and the column-collision check. Only
+:func:`frame_sample` (one row in, N rows out) and :func:`resize_image`
+(replaces its own column) write their own ``mapInPandas`` shell.
+
+Image codec (:func:`decode_image_bytes`, the one routing point): Pillow
+wins when importable; otherwise the VENDORED pure-python codecs do REAL
+decodes — :mod:`.png` (stdlib zlib, all five scanline filters),
+:mod:`.jpeg` (baseline + progressive SOF2, 8- and 12-bit, any chroma
 subsampling), :mod:`.gif` (LZW, first frame). Only payloads no codec
-handles — arithmetic-coded/12-bit JPEG (named-raise in jpeg.py),
-actual video/mp3/ogg, malformed bytes — fall to the clearly-marked
-deterministic fake decoder (pixels derived from the md5 of the bytes).
-Everything around the codec — schemas, batch shapes, partitioning, UDF
-signatures, resize/sample/feature math (pure numpy) — is identical for
-real and fake paths, so adding another real codec is a one-function
-change (:func:`decode_image_bytes`).
+handles — arithmetic-coded JPEG (named-raise in jpeg.py), actual
+video/mp3/ogg, malformed bytes — fall to the clearly-marked
+deterministic fake decoder (pixels derived from the md5 of the bytes),
+with ``decode_real`` False in-band. Everything around the codec —
+schemas, batch shapes, partitioning, UDF signatures,
+resize/sample/feature math (pure numpy) — is identical for real and fake
+paths, so adding another real codec is one entry in ``_IMAGE_CODECS``.
+Audio decodes through one PCM decoder (:func:`_decode_pcm`: 16-bit WAV,
+FLAC) shared by :func:`audio_features` and :func:`audio_fingerprint`.
 """
 
 from __future__ import annotations
 
 import hashlib
+import io
+import wave
 from collections.abc import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
+
+from ..sources.warc import sniff_mime_bytes as _sniff
+from . import gif, jpeg, png
 
 # ---------------------------------------------------------------------------
 # typed metadata schemas
@@ -49,7 +63,7 @@ IMAGE_SCHEMA = T.StructType([
     T.StructField("pixels", T.ArrayType(T.FloatType())),  # row-major HWC
     # True only when a REAL codec produced the pixels (vendored PNG /
     # Pillow); False marks the deterministic fake. In-band so a 100 TB
-    # pipeline can never silently train on fake features (r4 verdict #6).
+    # pipeline can never silently train on fake features.
     T.StructField("decode_real", T.BooleanType()),
 ])
 
@@ -146,7 +160,7 @@ def image_dims(b: Column) -> Column:
     # _let-bind the walk result and the sniffed format: inlined, the
     # 32-step marker walk re-ran once per reference (sof appears in both
     # jpg dims) and the format sniff twice — HOF/when trees have no CSE
-    # in interpreted evaluation (r11)
+    # in interpreted evaluation
     from ..dtutil import _let
 
     def dims_of(sof, fmt):
@@ -172,7 +186,47 @@ def with_image_dims(df: DataFrame, bin_col: str, out_col: str = "dims"
 
 
 # ---------------------------------------------------------------------------
-# decode (STUB: deterministic fake unless Pillow is importable)
+# the per-row map every column-appending stage runs through
+# ---------------------------------------------------------------------------
+
+def _append_columns(df: DataFrame, op: str, col: str,
+                    fields: list[T.StructField], fn) -> DataFrame:
+    """Append ``fields`` to ``df`` in one Arrow-batched ``mapInPandas``
+    pass: ``fn`` maps each cell of ``col`` to its row's output, a tuple
+    when there are several fields. An output name that already exists
+    raises ``ValueError`` here, at call time: a duplicate column would
+    otherwise fail only at the first action. Long fields are built as
+    pandas' nullable ``Int64``, so a NULL never turns a 64-bit hash into
+    float64."""
+    for f in fields:
+        if f.name in df.columns:
+            raise ValueError(
+                f"{op}: output column {f.name!r} already exists on the "
+                f"input; pass another output name to disambiguate")
+    names = [f.name for f in fields]
+    longs = [isinstance(f.dataType, T.LongType) for f in fields]
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = [fn(v) for v in pdf[col]]
+            cols = [rows] if len(names) == 1 else \
+                [list(c) for c in zip(*rows)] or [[]] * len(names)
+            for name, is_long, values in zip(names, longs, cols):
+                pdf[name] = pd.array(values, dtype="Int64") if is_long \
+                    else values
+            yield pdf
+
+    return df.mapInPandas(batches, T.StructType(df.schema.fields + fields))
+
+
+def _pack64(bits: np.ndarray) -> int:
+    """64 bits, MSB first, as a signed 64-bit long."""
+    v = int.from_bytes(np.packbits(bits.ravel()).tobytes(), "big")
+    return v - (1 << 64) if v >= (1 << 63) else v
+
+
+# ---------------------------------------------------------------------------
+# decode (real codecs; a marked deterministic fake for everything else)
 # ---------------------------------------------------------------------------
 
 def _fake_decode(data: bytes, height: int = 8, width: int = 8,
@@ -191,98 +245,105 @@ def _fake_decode(data: bytes, height: int = 8, width: int = 8,
     return (arr.astype(np.float32) / 255.0).reshape(height, width, channels)
 
 
-from ..sources.warc import sniff_mime_bytes as _sniff
-
-
-def _try_real_decode(data: bytes):
-    """Route by the SNIFFED format, never a caller's label (r10
-    verdict #5: the shared :func:`warc.sniff_mime_bytes` magic table
-    is the single authority for both the Catalyst scan-side router
-    and this decode-side dispatch — PNG bytes in a column someone
-    labeled 'jpeg' still take the PNG codec)."""
-    try:  # pragma: no cover - Pillow absent in this container
-        import io
-        from PIL import Image
-        arr = np.asarray(Image.open(io.BytesIO(data)).convert("RGB"),
-                         dtype=np.float64) / 255.0
-        return arr
-    except Exception:
-        pass
-    from ..sources.warc import sniff_mime_bytes
-    mime = sniff_mime_bytes(data)
-    if mime == "image/png":
-        from . import png
-        try:  # vendored pure-python codec — REAL decode
-            arr = png.decode(data)
-        except Exception:  # magic matched but payload malformed -> fake path
-            return None
-        if arr.shape[2] == 1:   # match Pillow's convert("RGB") surface
-            arr = np.repeat(arr, 3, axis=2)
-        elif arr.shape[2] == 4:
-            arr = arr[:, :, :3]
-        return arr.astype(np.float64) / 255.0
-    if mime == "image/jpeg":
-        from . import jpeg
-        try:  # vendored JFIF codec (baseline + progressive + 12-bit,
-            # any subsampling) — REAL decode
-            arr = jpeg.decode(data)
-        except Exception:  # arithmetic/malformed -> fake path
-            return None
-        if arr.shape[2] == 1:
-            arr = np.repeat(arr, 3, axis=2)
-        # 8-bit decodes are uint8 (/255); 12-bit are uint16 (/4095)
-        maxv = 255.0 if arr.dtype == np.uint8 else 4095.0
-        return arr.astype(np.float64) / maxv
-    if mime == "image/gif":
-        from . import gif
-        try:  # vendored LZW codec — REAL decode (first frame)
-            arr = gif.decode(data)
-        except Exception:  # malformed payload -> fake path
-            return None
-        return arr.astype(np.float64) / 255.0
-    return None
+_IMAGE_CODECS = {"image/png": png.decode, "image/jpeg": jpeg.decode,
+                 "image/gif": gif.decode}
 
 
 def decode_image_bytes(data: bytes):
-    """Single-image codec hook: float64 HWC array in [0, 1], or None when
-    no real codec handles the payload (callers then use the marked fake).
-    Swap-in point for additional codecs (jpeg via Pillow etc.)."""
-    return _try_real_decode(data)
+    """The image codec hook: a float64 HWC RGB array in [0, 1], or None
+    when no real codec handles the payload (callers then use the marked
+    fake). Pillow wins when importable; otherwise the payload routes by
+    its SNIFFED format, never a caller's label — the shared
+    :func:`warc.sniff_mime_bytes` magic table is the one authority for
+    both the Catalyst scan-side router and this decode-side dispatch, so
+    PNG bytes in a column labeled 'jpeg' still take the PNG codec. A
+    payload whose magic matches but whose body the codec rejects
+    (malformed bytes, arithmetic-coded JPEG) returns None. Swap-in point
+    for additional codecs."""
+    try:  # pragma: no cover - Pillow is optional
+        from PIL import Image
+        return np.asarray(Image.open(io.BytesIO(data)).convert("RGB"),
+                          dtype=np.float64) / 255.0
+    except Exception:
+        pass
+    decode = _IMAGE_CODECS.get(_sniff(data))
+    if decode is None:
+        return None
+    try:
+        arr = decode(data)
+    except Exception:
+        return None
+    if arr.shape[2] == 1:   # match Pillow's convert("RGB") surface
+        arr = np.repeat(arr, 3, axis=2)
+    # 8-bit decodes are uint8 (/255); 12-bit JPEG is uint16 (/4095)
+    maxv = 255.0 if arr.dtype == np.uint8 else 4095.0
+    return arr[:, :, :3].astype(np.float64) / maxv
+
+
+def _decode_or_fake(data, height: int = 8, width: int = 8):
+    """``(pixels, real)``: the real decode of one binary cell, or the
+    ``height x width`` fake with ``real`` False."""
+    raw = bytes(data) if data is not None else b""
+    arr = decode_image_bytes(raw)
+    if arr is None:
+        return _fake_decode(raw, height, width), False
+    return arr, True
+
+
+def _image_struct(arr: np.ndarray, real: bool) -> dict:
+    """One :data:`IMAGE_SCHEMA` value. ``decode_real`` is always set: an
+    omitted key would surface as NULL, not False, and a ``bool_and``
+    gate would pass fakes."""
+    return {"height": arr.shape[0], "width": arr.shape[1],
+            "channels": arr.shape[2], "pixels": arr.ravel().tolist(),
+            "decode_real": real}
+
+
+def _pixels(img) -> np.ndarray:
+    """The float32 HWC array of one :data:`IMAGE_SCHEMA` value."""
+    return np.asarray(img["pixels"], dtype=np.float32).reshape(
+        img["height"], img["width"], img["channels"])
 
 
 def decode_image(df: DataFrame, bin_col: str, out_col: str = "image", *,
                  fake_hw: tuple[int, int] = (8, 8)) -> DataFrame:
     """Decode a binary column to an image struct via Arrow-batched
     ``mapInPandas``. REAL decode for png/jpeg/gif (Pillow when present,
-    else the vendored codecs — see :func:`_try_real_decode`); payloads
+    else the vendored codecs — see :func:`decode_image_bytes`); payloads
     no codec handles get the marked deterministic fake. Output schema =
     input + ``out_col``."""
     h, w = fake_hw
-    out_schema = T.StructType(df.schema.fields +
-                              [T.StructField(out_col, IMAGE_SCHEMA)])
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            imgs = []
-            for data in pdf[bin_col]:
-                raw = bytes(data) if data is not None else b""
-                arr = _try_real_decode(raw)
-                real = arr is not None
-                if arr is None:
-                    arr = _fake_decode(raw, h, w)
-                imgs.append({"height": arr.shape[0], "width": arr.shape[1],
-                             "channels": arr.shape[2],
-                             "pixels": arr.ravel().tolist(),
-                             "decode_real": real})
-            pdf[out_col] = imgs
-            yield pdf
-
-    return df.mapInPandas(batches, out_schema)
+    return _append_columns(
+        df, "decode_image", bin_col, [T.StructField(out_col, IMAGE_SCHEMA)],
+        lambda data: _image_struct(*_decode_or_fake(data, h, w)))
 
 
 # ---------------------------------------------------------------------------
 # real numpy stages over decoded structs
 # ---------------------------------------------------------------------------
+
+def _resize(arr: np.ndarray, height: int, width: int,
+            cache: dict) -> np.ndarray:
+    """Nearest-neighbor resize by fancy indexing: output row ``i`` is
+    source row ``i*hh//height`` (columns alike). ``cache`` keeps the
+    index arrays per source shape."""
+    hh, ww = arr.shape[0], arr.shape[1]
+    if (hh, ww) not in cache:
+        cache[(hh, ww)] = (np.arange(height) * hh // height,
+                           np.arange(width) * ww // width)
+    ri, ci = cache[(hh, ww)]
+    return arr[ri][:, ci]
+
+
+def _features(arr: np.ndarray, dtype=np.float32) -> list:
+    """Per-channel mean/std + 8-bin intensity histogram of an HWC
+    array."""
+    mean = arr.mean(axis=(0, 1))
+    std = arr.std(axis=(0, 1))
+    hist, _ = np.histogram(arr.mean(axis=2), bins=8, range=(0.0, 1.0))
+    hist = hist / max(1, arr.shape[0] * arr.shape[1])
+    return np.concatenate([mean, std, hist]).astype(dtype).tolist()
+
 
 def resize_image(df: DataFrame, image_col: str, height: int, width: int,
                  out_col: str | None = None) -> DataFrame:
@@ -294,19 +355,13 @@ def resize_image(df: DataFrame, image_col: str, height: int, width: int,
     names = [f.name for f in fields]
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cache = {}
         for pdf in it:
-            resized = []
-            for img in pdf[image_col]:
-                hh, ww, cc = img["height"], img["width"], img["channels"]
-                arr = np.asarray(img["pixels"], dtype=np.float32).reshape(hh, ww, cc)
-                ri = (np.arange(height) * hh // height)
-                ci = (np.arange(width) * ww // width)
-                out = arr[ri][:, ci]
-                resized.append({"height": height, "width": width, "channels": cc,
-                                "pixels": out.ravel().tolist(),
-                                "decode_real": img["decode_real"]})
             res = pdf[names].copy()
-            res[out_col] = resized
+            res[out_col] = [
+                _image_struct(_resize(_pixels(img), height, width, cache),
+                              img["decode_real"])
+                for img in pdf[image_col]]
             yield res
 
     return df.mapInPandas(batches, out_schema)
@@ -315,25 +370,10 @@ def resize_image(df: DataFrame, image_col: str, height: int, width: int,
 def image_features(df: DataFrame, image_col: str, out_col: str = "features"
                    ) -> DataFrame:
     """Per-channel mean/std + 8-bin intensity histogram (pure numpy)."""
-    out_schema = T.StructType(df.schema.fields +
-                              [T.StructField(out_col, T.ArrayType(T.FloatType()))])
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = []
-            for img in pdf[image_col]:
-                arr = np.asarray(img["pixels"], dtype=np.float32).reshape(
-                    img["height"], img["width"], img["channels"])
-                mean = arr.mean(axis=(0, 1))
-                std = arr.std(axis=(0, 1))
-                hist, _ = np.histogram(arr.mean(axis=2), bins=8, range=(0.0, 1.0))
-                hist = hist / max(1, arr.shape[0] * arr.shape[1])
-                feats.append(np.concatenate([mean, std, hist])
-                             .astype(np.float32).tolist())
-            pdf[out_col] = feats
-            yield pdf
-
-    return df.mapInPandas(batches, out_schema)
+    return _append_columns(
+        df, "image_features", image_col,
+        [T.StructField(out_col, T.ArrayType(T.FloatType()))],
+        lambda img: _features(_pixels(img)))
 
 
 def image_pipeline(df: DataFrame, bin_col: str, *, resize_hw: tuple[int, int],
@@ -360,44 +400,16 @@ def image_pipeline(df: DataFrame, bin_col: str, *, resize_hw: tuple[int, int],
     rh, rw = resize_hw
     ftype = T.DoubleType() if feature_dtype == "float64" else T.FloatType()
     np_ftype = np.float64 if feature_dtype == "float64" else np.float32
-    for name in (out_col, flag_col):
-        if name in df.columns:
-            raise ValueError(
-                f"image_pipeline: output column {name!r} already exists on "
-                f"the input (chained pipeline?); pass out_col=/flag_col= "
-                f"to disambiguate")
-    out_schema = T.StructType(df.schema.fields +
-                              [T.StructField(out_col, T.ArrayType(ftype)),
-                               T.StructField(flag_col, T.BooleanType())])
+    cache = {}
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ri_cache = {}
-        for pdf in it:
-            feats = []
-            reals = []
-            for data in pdf[bin_col]:
-                raw = bytes(data) if data is not None else b""
-                arr = _try_real_decode(raw)
-                reals.append(arr is not None)
-                if arr is None:
-                    arr = _fake_decode(raw, h, w)
-                hh, ww = arr.shape[0], arr.shape[1]
-                if (hh, ww) not in ri_cache:
-                    ri_cache[(hh, ww)] = (np.arange(rh) * hh // rh,
-                                          np.arange(rw) * ww // rw)
-                ri, ci = ri_cache[(hh, ww)]
-                arr = arr[ri][:, ci]
-                mean = arr.mean(axis=(0, 1))
-                std = arr.std(axis=(0, 1))
-                hist, _ = np.histogram(arr.mean(axis=2), bins=8, range=(0.0, 1.0))
-                hist = hist / max(1, rh * rw)
-                feats.append(np.concatenate([mean, std, hist])
-                             .astype(np_ftype).tolist())
-            pdf[out_col] = feats
-            pdf[flag_col] = reals
-            yield pdf
+    def row(data):
+        arr, real = _decode_or_fake(data, h, w)
+        return _features(_resize(arr, rh, rw, cache), np_ftype), real
 
-    return df.mapInPandas(batches, out_schema)
+    return _append_columns(
+        df, "image_pipeline", bin_col,
+        [T.StructField(out_col, T.ArrayType(ftype)),
+         T.StructField(flag_col, T.BooleanType())], row)
 
 
 def image_dhash(df: DataFrame, bin_col: str, out_col: str = "dhash",
@@ -422,35 +434,20 @@ def image_dhash(df: DataFrame, bin_col: str, out_col: str = "dhash",
     if grid_h * grid_w != 64:
         raise ValueError("image_dhash packs exactly 64 bits: "
                          f"grid {grid_h}x{grid_w} != 64")
-    for name in (out_col, flag_col):
-        if name in df.columns:
-            raise ValueError(
-                f"image_dhash: output column {name!r} already exists on "
-                f"the input; pass out_col=/flag_col= to disambiguate")
-    out_schema = T.StructType(df.schema.fields +
-                              [T.StructField(out_col, T.LongType()),
-                               T.StructField(flag_col, T.BooleanType())])
+    cache = {}
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx_cache = {}
-        for pdf in it:
-            hashes, reals = [], []
-            for data in pdf[bin_col]:
-                raw = bytes(data) if data is not None else b""
-                arr = _try_real_decode(raw)
-                reals.append(arr is not None)
-                if arr is None:
-                    arr = _fake_decode(raw)
-                hashes.append(_dhash_of(arr, grid_h, grid_w, idx_cache))
-            pdf[out_col] = pd.Series(hashes, dtype="int64")
-            pdf[flag_col] = reals
-            yield pdf
+    def row(data):
+        arr, real = _decode_or_fake(data)
+        return _dhash_of(arr, grid_h, grid_w, cache), real
 
-    return df.mapInPandas(batches, out_schema)
+    return _append_columns(
+        df, "image_dhash", bin_col,
+        [T.StructField(out_col, T.LongType()),
+         T.StructField(flag_col, T.BooleanType())], row)
 
 
 def _dhash_of(arr: np.ndarray, grid_h: int, grid_w: int,
-              idx_cache: dict) -> int:
+              cache: dict) -> int:
     """The dHash core shared by :func:`image_dhash` and
     :func:`video_fingerprint`: gray ordering by EXACT integer channel
     sums (``rint(arr*255)`` recovers the codec bytes — a float32 channel
@@ -459,15 +456,8 @@ def _dhash_of(arr: np.ndarray, grid_h: int, grid_w: int,
     time), nearest resize to ``grid_h x (grid_w+1)``, left<right
     gradient bits, MSB-first signed 64-bit pack."""
     gray = np.rint(arr * 255.0).astype(np.int64).sum(axis=2)
-    hh, ww = gray.shape
-    if (hh, ww) not in idx_cache:
-        idx_cache[(hh, ww)] = (np.arange(grid_h) * hh // grid_h,
-                               np.arange(grid_w + 1) * ww // (grid_w + 1))
-    ri, ci = idx_cache[(hh, ww)]
-    g = gray[ri][:, ci]
-    bits = g[:, :-1] < g[:, 1:]
-    v = int.from_bytes(np.packbits(bits.ravel()).tobytes(), "big")
-    return v - (1 << 64) if v >= (1 << 63) else v
+    g = _resize(gray, grid_h, grid_w + 1, cache)
+    return _pack64(g[:, :-1] < g[:, 1:])
 
 
 def video_fingerprint(df: DataFrame, bin_col: str, out_col: str = "vfp",
@@ -492,31 +482,46 @@ def video_fingerprint(df: DataFrame, bin_col: str, out_col: str = "vfp",
     if grid_h * grid_w != 64:
         raise ValueError("video_fingerprint packs 64 bits per frame: "
                          f"grid {grid_h}x{grid_w} != 64")
-    for name in (out_col, flag_col):
-        if name in df.columns:
-            raise ValueError(
-                f"video_fingerprint: output column {name!r} already exists "
-                f"on the input; pass out_col=/flag_col= to disambiguate")
-    out_schema = T.StructType(df.schema.fields +
-                              [T.StructField(out_col,
-                                             T.ArrayType(T.LongType())),
-                               T.StructField(flag_col, T.BooleanType())])
     frame_idx = list(range(0, n_frames, every_n))
+    cache = {}
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx_cache = {}
-        for pdf in it:
-            fps = []
-            for data in pdf[bin_col]:
-                raw = bytes(data) if data is not None else b""
-                fps.append([_dhash_of(
-                    _fake_decode(raw + i.to_bytes(4, "little")),
-                    grid_h, grid_w, idx_cache) for i in frame_idx])
-            pdf[out_col] = fps
-            pdf[flag_col] = False
-            yield pdf
+    def row(data):
+        raw = bytes(data) if data is not None else b""
+        return [_dhash_of(_fake_decode(raw + i.to_bytes(4, "little")),
+                          grid_h, grid_w, cache) for i in frame_idx], False
 
-    return df.mapInPandas(batches, out_schema)
+    return _append_columns(
+        df, "video_fingerprint", bin_col,
+        [T.StructField(out_col, T.ArrayType(T.LongType())),
+         T.StructField(flag_col, T.BooleanType())], row)
+
+
+def _decode_pcm(data):
+    """``(sample_rate, channels, n_frames, bits, mono)`` of one audio
+    payload, ``mono`` being the float64 channel mean of the raw integer
+    samples; None when the bytes are neither FLAC nor 16-bit
+    uncompressed WAV. FLAC is told apart by the shared magic table, never
+    by a column label, and decodes at any width (the vendored lossless
+    codec). A WAV of another width opens fine, but reading it as
+    ``'<i2'`` would give garbage samples, so it is None."""
+    try:
+        data = bytes(data)
+        if _sniff(data[:16]) == "audio/flac":
+            from . import flac
+            sr, nch, bits, arr = flac.decode(data)
+            pcm = arr.astype(np.float64)
+            return (sr, nch, arr.shape[0], bits,
+                    pcm.mean(axis=1) if nch > 1 else pcm[:, 0])
+        with wave.open(io.BytesIO(data), "rb") as w:
+            if w.getsampwidth() != 2 or w.getcomptype() != "NONE":
+                return None
+            sr, nch, nf = w.getframerate(), w.getnchannels(), w.getnframes()
+            raw = w.readframes(nf)
+        pcm = np.frombuffer(raw, dtype="<i2").astype(np.float64)
+        return (sr, nch, nf, 16,
+                pcm.reshape(-1, nch).mean(axis=1) if nch > 1 else pcm)
+    except Exception:
+        return None
 
 
 def audio_fingerprint(df: DataFrame, bin_col: str, out_col: str = "afp",
@@ -529,79 +534,29 @@ def audio_fingerprint(df: DataFrame, bin_col: str, out_col: str = "afp",
     ``i`` of ``n`` to frame ``i*n_frames//n``, per-frame energy = sum of
     squared raw int16 values (exact in float64), bit ``f`` set iff
     ``E[f] < E[f+1]``, packed MSB-first into a signed 64-bit long.
-    ``n_frames`` must be 65 (64 gradient bits). Undecodable bytes yield
-    NULL (same law as :func:`audio_features`).
+    ``n_frames`` must be 65 (64 gradient bits). Undecodable bytes, and
+    FLAC of any width but 16 bits (it would scale-shift the energy
+    gradients against its WAV twin), yield NULL.
 
     One fused ``mapInPandas`` pass; downstream near-dup joins run on
     8-byte hashes via
     :func:`tech_ml_dataset_spark.functions.dedup.hamming_dedup_pairs` —
     the same fingerprint-once-shuffle-hashes shape as image dHash."""
-    import io
-    import wave
-
     if n_frames - 1 != 64:
         raise ValueError("audio_fingerprint packs exactly 64 gradient "
                          f"bits: n_frames must be 65, got {n_frames}")
-    if out_col in df.columns:
-        raise ValueError(
-            f"audio_fingerprint: output column {out_col!r} already exists "
-            f"on the input; pass out_col= to disambiguate")
-    out_schema = T.StructType(df.schema.fields +
-                              [T.StructField(out_col, T.LongType())])
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            fps = []
-            for data in pdf[bin_col]:
-                try:
-                    # label-distrusting dispatch via the shared
-                    # magic table (r10): FLAC bytes route to the
-                    # FLAC codec whatever the column was called
-                    if _sniff(bytes(data[:16])) == "audio/flac":
-                        # vendored FLAC codec (r8) — REAL lossless
-                        # decode; same 16-bit-only law as the WAV arm
-                        # (other widths would scale-shift the energy
-                        # gradients relative to their WAV twins)
-                        from . import flac as flacmod
-                        _, nch, fbps, arr = flacmod.decode(bytes(data))
-                        if fbps != 16:
-                            fps.append(None)
-                            continue
-                        pcm = arr.astype(np.float64).mean(axis=1) \
-                            if nch > 1 else arr[:, 0].astype(np.float64)
-                    else:
-                        with wave.open(io.BytesIO(bytes(data)), "rb") as w:
-                            # 16-bit uncompressed PCM only: 8/24/32-bit
-                            # WAVs open fine but '<i2' would silently
-                            # mis-parse them into garbage fingerprints
-                            # (false dedup matches). NULL instead, the
-                            # audio_features law.
-                            if (w.getsampwidth() != 2
-                                    or w.getcomptype() != "NONE"):
-                                fps.append(None)
-                                continue
-                            nch, nf = w.getnchannels(), w.getnframes()
-                            raw = w.readframes(nf)
-                        pcm = np.frombuffer(raw, dtype="<i2") \
-                            .astype(np.float64)
-                        if nch > 1:
-                            pcm = pcm.reshape(-1, nch).mean(axis=1)
-                    n = pcm.size
-                    if n == 0:
-                        fps.append(None)
-                        continue
-                    f = (np.arange(n, dtype=np.int64) * n_frames) // n
-                    en = np.bincount(f, weights=pcm * pcm,
-                                     minlength=n_frames)
-                    bits = en[:-1] < en[1:]
-                    v = int.from_bytes(np.packbits(bits).tobytes(), "big")
-                    fps.append(v - (1 << 64) if v >= (1 << 63) else v)
-                except Exception:
-                    fps.append(None)
-            pdf[out_col] = pd.Series(fps, dtype="Int64")
-            yield pdf
+    def row(data):
+        dec = _decode_pcm(data)
+        if dec is None or dec[3] != 16 or not dec[4].size:
+            return None
+        pcm = dec[4]
+        f = (np.arange(pcm.size, dtype=np.int64) * n_frames) // pcm.size
+        en = np.bincount(f, weights=pcm * pcm, minlength=n_frames)
+        return _pack64(en[:-1] < en[1:])
 
-    return df.mapInPandas(batches, out_schema)
+    return _append_columns(df, "audio_fingerprint", bin_col,
+                           [T.StructField(out_col, T.LongType())], row)
 
 
 def synthesize_png(df: DataFrame, id_col: str, *, height: int = 8,
@@ -611,24 +566,12 @@ def synthesize_png(df: DataFrame, id_col: str, *, height: int = 8,
     codec cycling through all five PNG filter types. The closed-form pixel
     law lets a SQL oracle recompute any downstream feature without a codec
     — proving the real encode->decode path end-to-end."""
-    from . import png
-
-    out_schema = T.StructType(df.schema.fields +
-                              [T.StructField(out_col, T.BinaryType())])
-    n = height * width * 3
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = np.arange(n, dtype=np.int64)
-        for pdf in it:
-            payloads = []
-            for did in pdf[id_col]:
-                arr = ((int(did) * 31 + idx * 7) % 256).astype(np.uint8) \
-                    .reshape(height, width, 3)
-                payloads.append(png.encode(arr, filter_mode="cycle"))
-            pdf[out_col] = payloads
-            yield pdf
-
-    return df.mapInPandas(batches, out_schema)
+    idx = np.arange(height * width * 3, dtype=np.int64)
+    return _append_columns(
+        df, "synthesize_png", id_col, [T.StructField(out_col, T.BinaryType())],
+        lambda did: png.encode(
+            ((int(did) * 31 + idx * 7) % 256).astype(np.uint8)
+            .reshape(height, width, 3), filter_mode="cycle"))
 
 
 def synthesize_jpeg(df: DataFrame, id_col: str, *, height: int = 16,
@@ -659,33 +602,25 @@ def synthesize_jpeg(df: DataFrame, id_col: str, *, height: int = 16,
     coefficient refines to full precision, so the same exactness law
     holds bit-for-bit — the fixture source for the progressive-decode
     driver oracle."""
-    from . import jpeg
-
     if height % 8 or width % 8:
         raise ValueError("synthesize_jpeg: height/width must be multiples "
                          "of 8 (constant-block exactness law)")
     if subsampling != "444" and not color:
         raise ValueError("synthesize_jpeg: chroma subsampling needs "
                          "color=True (grayscale has no chroma)")
-    out_schema = T.StructType(df.schema.fields +
-                              [T.StructField(out_col, T.BinaryType())])
-    bh, bw = height // 8, width // 8
+    bidx = np.arange((height // 8) * (width // 8), dtype=np.int64) \
+        .reshape(height // 8, width // 8)
     enc = jpeg.encode_progressive if progressive else jpeg.encode
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bidx = np.arange(bh * bw, dtype=np.int64).reshape(bh, bw)
-        for pdf in it:
-            payloads = []
-            for did in pdf[id_col]:
-                vals = (int(did) * 37 + bidx * 11) % 256
-                arr = np.repeat(np.repeat(vals, 8, 0), 8, 1).astype(np.uint8)
-                if color:
-                    arr = np.repeat(arr[:, :, None], 3, axis=2)
-                payloads.append(enc(arr, quant=1, subsampling=subsampling))
-            pdf[out_col] = payloads
-            yield pdf
+    def row(did):
+        vals = (int(did) * 37 + bidx * 11) % 256
+        arr = np.repeat(np.repeat(vals, 8, 0), 8, 1).astype(np.uint8)
+        if color:
+            arr = np.repeat(arr[:, :, None], 3, axis=2)
+        return enc(arr, quant=1, subsampling=subsampling)
 
-    return df.mapInPandas(batches, out_schema)
+    return _append_columns(df, "synthesize_jpeg", id_col,
+                           [T.StructField(out_col, T.BinaryType())], row)
 
 
 def synthesize_pdf(df: DataFrame, id_col: str, *, n_lines: int = 4,
@@ -698,7 +633,7 @@ def synthesize_pdf(df: DataFrame, id_col: str, *, n_lines: int = 4,
     text law a SQL oracle replays without a PDF library, the jpeg/gif
     fixture pattern for the DOCUMENT modality.
 
-    ``flavors`` (r8) cycles stream encodings by ``id`` — any
+    ``flavors`` cycles stream encodings by ``id`` — any
     :func:`~.pdf.build_pdf` compress mode ('flate'/'lzw'/'a85'/
     'a85+flate'/'none') plus ``'cmap'``, which emits a Type0
     /ToUnicode-CMap'd page (build_pdf_unicode) whose line law swaps in
@@ -706,10 +641,8 @@ def synthesize_pdf(df: DataFrame, id_col: str, *, n_lines: int = 4,
     same closed form, exercising the full unicode decode chain."""
     from . import pdf as pdfmod
 
-    out_schema = T.StructType(df.schema.fields +
-                              [T.StructField(out_col, T.BinaryType())])
-
-    def build(d: int) -> bytes:
+    def build(did) -> bytes:
+        d = int(did)
         mode = flavors[d % len(flavors)] if flavors else compress
         if mode in ("cmap", "cmap_objstm"):
             lines = [f"док {d} γραμμή {j} 值 {(d * 31 + j * 7) % 97}"
@@ -717,8 +650,8 @@ def synthesize_pdf(df: DataFrame, id_col: str, *, n_lines: int = 4,
             return pdfmod.build_pdf_unicode(
                 lines, objstm=(mode == "cmap_objstm"))
         if mode == "diffenc":
-            # legacy simple-font /Differences arm (r9): accented law
-            # text so the AGL-name resolution actually bites
+            # legacy simple-font /Differences arm: accented law text so
+            # the AGL-name resolution actually bites
             lines = [f"döc {d} ligne {j} café {(d * 31 + j * 7) % 97}°"
                      for j in range(n_lines)]
             return pdfmod.build_pdf_differences(lines)
@@ -726,12 +659,8 @@ def synthesize_pdf(df: DataFrame, id_col: str, *, n_lines: int = 4,
                  for j in range(n_lines)]
         return pdfmod.build_pdf(lines, compress=mode)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_ in it:
-            pdf_[out_col] = [build(int(did)) for did in pdf_[id_col]]
-            yield pdf_
-
-    return df.mapInPandas(batches, out_schema)
+    return _append_columns(df, "synthesize_pdf", id_col,
+                           [T.StructField(out_col, T.BinaryType())], build)
 
 
 def pdf_text(df: DataFrame, bin_col: str, out_col: str = "pdf_text",
@@ -745,30 +674,16 @@ def pdf_text(df: DataFrame, bin_col: str, out_col: str = "pdf_text",
     ahead of it when the scan yields fewer splits than cores."""
     from . import pdf as pdfmod
 
-    for name in (out_col, flag_col):
-        if name in df.columns:
-            raise ValueError(
-                f"pdf_text: output column {name!r} already exists on "
-                f"the input; pass out_col=/flag_col= to disambiguate")
-    out_schema = T.StructType(df.schema.fields +
-                              [T.StructField(out_col, T.StringType()),
-                               T.StructField(flag_col, T.BooleanType())])
+    def row(data):
+        try:
+            return pdfmod.extract_text(bytes(data)), True
+        except Exception:
+            return None, False
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_ in it:
-            texts, reals = [], []
-            for data in pdf_[bin_col]:
-                try:
-                    texts.append(pdfmod.extract_text(bytes(data)))
-                    reals.append(True)
-                except Exception:
-                    texts.append(None)
-                    reals.append(False)
-            pdf_[out_col] = texts
-            pdf_[flag_col] = reals
-            yield pdf_
-
-    return df.mapInPandas(batches, out_schema)
+    return _append_columns(
+        df, "pdf_text", bin_col,
+        [T.StructField(out_col, T.StringType()),
+         T.StructField(flag_col, T.BooleanType())], row)
 
 
 def synthesize_gif(df: DataFrame, id_col: str, *, height: int = 8,
@@ -779,24 +694,11 @@ def synthesize_gif(df: DataFrame, id_col: str, *, height: int = 8,
     per-pixel (no block trick needed) and a SQL oracle replays any
     downstream feature — same proof structure as :func:`synthesize_png`,
     exercising the variable-width LZW path instead of PNG filters."""
-    from . import gif
-
-    out_schema = T.StructType(df.schema.fields +
-                              [T.StructField(out_col, T.BinaryType())])
-    n = height * width
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = np.arange(n, dtype=np.int64)
-        for pdf in it:
-            payloads = []
-            for did in pdf[id_col]:
-                arr = ((int(did) * 29 + idx * 13) % 256).astype(np.uint8) \
-                    .reshape(height, width)
-                payloads.append(gif.encode(arr))
-            pdf[out_col] = payloads
-            yield pdf
-
-    return df.mapInPandas(batches, out_schema)
+    idx = np.arange(height * width, dtype=np.int64)
+    return _append_columns(
+        df, "synthesize_gif", id_col, [T.StructField(out_col, T.BinaryType())],
+        lambda did: gif.encode(((int(did) * 29 + idx * 13) % 256)
+                               .astype(np.uint8).reshape(height, width)))
 
 
 def frame_sample(df: DataFrame, bin_col: str, *, every_n: int = 10,
@@ -818,17 +720,11 @@ def frame_sample(df: DataFrame, bin_col: str, *, every_n: int = 10,
             for _, row in pdf.iterrows():
                 raw = bytes(row[bin_col]) if row[bin_col] is not None else b""
                 for i in range(0, n_frames, every_n):
-                    arr = _fake_decode(raw + i.to_bytes(4, "little"))
                     rec = {n: row[n] for n in names}
                     rec["frame_idx"] = i
-                    rec[out_col] = {"height": arr.shape[0], "width": arr.shape[1],
-                                    "channels": arr.shape[2],
-                                    "pixels": arr.ravel().tolist(),
-                                    # frames are ALWAYS the fake decode:
-                                    # an omitted key would surface as
-                                    # NULL, not False, and bool_and
-                                    # gates would pass fakes (r5 review)
-                                    "decode_real": False}
+                    # frames are ALWAYS the fake decode
+                    rec[out_col] = _image_struct(
+                        _fake_decode(raw + i.to_bytes(4, "little")), False)
                     rows.append(rec)
             yield pd.DataFrame(rows, columns=names + ["frame_idx", out_col])
 
@@ -847,37 +743,27 @@ def synthesize_wav(df: DataFrame, id_col: str, *, n_samples: int = 2048,
     transcendentals), so a SQL oracle can recompute every downstream
     feature EXACTLY. Real RIFF/WAVE PCM16 bytes via the stdlib ``wave``
     module; one mapInPandas pass."""
-    import io
-    import wave
+    idx = np.arange(n_samples, dtype=np.int64)
 
-    out_schema = T.StructType(df.schema.fields +
-                              [T.StructField(out_col, T.BinaryType())])
+    def row(did):
+        pcm = (((int(did) * 31 + idx * 17) % 2001) - 1000).astype("<i2")
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as w:
+            w.setnchannels(1)
+            w.setsampwidth(2)
+            w.setframerate(sample_rate)
+            w.writeframes(pcm.tobytes())
+        return buf.getvalue()
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = np.arange(n_samples, dtype=np.int64)
-        for pdf in it:
-            payloads = []
-            for did in pdf[id_col]:
-                pcm = (((int(did) * 31 + idx * 17) % 2001) - 1000) \
-                    .astype("<i2")
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(2)
-                    w.setframerate(sample_rate)
-                    w.writeframes(pcm.tobytes())
-                payloads.append(buf.getvalue())
-            pdf[out_col] = payloads
-            yield pdf
-
-    return df.mapInPandas(batches, out_schema)
+    return _append_columns(df, "synthesize_wav", id_col,
+                           [T.StructField(out_col, T.BinaryType())], row)
 
 
 def synthesize_flac(df: DataFrame, id_col: str, *, n_samples: int = 2048,
                     sample_rate: int = 8000, out_col: str = "flc",
                     subframe: str = "fixed2") -> DataFrame:
-    """Deterministic FLAC fixture column (r8): the SAME integer PCM law
-    as :func:`synthesize_wav` — sample ``i`` of row ``id`` is
+    """Deterministic FLAC fixture column: the SAME integer PCM law as
+    :func:`synthesize_wav` — sample ``i`` of row ``id`` is
     ``((id*31 + i*17) % 2001) - 1000`` — encoded losslessly through the
     vendored codec (:mod:`.flac`), so every oracle written for the WAV
     law replays unchanged against the FLAC arm; ``subframe='fixed2'``
@@ -885,35 +771,40 @@ def synthesize_flac(df: DataFrame, id_col: str, *, n_samples: int = 2048,
     shape real encoders emit)."""
     from . import flac as flacmod
 
-    out_schema = T.StructType(df.schema.fields +
-                              [T.StructField(out_col, T.BinaryType())])
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = np.arange(n_samples, dtype=np.int64)
-        for pdf in it:
-            pdf[out_col] = [
-                flacmod.encode(((int(did) * 31 + idx * 17) % 2001) - 1000,
-                               sample_rate=sample_rate,
-                               subframe=subframe)
-                for did in pdf[id_col]]
-            yield pdf
-
-    return df.mapInPandas(batches, out_schema)
+    idx = np.arange(n_samples, dtype=np.int64)
+    return _append_columns(
+        df, "synthesize_flac", id_col, [T.StructField(out_col, T.BinaryType())],
+        lambda did: flacmod.encode(((int(did) * 31 + idx * 17) % 2001) - 1000,
+                                   sample_rate=sample_rate, subframe=subframe))
 
 
 def audio_features(df: DataFrame, bin_col: str, out_col: str = "audio"
                    ) -> DataFrame:
-    """Decode WAV bytes and extract features in ONE fused Python pass
+    """Decode audio bytes and extract features in ONE fused Python pass
     (decode never crosses the JVM boundary twice, same contract as
     :func:`image_pipeline`): sample_rate, n_samples, channels,
-    duration_s, rms (int16-normalized), zero-crossing count. Real
-    stdlib-``wave`` decode for PCM16 WAV; non-WAV bytes yield NULL.
-    Compressed formats (mp3/ogg) need an external codec — plug one into
-    the decode step here; the Spark-side plumbing is identical."""
-    import io
-    import wave
+    duration_s, rms (int16-normalized), zero-crossing count. Real decode
+    for PCM16 WAV (stdlib ``wave``) and FLAC (vendored; other widths
+    rescale into the int16 domain so rms keeps the /32768 law); other
+    bytes, WAVs of other widths included, yield NULL. Compressed formats
+    (mp3/ogg) need an external codec — plug one into :func:`_decode_pcm`;
+    the Spark-side plumbing is identical."""
+    def row(data):
+        dec = _decode_pcm(data)
+        if dec is None:
+            return None
+        sr, nch, nf, bits, pcm = dec
+        if bits != 16:
+            pcm = pcm * (32768.0 / (1 << (bits - 1)))
+        rms = float(np.sqrt(np.mean(pcm ** 2)) / 32768.0) \
+            if pcm.size else 0.0
+        zc = int(np.count_nonzero(
+            np.signbit(pcm[1:]) != np.signbit(pcm[:-1])))
+        return {"sample_rate": sr, "n_samples": nf, "channels": nch,
+                "duration_s": nf / sr if sr else 0.0,
+                "rms": rms, "zero_crossings": zc}
 
-    out_schema = T.StructType(df.schema.fields + [T.StructField(
+    return _append_columns(df, "audio_features", bin_col, [T.StructField(
         out_col, T.StructType([
             T.StructField("sample_rate", T.IntegerType()),
             T.StructField("n_samples", T.IntegerType()),
@@ -921,48 +812,4 @@ def audio_features(df: DataFrame, bin_col: str, out_col: str = "audio"
             T.StructField("duration_s", T.DoubleType()),
             T.StructField("rms", T.DoubleType()),
             T.StructField("zero_crossings", T.IntegerType()),
-        ]))])
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = []
-            for data in pdf[bin_col]:
-                try:
-                    # label-distrusting dispatch via the shared
-                    # magic table (r10): FLAC bytes route to the
-                    # FLAC codec whatever the column was called
-                    if _sniff(bytes(data[:16])) == "audio/flac":
-                        # vendored FLAC codec (r8) — REAL lossless
-                        # decode; non-16-bit widths rescale into the
-                        # int16 domain so rms keeps the /32768 law
-                        from . import flac as flacmod
-                        sr, nch, fbps, arr = flacmod.decode(bytes(data))
-                        nf = arr.shape[0]
-                        pcm = arr.astype(np.float64)
-                        if fbps != 16:
-                            pcm *= 32768.0 / (1 << (fbps - 1))
-                        pcm = pcm.mean(axis=1) if nch > 1 else pcm[:, 0]
-                    else:
-                        with wave.open(io.BytesIO(bytes(data)),
-                                       "rb") as w:
-                            sr, nch = w.getframerate(), w.getnchannels()
-                            nf = w.getnframes()
-                            raw = w.readframes(nf)
-                        pcm = np.frombuffer(raw, dtype="<i2") \
-                            .astype(np.float64)
-                        if nch > 1:      # mixdown for summary features
-                            pcm = pcm.reshape(-1, nch).mean(axis=1)
-                    rms = float(np.sqrt(np.mean(pcm ** 2)) / 32768.0) \
-                        if pcm.size else 0.0
-                    zc = int(np.count_nonzero(
-                        np.signbit(pcm[1:]) != np.signbit(pcm[:-1])))
-                    feats.append({"sample_rate": sr, "n_samples": nf,
-                                  "channels": nch,
-                                  "duration_s": nf / sr if sr else 0.0,
-                                  "rms": rms, "zero_crossings": zc})
-                except Exception:
-                    feats.append(None)
-            pdf[out_col] = feats
-            yield pdf
-
-    return df.mapInPandas(batches, out_schema)
+        ]))], row)

@@ -5,11 +5,12 @@ grayscale / RGB / RGBA, non-interlaced, all five scanline filter types
 (None, Sub, Up, Average, Paeth), single zlib stream across IDAT chunks.
 
 Purpose: give :mod:`.multimodal` a REAL image codec in containers without
-Pillow, so the decode stage of the image pipeline is no longer a stub
-(r2 verdict weakness #2). The decoder favors clarity over speed — the
-filter-undo loop is per-pixel Python within each row — which is fine for
-fixture-scale images; production pipelines swap in Pillow via the same
-``decode_image_bytes`` hook (multimodal.py) without touching callers.
+Pillow, so the decode stage of the image pipeline is no longer a stub.
+The decoder favors clarity over speed — the filter-undo loop is
+per-pixel Python within each row — which is fine for fixture-scale
+images; when Pillow is importable it takes over inside
+:func:`.multimodal.decode_image_bytes`, the one image codec hook,
+without touching callers.
 
 The encoder can cycle rows through all five filter types
 (``filter_mode="cycle"``), making every encoded fixture exercise every

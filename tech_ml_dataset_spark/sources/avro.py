@@ -7,16 +7,14 @@ sync``; zigzag-varint longs, IEEE little-endian float/double, length-
 prefixed string/bytes, union-index-prefixed nullable values) from the
 Apache Avro specification — the same role the vendored xlsx/xls/jpeg/gif
 codecs play for their formats: pyspark does not bundle the external
-spark-avro datasource, and this container has no network to fetch it, so
-``.avro`` reads/writes route through these distributed surfaces instead
-of failing.
+spark-avro datasource, so without its jar ``.avro`` reads/writes route
+through these distributed surfaces instead of failing.
 
-Scale shape mirrors ``read_arrow_dataset``/``write_arrow_dataset``
-(sources/io.py): the write is one ``part-NNNNN.avro`` file per partition
-inside a single ``mapInPandas`` pass (executor-side, no driver collect);
-the read turns the file list into the plan's source (one task per file —
-Avro OCF is block-splittable in principle, but per-file parallelism is
-the same contract as the Arrow/gz-CSV surfaces) and decodes blocks
+Both surfaces run on the shared dataset shell (sources/_dataset.py), like
+the Arrow IPC and WARC datasets: the write is one ``part-NNNNN.avro``
+file per partition (:func:`._dataset.write_parts`, executor-side, no
+driver collect); the read turns a list of (file, byte range) splits into
+the plan's source (:func:`._dataset.scan_units`) and decodes blocks
 executor-side. The driver touches only the first file's header for the
 schema. Deflate codec supported (zlib raw), ``null`` for uncompressed.
 
@@ -34,11 +32,12 @@ from the public Avro specification only.
 
 from __future__ import annotations
 
-import io as _io
 import json
 import os
 import struct
 import zlib
+
+from ._dataset import list_files, scan_units, write_parts
 
 MAGIC = b"Obj\x01"
 
@@ -205,8 +204,7 @@ def _decode_value(data: bytes, pos: int, kind, nullable: bool = True):
     """Inverse of :func:`_encode_value`: reads the union branch varint
     ONLY for nullable (union) fields — an external writer's plain
     non-union field would otherwise have its first value byte consumed
-    as a branch index, silently misaligning the whole block (r7 ADVICE
-    medium)."""
+    as a branch index, silently misaligning the whole block."""
     if nullable:
         branch, pos = _read_long(data, pos)
         if branch == 0:
@@ -364,7 +362,7 @@ def read_file_range(path: str, start: int, end: int):
 
 
 # ---------------------------------------------------------------------------
-# distributed dataset surfaces (the arrow_dataset shape)
+# distributed dataset surfaces (on the shared sources/_dataset.py shell)
 # ---------------------------------------------------------------------------
 
 _BLOCK_ROWS = 4096
@@ -388,27 +386,16 @@ def _normalize_cell(kind, v):
 def write_avro_dataset(df, path: str, *, codec: str = "deflate"
                        ) -> list[dict]:
     """DISTRIBUTED Avro write: one ``part-NNNNN.avro`` OCF per partition,
-    written EXECUTOR-side inside a single ``mapInPandas`` pass (the
-    ``write_arrow_dataset`` shape — no driver collect; executors must
-    share the target filesystem). Returns [{path, n_rows}, ...]."""
-    import pandas as pd
-    from pyspark import TaskContext
-
-    os.makedirs(path, exist_ok=True)
+    written EXECUTOR-side by :func:`._dataset.write_parts` (no driver
+    collect). Returns [{path, n_rows}, ...]."""
     schema_json = spark_to_avro_schema(df.schema)
     kinds = [k for k, _ in avro_to_spark_schema(schema_json)[1]]
     # (normalization needs only the kind — the writer's own schema is
     # always ["null", T] unions, so write_file sees nullable=True)
 
-    def sink(it):
-        pid = TaskContext.get().partitionId()
-        out = os.path.join(path, f"part-{pid:05d}.avro")
-        f, n = None, 0
-
+    def write(fh, batches):
         def blocks():
-            for pdf in it:
-                if pdf.empty:
-                    continue
+            for pdf in batches:
                 cols = [[_normalize_cell(kind, v)
                          for v in pdf[c].tolist()]
                         for kind, c in zip(kinds, pdf.columns)]
@@ -416,47 +403,25 @@ def write_avro_dataset(df, path: str, *, codec: str = "deflate"
                 for i in range(0, len(rows), _BLOCK_ROWS):
                     yield rows[i:i + _BLOCK_ROWS]
 
-        gen = blocks()
-        first = next(gen, None)
-        if first is not None:
-            with open(out, "wb") as f:
-                import itertools
-                n = write_file(f, schema_json,
-                               itertools.chain([first], gen), codec=codec)
-        if n:
-            yield pd.DataFrame({"path": [out], "n_rows": [n]})
+        return write_file(fh, schema_json, blocks(), codec=codec)
 
-    manifest = df.mapInPandas(sink, "path string, n_rows long").collect()
-    return [r.asDict() for r in manifest]
+    return write_parts(df, path, ".avro", "n_rows", write)
 
 
 def read_avro_dataset(spark, path: str | list[str],
                       *, extension: str = ".avro",
                       split_bytes: int = 32 << 20):
     """DISTRIBUTED Avro read: the (file, byte-range) split list becomes
-    the plan's source and each split decodes its blocks executor-side —
-    the ``read_arrow_dataset`` shape, PLUS block-level splitting:
+    the plan's source and each split decodes its blocks executor-side
+    (:func:`._dataset.scan_units`), with block-level splitting:
     unlike Arrow IPC or .gz CSV, Avro OCF is sync-marker splittable, so
     one giant file still fans out across the cluster (``split_bytes``
     per task, the parquet ``maxPartitionBytes`` analog — a 100 GB
     single-file drop is ~3200 parallel tasks, not one). Schema comes
     from the first file's header (driver metadata-only read)."""
-    import glob as globmod
-
     import pandas as pd
 
-    if isinstance(path, str):
-        if os.path.isdir(path):
-            files = sorted(
-                os.path.join(path, f) for f in os.listdir(path)
-                if f.endswith(extension))
-        else:
-            files = sorted(globmod.glob(path)) or [path]
-    else:
-        files = list(path)
-    if not files:
-        raise ValueError(f"no {extension} files under {path!r}")
-
+    files = list_files(path, lambda f: f.endswith(extension), extension)
     schema_json, _, _, _ = read_header(files[0])
     ddl, kinds = avro_to_spark_schema(schema_json)
     rec = json.loads(schema_json)
@@ -469,11 +434,6 @@ def read_avro_dataset(spark, path: str | list[str],
         step = -(-fsize // n)
         splits += [(fp, i * step, min((i + 1) * step, fsize))
                    for i in range(n)]
-    fdf = spark.createDataFrame(
-        splits, "__avro_file__ string, __start__ long, __end__ long")
-    if len(splits) > 1:
-        fdf = fdf.repartition(len(splits))
-
     expect = (tuple(names), tuple(kinds))
 
     def batches(it):
@@ -485,7 +445,7 @@ def read_avro_dataset(spark, path: str | list[str],
                     # every file must carry the FIRST file's schema —
                     # same types in a different field order (or extra /
                     # renamed fields) would otherwise be silently mapped
-                    # positionally into the wrong columns (r7 ADVICE)
+                    # positionally into the wrong columns
                     sj = read_header(p)[0]
                     rec_p = json.loads(sj)
                     got = (tuple(f["name"] for f in rec_p["fields"]),
@@ -521,4 +481,6 @@ def read_avro_dataset(spark, path: str | list[str],
                             data[name] = pd.Series(vals, dtype=object)
                     yield pd.DataFrame(data, columns=names)
 
-    return fdf.mapInPandas(batches, ddl)
+    return scan_units(spark, splits,
+                      "__avro_file__ string, __start__ long, __end__ long",
+                      batches, ddl)

@@ -25,6 +25,8 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from ._dataset import list_files, scan_units, write_parts
+
 
 # suffix -> (format, default reader options); mirrors str->file-info sniffing
 # (reference io.clj:13-25). ``.gz`` is transparent: Spark decompresses
@@ -833,28 +835,15 @@ def read_arrow_dataset(spark: SparkSession, path: str | list[str],
 
     Spark ships no Arrow-IPC datasource, so the FILE LIST becomes the
     plan's source (one row per file) and an Arrow-batched ``mapInPandas``
-    opens each file EXECUTOR-side, streaming its record batches without
-    ever materializing a whole table: pyarrow mmaps the file, and each
-    batch crosses to the JVM through Arrow itself. Parallelism = #files
-    (Arrow IPC is not block-splittable — same contract as .gz CSV);
-    executors must see the filesystem (true of any cluster FS /
-    object-store mount). Schema comes from the first file's footer — a
-    metadata-only driver read."""
-    import glob as globmod
-
+    opens each file EXECUTOR-side (:func:`._dataset.scan_units`),
+    streaming its record batches without ever materializing a whole
+    table: pyarrow mmaps the file, and each batch crosses to the JVM
+    through Arrow itself. Parallelism = #files (Arrow IPC is not
+    block-splittable — same contract as .gz CSV). Schema comes from the
+    first file's footer — a metadata-only driver read."""
     import pyarrow as pa
 
-    if isinstance(path, str):
-        if os.path.isdir(path):
-            files = sorted(
-                os.path.join(path, f) for f in os.listdir(path)
-                if f.endswith(extension))
-        else:
-            files = sorted(globmod.glob(path)) or [path]
-    else:
-        files = list(path)
-    if not files:
-        raise ValueError(f"no {extension} files under {path!r}")
+    files = list_files(path, lambda f: f.endswith(extension), extension)
 
     def _open(p):
         try:
@@ -864,13 +853,6 @@ def read_arrow_dataset(spark: SparkSession, path: str | list[str],
 
     first = _open(files[0])
     schema = spark.createDataFrame(first.schema.empty_table()).schema
-
-    fdf = spark.createDataFrame([(f,) for f in files], "__arrow_file__ string")
-    if len(files) > 1:
-        # one task per file; a single file needs no exchange at all (the
-        # 1-row local relation is already one partition — repartition(1)
-        # would plan a degenerate Exchange SinglePartition)
-        fdf = fdf.repartition(len(files))
 
     def batches(it):
         for pdf in it:
@@ -883,50 +865,38 @@ def read_arrow_dataset(spark: SparkSession, path: str | list[str],
                     for batch in rdr:
                         yield batch.to_pandas()
 
-    return fdf.mapInPandas(batches, schema)
+    return scan_units(spark, [(f,) for f in files], "__arrow_file__ string",
+                      batches, schema)
 
 
 def write_arrow_dataset(df: DataFrame, path: str) -> list[dict]:
     """DISTRIBUTED Arrow IPC write: one ``part-NNNNN.arrow`` file per
-    partition, written EXECUTOR-side inside a single ``mapInPandas`` pass
+    partition, written EXECUTOR-side by :func:`._dataset.write_parts`
     (no driver collect — the counterpart of :func:`read_arrow_dataset`).
     Returns the manifest [{path, n_rows}, ...]; empty partitions write
-    nothing. Executors must share the target filesystem."""
-    import pandas as pd
+    nothing."""
     import pyarrow as pa
-    from pyspark import TaskContext
-
-    os.makedirs(path, exist_ok=True)
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     # Fixed Arrow schema derived from the Spark schema — per-batch
     # pa.Table.from_pandas INFERENCE would crash whenever a partition's
     # first batch has an all-NULL column (pandas infers null type) and a
     # later batch doesn't ("table schema does not match").
-    from pyspark.sql.pandas.types import to_arrow_schema
     arrow_schema = to_arrow_schema(df.schema)
 
-    def sink(it):
-        pid = TaskContext.get().partitionId()
-        out, writer, n = os.path.join(path, f"part-{pid:05d}.arrow"), None, 0
-        try:
-            for pdf in it:
-                if pdf.empty:
-                    continue
-                table = pa.Table.from_pandas(pdf, schema=arrow_schema,
-                                             preserve_index=False)
-                if writer is None:
-                    sink_f = pa.OSFile(out, "wb")
-                    writer = pa.ipc.new_file(sink_f, table.schema)
-                writer.write_table(table)
-                n += len(pdf)
-        finally:
-            if writer is not None:
-                writer.close()
-        if n:
-            yield pd.DataFrame({"path": [out], "n_rows": [n]})
+    def write(fh, batches):
+        writer, n = None, 0
+        for pdf in batches:
+            table = pa.Table.from_pandas(pdf, schema=arrow_schema,
+                                         preserve_index=False)
+            if writer is None:
+                writer = pa.ipc.new_file(fh, table.schema)
+            writer.write_table(table)
+            n += len(pdf)
+        writer.close()
+        return n
 
-    manifest = df.mapInPandas(sink, "path string, n_rows long").collect()
-    return [r.asDict() for r in manifest]
+    return write_parts(df, path, ".arrow", "n_rows", write)
 
 
 def read_excel(spark: SparkSession, path: str, *, sheet=0,
@@ -1145,6 +1115,11 @@ def _require_local_path(path: str, op: str) -> str:
     return path
 
 
+def _swap_dirs(path: str, tag: str) -> tuple[str, str]:
+    base = path.rstrip("/")
+    return f"{base}.__{tag}_tmp__", f"{base}.__{tag}_old__"
+
+
 def _recover_swap(path: str, tag: str) -> tuple[str, str]:
     """The staging and backup dirs of the crash-safe swap of ``path``
     (``<path>.__<tag>_tmp__`` / ``<path>.__<tag>_old__``), after undoing
@@ -1154,8 +1129,7 @@ def _recover_swap(path: str, tag: str) -> tuple[str, str]:
     dropped otherwise. A stale staging dir from a failed write is
     removed. Call it before any read of ``path``. One maintainer per
     path: concurrent runs against one path are not supported."""
-    base = path.rstrip("/")
-    staging, backup = f"{base}.__{tag}_tmp__", f"{base}.__{tag}_old__"
+    staging, backup = _swap_dirs(path, tag)
     if os.path.isdir(backup):
         if not os.path.isdir(path):
             os.rename(backup, path)
@@ -1196,15 +1170,21 @@ def compact_files(spark: SparkSession, path: str, *,
     min/max data-skipping after the merge. Returns
     ``{"n_files_before", "n_files_after", "total_bytes", "target_parts"}``;
     ``dry_run`` reports without rewriting and changes nothing on disk,
-    recovery included."""
+    recovery included: it reports the files of a backup the next real
+    run would restore."""
     import math
 
     path = _require_local_path(path, "compact_files")
-    if not dry_run:
+    if dry_run:
+        _, backup = _swap_dirs(path, "compact")
+        src = backup if os.path.isdir(backup) \
+            and not os.path.isdir(path) else path
+    else:
         staging, backup = _recover_swap(path, "compact")
-    files = [f for f in _glob.glob(os.path.join(path, f"*.{fmt}"))
+        src = path
+    files = [f for f in _glob.glob(os.path.join(src, f"*.{fmt}"))
              if os.path.isfile(f)] or \
-        [f for f in _glob.glob(os.path.join(path, "part-*")) if os.path.isfile(f)]
+        [f for f in _glob.glob(os.path.join(src, "part-*")) if os.path.isfile(f)]
     total = sum(os.path.getsize(f) for f in files)
     parts = max(1, math.ceil(total / target_file_bytes))
     report = {"n_files_before": len(files), "total_bytes": total,

@@ -14,7 +14,9 @@ O(record + chunk), never O(archive). A real CC archive is ~1 GB
 compressed / 4-5 GB decompressed; 32 concurrent whole-archive
 materializations would OOM any executor.
 
-Surfaces mirror the avro/arrow dataset shape:
+Reads and writes run on the dataset shell shared with the Arrow IPC and
+Avro datasets (sources/_dataset.py: ``list_files``, ``scan_units``,
+``write_parts``):
 
 * :func:`read_warc_dataset` — the file list becomes the plan source,
   one task per file (the ``.gz`` member structure is not exposed as
@@ -25,9 +27,9 @@ Surfaces mirror the avro/arrow dataset shape:
   http_status, content_type, payload bytes, content_decoded) — the
   HTTP header block is parsed off the payload, ``Transfer-Encoding:
   chunked`` framing is removed, and ``Content-Encoding: gzip/deflate``
-  bodies decompress (r9 — what the WET format exists for; raw-bytes
+  bodies decompress (what the WET format exists for; raw-bytes
   fallback on malformed framing, loud raise past the 1 GiB bomb
-  guard). ``content_decoded`` (r10) is False when a layer was LEFT
+  guard). ``content_decoded`` is False when a layer was LEFT
   UNDECODED (``br``/``zstd``/unknown coding, malformed stream or
   framing) so a filter can gate out raw-fallback bodies; other
   record types (request, metadata, warcinfo) surface with NULL http
@@ -45,24 +47,24 @@ Surfaces mirror the avro/arrow dataset shape:
   INDEX with Spark predicates, then range-read only the survivors —
   the real CC filter-then-fetch pattern.
 * :func:`build_columnar_index` / :func:`read_columnar_index` /
-  :func:`fetch_index_records` (r10) — the PARQUET columnar index
+  :func:`fetch_index_records` — the PARQUET columnar index
   (the modern cc-index access path): index predicates run as
   Catalyst pushdown + row-group pruning instead of line-splitting
   gzip text, with a ``content_mime_detected`` sniff column and
   revisit rows typed for pre-fetch exclusion.
-* :func:`write_wet_dataset` / :func:`read_wet_dataset` (r9) — the WET
+* :func:`write_wet_dataset` / :func:`read_wet_dataset` — the WET
   extracted-text sibling format (``conversion`` records, text/plain
   UTF-8 payloads).
 * :func:`wat_metadata` / :func:`write_wat_dataset` /
-  :func:`read_wat_dataset` (r9) — the WAT metadata sibling
+  :func:`read_wat_dataset` — the WAT metadata sibling
   (``metadata`` records, JSON status/mime/title/links payloads),
   completing the Common Crawl WARC/WET/WAT triad.
-* :func:`payload_text` / :func:`encode_text_payload` (r9) — charset-
+* :func:`payload_text` / :func:`encode_text_payload` — charset-
   aware capture decode by the Content-Type label, pure Catalyst,
   never-throw; :func:`sniff_mime` / :func:`sniff_mime_bytes` —
   magic-byte format routing from one shared table.
-* WARC 1.1 segmented records reassemble on read (r10,
-  :func:`_assemble_segments`): a segment run surfaces as ONE record
+* WARC 1.1 segmented records reassemble on read
+  (:func:`_assemble_segments`): a segment run surfaces as ONE record
   with the full payload; ``revisit`` records filter by default
   (``include_revisit=`` opt-in).
 
@@ -81,6 +83,8 @@ from __future__ import annotations
 import os
 import zlib
 
+from ._dataset import list_files, scan_units, write_parts
+
 _CRLF = b"\r\n"
 
 
@@ -94,7 +98,7 @@ def _gzip_chunks(f, chunk_size: int = 1 << 20):
     input that ends MID-member (a truncated download that happens to
     land between chunks — the trailer CRC32/ISIZE never checked)
     raises ValueError instead of silently dropping the tail records
-    (r9, ADVICE: ``d.flush()`` at EOF used to paper over this)."""
+    (a ``d.flush()`` at EOF would paper over the missing tail)."""
     d = zlib.decompressobj(31)
     mid_member = False                  # d has consumed input, no trailer yet
     pending = b""
@@ -199,8 +203,8 @@ def _parse_records(data: bytes):
 
 
 def _assemble_segments(records):
-    """Reassemble WARC 1.1 segmented records (r10 — the last record
-    shape that could silently surface WRONG-SHAPED payloads): a
+    """Reassemble WARC 1.1 segmented records (otherwise a record
+    shape that silently surfaces WRONG-SHAPED payloads): a
     record carrying ``WARC-Segment-Number: 1`` holds only the FIRST
     fragment of its block, and the ``continuation`` records that
     follow (``WARC-Segment-Origin-ID`` naming the first segment's
@@ -327,8 +331,8 @@ def _inflate_member(data: bytes, wbits: int,
                     budget: int = _MAX_HTTP_BODY):
     """Inflate one zlib/gzip stream bounded by ``budget`` (the
     REMAINING payload budget, so a multi-member chain shares one
-    aggregate :data:`_MAX_HTTP_BODY` cap — r10 ADVICE: a per-member
-    cap would let N concatenated ~1 GiB members decompress to N GiB
+    aggregate :data:`_MAX_HTTP_BODY` cap — a per-member cap would
+    let N concatenated ~1 GiB members decompress to N GiB
     in one task). Returns (decoded bytes, unused trailing input) or
     ``None`` on a truncated/corrupt stream; an output that would
     exceed the bomb guard raises loudly (it is not malformed input —
@@ -396,8 +400,8 @@ def _split_http(payload: bytes):
     """(status, content_type, body, decoded) from an HTTP response
     payload.
 
-    The body is DECODED the way a browser would see it (r9 — the gap
-    the WET format exists for): ``Transfer-Encoding: chunked`` framing
+    The body is DECODED the way a browser would see it (the gap the
+    WET format exists for): ``Transfer-Encoding: chunked`` framing
     is removed first, then ``Content-Encoding: gzip/deflate`` is
     decompressed, so ``html_to_text`` downstream gets markup, not hex
     size lines or compressed bytes. Real Common Crawl response records
@@ -405,8 +409,8 @@ def _split_http(payload: bytes):
     falls back to the raw body — never a mis-parse; a decompression
     bomb past 1 GiB raises loudly.
 
-    ``decoded`` (r10 — the last silent wrong-shape path, verdict #2)
-    is False when any layer was LEFT UNDECODED: a ``Content-Encoding``
+    ``decoded`` (so an undecoded body cannot pass silently as a
+    payload) is False when any layer was LEFT UNDECODED: a ``Content-Encoding``
     chain with an unknown coding (``br``/``zstd`` — no codec libs in
     this environment) or a malformed stream, or chunked framing that
     would not parse. Callers gate on it instead of feeding compressed
@@ -484,21 +488,10 @@ _WARC_DDL = ("target_uri string, warc_date string, record_type string, "
              "content_decoded boolean")
 
 
-def _warc_file_list(path, extension: str) -> list[str]:
-    import glob as globmod
-
-    if isinstance(path, str):
-        if os.path.isdir(path):
-            files = sorted(
-                os.path.join(path, f) for f in os.listdir(path)
-                if f.endswith(extension) or f.endswith(".warc"))
-        else:
-            files = sorted(globmod.glob(path)) or [path]
-    else:
-        files = list(path)
-    if not files:
-        raise ValueError(f"no {extension} files under {path!r}")
-    return files
+def _warc_files(path, extension: str) -> list[str]:
+    return list_files(
+        path, lambda f: f.endswith(extension) or f.endswith(".warc"),
+        extension)
 
 
 def read_warc_dataset(spark, path: str | list[str],
@@ -511,7 +504,7 @@ def read_warc_dataset(spark, path: str | list[str],
     per crawl), records parsed executor-side in streaming bounded
     batches.
 
-    ``record_splits=True`` (r8) adds INTRA-file parallelism without a
+    ``record_splits=True`` adds INTRA-file parallelism without a
     CDX index — the lever for few-but-huge archives, where
     file-per-task leaves the cluster idle: a first distributed pass
     walks each file's gzip member boundaries (O(chunk) memory,
@@ -524,22 +517,16 @@ def read_warc_dataset(spark, path: str | list[str],
     run would leave a partial assembly, which raises loudly — use the
     default file-per-task path for segmented input.
 
-    ``revisit`` records are FILTERED by default (r10, verdict #4):
+    ``revisit`` records are FILTERED by default:
     Common Crawl's dedupe-aware archives carry them as body-less
     references to an earlier identical capture (WARC 1.1 §6.7), and a
     naive payload aggregation would count each as an empty document.
     Pass ``include_revisit=True`` to surface them (record_type
     ``revisit``, payload = the record block as stored — typically
     empty or the revisited HTTP headers)."""
-    files = _warc_file_list(path, extension)
-
+    units = [(f,) for f in _warc_files(path, extension)]
     if record_splits:
         import pandas as pd
-
-        fdf = spark.createDataFrame([(f,) for f in files],
-                                    "__warc_file__ string")
-        if len(files) > 1:
-            fdf = fdf.repartition(len(files))
 
         def index_batches(it):
             for pdf in it:
@@ -558,27 +545,24 @@ def read_warc_dataset(spark, path: str | list[str],
                         yield pd.DataFrame(
                             rows, columns=["path", "off", "len"])
 
-        # the split triples stay DISTRIBUTED (r10): a 100 TB crawl's
+        # the split triples stay DISTRIBUTED: a 100 TB crawl's
         # ~3M ranges are metadata, but there is no reason to funnel
         # them through the driver — read_warc_records consumes the
         # frame directly (present-but-empty archives yield an empty
         # frame through the same path)
-        splits = fdf.mapInPandas(index_batches,
-                                 "path string, off long, len long")
+        splits = scan_units(spark, units, "__warc_file__ string",
+                            index_batches,
+                            "path string, off long, len long")
         return read_warc_records(spark, splits,
                                  include_revisit=include_revisit)
-
-    fdf = spark.createDataFrame([(f,) for f in files],
-                                "__warc_file__ string")
-    if len(files) > 1:
-        fdf = fdf.repartition(len(files))
 
     def batches(it):
         for pdf in it:
             for p in pdf["__warc_file__"]:
                 yield from _row_batches(read_warc_file(p))
 
-    out = fdf.mapInPandas(batches, _WARC_DDL)
+    out = scan_units(spark, units, "__warc_file__ string", batches,
+                     _WARC_DDL)
     return out if include_revisit else _drop_revisit(out)
 
 
@@ -657,13 +641,13 @@ def build_record(uri: str, date: str, payload: bytes, *,
     """One spec-valid WARC record (with an HTTP response envelope for
     ``response`` records) — the fixture/sink builder.
 
-    ``content_encoding`` / ``transfer_chunked`` (r9) emit the framed
+    ``content_encoding`` / ``transfer_chunked`` emit the framed
     bodies real crawl captures carry (CE applied first, then TE
     chunking — the sender order, RFC 9112 §6.1): a chunked body gets
     no ``Content-Length`` header and its WARC ``Content-Length``
     still spans the full envelope, exactly like live captures.
 
-    ``raw_http=True`` (r10) writes the payload VERBATIM as the
+    ``raw_http=True`` writes the payload VERBATIM as the
     response block — what a real crawler does with bytes captured off
     the wire (the payload must already be a full HTTP envelope). The
     lever that lets fixtures carry codings this library refuses to
@@ -770,72 +754,54 @@ def write_warc_dataset(df, path: str, *, uri_col: str = "target_uri",
                        record_type_col: str | None = None) -> list[dict]:
     """DISTRIBUTED WARC write: one ``part-NNNNN.warc.gz`` per
     partition, every record its own gzip member (the Common Crawl
-    layout), executor-side — the avro/arrow sink shape. Returns the
-    [{path, n_records}, ...] manifest. ``status_col`` /
-    ``content_type_col`` (r9) name per-row columns for the HTTP status
+    layout), executor-side by :func:`._dataset.write_parts`. Returns
+    the [{path, n_records}, ...] manifest. ``status_col`` /
+    ``content_type_col`` name per-row columns for the HTTP status
     and Content-Type (overriding the constants) — the fixture levers
     for status-filtered CDX laws and charset-labeled captures.
-    ``record_type`` / ``warc_content_type`` / ``part_suffix`` (r9)
+    ``record_type`` / ``warc_content_type`` / ``part_suffix``
     generalize the sink beyond response records — the WET and WAT
     sibling writers route through here (conversion / metadata records
     carry their payload raw, no HTTP envelope). ``raw_http`` /
-    ``record_type_col`` (r10): write payloads that are ALREADY full
+    ``record_type_col``: write payloads that are ALREADY full
     HTTP envelopes verbatim (what a live crawler stores), and vary
     the WARC record type per row (revisit-mixed fixture archives)."""
-    import pandas as pd
-    from pyspark import TaskContext
-
-    os.makedirs(path, exist_ok=True)
-
-    def sink(it):
-        pid = TaskContext.get().partitionId()
-        out = os.path.join(path, f"part-{pid:05d}{part_suffix}")
+    def write(fh, batches):
         n = 0
-        fh = None
-        try:
-            for pdf in it:
-                if pdf.empty:
-                    continue
-                if fh is None:
-                    fh = open(out, "wb")
-                statuses = (pdf[status_col] if status_col is not None
-                            else [200] * len(pdf))
-                ctypes = (pdf[content_type_col]
-                          if content_type_col is not None
-                          else [content_type] * len(pdf))
-                rtypes = (pdf[record_type_col]
-                          if record_type_col is not None
-                          else [record_type] * len(pdf))
-                for uri, date, payload, st, ct, rt in zip(
-                        pdf[uri_col], pdf[date_col], pdf[payload_col],
-                        statuses, ctypes, rtypes):
-                    rec = build_record(str(uri), str(date),
-                                       bytes(payload),
-                                       rtype=str(rt),
-                                       http_status=int(st),
-                                       content_type=str(ct),
-                                       content_encoding=content_encoding,
-                                       transfer_chunked=transfer_chunked,
-                                       warc_content_type=warc_content_type,
-                                       raw_http=raw_http)
-                    # one gzip member per record (CC convention)
-                    co = zlib.compressobj(6, zlib.DEFLATED, 31)
-                    fh.write(co.compress(rec) + co.flush())
-                    n += 1
-        finally:
-            if fh is not None:
-                fh.close()
-        if n:
-            yield pd.DataFrame({"path": [out], "n_records": [n]})
+        for pdf in batches:
+            statuses = (pdf[status_col] if status_col is not None
+                        else [200] * len(pdf))
+            ctypes = (pdf[content_type_col]
+                      if content_type_col is not None
+                      else [content_type] * len(pdf))
+            rtypes = (pdf[record_type_col]
+                      if record_type_col is not None
+                      else [record_type] * len(pdf))
+            for uri, date, payload, st, ct, rt in zip(
+                    pdf[uri_col], pdf[date_col], pdf[payload_col],
+                    statuses, ctypes, rtypes):
+                rec = build_record(str(uri), str(date),
+                                   bytes(payload),
+                                   rtype=str(rt),
+                                   http_status=int(st),
+                                   content_type=str(ct),
+                                   content_encoding=content_encoding,
+                                   transfer_chunked=transfer_chunked,
+                                   warc_content_type=warc_content_type,
+                                   raw_http=raw_http)
+                # one gzip member per record (CC convention)
+                co = zlib.compressobj(6, zlib.DEFLATED, 31)
+                fh.write(co.compress(rec) + co.flush())
+                n += 1
+        return n
 
-    manifest = df.mapInPandas(sink, "path string, n_records long").collect()
-    return [r.asDict() for r in manifest]
+    return write_parts(df, path, part_suffix, "n_records", write)
 
 
 def write_wet_dataset(df, path: str, *, uri_col: str = "target_uri",
                       date_col: str = "warc_date",
                       text_col: str = "text") -> list[dict]:
-    """DISTRIBUTED WET write (r9 — the Common Crawl *extracted text*
+    """DISTRIBUTED WET write (the Common Crawl *extracted text*
     sibling of the .warc.gz layout): one ``part-NNNNN.warc.wet.gz``
     per partition, each a ``conversion``-type WARC record (WARC-level
     ``Content-Type: text/plain``, UTF-8 payload — the published WET
@@ -858,7 +824,7 @@ def write_wet_dataset(df, path: str, *, uri_col: str = "target_uri",
 
 
 def read_wet_dataset(spark, path: str | list[str]):
-    """DISTRIBUTED WET read (r9): the same streamed one-task-per-file
+    """DISTRIBUTED WET read: the same streamed one-task-per-file
     scan as :func:`read_warc_dataset`, filtered to ``conversion``
     records with the UTF-8 payload decoded to a ``text`` column —
     (target_uri, warc_date, text), the shape a training pipeline
@@ -883,7 +849,7 @@ def wat_metadata(df, *, payload_col: str = "payload",
                  content_type_col: str = "content_type",
                  status_col: str = "http_status",
                  out_col: str = "wat_json"):
-    """Compute the WAT-style metadata JSON per response row (r9 — the
+    """Compute the WAT-style metadata JSON per response row (the
     third Common Crawl sibling format: link-graph and page metadata
     without the page bytes): status, declared mime, ``<title>``, and
     every ``href`` link, extracted with pure-Catalyst regexes over the
@@ -910,7 +876,7 @@ def write_wat_dataset(df, path: str, *, uri_col: str = "target_uri",
                       payload_col: str = "payload",
                       content_type_col: str = "content_type",
                       status_col: str = "http_status") -> list[dict]:
-    """DISTRIBUTED WAT write (r9): one ``part-NNNNN.warc.wat.gz`` per
+    """DISTRIBUTED WAT write: one ``part-NNNNN.warc.wat.gz`` per
     partition of ``metadata``-type records whose payload is the
     :func:`wat_metadata` JSON (WARC-level ``application/json``) —
     completing the WARC/WET/WAT triad. Input is the
@@ -932,7 +898,7 @@ def write_wat_dataset(df, path: str, *, uri_col: str = "target_uri",
 
 
 def read_wat_dataset(spark, path: str | list[str]):
-    """DISTRIBUTED WAT read (r9): the streamed WARC scan filtered to
+    """DISTRIBUTED WAT read: the streamed WARC scan filtered to
     ``metadata`` records, JSON parsed with an explicit schema (no
     sampling pass) and flattened to (target_uri, warc_date, status,
     mime, title, links)."""
@@ -962,13 +928,12 @@ def read_warc_records(spark, entries, *, include_revisit: bool = False):
     Offsets must land on gzip-member boundaries (what CDX guarantees);
     a mid-member offset fails loudly in the decompressor.
 
-    A DataFrame of triples stays FULLY DISTRIBUTED (r10): a 100 TB
-    crawl's filtered index selection can be billions of rows, and the
-    pre-r10 driver collect was the one place that mass funneled
-    through the driver — now the triples frame feeds the range scan
+    A DataFrame of triples stays FULLY DISTRIBUTED: a 100 TB crawl's
+    filtered index selection can be billions of rows, too many to
+    collect on the driver — the triples frame feeds the range scan
     directly (its first three columns, any names), and nothing but
     the plan plus a two-scalar sizing agg (row count + byte sum, one
-    row to the driver — r11) crosses the driver; the sizing pass
+    row to the driver) crosses the driver; the sizing pass
     re-scans the filtered index once, which is columnar-pruned noise
     next to the archive bytes it right-sizes. List input keeps the
     small-fixture shape (exact partition sizing from the known
@@ -983,7 +948,7 @@ def read_warc_records(spark, entries, *, include_revisit: bool = False):
             F.col(cols[0]).cast("string").alias("__warc_file__"),
             F.col(cols[1]).cast("long").alias("__off__"),
             F.col(cols[2]).cast("long").alias("__len__"))
-        # Scale-ADAPTIVE spread for the range reads (r11; guide §2.2/§6):
+        # Scale-ADAPTIVE spread for the range reads:
         # size the fetch partitions from the selection itself — one
         # scalar agg over the (already filtered, columnar) index is
         # noise next to the archive bytes it sizes — instead of the old
@@ -1055,7 +1020,7 @@ _CP1252_DST = bytes(b for b in range(0x80, 0xA0)
 def payload_text(payload, content_type, *, default_charset: str = "utf-8",
                  sniff_meta: bool = False, detect: bool = False,
                  set_coding_error_action: bool = True):
-    """Charset-aware payload -> text Column (r9): real crawl captures
+    """Charset-aware payload -> text Column: real crawl captures
     label their encoding in the Content-Type header
     (``text/html; charset=ISO-8859-1``), and a blind UTF-8 cast turns
     every Latin-1/Windows-1252 page into replacement-char mojibake —
@@ -1069,7 +1034,7 @@ def payload_text(payload, content_type, *, default_charset: str = "utf-8",
     Unknown/missing charsets fall back to ``default_charset``. Both
     arguments are Columns or names.
 
-    NEVER-THROW CONTRACT (r9): a real crawl always carries mislabeled
+    NEVER-THROW CONTRACT: a real crawl always carries mislabeled
     and malformed encodings, and one bad page must not kill a 100 TB
     scan — Spark 4's strict ``decode`` raises MALFORMED_CHARACTER_
     CODING, so this builder (a) decodes the UTF-8/default arm via
@@ -1102,7 +1067,7 @@ def payload_text(payload, content_type, *, default_charset: str = "utf-8",
     regardless of what the server claimed, and the decoded U+FEFF is
     stripped from the front of the text on every arm.
 
-    SESSION-WIDE SIDE EFFECT (documented per r10 ADVICE): building
+    SESSION-WIDE SIDE EFFECT: building
     this Column sets ``spark.sql.legacy.codingErrorAction=true`` on
     the ACTIVE SESSION — it must hold at execution time (not build
     time), so it cannot be save/restored here, and it switches every
@@ -1188,7 +1153,7 @@ def encode_text_payload(text, charset):
 
 
 #: Public magic-number table shared by the Catalyst :func:`sniff_mime`
-#: and the Python-side :func:`sniff_mime_bytes` (r10 verdict #5: one
+#: and the Python-side :func:`sniff_mime_bytes` (one
 #: authority, so the scan-side router and the decode-side router
 #: cannot drift). Ordered: earlier rows win (GIF before the generic
 #: two-byte mp3 frame-sync prefixes, etc.).
@@ -1211,13 +1176,13 @@ _MIME_MAGIC: list[tuple[bytes, str]] = [
 
 def sniff_mime_bytes(data: bytes) -> str:
     """Python-side mirror of :func:`sniff_mime` over one payload's
-    bytes (r10) — the label-distrusting gate the multimodal decoders
+    bytes — the label-distrusting gate the multimodal decoders
     route through inside their ``mapInPandas`` batches, built from
     the SAME :data:`_MIME_MAGIC` table as the Catalyst sniffer (a
     drift between the two routers would send a payload down a codec
     the scan-side audit said it wasn't).
 
-    Scope note (r11, ADVICE): every check here runs over the first
+    Scope note: every check here runs over the first
     256 bytes only. For the text/plain arm that head slice can cut a
     multibyte UTF-8 character mid-sequence, so a truncated trailing
     sequence is tolerated WHEN the payload continues past the head
@@ -1249,7 +1214,7 @@ def sniff_mime_bytes(data: bytes) -> str:
 
 
 def sniff_mime(payload):
-    """Magic-byte MIME sniff (r9) — the router a crawl pipeline needs
+    """Magic-byte MIME sniff — the router a crawl pipeline needs
     BEFORE trusting Content-Type labels (servers mislabel constantly;
     the multimodal decoders need the true format): a pure-Catalyst
     CASE over the payload's header bytes, fused into the scan. Covers
@@ -1258,7 +1223,7 @@ def sniff_mime(payload):
     UTF-8-validity text check, and ``application/octet-stream`` as
     the honest residue. Signatures are the public magic numbers in
     the shared :data:`_MIME_MAGIC` table (one authority with
-    :func:`sniff_mime_bytes` — r10)."""
+    :func:`sniff_mime_bytes`)."""
     from pyspark.sql import functions as F
 
     p = F.col(payload) if isinstance(payload, str) else payload
@@ -1334,7 +1299,7 @@ def _iter_member_records(path: str, *, chunk_size: int = 1 << 20):
     """Single-pass walk of a per-record-gzip-member archive: yield
     ``(offset, length, headers, payload)`` for the first record of
     each gzip member in ONE sequential read — the index builders'
-    access path (r11). The prior shape (``warc_member_index`` then an
+    access path. The two-pass shape (``warc_member_index`` then an
     ``open``/``seek``/re-read + re-decompress per member) cost
     O(members) file opens and a second full pass over the archive;
     here the boundary walk and the record decode share one stream and
@@ -1419,22 +1384,8 @@ def read_cdx_index(path: str | list[str], *, base_dir: str | None = None
 
     Malformed lines raise with the offending line number — an index
     that silently drops captures is a recall bug, not a convenience."""
-    import glob as globmod
-
-    if isinstance(path, str):
-        if os.path.isdir(path):
-            files = sorted(
-                os.path.join(path, f) for f in os.listdir(path)
-                if ".cdx" in f or f.endswith(".cdx.gz"))
-        else:
-            files = sorted(globmod.glob(path)) or [path]
-    else:
-        files = list(path)
-    if not files:
-        raise ValueError(f"read_cdx_index: no index files under {path!r}")
-
     entries: list[tuple[str, int, int]] = []
-    for idx in files:
+    for idx in list_files(path, _is_cdx, "CDX index"):
         root = base_dir if base_dir is not None else os.path.dirname(idx)
         with open(idx, "rb") as f:
             head = f.read(2)
@@ -1521,6 +1472,10 @@ def build_cdx_index(archive_path: str, index_path: str, *,
     return len(lines)
 
 
+def _is_cdx(name: str) -> bool:
+    return ".cdx" in name
+
+
 _CDX_DDL = ("surt string, ts string, url string, status int, "
             "path string, off long, len long")
 
@@ -1538,26 +1493,9 @@ def read_cdx_meta(spark, path: str | list[str], *,
     index is ~100s of GB across ~300 files — exactly the shape one
     task per file handles; only the FILTERED triples ever reach the
     driver."""
-    import glob as globmod
-
     import pandas as pd
 
-    if isinstance(path, str):
-        if os.path.isdir(path):
-            files = sorted(
-                os.path.join(path, f) for f in os.listdir(path)
-                if ".cdx" in f)
-        else:
-            files = sorted(globmod.glob(path)) or [path]
-    else:
-        files = list(path)
-    if not files:
-        raise ValueError(f"read_cdx_meta: no index files under {path!r}")
-
-    fdf = spark.createDataFrame([(f,) for f in files],
-                                "__cdx_file__ string")
-    if len(files) > 1:
-        fdf = fdf.repartition(len(files))
+    files = list_files(path, _is_cdx, "CDX index")
 
     def batches(it):
         import json
@@ -1612,7 +1550,8 @@ def read_cdx_meta(spark, path: str | list[str], *,
                                        "path", "off", "len"]) \
                         .astype({"status": "Int64"})
 
-    return fdf.mapInPandas(batches, _CDX_DDL)
+    return scan_units(spark, [(f,) for f in files], "__cdx_file__ string",
+                      batches, _CDX_DDL)
 
 
 # ---------------------------------------------------------------------------
@@ -1635,13 +1574,12 @@ _CC_INDEX_DDL = ("url_surtkey string, url string, fetch_time string, "
 
 def build_columnar_index(spark, archives, index_path: str, *,
                          extension: str = ".warc.gz") -> int:
-    """DISTRIBUTED columnar index build (r10) — the PARQUET index the
+    """DISTRIBUTED columnar index build — the PARQUET index the
     modern Common Crawl access path queries instead of flat CDXJ
     files: one task per archive walks gzip member boundaries and
     peeks each record's WARC + HTTP headers into an index row in ONE
     sequential read (:func:`_iter_member_records`, O(member) memory;
-    the r10 shape re-opened and re-read the archive once per member —
-    O(records) opens + a second full pass); the rows land as parquet
+    no re-open and re-read of the archive per member); the rows land as parquet
     via the ordinary distributed sink, sorted within partitions by
     ``url_surtkey`` so row groups carry tight min/max ranges for
     SURT-prefix pruning.
@@ -1655,11 +1593,7 @@ def build_columnar_index(spark, archives, index_path: str, *,
     fetching. Returns the number of index rows written."""
     import pandas as pd
 
-    files = _warc_file_list(archives, extension)
-    fdf = spark.createDataFrame([(f,) for f in files],
-                                "__warc_file__ string")
-    if len(files) > 1:
-        fdf = fdf.repartition(len(files))
+    files = _warc_files(archives, extension)
 
     def batches(it):
         for pdf in it:
@@ -1686,12 +1620,13 @@ def build_columnar_index(spark, archives, index_path: str, *,
                         "warc_record_offset", "warc_record_length"]) \
                         .astype({"fetch_status": "Int64"})
 
-    idx = fdf.mapInPandas(batches, _CC_INDEX_DDL) \
-             .sortWithinPartitions("url_surtkey")
+    idx = scan_units(spark, [(f,) for f in files], "__warc_file__ string",
+                     batches, _CC_INDEX_DDL) \
+        .sortWithinPartitions("url_surtkey")
     idx.write.mode("overwrite").parquet(index_path)
     # row count from the written parquet FOOTERS (driver-side metadata
-    # only — r11): the previous full re-read + count() launched one
-    # more Spark job per build and re-decoded the index it just wrote.
+    # only): a re-read + count() would launch one more Spark job per
+    # build and re-decode the index it just wrote.
     import pyarrow.parquet as pq
     return sum(pq.ParquetFile(os.path.join(index_path, f)).metadata.num_rows
                for f in os.listdir(index_path) if f.endswith(".parquet"))
@@ -1713,7 +1648,7 @@ def fetch_index_records(spark, index_df, base_dir: str, *,
     at: resolves ``warc_filename`` against ``base_dir`` (the
     published index stores basenames/crawl-relative names) as a
     column expression and feeds the (path, offset, length) triples
-    into :func:`read_warc_records` FULLY DISTRIBUTED (r10) — the
+    into :func:`read_warc_records` FULLY DISTRIBUTED — the
     filtered selection never crosses the driver, so a billions-of-
     rows index cut scales like any other frame. Filter the index
     BEFORE calling this (the whole point of the columnar shape)."""

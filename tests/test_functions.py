@@ -880,11 +880,25 @@ def test_wav_roundtrip_and_features(spark):
 
 
 def test_audio_features_bad_bytes_null(spark):
+    """Undecodable bytes and WAVs that are not 16-bit PCM yield NULL: an
+    8-bit WAV opens fine, but reading it as int16 gives garbage
+    features."""
+    import io
+    import wave
+
     from tech_ml_dataset_spark.functions import multimodal as mm
-    df = spark.createDataFrame([(1, bytearray(b"not a wav"))],
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(1)
+        w.setframerate(8000)
+        w.writeframes(bytes(range(256)) * 2)       # 512 8-bit samples
+    df = spark.createDataFrame([(1, bytearray(b"not a wav")),
+                                (2, bytearray(buf.getvalue()))],
                                ["doc_id", "wav"])
-    row = mm.audio_features(df, "wav").collect()[0]
-    assert row["audio"] is None
+    rows = {r["doc_id"]: r["audio"]
+            for r in mm.audio_features(df, "wav").collect()}
+    assert rows == {1: None, 2: None}
 
 
 def test_text_stats_null_semantics(spark):

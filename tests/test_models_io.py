@@ -476,6 +476,12 @@ def test_compact_files_recovers_from_crashed_swap(spark, tmp_path):
     path = str(tmp_path / "ds")
     spark.range(100).repartition(4).write.parquet(path)
     os.rename(path, path + ".__compact_old__")   # simulate mid-swap crash
+    # a dry run reports the backup's files (what the real run restores)
+    # and leaves the disk as it is
+    dry = compact_files(spark, path, target_file_bytes=10**9, dry_run=True)
+    assert dry["n_files_before"] == 4
+    assert os.path.isdir(path + ".__compact_old__")
+    assert not os.path.exists(path)
     rep = compact_files(spark, path, target_file_bytes=10**9)
     assert spark.read.parquet(path).count() == 100
     assert not os.path.isdir(path + ".__compact_old__")

@@ -219,6 +219,59 @@ def test_image_pipeline_flag_col_collision(spark):
     assert all(r["decode_real2"] for r in again.collect())
 
 
+_APPENDERS = [
+    ("decode_image", lambda df, c: mm.decode_image(df, "data", out_col=c)),
+    ("image_features",
+     lambda df, c: mm.image_features(df, "data", out_col=c)),
+    ("image_pipeline", lambda df, c: mm.image_pipeline(
+        df, "data", resize_hw=(2, 2), out_col=c)),
+    ("image_pipeline_flag", lambda df, c: mm.image_pipeline(
+        df, "data", resize_hw=(2, 2), flag_col=c)),
+    ("image_dhash", lambda df, c: mm.image_dhash(df, "data", out_col=c)),
+    ("image_dhash_flag",
+     lambda df, c: mm.image_dhash(df, "data", flag_col=c)),
+    ("video_fingerprint",
+     lambda df, c: mm.video_fingerprint(df, "data", out_col=c)),
+    ("video_fingerprint_flag",
+     lambda df, c: mm.video_fingerprint(df, "data", flag_col=c)),
+    ("audio_fingerprint",
+     lambda df, c: mm.audio_fingerprint(df, "data", out_col=c)),
+    ("audio_features",
+     lambda df, c: mm.audio_features(df, "data", out_col=c)),
+    ("pdf_text", lambda df, c: mm.pdf_text(df, "data", out_col=c)),
+    ("pdf_text_flag", lambda df, c: mm.pdf_text(df, "data", flag_col=c)),
+    ("synthesize_png",
+     lambda df, c: mm.synthesize_png(df, "doc_id", out_col=c)),
+    ("synthesize_jpeg",
+     lambda df, c: mm.synthesize_jpeg(df, "doc_id", out_col=c)),
+    ("synthesize_gif",
+     lambda df, c: mm.synthesize_gif(df, "doc_id", out_col=c)),
+    ("synthesize_pdf",
+     lambda df, c: mm.synthesize_pdf(df, "doc_id", out_col=c)),
+    ("synthesize_wav",
+     lambda df, c: mm.synthesize_wav(df, "doc_id", out_col=c)),
+    ("synthesize_flac",
+     lambda df, c: mm.synthesize_flac(df, "doc_id", out_col=c)),
+]
+
+
+@pytest.mark.parametrize("call", [c for _, c in _APPENDERS],
+                         ids=[n for n, _ in _APPENDERS])
+def test_output_column_collision_raises_before_any_job(spark, count_jobs,
+                                                       call):
+    """Every stage that appends columns refuses an output name the input
+    already has, at call time: a duplicate column would otherwise build
+    a frame that fails only at its first action."""
+    df = spark.createDataFrame([(1, bytearray(b"x"), "y")],
+                               "doc_id int, data binary, image string")
+
+    def attempt():
+        with pytest.raises(ValueError, match="'image'"):
+            call(df, "image")
+
+    assert count_jobs(attempt)[1] == 0
+
+
 def test_jpeg_constant_blocks_roundtrip_exact():
     """The oracle-enabling law: constant 8x8 blocks are DC-only, so the
     lossy baseline JPEG round-trips them BIT-EXACTLY at quant=1."""
