@@ -593,8 +593,8 @@ def repetition_signals(df: DataFrame, text_col: str = "text",
     # consumes it: higher-order-function expressions are interpreted (no
     # whole-stage codegen, no common-subexpression elimination), so an
     # inlined `segs`/`toks` tree was re-split/lowered/trimmed at EVERY
-    # reference — ~32 full tokenizations per row inside the gram Generate
-    # alone (r11, plans/r11/repetition_signals_docs_before.txt). Catalyst's
+    # reference — 32 `split` calls, each a full tokenization, per row in
+    # the gram Generate's expression alone. Catalyst's
     # CollapseProject keeps these layers separate because the aliases are
     # non-cheap and multiply referenced.
     def _segs_expr(sep_regex):

@@ -13,6 +13,23 @@ Python task otherwise pays about 0.25 s of worker CPU before its UDF runs
 ``importlib.invalidate_caches()`` re-reads ``pyspark.zip``'s directory
 once per zip importer, 16 times. The daemon re-reads an archive only when
 it changed.
+
+Local driver JVMs start from a dynamic class-data-sharing (CDS) archive
+(``_cds``): the JVM maps the classes an earlier session loaded, already
+parsed and verified, instead of loading them from Spark's jars. The first
+session without an archive writes one when its JVM exits (about 10-13 s
+and 140-250 MB, once per checkout and heap mode); later sessions map it.
+Archives live in ``.jvm-cds/`` under the checkout root, named by the
+launch classpath (java binary and Spark jars, with sizes and mtimes) and
+by the compressed-oops mode (heap below or from 32 GiB). For the launch
+only, ``SPARK_CONF_DIR`` points at an empty directory there: the JVM
+dumps no archive while a non-empty directory is on the classpath. Nothing
+is archived or changed for a non-local master, a running JVM, a conf dir
+holding anything but ``*.template`` files, ``HADOOP_CONF_DIR`` /
+``YARN_CONF_DIR`` / ``SPARK_DIST_CLASSPATH``, ``spark.driver.extraClassPath``,
+an unwritable ``.jvm-cds/``, or ``spark.driver.extraJavaOptions`` that
+already name ``-Xshare``, ``SharedArchiveFile`` or
+``ArchiveClassesAtExit``: pass ``-Xshare:off`` there to opt out.
 """
 
 from __future__ import annotations
@@ -21,7 +38,11 @@ import os
 
 from pyspark.sql import SparkSession
 
+from . import _cds
+
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# the class-data-sharing archive of local driver JVMs, one per checkout
+_CDS_DIR = os.path.join(_PACKAGE_PARENT, ".jvm-cds")
 
 _DEFAULTS = {
     # AQE: runtime re-planning (partition coalescing, skew-join splitting,
@@ -38,10 +59,10 @@ _DEFAULTS = {
     # Generated-class cache (static conf, default 100 entries): a session
     # running a large query suite (the 157-entry bench; any long-lived
     # driver re-planning hot shapes) evicts compiled classes between
-    # repeats and re-pays 5-9 s of Janino/JIT per heavy plan — measured
-    # r5->r6: corpus_composition 11.8 s evicted vs 1.9 s cached, with
-    # identical code. 1000 entries of generated bytecode is a few tens
-    # of MB on the driver: cheap insurance at any scale.
+    # repeats and re-pays 5-9 s of Janino/JIT per heavy plan — measured:
+    # corpus_composition 11.8 s evicted vs 1.9 s cached, with identical
+    # code. 1000 entries of generated bytecode is a few tens of MB on the
+    # driver: cheap insurance at any scale.
     "spark.sql.codegen.cache.maxEntries": "1000",
     # Timestamps in test parquet are ns-precision; read without truncation error.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
@@ -81,8 +102,10 @@ def get_spark(
         conf.setdefault("spark.python.daemon.module", "tech_ml_dataset_spark._daemon")
         conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
             filter(None, [conf.get("spark.executorEnv.PYTHONPATH"), _PACKAGE_PARENT]))
+    conf_dir = _cds.prepare(conf, master, _CDS_DIR)
     for k, v in conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    with _cds.launch_env(conf_dir):
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

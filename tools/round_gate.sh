@@ -6,15 +6,16 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.01}"
 
-echo "== 1/8 registry structure and driver window (no Spark, seconds)"
+echo "== 1/8 registry structure, driver window, class-data-sharing archive"
+echo "   (no Spark, seconds)"
 python -m pytest tests/test_plans.py tests/test_session.py -q -p no:cacheprovider \
-    -k "test_registry_structure or test_driver_window_integrity or test_zip_importer" \
+    -k "test_registry_structure or test_driver_window_integrity or test_zip_importer or (test_cds and not test_cds_driver)" \
     2>&1 | tail -1
 
-echo "== 2/8 Python worker daemon, then sinks: fault replays, merge_upsert"
-echo "   contract, jobs per batch (~4 min)"
+echo "== 2/8 Python worker daemon, archive use by driver processes, then sinks:"
+echo "   fault replays, merge_upsert contract, jobs per batch (~5 min)"
 python -m pytest tests/test_session.py -q -x -p no:cacheprovider \
-    -k "test_worker_task or test_python_udf" 2>&1 | tail -1
+    -k "test_worker_task or test_python_udf or test_cds_driver" 2>&1 | tail -1
 python -m pytest tests/test_sinks.py tests/test_models_io.py -q \
     -x -p no:cacheprovider -k "test_sinks or merge_upsert" 2>&1 | tail -1
 
