@@ -100,7 +100,7 @@ def decontaminate_docs(spark, sf_dir):
             FROM rb ORDER BY doc_id
         """)
 def exact_substring_dedup_docs(spark, sf_dir):
-    """ExactSubstr dedup (r8; Lee et al. 2022 §4.1 — the
+    """ExactSubstr dedup (Lee et al. 2022 §4.1 — the
     suffix-array-paper law, Spark-re-expressed as k-token window
     hashing whose overlap-union reconstructs maximal duplicated runs):
     remove every corpus-wide duplicated 20-token run from all but its
@@ -291,7 +291,7 @@ def incremental_dedup_docs(spark, sf_dir):
 def url_dedup_docs(spark, sf_dir):
     """Crawl-level URL dedup (text.py canonical_url/url_dedup — the
     C4/RefinedWeb stage before content dedup): deterministic fixture URLs
-    per doc (MID-position tracking params between kept params — the r3
+    per doc (MID-position tracking params between kept params — the
     separator-bug class — plus fragments and WWW/case aliases) whose
     CANONICAL form is closed-form from doc_id — the oracle derives it
     directly from the law, proving the full regexp chain end-to-end."""
@@ -404,8 +404,8 @@ def minhash_pairs_oracle_docs(spark, sf_dir):
     md5-derived and band keys are the joined band slice, so DuckDB replays
     signature → banding → candidate join → exact-Jaccard verify
     BIT-FOR-BIT — promoting the MinHash banding law itself from rows-only
-    to hash-checked (r3 verdict: only the xxhash64/murmur primitives
-    blocked an oracle, not the algebra). Same params as
+    to hash-checked (only the xxhash64/murmur primitives blocked an
+    oracle, not the algebra). Same params as
     `minhash_pairs_docs`, which keeps exercising the production
     xxhash64 path."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
@@ -549,8 +549,8 @@ def _winnow_oracle(k: int = 8, w: int = 4) -> str:
 
 @query(oracle=_winnow_oracle())
 def winnow_docs(spark, sf_dir):
-    """Winnowing fingerprints (MOSS rolling-hash scheme). ORACLED as of
-    r4: the rolling hash is a base-1099511628211 polynomial over UTF-8
+    """Winnowing fingerprints (MOSS rolling-hash scheme). ORACLED: the
+    rolling hash is a base-1099511628211 polynomial over UTF-8
     bytes mod 2^64 — DuckDB replays it with HUGEINT arithmetic and
     precomputed base powers (ASCII fixture text makes codepoints ==
     bytes), window minima in the unsigned domain, then the int64
@@ -559,12 +559,12 @@ def winnow_docs(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     docs = dtu.ensure_parallelism(docs, "doc_id")  # CPU-bound fan-out
     fp = txt.winnow_fingerprints(F.col("text"), k=8, w=4)
-    # NOTE (r8): deliberately NO final orderBy, unlike the other five
+    # NOTE: deliberately NO final orderBy, unlike the other five
     # order-nondeterministic queries — a total sort here either
     # re-executes the fingerprint chain (range-partition sampling runs
     # the child twice: measured 0.48 -> 0.82 s) or, if applied to the
     # scan first, lets AQE coalesce away the decode fan-out. The
-    # driver hashes a sorted row multiset (r3: 41 queries proven), so
+    # driver hashes a sorted row multiset (41 queries proven), so
     # the multiset order stands.
     return docs.select("doc_id", F.size(fp).alias("n_fp"),
                        F.array_min(fp).alias("fp_min"))
@@ -602,9 +602,9 @@ def _winnow_pairs_oracle(k: int = 8, w: int = 4, min_shared: int = 20,
 
 @query(oracle=_winnow_pairs_oracle())
 def winnow_pairs_docs(spark, sf_dir):
-    """Substring-level near-dup pairs (dedup.winnow_dedup_pairs, r4 —
+    """Substring-level near-dup pairs (dedup.winnow_dedup_pairs —
     Lee et al. 2022 exact-substring-dedup candidates via the MOSS
-    fingerprint inverted index; ORACLED late-r4: the rolling hash replays
+    fingerprint inverted index; ORACLED: the rolling hash replays
     in DuckDB HUGEINT, see winnow_docs). Pairs sharing >= 2 selected
     fingerprints, i.e. a
     verbatim block of >= k+w-1 chars, with a containment score. The

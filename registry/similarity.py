@@ -289,7 +289,7 @@ def _lsh_topk_oracle() -> str:
 
 @query(oracle=_lsh_topk_oracle())
 def lsh_topk_embeddings(spark, sf_dir):
-    """Sign-LSH bucketed ANN top-k (ORACLED since r3 via frozen seeded
+    """Sign-LSH bucketed ANN top-k (ORACLED via frozen seeded
     hyperplanes — approximate by design, but deterministic given the
     plan-literal planes; recall vs brute force is additionally pinned in
     tests/test_functions.py)."""
@@ -326,8 +326,8 @@ def lsh_topk_embeddings(spark, sf_dir):
         """)
 def ivf_topk_embeddings(spark, sf_dir):
     """IVF approximate top-k (similarity.ivf_topk): numpy-matmul cell
-    assignment, probe 2 of 8 cells. ORACLED (promoted from rows-only in
-    r4): centroids are the embeddings of vec_id 1..8 in vec_id order —
+    assignment, probe 2 of 8 cells. ORACLED (promoted from rows-only):
+    centroids are the embeddings of vec_id 1..8 in vec_id order —
     data-deterministic, so DuckDB replays the full IVF law (max-cosine
     assignment with argmax's lower-index tiebreak, cosine-ranked probe
     pick, cosine top-k inside probed cells) from the same table. The

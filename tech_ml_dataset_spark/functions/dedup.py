@@ -1,11 +1,37 @@
 """Deduplication operators for training-data pipelines (beyond-reference
-mandate): exact, MinHash+LSH banding, SimHash, n-gram Jaccard.
+mandate).
 
-Scale design: every stage is expressed with Catalyst higher-order functions
-(xxhash64, transform, aggregate, zip_with) so signatures are computed
-JVM-side in one scan; candidate generation is an equi-join on (band, hash)
-buckets — shuffle linear in corpus size, never the quadratic all-pairs.
-The quadratic work (exact Jaccard verify) runs only inside buckets.
+What the module holds:
+
+- exact dedup on a text or fingerprint hash (:func:`exact_dedup`,
+  :func:`fingerprint_dedup`, the cross-corpus :func:`incremental_dedup`)
+  and exact-substring removal (:func:`exact_substring_dedup`);
+- near-duplicate pair generators: MinHash + LSH banding
+  (:func:`minhash_dedup_pairs`, :func:`minhash_pairs_between`, the
+  persisted index), banded Hamming over any 64-bit fingerprint (SimHash,
+  image dHash, audio; :func:`hamming_dedup_pairs`,
+  :func:`hamming_pairs_between`), shared-fingerprint overlap,
+  word n-gram Jaccard, winnow substring fingerprints, the prefix-filtered
+  set-similarity join and the q-gram edit-distance join; the embedding
+  cosine pairs live in ``similarity.py``;
+- benchmark decontamination and the transitive :func:`dedup_clusters`.
+
+Every pair generator is filter-then-verify over one candidate-pair path,
+written once below and shared with ``similarity.py`` and the streaming
+dedup sinks: :func:`_key_pairs` equi-joins a slim keyed table (id, join
+key, small payload) with itself — keeping ``id_a < id_b``, so no row
+pairs with itself — or with a second table; the caller collapses the
+result to one row per pair; :func:`_attach` joins the verify payload
+(shingle sets, vectors) back once per side; :func:`_jaccard_at_least`
+and the Hamming and cosine tails score each candidate exactly.
+:func:`_admit` caps the document frequency of an inverted index's keys,
+and :func:`_drop_named` removes the rows a pair set names.
+
+Scale design: signatures are Catalyst higher-order expressions (xxhash64,
+transform, aggregate, zip_with) computed JVM-side in one scan; the
+candidate join is keyed on (band, hash) buckets or index keys — shuffle
+linear in corpus size, never the quadratic all-pairs — and the exact
+verify runs only on candidates.
 """
 
 from __future__ import annotations
@@ -198,15 +224,90 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.when(uni == 0, F.lit(0.0)).otherwise(inter.cast("double") / uni)
 
 
-def _attach_shingles(ids: DataFrame, sh: DataFrame, id_col: str) -> DataFrame:
-    """Join the slim (id_a, id_b) candidate set back to the per-doc shingle
-    table — twice, once per side — so only confirmed candidates ever carry
-    a document-sized array through a shuffle."""
-    sh_a = sh.select(F.col(id_col).alias("id_a"), F.col("__sh__").alias("sh_a"))
-    sh_b = sh.select(F.col(id_col).alias("id_b"), F.col("__sh__").alias("sh_b"))
-    return (ids.join(sh_a, "id_a")
-               .join(sh_b, "id_b")
-               .select("id_a", "id_b", "sh_a", "sh_b"))
+# ---- the candidate-pair path ------------------------------------------------
+
+_SELF = ("id_a", "id_b")        # pair id names of a self-join
+_CROSS = ("new_id", "hist_id")  # pair id names of a (new, historical) join
+_SETS = {"__sh__": ("sh_a", "sh_b")}  # shingle sets carried to the verify
+
+
+def _side(t: DataFrame, id_col: str, name: str, cols, carry: dict,
+          i: int) -> DataFrame:
+    """One side of a pair join: ``id_col`` renamed ``name``, each
+    ``carry`` column renamed to its side-``i`` name, ``cols`` as they
+    are."""
+    return t.select(F.col(id_col).alias(name),
+                    *[F.col(c).alias(n[i]) for c, n in carry.items()], *cols)
+
+
+def _key_pairs(a: DataFrame, keys: list, a_id: str,
+               b: DataFrame | None = None, b_id: str | None = None, *,
+               names: tuple = _SELF, carry: dict | None = None) -> DataFrame:
+    """Candidate step of every pair generator: equi-join ``a`` with ``b``
+    on ``keys`` (no keys: every pair), the ids renamed ``names`` and each
+    ``carry`` column ``c`` renamed ``carry[c][0]`` on the ``a`` side and
+    ``carry[c][1]`` on the ``b`` side. ``b=None`` self-joins ``a`` and
+    keeps ``names[0] < names[1]``: no row pairs with itself and each
+    unordered pair comes once per shared key. The caller collapses the
+    result to one row per pair."""
+    carry = carry or {}
+    sa = _side(a, a_id, names[0], keys, carry, 0)
+    sb = _side(a if b is None else b, b_id or a_id, names[1], keys, carry, 1)
+    pairs = sa.join(sb, keys) if keys else sa.join(sb)
+    if b is not None:
+        return pairs
+    return pairs.filter(F.col(names[0]) < F.col(names[1]))
+
+
+def _attach(ids: DataFrame, a: DataFrame, b: DataFrame, a_id: str,
+            b_id: str | None = None, *, names: tuple = _SELF,
+            carry: dict) -> DataFrame:
+    """Join each side's ``carry`` columns (renamed as in
+    :func:`_key_pairs`) back to the slim one-row-per-pair set ``ids``,
+    once per side, so only candidates ever carry a document-sized payload
+    through a shuffle."""
+    sa = _side(a, a_id, names[0], (), carry, 0)
+    sb = _side(b, b_id or a_id, names[1], (), carry, 1)
+    return (ids.join(sa, names[0]).join(sb, names[1])
+               .select(*names, *[n[0] for n in carry.values()],
+                       *[n[1] for n in carry.values()]))
+
+
+def _jaccard_at_least(pairs: DataFrame, threshold: float,
+                      names: tuple = _SELF,
+                      sets: tuple = ("sh_a", "sh_b")) -> DataFrame:
+    """Verify step of the set generators: ``(*names, jaccard)`` for the
+    pairs whose attached ``sets`` have exact Jaccard >= ``threshold``,
+    rounded to 4 places."""
+    return (pairs.withColumn("jaccard", jaccard(F.col(sets[0]),
+                                                F.col(sets[1])))
+                 .filter(F.col("jaccard") >= threshold)
+                 .select(*names, F.round("jaccard", 4).alias("jaccard")))
+
+
+def _admit(inv: DataFrame, key: str, max_df: int | None) -> DataFrame:
+    """Rows of the inverted index ``inv`` whose ``key`` occurs in at most
+    ``max_df`` rows (every row when ``max_df`` is None). The admitted key
+    set is materialized ONCE (eager localCheckpoint): both sides of the
+    self-join read ``inv`` and Catalyst plans a shared subtree once per
+    reference, so the count aggregation over the whole index would
+    otherwise run once per side (no exchange reuse across the two
+    re-aliased sides)."""
+    if max_df is None:
+        return inv
+    admitted = (inv.groupBy(key).agg(F.count(F.lit(1)).alias("__df__"))
+                   .filter(F.col("__df__") <= max_df)
+                   .select(key)
+                   .localCheckpoint(eager=True))
+    return inv.join(admitted, key)
+
+
+def _drop_named(df: DataFrame, pairs: DataFrame, side: str,
+                id_col: str) -> DataFrame:
+    """Rows of ``df`` whose ``id_col`` is not named in the ``side``
+    column of ``pairs``: one anti join on the slim distinct id set."""
+    named = pairs.select(F.col(side).alias(id_col)).distinct()
+    return df.join(named, id_col, "left_anti")
 
 
 def _shingle_and_band(df: DataFrame, id_col: str, text_col: str, *, k: int,
@@ -280,14 +381,21 @@ def minhash_candidates(df: DataFrame, id_col: str = "doc_id",
     # what minhash_index_write already persists for cross-run probes; the
     # document-sized shingle arrays stay streamed (re-derived per verify
     # side), preserving the at-scale no-materialization contract.
-    banded = banded.localCheckpoint(eager=True)
-    a = banded.select(F.col(id_col).alias("id_a"), "__band__", "__bhash__")
-    b = banded.select(F.col(id_col).alias("id_b"), "__band__", "__bhash__")
-    ids = (a.join(b, ["__band__", "__bhash__"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct())
-    return _attach_shingles(ids, sh, id_col)
+    return _band_candidates(banded.localCheckpoint(eager=True), sh, id_col)
+
+
+def _band_candidates(band_a: DataFrame, sh_a: DataFrame, id_col: str,
+                     band_b: DataFrame | None = None,
+                     sh_b: DataFrame | None = None) -> DataFrame:
+    """Distinct pairs sharing an LSH band, shingle sets attached:
+    ``(id_a, id_b, sh_a, sh_b)`` for the self-join of ``band_a``,
+    ``(new_id, hist_id, sh_a, sh_b)`` against ``band_b``."""
+    names = _SELF if band_b is None else _CROSS
+    ids = (_key_pairs(band_a, ["__band__", "__bhash__"], id_col, band_b,
+                      names=names)
+           .select(*names).distinct())
+    return _attach(ids, sh_a, sh_a if sh_b is None else sh_b, id_col,
+                   names=names, carry=_SETS)
 
 
 def minhash_dedup_pairs(df: DataFrame, id_col: str = "doc_id",
@@ -299,11 +407,10 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str = "doc_id",
     shingle sets. Output: (id_a, id_b, jaccard) with jaccard >= threshold.
     ``hash_fn`` as in :func:`minhash_candidates` ("md5" = engine-portable
     hashing so the banding law is independently verifiable)."""
-    pairs = minhash_candidates(df, id_col, text_col, k=k, n_hashes=n_hashes,
-                               bands=bands, seed=seed, hash_fn=hash_fn)
-    return (pairs.withColumn("jaccard", jaccard(F.col("sh_a"), F.col("sh_b")))
-                 .filter(F.col("jaccard") >= threshold)
-                 .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard")))
+    return _jaccard_at_least(
+        minhash_candidates(df, id_col, text_col, k=k, n_hashes=n_hashes,
+                           bands=bands, seed=seed, hash_fn=hash_fn),
+        threshold)
 
 
 def minhash_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
@@ -339,8 +446,7 @@ def minhash_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
             keep = _argmax_survivors(scored, "cluster", id_col,
                                      keep_by, F.min).select(id_col)
         return df.join(keep, id_col, "left_semi")
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(losers, id_col, "left_anti")
+    return _drop_named(df, pairs, "id_b", id_col)
 
 
 def exact_substring_dedup(df: DataFrame, text_col: str = "text",
@@ -541,37 +647,34 @@ def hamming_dedup_pairs(df: DataFrame, hash_col: str,
     bounded by document count — the 'fingerprint once, shuffle 8-byte
     hashes, never pixels' promise the fingerprint docstrings make, now
     true of the compute as well as the shuffle."""
-    n_bands = 64 // band_bits
     slim = df.select(F.col(id_col), F.col(hash_col).alias("__fp__")) \
              .localCheckpoint(eager=True)
-    banded = slim.select(
-        F.col(id_col), F.col("__fp__"),
-        F.posexplode(F.array(*[
-            F.shiftright(F.col("__fp__"), bi * band_bits)
-             .bitwiseAND(F.lit((1 << band_bits) - 1))
-            for bi in range(n_bands)])).alias("__band__", "__key__"))
-    a = banded.select(F.col(id_col).alias("id_a"), F.col("__fp__").alias("fp_a"),
-                      "__band__", "__key__")
-    b = banded.select(F.col(id_col).alias("id_b"), F.col("__fp__").alias("fp_b"),
-                      "__band__", "__key__")
-    return (a.join(b, ["__band__", "__key__"])
-             .filter(F.col("id_a") < F.col("id_b"))
-             .dropDuplicates(["id_a", "id_b"])
-             .withColumn("distance", hamming64(F.col("fp_a"), F.col("fp_b")))
-             .filter(F.col("distance") <= max_distance)
-             .select("id_a", "id_b", "distance"))
+    return _hamming_pairs(slim, "__fp__", id_col, names=_SELF,
+                          fp_names=("fp_a", "fp_b"),
+                          max_distance=max_distance, band_bits=band_bits)
 
 
-def _band_fp(df: DataFrame, fp_col: str, id_alias: str, id_col: str,
-             band_bits: int) -> DataFrame:
-    n_bands = 64 // band_bits
-    return df.select(
-        F.col(id_col).alias(id_alias),
-        F.col(fp_col).alias(f"fp_{id_alias}"),
-        F.posexplode(F.array(*[
+def _hamming_pairs(a: DataFrame, fp_col: str, a_id: str,
+                   b: DataFrame | None = None, b_id: str | None = None, *,
+                   names: tuple, fp_names: tuple, max_distance: int,
+                   band_bits: int) -> DataFrame:
+    """Both faces of the banded Hamming join (``b=None``: self-join):
+    each row explodes to its ``64 // band_bits`` (band, key) rows, the
+    candidate pairs share a band key, one row per pair carries the two
+    fingerprints to the exact ``bit_count(xor)`` verify."""
+    def banded(t, tid):
+        return t.select(tid, fp_col, F.posexplode(F.array(*[
             F.shiftright(F.col(fp_col), bi * band_bits)
              .bitwiseAND(F.lit((1 << band_bits) - 1))
-            for bi in range(n_bands)])).alias("__band__", "__key__"))
+            for bi in range(64 // band_bits)])).alias("__band__", "__key__"))
+    pairs = _key_pairs(banded(a, a_id), ["__band__", "__key__"], a_id,
+                       None if b is None else banded(b, b_id), b_id,
+                       names=names, carry={fp_col: fp_names})
+    return (pairs.dropDuplicates(list(names))
+                 .withColumn("distance", hamming64(F.col(fp_names[0]),
+                                                   F.col(fp_names[1])))
+                 .filter(F.col("distance") <= max_distance)
+                 .select(*names, "distance"))
 
 
 def hamming_pairs_between(new: DataFrame, hist: DataFrame, fp_col: str,
@@ -585,14 +688,9 @@ def hamming_pairs_between(new: DataFrame, hist: DataFrame, fp_col: str,
     crawl batch probes an accepted corpus without re-pairing the corpus
     against itself. Recall-complete while
     ``max_distance < 64 // band_bits`` (pigeonhole)."""
-    a = _band_fp(new, fp_col, "new_id", new_id, band_bits)
-    b = _band_fp(hist, fp_col, "hist_id", hist_id, band_bits)
-    return (a.join(b, ["__band__", "__key__"])
-             .dropDuplicates(["new_id", "hist_id"])
-             .withColumn("distance",
-                         hamming64(F.col("fp_new_id"), F.col("fp_hist_id")))
-             .filter(F.col("distance") <= max_distance)
-             .select("new_id", "hist_id", "distance"))
+    return _hamming_pairs(new, fp_col, new_id, hist, hist_id, names=_CROSS,
+                          fp_names=("fp_new_id", "fp_hist_id"),
+                          max_distance=max_distance, band_bits=band_bits)
 
 
 def fingerprint_dedup(df: DataFrame, fp_col: str, id_col: str = "doc_id",
@@ -636,8 +734,9 @@ def shared_fingerprint_pairs(df: DataFrame, fp_col: str,
     is normally no stopword-style hot key — but a degenerate
     constant-content corpus (every video the same test pattern) makes
     one, so ``max_df`` drops fingerprints shared by more than ``max_df``
-    rows before the self-join (the ngram_jaccard cap): candidate volume
-    is then bounded by ``max_df^2/2`` per fingerprint. Pairs whose ONLY
+    rows before the self-join (:func:`_admit`, the cap shared with
+    :func:`ngram_jaccard_pairs` and :func:`winnow_dedup_pairs`): candidate
+    volume is then bounded by ``max_df^2/2`` per fingerprint. Pairs whose ONLY
     overlap is capped-out fingerprints are not emitted — the standard
     near-dup recall tradeoff: a fingerprint that frequent identifies a
     boilerplate artifact, not a duplicate pair.
@@ -652,17 +751,8 @@ def shared_fingerprint_pairs(df: DataFrame, fp_col: str,
     order as what already crossed the distinct's exchange."""
     inv = df.select(F.col(id_col), F.explode(fp_col).alias("__fp__")) \
             .distinct().localCheckpoint(eager=True)
-    if max_df is not None:
-        admitted = (inv.groupBy("__fp__")
-                       .agg(F.count(F.lit(1)).alias("__df__"))
-                       .filter(F.col("__df__") <= max_df)
-                       .select("__fp__"))
-        inv = inv.join(admitted, "__fp__")
-    a = inv.select(F.col(id_col).alias("id_a"), "__fp__")
-    b = inv.select(F.col(id_col).alias("id_b"), "__fp__")
-    return (a.join(b, "__fp__")
-             .filter(F.col("id_a") < F.col("id_b"))
-             .groupBy("id_a", "id_b")
+    return (_key_pairs(_admit(inv, "__fp__", max_df), ["__fp__"], id_col)
+             .groupBy(*_SELF)
              .agg(F.count(F.lit(1)).alias("shared"))
              .filter(F.col("shared") >= min_shared))
 
@@ -706,7 +796,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
 
     The shingled frame is materialized ONCE (eager localCheckpoint): the
     plan references it from SIX branches (a-side, b-side, the admitted-gram
-    aggregation under each, and both `_attach_shingles` joins), and Spark
+    aggregation under each, and both `_attach` joins), and Spark
     re-plans a self-joined subtree per reference — measured as six full
     parquet scans each recomputing the shingling expression in
     ngram_jaccard_docs' physical plan. The materialized frame is
@@ -716,26 +806,11 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     sh = df.select(F.col(id_col),
                    shingles(F.col(text_col), k, mode="word").alias("__sh__")) \
            .localCheckpoint(eager=True)
-    inv = sh.select(id_col, F.explode("__sh__").alias("__g__"))
-    if max_df is not None:
-        # also materialized: the self-join references it once per side and
-        # expression re-aliasing defeats ReuseExchange, so the explode +
-        # count aggregation would otherwise run twice (vocabulary-sized
-        # result — bounded by distinct admitted grams)
-        admitted = (inv.groupBy("__g__")
-                       .agg(F.count(F.lit(1)).alias("__df__"))
-                       .filter(F.col("__df__") <= max_df)
-                       .select("__g__")
-                       .localCheckpoint(eager=True))
-        inv = inv.join(admitted, "__g__")
-    a = inv.select(F.col(id_col).alias("id_a"), "__g__")
-    b = inv.select(F.col(id_col).alias("id_b"), "__g__")
-    ids = (a.join(b, "__g__").filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b").distinct())
-    return (_attach_shingles(ids, sh, id_col)
-            .withColumn("jaccard", jaccard(F.col("sh_a"), F.col("sh_b")))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard")))
+    inv = _admit(sh.select(id_col, F.explode("__sh__").alias("__g__")),
+                 "__g__", max_df)
+    ids = _key_pairs(inv, ["__g__"], id_col).select(*_SELF).distinct()
+    return _jaccard_at_least(_attach(ids, sh, sh, id_col, carry=_SETS),
+                             threshold)
 
 
 def winnow_dedup_pairs(df: DataFrame, id_col: str = "doc_id",
@@ -765,7 +840,7 @@ def winnow_dedup_pairs(df: DataFrame, id_col: str = "doc_id",
 
     The per-doc fingerprint frame is materialized ONCE (eager
     localCheckpoint): the inverted-index self-join references it from
-    both sides, the ``max_df`` aggregation from both of those, and the
+    both sides, the ``max_df`` aggregation once more, and the
     optimizer additionally re-evaluates the UDF around pushed filters
     (guide §4.4) — measured: EIGHT ArrowEvalPython nodes in
     winnow_pairs_docs' physical plan for one logical fingerprint pass
@@ -779,21 +854,12 @@ def winnow_dedup_pairs(df: DataFrame, id_col: str = "doc_id",
         F.col(id_col),
         winnow_fingerprints(F.col(text_col), k=k, w=w).alias("__fp__")) \
         .localCheckpoint(eager=True)
-    sized = fps.select(id_col, F.size("__fp__").alias("__nf__"),
-                       F.explode("__fp__").alias("__h__"))
-    inv = sized
-    if max_df is not None:
-        admitted = (inv.groupBy("__h__")
-                       .agg(F.count(F.lit(1)).alias("__df__"))
-                       .filter(F.col("__df__") <= max_df)
-                       .select("__h__"))
-        inv = inv.join(admitted, "__h__")
-    a = inv.select(F.col(id_col).alias("id_a"), F.col("__nf__").alias("__na__"),
-                   "__h__")
-    b = inv.select(F.col(id_col).alias("id_b"), F.col("__nf__").alias("__nb__"),
-                   "__h__")
-    pairs = (a.join(b, "__h__").filter(F.col("id_a") < F.col("id_b"))
-              .groupBy("id_a", "id_b", "__na__", "__nb__")
+    inv = _admit(fps.select(id_col, F.size("__fp__").alias("__nf__"),
+                            F.explode("__fp__").alias("__h__")),
+                 "__h__", max_df)
+    pairs = (_key_pairs(inv, ["__h__"], id_col,
+                        carry={"__nf__": ("__na__", "__nb__")})
+              .groupBy(*_SELF, "__na__", "__nb__")
               .agg(F.count(F.lit(1)).alias("shared_fps"))
               .filter(F.col("shared_fps") >= min_shared))
     containment = (F.col("shared_fps").cast("double")
@@ -885,16 +951,16 @@ def similarity_join(left: DataFrame, right: DataFrame,
             - F.ceil(F.lit(threshold) * F.col("__n__") - F.lit(1e-9)) + 1)
         return ranked.filter(keep).select(id_name, "__g__")
 
-    ids = (_prefix(linv, "__lid__").join(_prefix(rinv, "__rid__"), "__g__")
-           .select("__lid__", "__rid__").distinct())
-    la = lt.select("__lid__", F.col("__sh__").alias("__sha__"))
-    rb = rt.select("__rid__", F.col("__sh__").alias("__shb__"))
-    out = (ids.join(la, "__lid__").join(rb, "__rid__")
-              .withColumn("jaccard", jaccard(F.col("__sha__"), F.col("__shb__")))
-              .filter(F.col("jaccard") >= threshold))
-    return out.select(F.col("__lid__").alias("left_id"),
-                      F.col("__rid__").alias("right_id"),
-                      F.round("jaccard", 4).alias("jaccard"))
+    names = ("__lid__", "__rid__")
+    ids = (_key_pairs(_prefix(linv, "__lid__"), ["__g__"], "__lid__",
+                      _prefix(rinv, "__rid__"), "__rid__", names=names)
+           .select(*names).distinct())
+    sets = {"__sh__": ("__sha__", "__shb__")}
+    out = _jaccard_at_least(
+        _attach(ids, lt, rt, *names, names=names, carry=sets), threshold,
+        names, sets["__sh__"])
+    return out.withColumnsRenamed({"__lid__": "left_id",
+                                   "__rid__": "right_id"})
 
 
 def decontaminate(corpus: DataFrame, benchmark: DataFrame,
@@ -1105,23 +1171,11 @@ def minhash_pairs_between(new_batch: DataFrame, historical: DataFrame,
 def _verified_cross_pairs(sh_n: DataFrame, band_n: DataFrame,
                           sh_h: DataFrame, band_h: DataFrame,
                           id_col: str, threshold: float) -> DataFrame:
-    """Shared back half of the cross-corpus paths: LSH band equi-join
-    between the two banded tables, distinct (new_id, hist_id) candidates,
-    shingles joined back once per side, exact-Jaccard verify."""
-    a = band_n.select(F.col(id_col).alias("new_id"), "__band__", "__bhash__")
-    b = band_h.select(F.col(id_col).alias("hist_id"), "__band__", "__bhash__")
-    ids = (a.join(b, ["__band__", "__bhash__"])
-            .select("new_id", "hist_id")
-            .distinct())
-    sh_a = sh_n.select(F.col(id_col).alias("new_id"),
-                       F.col("__sh__").alias("sh_a"))
-    sh_b = sh_h.select(F.col(id_col).alias("hist_id"),
-                       F.col("__sh__").alias("sh_b"))
-    return (ids.join(sh_a, "new_id").join(sh_b, "hist_id")
-               .withColumn("jaccard", jaccard(F.col("sh_a"), F.col("sh_b")))
-               .filter(F.col("jaccard") >= threshold)
-               .select("new_id", "hist_id",
-                       F.round("jaccard", 4).alias("jaccard")))
+    """Shared back half of the cross-corpus paths: band candidates
+    between the two banded tables, exact-Jaccard verify."""
+    return _jaccard_at_least(
+        _band_candidates(band_n, sh_n, id_col, band_h, sh_h), threshold,
+        _CROSS)
 
 
 def minhash_dedup_incremental(new_batch: DataFrame, historical: DataFrame,
@@ -1135,8 +1189,7 @@ def minhash_dedup_incremental(new_batch: DataFrame, historical: DataFrame,
     shuffles."""
     pairs = minhash_pairs_between(new_batch, historical, id_col, text_col,
                                   **kw)
-    dup_ids = pairs.select(F.col("new_id").alias(id_col)).distinct()
-    return new_batch.join(dup_ids, id_col, "left_anti")
+    return _drop_named(new_batch, pairs, "new_id", id_col)
 
 
 def minhash_index_write(df: DataFrame, path: str, id_col: str = "doc_id",

@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..dtutil import _let
+from .dedup import (_CROSS, _SELF, _attach, _drop_named, _key_pairs,
+                    dedup_clusters)
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -34,7 +36,7 @@ def cosine(a: Column, b: Column) -> Column:
 
     The cast-to-double arrays are _let-bound: inlined, each was
     re-materialized by BOTH the dot product and its norm (4 O(dim) cast
-    passes per pair instead of 2 — HOF expressions have no CSE; r11)."""
+    passes per pair instead of 2 — HOF expressions have no CSE)."""
     ad = F.transform(a, lambda x: x.cast("double"))
     bd = F.transform(b, lambda x: x.cast("double"))
     return _let(ad, lambda x: _let(bd, lambda y:
@@ -48,7 +50,7 @@ def row_norm(vec: Column) -> Column:
     score with :func:`cosine_with_norms`: every candidate pair then pays
     one dot product instead of dot + two O(dim) norm re-aggregations
     (norms are a per-row property; computing them per pair re-did the
-    same work candidate-fan-out times — r12, guide §1.2 step 2)."""
+    same work candidate-fan-out times)."""
     return _norm(F.transform(vec, lambda x: x.cast("double")))
 
 
@@ -69,7 +71,7 @@ def _py_norm(vals) -> float:
     double ops in both engines, so the result is bit-identical to
     evaluating _norm over the same literal per row. Lets constant-query
     scorers (cosine_topk / ivf_topk) fold the query norm into a literal
-    instead of re-aggregating an O(dim) constant for every row (r12)."""
+    instead of re-aggregating an O(dim) constant for every row."""
     import math
     acc = 0.0
     for x in vals:
@@ -90,7 +92,7 @@ def cosine_topk(df: DataFrame, vec_col: str, query: Sequence[float], k: int = 10
     q = F.array(*[F.lit(float(x)) for x in query])
     # the query norm is a CONSTANT: fold it driver-side (_py_norm is
     # bit-identical to _norm over the literal) instead of re-aggregating
-    # the O(dim) query array once per scanned row (r12)
+    # the O(dim) query array once per scanned row
     vd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     score = _let(vd, lambda x: _dot(x, q) / (_norm(x) * F.lit(_py_norm(query))))
     scored = df.withColumn(score_col, score)
@@ -208,7 +210,7 @@ def _argmin_centroids(vec, centroids) -> Column:
     def dists_of(v):
         # ``v`` is _let-bound: an expression-valued ``vec`` (PQ subvector
         # slices, semdedup's cast transform) was re-evaluated once per
-        # CENTROID when inlined (r11); column-attribute callers are
+        # CENTROID when inlined; column-attribute callers are
         # unchanged (binding an attribute is free)
         dists = []
         for j, c in enumerate(centroids):
@@ -381,7 +383,7 @@ def ivf_topk(df: DataFrame, vec_col: str, query: Sequence[float], k: int,
 
     assigned = df if "ivf_cell" in df.columns else ivf_assign(df, vec_col, centroids)
     qlit = F.array(*[F.lit(float(x)) for x in query])
-    # constant query norm folded driver-side (see cosine_topk; r12)
+    # constant query norm folded driver-side (see cosine_topk)
     vd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     score = _let(vd, lambda x:
                  _dot(x, qlit) / (_norm(x) * F.lit(_py_norm(query))))
@@ -466,7 +468,6 @@ def semdedup(df: DataFrame, vec_col: str = "embedding",
     survivor; filter on it to dedup).
     """
     from ..dtutil import ensure_parallelism
-    from .dedup import dedup_clusters
     df = ensure_parallelism(df)
     if keep not in ("min_id", "far_from_centroid"):
         raise ValueError(f"unknown keep rule {keep!r}")
@@ -478,7 +479,7 @@ def semdedup(df: DataFrame, vec_col: str = "embedding",
     if keep == "far_from_centroid":
         # bind the cast vector AND its norm once across the k centroid
         # cosines (inlined, the norm re-aggregated per centroid; the
-        # centroid norms are constants folded driver-side — r12)
+        # centroid norms are constants folded driver-side)
         coss = _let(vd, lambda x: _let(_norm(x), lambda nx: F.array(*[
             _dot(x, F.array(*[F.lit(float(v)) for v in c]))
             / (nx * F.lit(_py_norm(c)))
@@ -494,22 +495,13 @@ def semdedup(df: DataFrame, vec_col: str = "embedding",
         assigned = assigned.withColumn(
             "__sub__", F.pmod(F.xxhash64(F.col(id_col)), nsub)).drop("__n__")
         key_cols = ["cell", "__sub__"]
-    # per-row norms into the within-cell pair join (r12): the quadratic
+    # per-row norms into the within-cell pair join: the quadratic
     # within-cell verify pays one dot per pair instead of dot + 2 norms
     slim = assigned.select(id_col, *key_cols, vec_col,
                            row_norm(F.col(vec_col)).alias("__nv__"))
-    a = slim.select(F.col(id_col).alias("id_a"), *key_cols,
-                    F.col(vec_col).alias("__va__"),
-                    F.col("__nv__").alias("__na__"))
-    b = slim.select(F.col(id_col).alias("id_b"), *key_cols,
-                    F.col(vec_col).alias("__vb__"),
-                    F.col("__nv__").alias("__nb__"))
-    pairs = (a.join(b, key_cols)
-              .filter(F.col("id_a") < F.col("id_b"))
-              .filter(cosine_with_norms(F.col("__va__"), F.col("__vb__"),
-                                        F.col("__na__"), F.col("__nb__"))
-                      >= threshold)
-              .select("id_a", "id_b"))
+    pairs = (_key_pairs(slim, key_cols, id_col, carry=_vec_carry(vec_col))
+              .filter(_pair_cosine() >= threshold)
+              .select(*_SELF))
     groups = dedup_clusters(pairs, assigned, id_col) \
         .withColumnRenamed("cluster", "group")
     out = assigned.join(groups, id_col)
@@ -545,60 +537,66 @@ def embedding_dedup_pairs(df: DataFrame, vec_col: str = "embedding",
     method="exact": all-pairs O(n²) verify — the oracle baseline; use only
     on bounded slices.
     """
-    # per-ROW norms attached before the pair join: the verify then pays
-    # one dot per candidate instead of dot + two norm re-aggregations
-    # (bit-identical scores — see cosine_with_norms; r12)
-    slim = df.select(F.col(id_col), F.col(vec_col),
-                     row_norm(F.col(vec_col)).alias("__nv__"))
+    return _cosine_pairs(df, None, vec_col, id_col, threshold=threshold,
+                         method=method, bands=bands, band_bits=band_bits,
+                         dim=dim, seed=seed)
+
+
+def _vec_carry(vec_col: str) -> dict:
+    """The vector and its per-row norm, as carried by each pair side."""
+    return {vec_col: ("__va__", "__vb__"), "__nv__": ("__na__", "__nb__")}
+
+
+def _pair_cosine() -> Column:
+    return cosine_with_norms(F.col("__va__"), F.col("__vb__"),
+                             F.col("__na__"), F.col("__nb__"))
+
+
+def _cosine_pairs(a: DataFrame, b: DataFrame | None, vec_col: str,
+                  id_col: str, *, threshold: float, method: str, bands: int,
+                  band_bits: int, dim: int | None, seed: int) -> DataFrame:
+    """Both faces of the embedding-cosine pairs: ``b=None`` pairs ``a``
+    with itself (``id_a < id_b``), otherwise every (``a`` row, ``b`` row)
+    as (new_id, hist_id). Per-ROW norms ride along each side, so the
+    verify pays one dot per candidate instead of dot + two norm
+    re-aggregations (bit-identical scores — see cosine_with_norms).
+    "exact" pairs every row; "lsh" pairs rows sharing a sign-LSH band key
+    (both sides banded with the SAME seeded planes) and joins the vectors
+    back per distinct candidate."""
+    names = _SELF if b is None else _CROSS
+    carry = _vec_carry(vec_col)
+
+    def slim(t):
+        return t.select(F.col(id_col), F.col(vec_col),
+                        row_norm(F.col(vec_col)).alias("__nv__"))
+    sa, sb = slim(a), None if b is None else slim(b)
+    if method != "exact" and dim is None:
+        dim = _infer_dim(a, vec_col)
+        if dim is None:  # empty/all-NULL ``a``: no pairs by definition
+            sa, method = sa.limit(0), "exact"
     if method == "exact":
-        a = slim.select(F.col(id_col).alias("id_a"),
-                        F.col(vec_col).alias("__va__"),
-                        F.col("__nv__").alias("__na__"))
-        b = slim.select(F.col(id_col).alias("id_b"),
-                        F.col(vec_col).alias("__vb__"),
-                        F.col("__nv__").alias("__nb__"))
-        pairs = a.join(b, F.col("id_a") < F.col("id_b"))
+        pairs = _key_pairs(sa, [], id_col, sb, names=names, carry=carry)
     else:
-        if dim is None:
-            dim = _infer_dim(df, vec_col)
-        if dim is None:  # empty/all-NULL corpus: no pairs by definition
-            a = slim.limit(0).select(F.col(id_col).alias("id_a"),
-                                     F.col(vec_col).alias("__va__"))
-            b = slim.limit(0).select(F.col(id_col).alias("id_b"),
-                                     F.col(vec_col).alias("__vb__"))
-            return (a.crossJoin(b)
-                     .withColumn("cos", F.lit(None).cast("double"))
-                     .select("id_a", "id_b", "cos"))
         planes = random_hyperplanes(dim, bands * band_bits, seed)
-        banded = _sign_banded(slim, id_col, vec_col, planes, bands,
-                              band_bits)
-        a = banded.select(F.col(id_col).alias("id_a"), "__band__", "__key__")
-        b = banded.select(F.col(id_col).alias("id_b"), "__band__", "__key__")
-        ids = (a.join(b, ["__band__", "__key__"])
-                .filter(F.col("id_a") < F.col("id_b"))
-                .select("id_a", "id_b").distinct())
-        pairs = (ids.join(slim.select(F.col(id_col).alias("id_a"),
-                                      F.col(vec_col).alias("__va__"),
-                                      F.col("__nv__").alias("__na__")),
-                          "id_a")
-                    .join(slim.select(F.col(id_col).alias("id_b"),
-                                      F.col(vec_col).alias("__vb__"),
-                                      F.col("__nv__").alias("__nb__")),
-                          "id_b"))
-    return (pairs.withColumn("cos", cosine_with_norms(
-                     F.col("__va__"), F.col("__vb__"),
-                     F.col("__na__"), F.col("__nb__")))
+
+        def banded(t):
+            return None if t is None else _sign_banded(
+                t, id_col, vec_col, planes, bands, band_bits)
+        ids = (_key_pairs(banded(sa), ["__band__", "__key__"], id_col,
+                          banded(sb), names=names)
+               .select(*names).distinct())
+        pairs = _attach(ids, sa, sa if sb is None else sb, id_col,
+                        names=names, carry=carry)
+    return (pairs.withColumn("cos", _pair_cosine())
                  .filter(F.col("cos") >= threshold)
-                 .select("id_a", "id_b", "cos"))
+                 .select(*names, "cos"))
 
 
 def _sign_banded(slim: DataFrame, id_col: str, vec_col: str, planes,
                  bands: int, band_bits: int) -> DataFrame:
     """(id, band, key) table for sign-LSH banding: key b packs band_bits
-    hyperplane signs into a long. Shared by the self-join
-    (:func:`embedding_dedup_pairs`) and cross-corpus
-    (:func:`embedding_pairs_between`) paths — both sides of a cross-corpus
-    join MUST band with the SAME planes for the recall math to hold."""
+    hyperplane signs into a long. Both sides of a cross-corpus join MUST
+    band with the SAME planes for the recall math to hold."""
     vd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     keys = []
     for bi in range(bands):
@@ -634,37 +632,9 @@ def embedding_pairs_between(new_batch: DataFrame, historical: DataFrame,
     once per side for the exact-cosine verify on the candidate set.
     method="exact": all cross pairs (|new|·|hist| — the oracle baseline;
     bounded slices only)."""
-    # per-row norms on both corpora (see embedding_dedup_pairs; r12)
-    sn = new_batch.select(F.col(id_col), F.col(vec_col))
-    sh = historical.select(F.col(id_col), F.col(vec_col))
-    na = sn.select(F.col(id_col).alias("new_id"),
-                   F.col(vec_col).alias("__va__"),
-                   row_norm(F.col(vec_col)).alias("__na__"))
-    hb = sh.select(F.col(id_col).alias("hist_id"),
-                   F.col(vec_col).alias("__vb__"),
-                   row_norm(F.col(vec_col)).alias("__nb__"))
-    if method == "exact":
-        pairs = na.join(hb)
-    else:
-        if dim is None:
-            dim = _infer_dim(new_batch, vec_col)
-        if dim is None:  # empty/all-NULL new batch: no cross pairs
-            return (na.limit(0).crossJoin(hb.limit(0))
-                      .withColumn("cos", F.lit(None).cast("double"))
-                      .select("new_id", "hist_id", "cos"))
-        planes = random_hyperplanes(dim, bands * band_bits, seed)
-        a = _sign_banded(sn, id_col, vec_col, planes, bands, band_bits) \
-            .withColumnRenamed(id_col, "new_id")
-        b = _sign_banded(sh, id_col, vec_col, planes, bands, band_bits) \
-            .withColumnRenamed(id_col, "hist_id")
-        ids = (a.join(b, ["__band__", "__key__"])
-                .select("new_id", "hist_id").distinct())
-        pairs = ids.join(na, "new_id").join(hb, "hist_id")
-    return (pairs.withColumn("cos", cosine_with_norms(
-                     F.col("__va__"), F.col("__vb__"),
-                     F.col("__na__"), F.col("__nb__")))
-                 .filter(F.col("cos") >= threshold)
-                 .select("new_id", "hist_id", "cos"))
+    return _cosine_pairs(new_batch, historical, vec_col, id_col,
+                         threshold=threshold, method=method, bands=bands,
+                         band_bits=band_bits, dim=dim, seed=seed)
 
 
 def embedding_dedup_incremental(new_batch: DataFrame,
@@ -677,5 +647,4 @@ def embedding_dedup_incremental(new_batch: DataFrame,
     join on the slim matched-id set."""
     pairs = embedding_pairs_between(new_batch, historical, vec_col,
                                     id_col, **kw)
-    dup_ids = pairs.select(F.col("new_id").alias(id_col)).distinct()
-    return new_batch.join(dup_ids, id_col, "left_anti")
+    return _drop_named(new_batch, pairs, "new_id", id_col)

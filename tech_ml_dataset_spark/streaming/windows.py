@@ -465,26 +465,26 @@ def fingerprint_dedup_batch_apply(batch_df: DataFrame, batch_id: int,
     ``batch_id=N`` with dynamic partition overwrite. Logs one INFO
     record (``rows_in`` batch rows, ``rows_out`` rows accepted), both
     observed on the corpus write."""
-    from ..functions.dedup import hamming_dedup_pairs, hamming_pairs_between
+    from ..functions.dedup import (_drop_named, hamming_dedup_pairs,
+                                   hamming_pairs_between)
 
     t0 = time.perf_counter()
     if not batch_df.take(1):
         return
     hist = _batch_history(batch_df.sparkSession, corpus_path, batch_id,
                           "fingerprint_dedup_batch")
-    dup_ids = (hamming_dedup_pairs(batch_df, fp_col, id_col,
-                                   max_distance=max_distance,
-                                   band_bits=band_bits)
-               .select(F.col("id_b").alias(id_col)).distinct())
-    fresh = batch_df.join(dup_ids, id_col, "left_anti")
+    fresh = _drop_named(batch_df,
+                        hamming_dedup_pairs(batch_df, fp_col, id_col,
+                                            max_distance=max_distance,
+                                            band_bits=band_bits),
+                        "id_b", id_col)
     if hist is not None:
-        matched = (hamming_pairs_between(fresh, hist.select(id_col, fp_col),
-                                         fp_col, new_id=id_col,
-                                         hist_id=id_col,
-                                         max_distance=max_distance,
-                                         band_bits=band_bits)
-                   .select(F.col("new_id").alias(id_col)).distinct())
-        fresh = fresh.join(matched, id_col, "left_anti")
+        matched = hamming_pairs_between(fresh, hist.select(id_col, fp_col),
+                                        fp_col, new_id=id_col,
+                                        hist_id=id_col,
+                                        max_distance=max_distance,
+                                        band_bits=band_bits)
+        fresh = _drop_named(fresh, matched, "new_id", id_col)
     m = _write_batch(fresh, corpus_path, batch_id, batch_df)
     _log_batch("fingerprint_dedup_batch", batch_id, m["rows_in"],
                m["rows_out"], t0)
@@ -580,8 +580,8 @@ def streaming_neardup_sink(df: DataFrame, corpus_path: str, *,
     (op ``neardup_batch``; ``rows_in`` batch rows, ``rows_out`` docs
     accepted), observed on the docs write. Returns the started query
     handle (availableNow trigger)."""
-    from ..functions.dedup import (_shingle_and_band, _verified_cross_pairs,
-                                   minhash_dedup)
+    from ..functions.dedup import (_drop_named, _shingle_and_band,
+                                   _verified_cross_pairs, minhash_dedup)
     from ..sources.io import _require_local_path
     op = "streaming_neardup_sink"
     corpus_path = _require_local_path(corpus_path, op)
@@ -602,10 +602,9 @@ def streaming_neardup_sink(df: DataFrame, corpus_path: str, *,
                                   "/index/shingles")
             sh_n, band_n = _shingle_and_band(fresh, id_col, text_col,
                                              **params)
-            matched = (_verified_cross_pairs(sh_n, band_n, sh_h, band_h,
-                                             id_col, threshold)
-                       .select(F.col("new_id").alias(id_col)).distinct())
-            fresh = fresh.join(matched, id_col, "left_anti")
+            matched = _verified_cross_pairs(sh_n, band_n, sh_h, band_h,
+                                            id_col, threshold)
+            fresh = _drop_named(fresh, matched, "new_id", id_col)
         sh, banded = _shingle_and_band(fresh, id_col, text_col, **params)
         m = _write_batch(fresh, corpus_path + "/docs", batch_id, batch_df)
         _write_batch(banded, corpus_path + "/index/bands", batch_id)

@@ -703,3 +703,38 @@ def test_registry_structure():
     with pytest.raises(ValueError, match="q1_pricing_summary"):
         query(oracle="SELECT 1")(q1_pricing_summary)
     assert REGISTRY == before
+
+
+def test_snapshot_normalise_masks_lambda_ids():
+    """``tools/registry_snapshot.py`` masks process-wide state. The JVM
+    numbers lambda variables from one process-wide counter, so a builder
+    that creates one more lambda renumbers the plan of every later
+    higher-order-function query; and a call from Python names the JDK's
+    reflective accessor as an RDD's call site, which changes once the
+    JVM has inflated that method. Two such plans must normalise equal,
+    while a column whose name merely ends in digits keeps its name."""
+    import importlib.util
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "registry_snapshot", os.path.join(root, "tools", "registry_snapshot.py"))
+    snap = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(snap)
+
+    def plan(x, y, e):
+        return (f"Output [1]: [transform(__sh__#{e}, lambdafunction("
+                f"concat(lambda x_{x}#{e + 1}, lambda y_{y}#{e + 2}), "
+                f"lambda x_{x}#{e + 1}, lambda y_{y}#{e + 2}, false)) "
+                f"AS g#{e + 3}, col_7#{e + 4}L]")
+
+    a = snap.normalise(plan(197, 198, 40), "/nonexistent")
+    assert a == snap.normalise(plan(3, 4, 12), "/nonexistent")
+    assert a == ["Output [1]: [transform(__sh__#, lambdafunction(concat("
+                 "lambda x_n#, lambda y_n#), lambda x_n#, lambda y_n#, "
+                 "false)) AS g#, col_7#L]"]
+    site = "MapPartitionsRDD[7] at localCheckpoint at {}:0, ExistingRDD"
+    assert (snap.normalise(site.format("NativeMethodAccessorImpl.java"), "/x")
+            == snap.normalise(site.format("<unknown>"), "/x")
+            == ["MapPartitionsRDD[n] at localCheckpoint at <reflect>:0, "
+                "ExistingRDD"])

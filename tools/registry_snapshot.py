@@ -13,9 +13,19 @@ OUT.json holds:
   query, built at ``sf_dir`` (default: ``perfbench/tables/sf0.01``).
 
 Plans are normalised so that two runs of one commit give identical files:
-expression ids (``#123``), exchange plan ids, RDD ids and the temporary
-directories the fixture builders create are masked, and ``sf_dir`` is
-written as ``<sf_dir>``. Nothing but OUT.json is written.
+expression ids (``#123``), exchange plan ids, RDD ids, lambda variable ids,
+reflective call sites and the temporary directories the fixture builders
+create are masked, and ``sf_dir`` is written as ``<sf_dir>``. Two of
+these come from process-wide state rather than from the query, so one
+builder would otherwise shift the plans of every later query:
+- lambda variables are numbered from one JVM-wide counter
+  (``lambda x_197#``); they print as ``lambda x_n#``;
+- an RDD made by a call from Python (``localCheckpoint``) names the JDK's
+  reflective accessor as its call site: ``NativeMethodAccessorImpl.java:0``
+  for the first calls of a method, a generated accessor without a source
+  file (``<unknown>:0``) once the JVM has inflated it; both print as
+  ``<reflect>:0``.
+Nothing but OUT.json is written.
 """
 
 from __future__ import annotations
@@ -38,6 +48,9 @@ _IDS = [
     (re.compile(r"plan_id=\d+"), "plan_id=n"),     # exchange plan ids
     (re.compile(r"RDD\[\d+\]"), "RDD[n]"),         # RDD ids
     (re.compile(r"@[0-9a-f]{6,}\b"), "@h"),        # object identity hashes
+    (re.compile(r"(lambda \w+?)_\d+#"), r"\1_n#"),  # lambda variable ids
+    (re.compile(r" at (NativeMethodAccessorImpl\.java|<unknown>):0\b"),
+     " at <reflect>:0"),                           # reflective call sites
 ]
 
 

@@ -6,10 +6,11 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.01}"
 
-echo "== 1/8 registry structure, driver window, class-data-sharing archive"
+echo "== 1/8 registry structure, driver window, snapshot normalisation,"
+echo "   class-data-sharing archive"
 echo "   (no Spark, seconds)"
 python -m pytest tests/test_plans.py tests/test_session.py -q -p no:cacheprovider \
-    -k "test_registry_structure or test_driver_window_integrity or test_zip_importer or (test_cds and not test_cds_driver)" \
+    -k "test_registry_structure or test_driver_window_integrity or test_snapshot_normalise or test_zip_importer or (test_cds and not test_cds_driver)" \
     2>&1 | tail -1
 
 echo "== 2/8 Python worker daemon, archive use by driver processes, then sinks:"
