@@ -85,15 +85,15 @@ def _r4b(c) -> F.Column:
 
 
 def _ckpt_sort(df: DataFrame, *cols) -> DataFrame:
-    """Materialize the slim output once (lazy localCheckpoint) before the
-    determinism orderBy (r11, guide §2.4): the range partitioner's bounds
+    """Materialize the slim output once (lazy ``dtu.materialize``) before
+    the determinism orderBy (guide §2.4): the range partitioner's bounds
     sampling re-executes the sort's child lineage, and for these queries
     that child is an expensive Python stage (codec / archive-fetch
-    mapInPandas) with NO shuffle boundary between it and the sort — so the
-    decode ran twice per action (measured pdf_extract_docs 1.67 s -> 1.05 s
-    through the checkpoint). The checkpointed frame is each query's final
-    slim projection (ids/hashes/flags/features — never payload bytes), so
-    the materialization stays bounded at any scale. Same pattern
-    induction_events has carried since its promotion (the Python recurrence
-    there would re-run under the sampler too)."""
-    return df.localCheckpoint(eager=False).orderBy(*cols)
+    mapInPandas, the induction recurrence) with NO shuffle boundary
+    between it and the sort — so it ran twice per action (measured
+    pdf_extract_docs 1.67 s -> 1.05 s through the checkpoint). The
+    sampling job is the first reader and stores the rows the sort reads.
+    The checkpointed frame is each query's final slim projection
+    (ids/hashes/flags/features — never payload bytes), so the
+    materialization stays bounded at any scale."""
+    return dtu.materialize(df, eager=False).orderBy(*cols)

@@ -1049,7 +1049,7 @@ def lineitem_except(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_returnflag")
     a = li.filter(F.col("l_quantity") < 30)
     b = li.filter(F.col("l_quantity") < 10)
-    # NOTE (r9): no output order — see bag_intersect_lineitem.
+    # NOTE: no output order — see bag_intersect_lineitem.
     return st.difference(a, b)
 
 
@@ -1336,7 +1336,7 @@ def nearest_fill_events(spark, sf_dir):
         F.when(F.col("value") < 5, None).otherwise(F.col("value")).alias("value"))
     out = ms.replace_missing(ev, "value", "nearest",
                              order_by=["ts", "event_id"], by="user_id")
-    # NOTE (r9): deliberately NO output order (winnow_docs-class
+    # NOTE: deliberately NO output order (winnow_docs-class
     # exception): the final range sort over the applyInPandas fill
     # output measured 1.4-2.0x in one-shot bench conditions (extra
     # sort stage + sampling); the driver hashes a sorted multiset.
@@ -1485,7 +1485,7 @@ def rolling_corr_user(spark, sf_dir):
                       {"c": ("corr", ["value", "event_id"])},
                       window_size=20, by="user_id", position="left")
     c = F.when(F.isnan(F.col("c")), F.lit(None)).otherwise(F.col("c"))
-    # NOTE (r9): deliberately NO output order (winnow_docs-class
+    # NOTE: deliberately NO output order (winnow_docs-class
     # exception): the final range sort over the applyInPandas fill
     # output measured 1.4-2.0x in one-shot bench conditions (extra
     # sort stage + sampling); the driver hashes a sorted multiset.
@@ -1568,7 +1568,7 @@ def ffill_events(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     ev = ev.withColumn("value", F.when(F.col("value") < 5, None).otherwise(F.col("value")))
     out = ms.replace_missing(ev, "value", "down", order_by=["ts", "event_id"], by="user_id")
-    # NOTE (r9): deliberately NO output order (winnow_docs-class
+    # NOTE: deliberately NO output order (winnow_docs-class
     # exception): the final range sort over the applyInPandas fill
     # output measured 1.4-2.0x in one-shot bench conditions (extra
     # sort stage + sampling); the driver hashes a sorted multiset.
@@ -1595,7 +1595,7 @@ def ffill_events(spark, sf_dir):
 def asof_purchase_click(spark, sf_dir):
     """left-join-asof (join.clj:747-799): latest click at-or-before each
     purchase, per user — asof_op '>=' (purchase.ts >= click.ts; ops read
-    l OP r per the reference convention, r4)."""
+    l OP r per the reference convention)."""
     ev = _t(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase") \
                   .select("event_id", "user_id", "ts", "value")
@@ -1641,7 +1641,7 @@ def asof_purchase_click(spark, sf_dir):
 def asof_nearest_click(spark, sf_dir):
     """left-join-asof :nearest (join.clj:716): the click CLOSEST in time to
     each purchase on either side; an exact-distance tie picks the LATER
-    click (reference abs-diff law, join.clj:687-713 — r4 flip). Both
+    click (reference abs-diff law, join.clj:687-713). Both
     directional passes share one union+window shape, then a per-row
     distance pick (no Python)."""
     ev = _t(spark, sf_dir, "events")
@@ -1963,9 +1963,7 @@ def induction_events(spark, sf_dir):
                        init=0.0, by="user_id")
     out = out.select("event_id", "user_id",
                      _r4b(F.col("acc")).alias("acc"))
-    # checkpoint before the deterministic sort: the range partitioner's
-    # bounds sampling would otherwise re-run the whole Python recurrence
-    return out.localCheckpoint(eager=False).orderBy("user_id", "event_id")
+    return _ckpt_sort(out, "user_id", "event_id")
 
 
 @query(oracle="""
@@ -2130,7 +2128,7 @@ def bfill_updown_events(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     ev = ev.withColumn("value", F.when(F.col("value") < 5, None).otherwise(F.col("value")))
     out = ms.replace_missing(ev, "value", "updown", order_by=["ts", "event_id"], by="user_id")
-    # NOTE (r9): deliberately NO output order (winnow_docs-class
+    # NOTE: deliberately NO output order (winnow_docs-class
     # exception): the final range sort over the applyInPandas fill
     # output measured 1.4-2.0x in one-shot bench conditions (extra
     # sort stage + sampling); the driver hashes a sorted multiset.
@@ -2171,7 +2169,7 @@ def lerp_events(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     ev = ev.withColumn("value", F.when(F.col("value") < 5, None).otherwise(F.col("value")))
     out = ms.replace_missing(ev, "value", "lerp", order_by=["ts", "event_id"], by="user_id")
-    # NOTE (r9): deliberately NO output order (winnow_docs-class
+    # NOTE: deliberately NO output order (winnow_docs-class
     # exception): the final range sort over the applyInPandas fill
     # output measured 1.4-2.0x in one-shot bench conditions (extra
     # sort stage + sampling); the driver hashes a sorted multiset.
@@ -2218,7 +2216,7 @@ def ts_lerp_events(spark, sf_dir):
     """replace-missing :lerp on a DATETIME column (reference
     dataset_test.clj:899-908 replace-missing-ldt): the fill target is the
     timestamp itself, interpolated linearly in epoch-micros space along
-    the event_id axis, per user — r4's temporal-arithmetic extension of
+    the event_id axis, per user — the temporal-arithmetic extension of
     missing.py (value arithmetic in epoch micros, converted back to the
     column's temporal type)."""
     ev = _t(spark, sf_dir, "events")
@@ -2226,7 +2224,7 @@ def ts_lerp_events(spark, sf_dir):
                               .otherwise(F.col("ts")))
     out = ms.replace_missing(ev, "ts2", "lerp", order_by=["event_id"],
                              by="user_id")
-    # NOTE (r9): deliberately NO output order (winnow_docs-class
+    # NOTE: deliberately NO output order (winnow_docs-class
     # exception): the final range sort over the applyInPandas fill
     # output measured 1.4-2.0x in one-shot bench conditions (extra
     # sort stage + sampling); the driver hashes a sorted multiset.
@@ -2273,7 +2271,7 @@ def rolling_range_events(spark, sf_dir):
     out = win.rolling_range(ev, "ts", {"rsum": ("sum", "value"),
                                        "rcnt": ("count", "value")},
                             window_size=10, by="user_id", units="minutes")
-    # NOTE (r9): deliberately NO output order (winnow_docs-class
+    # NOTE: deliberately NO output order (winnow_docs-class
     # exception): the final range sort over the applyInPandas fill
     # output measured 1.4-2.0x in one-shot bench conditions (extra
     # sort stage + sampling); the driver hashes a sorted multiset.
@@ -2300,7 +2298,7 @@ def bag_union_lineitem(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     a = li.filter(F.col("l_quantity") < 25).select("l_orderkey", "l_returnflag")
     b = li.filter(F.col("l_quantity") < 15).select("l_orderkey", "l_returnflag")
-    # NOTE (r9): no output order — see bag_intersect_lineitem.
+    # NOTE: no output order — see bag_intersect_lineitem.
     return st.union(a, b)
 
 
@@ -2314,7 +2312,7 @@ def bag_intersect_lineitem(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     a = li.filter(F.col("l_quantity") < 30).select("l_orderkey", "l_returnflag")
     b = li.filter(F.col("l_quantity") > 15).select("l_orderkey", "l_returnflag")
-    # NOTE (r9): deliberately NO output order (winnow_docs-style
+    # NOTE: deliberately NO output order (winnow_docs-style
     # exception): a bag result is unordered by semantics, and both the
     # post-explode orderBy (1.4x: range sampling re-runs the explode)
     # and the pre-explode counts sort (re-runs the agg) cost real
@@ -2384,7 +2382,7 @@ def quantiles_price(spark, sf_dir):
             FROM events
         """)
 def descriptive_stats_events_temporal(spark, sf_dir):
-    """descriptive-stats over a DATETIME column (r4 — reference
+    """descriptive-stats over a DATETIME column (reference
     datetime_test.clj stocks-descriptive-stats: temporal min/median/max
     come back AS datetimes, not epoch numbers). Median uses the exact
     interpolated percentile so both engines compute the identical
@@ -2621,8 +2619,8 @@ def _loess_oracle(n: int = 5000, gs: int = 200, bandwidth: float = 0.3
 
 @query(oracle=_loess_oracle())
 def loess_smooth_events(spark, sf_dir):
-    """interpolate-loess (math.clj:112). ORACLED as of late r4 (previously
-    rows-only): on the event_id < 5000 slice the fit uses ALL points
+    """interpolate-loess (math.clj:112). ORACLED (previously rows-only):
+    on the event_id < 5000 slice the fit uses ALL points
     (n == max_fit_points -> k=1, no hash sampling), so the whole law —
     tricube local-linear fit at each of 200 linspace grid points, bisquare
     robustness reweighting, np.interp prediction — is deterministic and
@@ -2794,7 +2792,7 @@ def grouping_sets_orders(spark, sf_dir):
         """)
 def abb_fill_events(spark, sf_dir):
     """replace-missing :abb (missing.clj approx bayesian bootstrap) —
-    ORACLED as of r5 via the deterministic ``key_cols`` arm: the donor
+    ORACLED via the deterministic ``key_cols`` arm: the donor
     pool is the 4096 observed values ranked first by md5(event_id ':' 42)
     (an engine-portable uniform subsample) and each missing row draws
     pool index conv(md5(event_id ':' 42)[:8], 16) % 4096 — DuckDB replays

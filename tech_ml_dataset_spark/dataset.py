@@ -13,6 +13,7 @@ from collections.abc import Iterable, Mapping
 
 from pyspark.sql import DataFrame
 
+from .dtutil import materialize
 from .operators import aggregate as _agg
 from .operators import join as _join
 from .operators import missing as _missing
@@ -476,15 +477,13 @@ class Dataset:
         """Reference ``clone`` (quick-reference "Forcing Lazy Evaluation"):
         realize every pending lazy transformation and return a dataset
         whose reads no longer re-run the producing computation. The Spark
-        analog is an eager ``localCheckpoint``: the plan executes ONCE,
-        partitions persist executor-side (no driver collect), and the
-        returned dataset's lineage is truncated to the materialized blocks
-        — downstream iterative reuse (the reference's motivating case)
-        reads blocks instead of replaying the plan. On a cluster, prefer
-        ``df.persist()`` + a real checkpoint dir when fault-tolerant
-        recompute of lost blocks matters; localCheckpoint trades that for
-        not needing a configured checkpoint location."""
-        return self._wrap(self.df.localCheckpoint(eager=True))
+        analog is an eager checkpoint (:func:`dtutil.materialize`): the
+        plan executes ONCE, partitions persist executor-side (no driver
+        collect), or as files under the checkpoint directory when one is
+        set, and the returned dataset's lineage is truncated to them —
+        downstream iterative reuse (the reference's motivating case)
+        reads stored rows instead of replaying the plan."""
+        return self._wrap(materialize(self.df))
 
     # ---- display -------------------------------------------------------------------
     def show(self, n: int = 20, truncate: bool = True):

@@ -14,7 +14,10 @@ these helpers are the Spark expression equivalent.
 
 The module also holds the engine's one partition-sizing helper,
 :func:`ensure_parallelism` (the reference sizes its parallel work with one
-fork-join pool, reductions.clj ``pgroups``).
+fork-join pool, reductions.clj ``pgroups``), and its one materialisation
+helper, :func:`materialize` (the reference's ``clone``, quick-reference
+"Forcing Lazy Evaluation"): every checkpoint of an intermediate goes
+through it, and it alone decides where the intermediate is kept.
 """
 
 from __future__ import annotations
@@ -36,8 +39,7 @@ def _let(value: Column, body) -> Column:
     expressions are CodegenFallback, and interpreted evaluation has no
     common-subexpression elimination, so an inlined subtree is re-run at
     EVERY reference — including once per ELEMENT when the reference sits
-    inside another HOF's lambda body (the O(len²) char-shingle case,
-    r11)."""
+    inside another HOF's lambda body (the O(len²) char-shingle case)."""
     return F.get(F.transform(F.array(value), body), 0)
 
 
@@ -126,3 +128,39 @@ def ensure_parallelism(df: DataFrame, *key_cols: str,
         return df
     return df.repartition(target, *key_cols) if key_cols \
         else df.repartition(target)
+
+
+def materialize(df: DataFrame, *, eager: bool = True) -> DataFrame:
+    """Compute ``df`` once and return a frame that reads the stored rows,
+    its lineage truncated, so later reads do not re-run the plan.
+
+    Where the rows are kept: when the SparkContext has a checkpoint
+    directory (``spark.checkpoint.dir`` at launch, or ``setCheckpointDir``)
+    they are written there as a reliable checkpoint, which survives the
+    loss of the executor that computed them; otherwise they are a local
+    checkpoint in executor block storage, where a lost block fails the
+    reading job instead of being recomputed.
+
+    When: ``eager=True`` computes the frame at the call, as jobs of its
+    own. Ask for it when either holds:
+
+    - one action reads the frame from two branches (a self-join, or a
+      fork into an aggregate and a join back). Catalyst plans a shared
+      subtree once per reference, so without stored rows each branch
+      re-runs the whole upstream, and with a lazy checkpoint the tasks of
+      both branches can compute the same partition concurrently;
+    - the frame holds nondeterministic values (mono ids, sampled
+      range-partition bounds, round-robin input): a recompute can give
+      different values, so every reader must see the one stored copy.
+
+    ``eager=False`` suits a frame whose first reader is one linear job
+    (the sampling job of a sort, a totals ``collect``): that job stores
+    the rows and later jobs read them, which saves the job an eager
+    checkpoint runs to fill its blocks (under AQE a shuffle upstream
+    still runs its map stage at the call). A reliable checkpoint is
+    always eager: a lazy one writes its files in a second job after its
+    first reader, which recomputes the input (a Python UDF upstream runs
+    twice per row)."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=eager)

@@ -38,7 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
-from ..dtutil import _let
+from ..dtutil import _let, materialize
 
 # Mersenne prime for the (a*x + b) % p permutation family. 2^31-1 keeps
 # every intermediate product < 2^62, i.e. inside java long WITHOUT overflow —
@@ -287,18 +287,16 @@ def _jaccard_at_least(pairs: DataFrame, threshold: float,
 
 def _admit(inv: DataFrame, key: str, max_df: int | None) -> DataFrame:
     """Rows of the inverted index ``inv`` whose ``key`` occurs in at most
-    ``max_df`` rows (every row when ``max_df`` is None). The admitted key
-    set is materialized ONCE (eager localCheckpoint): both sides of the
-    self-join read ``inv`` and Catalyst plans a shared subtree once per
-    reference, so the count aggregation over the whole index would
-    otherwise run once per side (no exchange reuse across the two
-    re-aliased sides)."""
+    ``max_df`` rows (every row when ``max_df`` is None). Both sides of
+    the self-join read ``inv``, so the admitted key set is materialized
+    once (:func:`materialize`): the count aggregation over the whole index
+    runs once, not once per side."""
     if max_df is None:
         return inv
-    admitted = (inv.groupBy(key).agg(F.count(F.lit(1)).alias("__df__"))
-                   .filter(F.col("__df__") <= max_df)
-                   .select(key)
-                   .localCheckpoint(eager=True))
+    admitted = materialize(
+        inv.groupBy(key).agg(F.count(F.lit(1)).alias("__df__"))
+           .filter(F.col("__df__") <= max_df)
+           .select(key))
     return inv.join(admitted, key)
 
 
@@ -371,17 +369,13 @@ def minhash_candidates(df: DataFrame, id_col: str = "doc_id",
     sh, banded = _shingle_and_band(df, id_col, text_col, k=k,
                                    n_hashes=n_hashes, bands=bands, seed=seed,
                                    hash_fn=hash_fn)
-    # The banded (id, band, band_key) table is materialized ONCE (eager
-    # localCheckpoint): the self-join references it from both sides and
-    # Catalyst duplicates shared subtrees, so the shingle + n_hashes-wide
-    # minhash-signature expression — the expensive per-row work of this
-    # operator — ran TWICE per action (measured on minhash_pairs_docs'
-    # physical plan: 4 parquet scans without the checkpoint, 2 plus the
-    # one-time checkpoint with it). bands × ~16 bytes per doc — the slim LSH key table, exactly
-    # what minhash_index_write already persists for cross-run probes; the
-    # document-sized shingle arrays stay streamed (re-derived per verify
-    # side), preserving the at-scale no-materialization contract.
-    return _band_candidates(banded.localCheckpoint(eager=True), sh, id_col)
+    # The self-join reads the banded (id, band, band_key) table from both
+    # sides, so it is materialized once: without it the shingle +
+    # minhash-signature pass ran twice per action (minhash_pairs_docs'
+    # plan: 4 parquet scans, 2 with it). bands × ~16 bytes per doc — the
+    # slim LSH key table minhash_index_write persists; the document-sized
+    # shingle arrays stay streamed (re-derived per verify side).
+    return _band_candidates(materialize(banded), sh, id_col)
 
 
 def _band_candidates(band_a: DataFrame, sh_a: DataFrame, id_col: str,
@@ -637,18 +631,14 @@ def hamming_dedup_pairs(df: DataFrame, hash_col: str,
     Scale shape: the banding explode carries only (id, hash, band, key);
     the self-join fans out per (band, key) bucket, never all-pairs.
 
-    The slim (id, fingerprint) frame is materialized ONCE (eager
-    localCheckpoint) before banding: the self-join references it from both
-    sides and Catalyst duplicates shared subtrees, so whatever computed the
-    fingerprint — the fused image/audio decode mapInPandas, the simhash
-    aggregation — ran TWICE per action (measured on
-    image_dhash_dedup_docs' physical plan: 4 MapInPandas nodes without
-    the checkpoint, 2 with it). 16 bytes/row
-    bounded by document count — the 'fingerprint once, shuffle 8-byte
-    hashes, never pixels' promise the fingerprint docstrings make, now
-    true of the compute as well as the shuffle."""
-    slim = df.select(F.col(id_col), F.col(hash_col).alias("__fp__")) \
-             .localCheckpoint(eager=True)
+    The self-join reads the slim (id, fingerprint) frame from both sides,
+    so it is materialized once before banding (:func:`materialize`):
+    whatever computed the fingerprint (the fused image/audio decode
+    mapInPandas, the simhash aggregation) ran twice per action without it
+    (image_dhash_dedup_docs' plan: 4 MapInPandas nodes, 2 with it). 16
+    bytes/row: fingerprint once, shuffle 8-byte hashes, never pixels."""
+    slim = materialize(df.select(F.col(id_col),
+                                 F.col(hash_col).alias("__fp__")))
     return _hamming_pairs(slim, "__fp__", id_col, names=_SELF,
                           fp_names=("fp_a", "fp_b"),
                           max_distance=max_distance, band_bits=band_bits)
@@ -741,16 +731,14 @@ def shared_fingerprint_pairs(df: DataFrame, fp_col: str,
     near-dup recall tradeoff: a fingerprint that frequent identifies a
     boilerplate artifact, not a duplicate pair.
 
-    The distinct (id, fp) inverted index is materialized ONCE (eager
-    localCheckpoint): the self-join (and the ``max_df`` aggregation)
-    reference it from multiple branches and Catalyst duplicates shared
-    subtrees, so the upstream fingerprint pass — e.g. the fused video
-    frame-decode mapInPandas — ran once PER REFERENCE (measured on
-    video_dedup_docs' physical plan: 2 MapInPandas nodes without the
-    checkpoint, 1 with it). 16 bytes/row bounded by total fingerprint count, the same
-    order as what already crossed the distinct's exchange."""
-    inv = df.select(F.col(id_col), F.explode(fp_col).alias("__fp__")) \
-            .distinct().localCheckpoint(eager=True)
+    The self-join and the ``max_df`` aggregation read the distinct (id,
+    fp) inverted index, so it is materialized once (:func:`materialize`):
+    the upstream fingerprint pass (the fused video frame-decode
+    mapInPandas) ran once per reference without it (video_dedup_docs'
+    plan: 2 MapInPandas nodes, 1 with it). 16 bytes/row, the same order
+    as what already crossed the distinct's exchange."""
+    inv = materialize(df.select(F.col(id_col),
+                                F.explode(fp_col).alias("__fp__")).distinct())
     return (_key_pairs(_admit(inv, "__fp__", max_df), ["__fp__"], id_col)
              .groupBy(*_SELF)
              .agg(F.count(F.lit(1)).alias("shared"))
@@ -794,18 +782,16 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     carries only (id, gram); shingle arrays join back after the distinct
     pair set is known.
 
-    The shingled frame is materialized ONCE (eager localCheckpoint): the
-    plan references it from SIX branches (a-side, b-side, the admitted-gram
-    aggregation under each, and both `_attach` joins), and Spark
-    re-plans a self-joined subtree per reference — measured as six full
-    parquet scans each recomputing the shingling expression in
-    ngram_jaccard_docs' physical plan. The materialized frame is
-    corpus-sized (id + shingle set), the same order as one shuffle of the
-    corpus — acceptable for the verification/small-corpus role this
+    The plan reads the shingled frame from six branches (a-side, b-side,
+    the admitted-gram aggregation under each, and both `_attach` joins),
+    so it is materialized once (:func:`materialize`; without it,
+    ngram_jaccard_docs' plan held six parquet scans, each re-shingling).
+    It is corpus-sized (id + shingle set), the same order as one shuffle
+    of the corpus — acceptable for the verification/small-corpus role this
     operator documents; MinHash remains the at-scale path."""
-    sh = df.select(F.col(id_col),
-                   shingles(F.col(text_col), k, mode="word").alias("__sh__")) \
-           .localCheckpoint(eager=True)
+    sh = materialize(df.select(
+        F.col(id_col),
+        shingles(F.col(text_col), k, mode="word").alias("__sh__")))
     inv = _admit(sh.select(id_col, F.explode("__sh__").alias("__g__")),
                  "__g__", max_df)
     ids = _key_pairs(inv, ["__g__"], id_col).select(*_SELF).distinct()
@@ -838,22 +824,19 @@ def winnow_dedup_pairs(df: DataFrame, id_col: str = "doc_id",
     full fingerprint counts). Fingerprinting itself is the Arrow
     pandas_udf in text.py (vectorized numpy rolling hash per batch).
 
-    The per-doc fingerprint frame is materialized ONCE (eager
-    localCheckpoint): the inverted-index self-join references it from
-    both sides, the ``max_df`` aggregation once more, and the
-    optimizer additionally re-evaluates the UDF around pushed filters
-    (guide §4.4) — measured: EIGHT ArrowEvalPython nodes in
-    winnow_pairs_docs' physical plan for one logical fingerprint pass
-    without the checkpoint, 1 with it. The frame is (id, array<long>) — one long per winnow
-    window, ~w× smaller than the text it fingerprints, the same
-    metadata-not-payload class as the banded minhash table."""
+    The inverted-index self-join reads the per-doc fingerprint frame from
+    both sides and the ``max_df`` aggregation once more, and the optimizer
+    re-evaluates the UDF around pushed filters (guide §4.4), so the frame
+    is materialized once (:func:`materialize`; without it,
+    winnow_pairs_docs' plan held eight ArrowEvalPython nodes for one
+    logical fingerprint pass, 1 with it). It is (id, array<long>) — one
+    long per winnow window, ~w× smaller than the text it fingerprints."""
     from ..dtutil import ensure_parallelism
     from ..functions.text import winnow_fingerprints
 
-    fps = ensure_parallelism(df).select(
+    fps = materialize(ensure_parallelism(df).select(
         F.col(id_col),
-        winnow_fingerprints(F.col(text_col), k=k, w=w).alias("__fp__")) \
-        .localCheckpoint(eager=True)
+        winnow_fingerprints(F.col(text_col), k=k, w=w).alias("__fp__")))
     inv = _admit(fps.select(id_col, F.size("__fp__").alias("__nf__"),
                             F.explode("__fp__").alias("__h__")),
                  "__h__", max_df)
@@ -921,16 +904,13 @@ def similarity_join(left: DataFrame, right: DataFrame,
         # max_df only controls which tokens ENTER the index (candidates
         # must share a token in <= max_df docs); it must not shrink __n__
         dfreq = dfreq.filter(F.col("__df__") <= max_df)
-    # Materialized ONCE (the ngram_jaccard_pairs idiom): _prefix references
-    # dfreq from BOTH sides and Catalyst duplicates shared subtrees, so the
-    # union + count aggregation — i.e. a full shingle+explode pass over BOTH
-    # tables — ran twice (measured: 8 parquet scans in
-    # similarity_join_docs' physical plan without the checkpoint). The materialized frame is
-    # the PPJoin global token order itself (distinct gram, df) — vocab-sized,
-    # the table the published algorithm computes in its first pass — while
-    # the corpus sides stay streamed (re-shingled per reference, never
-    # materialized).
-    dfreq = dfreq.localCheckpoint(eager=True)
+    # _prefix reads dfreq from both sides, so it is materialized once:
+    # without it the union + count aggregation (a full shingle+explode
+    # pass over both tables) ran twice (similarity_join_docs' plan: 8
+    # parquet scans). It is the PPJoin global token order itself (distinct
+    # gram, df) — vocab-sized, the table the published algorithm computes
+    # in its first pass — while the corpus sides stay streamed.
+    dfreq = materialize(dfreq)
 
     def _prefix(inv: DataFrame, id_name: str) -> DataFrame:
         toks = inv.join(dfreq, "__g__")
@@ -1018,10 +998,10 @@ def dedup_clusters(pairs: DataFrame, nodes: DataFrame, id_col: str = "doc_id",
     Min-label propagation: every node starts labeled with itself; each
     round takes the min of its own and its neighbors' labels; fixpoint in
     <= graph-diameter rounds (near-dup components are shallow). Each round
-    is one join + one groupBy keyed by node id, with an eager
-    localCheckpoint to truncate the iterative lineage (the standard Spark
-    iterative-algorithm pattern) and an early-exit convergence check —
-    the per-round driver cost is one count, bounded by max_iter.
+    is one join + one groupBy keyed by node id, materialized to truncate
+    the iterative lineage (the standard Spark iterative-algorithm
+    pattern), and an early-exit convergence check — the per-round driver
+    cost is one count, bounded by max_iter.
 
     Small-graph fast path: near-dup candidate pairs are SPARSE relative
     to the corpus (banded LSH emits a sliver of n²); when the pair count
@@ -1031,13 +1011,12 @@ def dedup_clusters(pairs: DataFrame, nodes: DataFrame, id_col: str = "doc_id",
     themselves through a broadcast left join). The propagation path
     remains for genuinely huge pair sets; ``driver_threshold=0`` forces
     it."""
-    # Materialize the slim (id_a, id_b) pair set ONCE (eager
-    # localCheckpoint): the threshold count and the fast path's collect —
-    # or, on the propagation path, the edges build — are separate actions,
-    # so the whole upstream pair pipeline (banded join + exact verify)
-    # re-executed per action. Two longs per pair, the same volume
-    # the propagation path already localCheckpoints as `edges`.
-    pairs = pairs.select("id_a", "id_b").localCheckpoint(eager=True)
+    # The threshold count and the fast path's collect (or, on the
+    # propagation path, the edges build) are separate actions over the
+    # slim (id_a, id_b) pair set, so it is materialized once: otherwise
+    # the whole upstream pair pipeline (banded join + exact verify)
+    # re-executed per action. Two longs per pair.
+    pairs = materialize(pairs.select("id_a", "id_b"))
     n_pairs = pairs.limit(driver_threshold + 1).count() \
         if driver_threshold else driver_threshold + 1
     if n_pairs <= driver_threshold:
@@ -1072,24 +1051,21 @@ def dedup_clusters(pairs: DataFrame, nodes: DataFrame, id_col: str = "doc_id",
     edges = (edges.unionByName(edges.select(F.col("dst").alias("src"),
                                             F.col("src").alias("dst")))
                   .distinct())
-    edges = edges.localCheckpoint(eager=False)
-    # eager: iteration 1's action references `labels` in BOTH the neighbor
-    # join and the new-labels join — a lazy checkpoint could let the forked
-    # branches race on an uncached nondeterministic source
-    labels = (nodes.select(F.col(id_col).alias("node")).distinct()
-                   .withColumn("label", F.col("node"))
-                   .localCheckpoint(eager=True))
+    edges = materialize(edges, eager=False)
+    # eager: iteration 1's action reads `labels` in BOTH the neighbor join
+    # and the new-labels join
+    labels = materialize(nodes.select(F.col(id_col).alias("node")).distinct()
+                              .withColumn("label", F.col("node")))
     changed = 0
     for _ in range(max_iter):
         neigh = (edges.join(labels, edges["src"] == labels["node"])
                       .groupBy("dst").agg(F.min("label").alias("__nl__")))
-        new_labels = (labels.join(neigh, labels["node"] == neigh["dst"], "left")
-                            .select(F.col("node"),
-                                    F.least(F.col("label"),
-                                            F.coalesce(F.col("__nl__"),
-                                                       F.col("label")))
-                                     .alias("label"))
-                            .localCheckpoint(eager=True))
+        new_labels = materialize(
+            labels.join(neigh, labels["node"] == neigh["dst"], "left")
+                  .select(F.col("node"),
+                          F.least(F.col("label"),
+                                  F.coalesce(F.col("__nl__"), F.col("label")))
+                           .alias("label")))
         changed = (new_labels.alias("n")
                    .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
                    .filter(F.col("n.label") != F.col("o.label")).limit(1).count())

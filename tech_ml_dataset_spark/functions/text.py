@@ -9,9 +9,13 @@ plan that passes at sf0.01 streams over 100 TB of documents.
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Row, functions as F
+
+from ..dtutil import _let, materialize
 
 _WS = r"\s+"
 
@@ -333,7 +337,7 @@ def winnow_fingerprints(text: Column, *, k: int = 8, w: int = 4,
     # transient peak is ~24x the chunk's total text bytes (uint64 views of
     # the byte buffer + the hash array + one multiply temp); cap it so
     # multi-KB/MB documents cannot OOM an executor on a 10k-row Arrow
-    # batch (r5 review) — results are chunk-invariant (chunks split on
+    # batch — results are chunk-invariant (chunks split on
     # document boundaries; pinned by test_winnow_chunk_invariance)
     _CHUNK_BYTES = max(1, chunk_bytes)
 
@@ -518,7 +522,7 @@ def chunk_documents(df: DataFrame, text_col: str = "text",
     def _chunks_of(toks):
         # ``toks`` is _let-bound: inlined, the split re-ran once per
         # generated CHUNK (the transform lambda body re-evaluates its
-        # whole subtree per element — O(len²/chunk_size) per row; r11)
+        # whole subtree per element — O(len²/chunk_size) per row)
         n = F.size(toks)
         # Upper bound n - overlap - 1 (not n - 1): a start s with
         # s + overlap >= n yields a chunk fully contained in its
@@ -647,7 +651,7 @@ def repetition_signals(df: DataFrame, text_col: str = "text",
                                               g.alias("g")))
 
     pairs = F.concat(*[_tagged(n) for n in ns])
-    # ONE exchange for the whole gram branch (r11): hash-partitioning by
+    # ONE exchange for the whole gram branch: hash-partitioning by
     # id alone satisfies the clustering requirement of all three
     # downstream groupBys ((id,n,g) → (id,n) → id — each keys on a
     # superset of {id}), so the un-numbered (AQE-coalescible) repartition
@@ -729,10 +733,10 @@ def gopher_quality(df: DataFrame, text_col: str = "text",
     The token array is materialized ONCE (a withColumn projection barrier;
     CollapseProject keeps it because the non-cheap split is referenced by
     several consumers) and every rule plus the bigram branch derives from
-    that column — the r5 inline form re-split the text into each of the
+    that column — an inline form re-split the text into each of the
     ~6 consuming expressions, multiplying both the per-row regex cost and
-    the codegen-compile fixed cost (the r5 bench drift's 11.8 s cold run
-    on corpus_composition was dominated by recompiling that duplicated
+    the codegen-compile fixed cost (an 11.8 s cold run on
+    corpus_composition was dominated by recompiling that duplicated
     tree). The lowercased array serves mean-word-length too — exactly the
     oracle's law (the DuckDB replay computes mean_len from the same
     lowered token list)."""
@@ -797,6 +801,49 @@ def gopher_quality(df: DataFrame, text_col: str = "text",
         & F.col("rule_repetition"))
 
 
+def _vocab_totals(table: DataFrame, *totals: Column) -> tuple[DataFrame, Row]:
+    """Materialize the vocab-sized count ``table`` and collect one row of
+    ``totals`` over it. The table is built once: without the checkpoint
+    its corpus explode + groupBy lineage runs again for every later
+    reader (the scoring join), a full duplicate corpus scan at 100 TB.
+    Lazy: the totals collect, one linear job, is its first reader and
+    stores it for the readers after it; an eager checkpoint ran one job
+    more per table."""
+    table = materialize(table, eager=False)
+    return table, table.agg(*totals).collect()[0]
+
+
+def _broadcast_vocab(op: str, what: str, size: float, cap: int,
+                     *tables: DataFrame) -> list[DataFrame]:
+    """``tables`` with a broadcast hint when ``size`` <= ``cap``. The
+    exploded corpus side is petabyte-scale with mega-hot stopword keys, so
+    a shuffled join on the vocab key funnels every occurrence of "the"
+    through one reducer; above ``cap`` the tables come back as they are
+    (a shuffled join, to guard executor memory) with a RuntimeWarning."""
+    if size <= cap:
+        return [F.broadcast(t) for t in tables]
+    warnings.warn(
+        f"{op}: {int(size)} {what} exceed broadcast_vocab_max={cap}; "
+        f"falling back to a shuffled join — expect stopword skew (enable "
+        f"AQE skew-join mitigation).", RuntimeWarning, stacklevel=3)
+    return list(tables)
+
+
+def _bigrams(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """One row (id, __w1__, __w2__) per bigram position of ``text_col``:
+    the shifted-slice zip (O(1) array copies per doc — the shingles k=2
+    trick, never a per-index substring loop). ``_let`` binds the token
+    array once: inlined, the split+filter re-ran at every slice/size
+    reference (~6x per row)."""
+    pairs = _let(_tokens(F.col(text_col)), lambda t: F.zip_with(
+        F.slice(t, 1, F.greatest(F.size(t) - 1, F.lit(0))),
+        F.slice(t, 2, F.greatest(F.size(t) - 1, F.lit(0))),
+        lambda a, b: F.struct(a.alias("w1"), b.alias("w2"))))
+    return (df.select(F.col(id_col), F.explode(pairs).alias("__bg__"))
+              .select(id_col, F.col("__bg__.w1").alias("__w1__"),
+                      F.col("__bg__.w2").alias("__w2__")))
+
+
 def unigram_logprob_score(df: DataFrame, text_col: str = "text",
                           id_col: str = "doc_id", *,
                           smoothing: float = 0.5,
@@ -825,25 +872,12 @@ def unigram_logprob_score(df: DataFrame, text_col: str = "text",
     toks = F.split(F.lower(F.trim(F.col(text_col))), _WS)
     ex = (df.select(F.col(id_col), F.explode(toks).alias("__w__"))
             .filter(F.length("__w__") > 0))
-    # Checkpoint the vocab-sized frequency table BEFORE the totals collect:
-    # without it the explode+groupBy lineage executes twice — once for the
-    # totals action here and again for the scoring join below — a full
-    # duplicate corpus scan at 100 TB. Same discipline as dsir_logweights'
-    # ratio-table checkpoint (the r3 verdict's "What's wrong #2").
-    freq = (ex.groupBy("__w__").agg(F.count(F.lit(1)).alias("__c__"))
-              .localCheckpoint(eager=True))
-    totals = freq.agg(F.sum("__c__").alias("__N__"),
-                      F.count(F.lit(1)).alias("__V__")).collect()[0]
+    freq, totals = _vocab_totals(
+        ex.groupBy("__w__").agg(F.count(F.lit(1)).alias("__c__")),
+        F.sum("__c__").alias("__N__"), F.count(F.lit(1)).alias("__V__"))
     n_total, vocab = float(totals["__N__"] or 0), float(totals["__V__"] or 1)
-    if vocab <= broadcast_vocab_max:
-        freq = F.broadcast(freq)
-    else:
-        import warnings
-        warnings.warn(
-            f"unigram_logprob_score: vocabulary ({int(vocab)} tokens) exceeds "
-            f"broadcast_vocab_max={broadcast_vocab_max}; falling back to a "
-            f"shuffled token-keyed join — expect stopword skew (enable AQE "
-            f"skew-join mitigation).", RuntimeWarning, stacklevel=2)
+    freq, = _broadcast_vocab("unigram_logprob_score", "vocabulary tokens",
+                             vocab, broadcast_vocab_max, freq)
     denom = n_total + smoothing * vocab
     logp = F.log2((F.col("__c__") + F.lit(smoothing)) / F.lit(denom))
     scored = (ex.join(freq, "__w__")
@@ -853,7 +887,7 @@ def unigram_logprob_score(df: DataFrame, text_col: str = "text",
     # join back from the RAW frame: the ensure_parallelism round-robin
     # only pays for the per-row explode work above — on this side the
     # join's own exchange provides the distribution, and the stacked
-    # round-robin + hash exchanges were pure waste (r11)
+    # round-robin + hash exchanges were pure waste
     return raw.join(scored, id_col, "left")
 
 
@@ -883,31 +917,20 @@ def bigram_logprob_score(df: DataFrame, text_col: str = "text",
     side has mega-hot stopword keys — a shuffled join would funnel
     every "of the" through one reducer); above the cap we fall back to
     a shuffled join with a warning, same contract as unigram. Both
-    tables are localCheckpointed so the corpus explode lineage runs
-    once, not once per consumer."""
-    from ..dtutil import _let, ensure_parallelism
+    tables are materialized so the corpus explode lineage runs once, not
+    once per consumer."""
+    from ..dtutil import ensure_parallelism
     raw = df
     df = ensure_parallelism(df)
-    toks = F.filter(F.split(F.lower(F.trim(F.col(text_col))), _WS),
-                    lambda t: F.length(t) > 0)
-    # _let binds the tokenized array once: inlined, the split+filter
-    # re-ran at every slice/size reference (~6x per row; r11)
-    pairs = _let(toks, lambda t: F.zip_with(
-        F.slice(t, 1, F.greatest(F.size(t) - 1, F.lit(0))),
-        F.slice(t, 2, F.greatest(F.size(t) - 1, F.lit(0))),
-        lambda a, b: F.struct(a.alias("w1"), b.alias("w2"))))
-    ex = (df.select(F.col(id_col), F.explode(pairs).alias("__bg__"))
-            .select(id_col, F.col("__bg__.w1").alias("__w1__"),
-                    F.col("__bg__.w2").alias("__w2__")))
-    # corpus tables (checkpointed: the explode lineage must run once)
-    bfreq = (ex.groupBy("__w1__", "__w2__")
-               .agg(F.count(F.lit(1)).alias("__c12__"))
-               .localCheckpoint(eager=True))
-    ufreq = (df.select(F.explode(toks).alias("__w__"))
-               .groupBy("__w__").agg(F.count(F.lit(1)).alias("__c__"))
-               .localCheckpoint(eager=True))
-    totals = ufreq.agg(F.sum("__c__").alias("N"),
-                       F.count(F.lit(1)).alias("V")).collect()[0]
+    ex = _bigrams(df, id_col, text_col)
+    # lazy: its first reader is one branch of the scoring join
+    bfreq = materialize(ex.groupBy("__w1__", "__w2__")
+                          .agg(F.count(F.lit(1)).alias("__c12__")),
+                        eager=False)
+    ufreq, totals = _vocab_totals(
+        df.select(F.explode(_tokens(F.col(text_col))).alias("__w__"))
+          .groupBy("__w__").agg(F.count(F.lit(1)).alias("__c__")),
+        F.sum("__c__").alias("N"), F.count(F.lit(1)).alias("V"))
     n_total, vocab = float(totals["N"] or 0), float(totals["V"] or 1)
     # bigram TYPE count is bounded by min(V^2, token positions) — both
     # already collected — so the broadcast decision usually needs no
@@ -917,15 +940,9 @@ def bigram_logprob_score(df: DataFrame, text_col: str = "text",
     nb = min(vocab * vocab, n_total)
     if nb > broadcast_vocab_max:
         nb = bfreq.count()
-    if max(nb, vocab) <= broadcast_vocab_max:
-        bfreq, ufreq = F.broadcast(bfreq), F.broadcast(ufreq)
-    else:
-        import warnings
-        warnings.warn(
-            f"bigram_logprob_score: {int(nb)} bigram types exceed "
-            f"broadcast_vocab_max={broadcast_vocab_max}; falling back to "
-            f"shuffled joins — expect stopword-pair skew (enable AQE skew "
-            f"mitigation).", RuntimeWarning, stacklevel=2)
+    bfreq, ufreq = _broadcast_vocab(
+        "bigram_logprob_score", "bigram or token types", max(nb, vocab),
+        broadcast_vocab_max, bfreq, ufreq)
     denom = n_total + smoothing * vocab
     u1 = ufreq.select(F.col("__w__").alias("__w1__"),
                       F.col("__c__").alias("__c1__"))
@@ -939,7 +956,7 @@ def bigram_logprob_score(df: DataFrame, text_col: str = "text",
                 .groupBy(id_col)
                 .agg((-F.avg(F.log2(p))).alias("bits_per_bigram"),
                      F.count(F.lit(1)).alias("n_bigrams")))
-    # raw side: the join's own exchange distributes; no round-robin (r11)
+    # raw side: the join's own exchange distributes; no round-robin
     out = raw.join(scored, id_col, "left")
     return out.withColumn("n_bigrams",
                           F.coalesce(F.col("n_bigrams"), F.lit(0)))
@@ -973,41 +990,22 @@ def kneser_ney_bigram_score(df: DataFrame, text_col: str = "text",
     everything is checkpointed and broadcast under
     ``broadcast_vocab_max`` (stopword-pair keys make a shuffled join a
     skew trap), shuffled with a warning above it. B comes from one
-    1-row agg over the checkpointed bigram table."""
-    from ..dtutil import _let, ensure_parallelism
+    1-row agg over the materialized bigram table."""
+    from ..dtutil import ensure_parallelism
     raw = df
     df = ensure_parallelism(df)
-    toks = F.filter(F.split(F.lower(F.trim(F.col(text_col))), _WS),
-                    lambda t: F.length(t) > 0)
-    # _let binds the tokenized array once (same rewrite as
-    # bigram_logprob_score; r11)
-    pairs = _let(toks, lambda t: F.zip_with(
-        F.slice(t, 1, F.greatest(F.size(t) - 1, F.lit(0))),
-        F.slice(t, 2, F.greatest(F.size(t) - 1, F.lit(0))),
-        lambda a, b: F.struct(a.alias("w1"), b.alias("w2"))))
-    ex = (df.select(F.col(id_col), F.explode(pairs).alias("__bg__"))
-            .select(id_col, F.col("__bg__.w1").alias("__w1__"),
-                    F.col("__bg__.w2").alias("__w2__")))
-    bfreq = (ex.groupBy("__w1__", "__w2__")
-               .agg(F.count(F.lit(1)).alias("__c12__"))
-               .localCheckpoint(eager=True))
-    tot = bfreq.agg(F.count(F.lit(1)).alias("B"),
-                    F.sum("__c12__").alias("P")).collect()[0]
+    ex = _bigrams(df, id_col, text_col)
+    bfreq, tot = _vocab_totals(
+        ex.groupBy("__w1__", "__w2__").agg(F.count(F.lit(1)).alias("__c12__")),
+        F.count(F.lit(1)).alias("B"), F.sum("__c12__").alias("P"))
     n_btypes, n_positions = float(tot["B"] or 1), float(tot["P"] or 0)
     lfreq = (bfreq.groupBy("__w1__")
                   .agg(F.sum("__c12__").alias("__c1__"),
                        F.count(F.lit(1)).alias("__n1l__")))
     rfreq = bfreq.groupBy("__w2__").agg(F.count(F.lit(1)).alias("__n1r__"))
-    if max(n_btypes, n_positions) <= broadcast_vocab_max:
-        bfreq, lfreq, rfreq = (F.broadcast(bfreq), F.broadcast(lfreq),
-                               F.broadcast(rfreq))
-    else:
-        import warnings
-        warnings.warn(
-            f"kneser_ney_bigram_score: {int(n_btypes)} bigram types exceed "
-            f"broadcast_vocab_max={broadcast_vocab_max}; falling back to "
-            f"shuffled joins — expect stopword-pair skew (enable AQE skew "
-            f"mitigation).", RuntimeWarning, stacklevel=2)
+    bfreq, lfreq, rfreq = _broadcast_vocab(
+        "kneser_ney_bigram_score", "bigram types or positions",
+        max(n_btypes, n_positions), broadcast_vocab_max, bfreq, lfreq, rfreq)
     d = F.lit(float(discount))
     p = (F.greatest(F.col("__c12__") - d, F.lit(0.0)) / F.col("__c1__")
          + d * F.col("__n1l__") / F.col("__c1__")
@@ -1017,7 +1015,7 @@ def kneser_ney_bigram_score(df: DataFrame, text_col: str = "text",
                 .groupBy(id_col)
                 .agg((-F.avg(F.log2(p))).alias("kn_bits_per_bigram"),
                      F.count(F.lit(1)).alias("n_bigrams")))
-    # raw side: the join's own exchange distributes; no round-robin (r11)
+    # raw side: the join's own exchange distributes; no round-robin
     out = raw.join(scored, id_col, "left")
     return out.withColumn("n_bigrams",
                           F.coalesce(F.col("n_bigrams"), F.lit(0)))
@@ -1071,7 +1069,7 @@ def tfidf_top_terms(df: DataFrame, text_col: str = "text",
     tf = tf.withColumn("tf", F.col("__tc__")
                        / F.sum("__tc__").over(doclen))
     # count the RAW frame: a count over the round-robin-repartitioned one
-    # pays a full corpus shuffle first (r11); the value is identical
+    # pays a full corpus shuffle first; the value is identical
     n_docs = raw.count()
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("__df__"))
     dfreq = dfreq.filter(
@@ -1114,7 +1112,7 @@ def bm25_search(df: DataFrame, query: str, text_col: str = "text",
        whole-stage codegen; the corpus is NEVER exploded (the generic
        explode→groupBy(token) plan of :func:`tfidf_top_terms` would
        shuffle petabytes to score q terms).
-    2. That slim (id, len, tf…) projection is localCheckpointed, so the
+    2. That slim (id, len, tf…) projection is materialized, so the
        corpus text is scanned exactly once; corpus stats (N, avgdl, df_t)
        are ONE tiny whole-table aggregate over it.
     3. The 1-row stats frame joins back via broadcast cross join; the
@@ -1139,15 +1137,14 @@ def bm25_search(df: DataFrame, query: str, text_col: str = "text",
         return F.size(F.filter(F.col("__tk__"), lambda x: x == F.lit(trm)))
 
     # token array projected ONCE: inlined, the trim+lower+split re-ran
-    # per query term (q+1 references, no CSE in HOF evaluation; r11)
+    # per query term (q+1 references, no CSE in HOF evaluation)
     base = df.select(F.col(id_col), toks.alias("__tk__")).select(
         F.col(id_col),
         F.size("__tk__").alias("__len__"),
         *[_tf(trm).alias(f"__tf{i}__") for i, trm in enumerate(terms)])
-    # one corpus scan: stats aggregate AND scoring both read this slim
-    # (id, len, tf…) table — without the checkpoint Spark would rescan
-    # the text column for each (same rationale as dsir_logweights)
-    base = base.localCheckpoint(eager=True)
+    # one corpus scan: the stats aggregate AND the scoring join read this
+    # slim (id, len, tf…) table in one action
+    base = materialize(base)
     stats = base.agg(
         F.count(F.lit(1)).alias("__N__"),
         F.avg(F.when(F.col("__len__") > 0, F.col("__len__")))
@@ -1466,7 +1463,7 @@ def remove_boilerplate_lines(df: DataFrame, text_col: str = "text",
     raw = df
     df = ensure_parallelism(df)
     # count the RAW frame: counting the round-robin-repartitioned one
-    # shuffled the whole corpus just to count rows (r11) — the count is
+    # shuffled the whole corpus just to count rows — the count is
     # scan+aggregate only, and the value is identical
     n_docs = raw.count()
     lines = (df.select(F.col(id_col),
@@ -1489,7 +1486,7 @@ def remove_boilerplate_lines(df: DataFrame, text_col: str = "text",
                                          F.col("__line__").alias("l")))),
                             lambda s: s["l"]),
                         "\n").alias(out_col)))
-    # raw side: the join's own exchange distributes; no round-robin (r11)
+    # raw side: the join's own exchange distributes; no round-robin
     base = raw.drop(out_col) if out_col != text_col else raw.drop(text_col)
     return (base.join(rebuilt, id_col, "left")
                 .withColumn(out_col, F.coalesce(F.col(out_col), F.lit(""))))
@@ -1595,7 +1592,7 @@ def _tokens(text: Column) -> Column:
     Callers that reference the token array more than once must project it
     into a named column first: higher-order-function expressions are
     interpreted with no common-subexpression elimination, so every inlined
-    reference re-runs the full split/lower/trim pass (r11)."""
+    reference re-runs the full split/lower/trim pass."""
     return F.filter(F.split(F.lower(F.trim(text)), _WS),
                     lambda t: F.length(t) > 0)
 
@@ -1607,7 +1604,7 @@ def _ngrams_from_tokens(toks: Column, k: int) -> Column:
     ``zip_with`` + concat: k array copies total. The per-index form
     (``transform(idx, i -> array_join(slice(toks, i, k)))``) allocates a
     fresh k-element array per gram — O(n·k) copies; measured 7.6x slower
-    on the sf0.1 corpus (r4). Fewer-than-k-token docs yield an empty list
+    on the sf0.1 corpus. Fewer-than-k-token docs yield an empty list
     (slice length clamps at 0)."""
     m = F.greatest(F.size(toks) - (k - 1), F.lit(0))
     acc = F.slice(toks, 1, m)
@@ -1657,7 +1654,7 @@ def dsir_logweights(corpus: DataFrame, target: DataFrame,
     target_p = ensure_parallelism(target)
     # tokenize into a projected column first: the inlined _word_ngrams
     # form re-runs the split/lower/trim pass at every slice reference
-    # (2k of them — HOF expressions are interpreted with no CSE; r11)
+    # (2k of them — HOF expressions are interpreted with no CSE)
     grams_c = (corpus_p.select(F.col(id_col),
                                _tokens(F.col(text_col)).alias("__t__"))
                        .select(id_col,
@@ -1672,26 +1669,19 @@ def dsir_logweights(corpus: DataFrame, target: DataFrame,
             .select("__g__",
                     F.coalesce("__cc__", F.lit(0)).alias("__cc__"),
                     F.coalesce("__ct__", F.lit(0)).alias("__ct__")))
-    # vocab-sized: checkpoint so the totals action and the scoring join
-    # don't each re-run both explode+groupBy LM builds (the corpus-sized
-    # gram streams are never materialized — only this table is)
-    lm = lm.localCheckpoint(eager=True)
-    tot = lm.agg(F.sum("__cc__").alias("nc"), F.sum("__ct__").alias("nt"),
-                 F.count(F.lit(1)).alias("v")).collect()[0]
+    # only this vocab-sized table is materialized, never the corpus-sized
+    # gram streams
+    lm, tot = _vocab_totals(lm, F.sum("__cc__").alias("nc"),
+                            F.sum("__ct__").alias("nt"),
+                            F.count(F.lit(1)).alias("v"))
     nc, nt = float(tot["nc"] or 0), float(tot["nt"] or 0)
     vocab = float(tot["v"] or 1)
     a = float(smoothing)
     ratio = (F.log((F.col("__ct__") + a) / F.lit(nt + a * vocab))
              - F.log((F.col("__cc__") + a) / F.lit(nc + a * vocab)))
-    lm = lm.select("__g__", ratio.alias("__r__"))
-    if vocab <= broadcast_vocab_max:
-        lm = F.broadcast(lm)
-    else:
-        import warnings
-        warnings.warn(
-            f"dsir_logweights: vocabulary ({int(vocab)} grams) exceeds "
-            f"broadcast_vocab_max={broadcast_vocab_max}; shuffled gram join "
-            f"— expect stopword skew.", RuntimeWarning, stacklevel=2)
+    lm, = _broadcast_vocab("dsir_logweights", "vocabulary grams", vocab,
+                           broadcast_vocab_max,
+                           lm.select("__g__", ratio.alias("__r__")))
     scored = (grams_c.join(lm, "__g__")
                      .groupBy(id_col)
                      .agg(F.sum("__r__").alias("dsir_logweight"),
@@ -1796,7 +1786,7 @@ def canonical_url(url: Column) -> Column:
     # Strip tracking params KEEPING the separator ($1), so a tracking param
     # between two kept params ('?a=1&utm_x=2&b=3') leaves '?a=1&&b=3' and
     # the collapse passes below restore '?a=1&b=3' — replacing with a bare
-    # '?' (the pre-r4 bug) produced '?a=1?b=3', which silently missed the
+    # '?' (an earlier bug) produced '?a=1?b=3', which silently missed the
     # mid-position alias class entirely.
     u = F.regexp_replace(u, r"([?&])(?:utm_[A-Za-z]+|fbclid|gclid|ref)=[^&]*",
                          r"$1")                              # tracking out
@@ -1871,7 +1861,7 @@ def token_budget_mix(df: DataFrame, weights: dict[str, float], *,
                      id_col: str = "doc_id",
                      seed: int = 0,
                      bucket_hex_digits: int = 3) -> DataFrame:
-    """Token-budget SOURCE MIXING (r10) — the recipe step every
+    """Token-budget SOURCE MIXING — the recipe step every
     published pretraining pipeline ends with (Dolma's mixer,
     FineWeb's per-dump proportions, the classic "60% web / 30% code /
     10% books BY TOKEN COUNT"): give each source a token budget
@@ -1943,7 +1933,7 @@ def token_budget_mix(df: DataFrame, weights: dict[str, float], *,
     # phase 2: ONLY the boundary bucket sorts (~1/n_buckets of one
     # source) — the window is bounded, not source-sized
     edge = j.filter(F.col("__b__") == F.col("__bound__"))
-    # id tiebreaker (r11, ADVICE): duplicate id_col values share an md5
+    # id tiebreaker: duplicate id_col values share an md5
     # priority, and a tie-ordered running sum would make the cut
     # nondeterministic / non-oracle-replayable.
     w = Window.partitionBy(source_col).orderBy("__pri__", id_col) \
@@ -1961,7 +1951,7 @@ def hashed_ngram_score(df: DataFrame, weights: list[float], *,
                        bias: float = 0.0, ngrams: int = 1,
                        seed: int = 0, id_col: str | None = None,
                        literal_limit: int = 1024) -> DataFrame:
-    """fastText-style HASHING-TRICK linear scorer (r10) — the model
+    """fastText-style HASHING-TRICK linear scorer — the model
     class the published quality filters actually deploy (CCNet's
     fastText language/quality filters, FineWeb-Edu's classifier
     distillations): features are hashed word n-grams, the model is
@@ -1998,11 +1988,11 @@ def hashed_ngram_score(df: DataFrame, weights: list[float], *,
     def gram_arrays(toks):
         # ``toks`` is a _let-bound lambda variable: the inlined form
         # re-ran the whitespace split at EVERY element_at reference —
-        # once per gram per token-lookup, O(len²) per row (r11)
+        # once per gram per token-lookup, O(len²) per row
         def gram_lambda(n):
             # factory, not a `n=n` default: F.transform's two-arg lambda
             # binds (element, INDEX) and silently shadows the default —
-            # the repo's documented trap (verify notes r4/r7)
+            # the repo's documented trap (see the verify notes)
             return lambda i: F.concat_ws(
                 " ", *[F.element_at(toks, i + j) for j in range(n)])
 
@@ -2017,7 +2007,7 @@ def hashed_ngram_score(df: DataFrame, weights: list[float], *,
         return F.flatten(F.array(*out)) if len(out) > 1 else out[0]
 
     # NULL text coalesces to the empty gram array so BOTH paths score
-    # sigmoid(bias) (r11, ADVICE): without it the literal path's
+    # sigmoid(bias): without it the literal path's
     # F.aggregate over a NULL array yields NULL while the broadcast
     # path's explode_outer+coalesce yields sigmoid(bias).
     grams = F.when(F.length(F.trim(F.col(text_col))) == 0,

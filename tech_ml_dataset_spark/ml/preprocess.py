@@ -20,6 +20,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
+from ..dtutil import materialize
+
 
 # ---- categorical ------------------------------------------------------------
 
@@ -495,7 +497,7 @@ def kendall_tau_exact(df: DataFrame, xcol: str, ycol: str, *,
     pts = (df.select(F.col(xcol).alias("x"), F.col(ycol).alias("y"))
              .filter(F.col(xcol).isNotNull() & F.col(ycol).isNotNull()))
     cells = pts.groupBy("x", "y").agg(F.count(F.lit(1)).alias("w"))
-    cells = cells.localCheckpoint(eager=True)  # reused by 4 downstream jobs
+    cells = materialize(cells)  # reused by 4 downstream jobs
 
     # Small-cell fast path: the distributed pipeline costs ~8 scheduler
     # round-trips (checkpoints, range-partition sampling, two pandas
@@ -517,10 +519,9 @@ def kendall_tau_exact(df: DataFrame, xcol: str, ycol: str, *,
     d_x = xr.count()
     bsize = max(1, math.ceil(d_x / n_buckets))
     n_b = math.ceil(d_x / bsize)
-    ranked = (cells.join(xr, "x")
-                   .withColumn("xb", F.floor(F.col("rx") / bsize))
-                   .select("rx", F.col("y").alias("ry"), "w", "xb")
-                   .localCheckpoint(eager=True))
+    ranked = materialize(cells.join(xr, "x")
+                              .withColumn("xb", F.floor(F.col("rx") / bsize))
+                              .select("rx", F.col("y").alias("ry"), "w", "xb"))
 
     # --- cross-bucket merge pass (sign(dx) = +1 by construction) ---
     # For every cell q the cross-bucket contribution is
@@ -535,10 +536,12 @@ def kendall_tau_exact(df: DataFrame, xcol: str, ycol: str, *,
     # numbers). O(cells) rows move, exactly once. Equal ry keys never span
     # partitions (RangePartitioner maps equal keys together), so the
     # strict </> splits stay exact at partition boundaries.
-    by_ry = (ranked.repartitionByRange(n_buckets, "ry")
-                   .sortWithinPartitions("ry")
-                   .withColumn("__pid__", F.spark_partition_id())
-                   .localCheckpoint(eager=False))  # pass A/B must agree
+    # pass A/B must agree: pass A (the pb collect) stores the partitions,
+    # pass B merges that stored copy
+    by_ry = materialize(ranked.repartitionByRange(n_buckets, "ry")
+                              .sortWithinPartitions("ry")
+                              .withColumn("__pid__", F.spark_partition_id()),
+                        eager=False)
     pb = (by_ry.groupBy("__pid__", "xb").agg(F.sum("w").alias("m"))
                .collect())
     n_parts = max((r["__pid__"] for r in pb), default=-1) + 1
@@ -674,8 +677,8 @@ def k_fold_datasets(df: DataFrame, k: int, *, seed: int | None = None
     never a single-partition window; selection.py machinery), and fold i
     is ``idx % k``. ``seed=None`` draws a fresh random seed per call —
     the unseeded-CV contract where repeated runs give independent splits;
-    pass a seed for reproducible folds. A ``rand()``-bucketed tag (the
-    pre-r4 shape) gave binomially RANDOM fold sizes, breaking the
+    pass a seed for reproducible folds. A ``rand()``-bucketed tag (an
+    earlier shape) gave binomially RANDOM fold sizes, breaking the
     reference's exact-split contract and leaving fold balance to chance
     on small datasets."""
     from ..operators.selection import (_free_name, contiguous_scan_index,
@@ -693,11 +696,11 @@ def k_fold_datasets(df: DataFrame, k: int, *, seed: int | None = None
     else:
         tagged = contiguous_scan_index(df, name)
     fold = _free_name(df.columns, "__fold__")
-    tagged = tagged.withColumn(fold, (F.col(name) % k).cast("int")) \
-        .drop(name) \
-        .localCheckpoint(eager=True)  # pin assignment: folds must be a
-    # PARTITION of the data — recomputing the hash sort per filter could
-    # re-break ties differently and leak rows across folds
+    # pin assignment: folds must be a PARTITION of the data — recomputing
+    # the hash sort per filter could re-break ties differently and leak
+    # rows across folds
+    tagged = materialize(
+        tagged.withColumn(fold, (F.col(name) % k).cast("int")).drop(name))
     return [(tagged.filter(F.col(fold) != i).drop(fold),
              tagged.filter(F.col(fold) == i).drop(fold))
             for i in range(k)]

@@ -29,6 +29,8 @@ from collections.abc import Callable, Iterable, Mapping
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..dtutil import materialize
+
 # name -> fn(column, **opts) -> Column. Mirrors reductions.clj's reducer
 # constructors; each returns a Catalyst aggregate expression.
 _REDUCERS: dict[str, Callable[..., Column]] = {
@@ -406,13 +408,9 @@ def descriptive_stats(df: DataFrame, columns: Iterable[str] | None = None,
             groups.append([])
         groups[-1].extend(exprs)
     if need_order and len(groups) > 1:
-        # first/last rank by the mono-id; with the plan now FORKED across
-        # agg branches a nondeterministic upstream could assign different
-        # ids per branch — materialize once (EAGERLY: a lazy checkpoint
-        # materializes inside the forked action itself, where concurrent
-        # branch tasks on different executors could still race) so every
-        # branch sees the same row order
-        src = src.localCheckpoint(eager=True)
+        # first/last rank by the mono-id, and the agg branches fork: every
+        # branch must see the same ids
+        src = materialize(src)
     agg_row = src.agg(*groups[0])
     for g in groups[1:]:
         agg_row = agg_row.crossJoin(src.agg(*g))

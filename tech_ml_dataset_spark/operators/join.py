@@ -22,6 +22,8 @@ from collections.abc import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
+from ..dtutil import materialize
+
 
 def _normalize_keys(on) -> list[tuple[str, str]]:
     """Key spec -> [(left_key, right_key)]. Accepts "k", ("lk","rk"),
@@ -89,7 +91,7 @@ def join(left: DataFrame, right: DataFrame, on, how: str = "inner", *,
     if same_names and how not in ("left_semi", "left_anti"):
         # merge the duplicate key columns into one, like the name-based
         # path. For outer/right joins the key must COALESCE across sides —
-        # simply dropping the right key (the pre-r4 shape) blanked the key
+        # simply dropping the right key (an earlier shape) blanked the key
         # of right-only rows. coalesce keeps the matched-NULL case right
         # under null_equal (both sides NULL -> NULL).
         keeps_right_rows = how in ("outer", "full", "fullouter",
@@ -176,9 +178,9 @@ def left_join_asof(left: DataFrame, right: DataFrame, on: str, *,
       reference's abs-diff merge scan (join.clj:687-744, which advances
       past the earlier neighbor unless it is STRICTLY closer).
 
-    (r4 note: before round 4 the op named the mirrored relation
-    ``r.on OP l.on``; the mapping was flipped to reference parity —
-    callers migrating from TMD can keep their asof-op spelling.)
+    (An earlier version named the mirrored relation ``r.on OP l.on``; the
+    mapping was flipped to reference parity — callers migrating from TMD
+    can keep their asof-op spelling.)
 
     Spark-first implementation — the union+window trick (no Python, no
     per-key collect):
@@ -193,7 +195,7 @@ def left_join_asof(left: DataFrame, right: DataFrame, on: str, *,
     At scale this is one sort-merge pass per side — same asymptotics as the
     reference's merge-scan, but distributed by the ``by`` keys.
 
-    ``tolerance`` (r7, the pandas ``merge_asof`` lever; parity-plus — the
+    ``tolerance`` (the pandas ``merge_asof`` lever; parity-plus — the
     reference has none): a maximum allowed |l.on - r.on| distance. A
     match further than that is nulled out (the row keeps its left
     columns). Units: the axis's own units for numeric axes, MICROSECONDS
@@ -211,15 +213,11 @@ def left_join_asof(left: DataFrame, right: DataFrame, on: str, *,
         # the left columns themselves silently drops rows containing any
         # NULL (equality never matches) and cross-multiplies duplicate
         # left rows — so key on a generated row id instead. The id is a
-        # mono-id over a FORKED lineage (two asof passes), so checkpoint
-        # first — the _contiguous_index discipline.
+        # mono-id read by a FORKED lineage (two asof passes), so it is
+        # materialized first.
         rid = _free_name(list(left.columns) + list(right.columns), "__rid__")
-        # eager: a LAZY checkpoint materializes inside the same action that
-        # forks, so two branch tasks on different executors could compute a
-        # nondeterministic source partition concurrently and bind different
-        # ids before any cached block exists (review r3)
-        tagged = left.withColumn(rid, F.monotonically_increasing_id()) \
-                     .localCheckpoint(eager=True)
+        tagged = materialize(
+            left.withColumn(rid, F.monotonically_increasing_id()))
         prev = left_join_asof(tagged, right, on, by=by, asof_op=">=")
         nxt = left_join_asof(tagged, right, on, by=by, asof_op="<=")
         # pick per-row whichever matched value is closer on the axis
@@ -249,7 +247,7 @@ def left_join_asof(left: DataFrame, right: DataFrame, on: str, *,
     # right row even when its fields are NULL) and is filled as a unit:
     # filling each value column independently would stitch together a
     # composite "row" from DIFFERENT right rows whenever the true match
-    # holds a NULL in some value column (review r3).
+    # holds a NULL in some value column.
     rt = rt.withColumn("__rrow__", F.struct(
         F.col(on).alias("__r_on__"),
         *[F.col(f"`{c}`").alias(f"v{i}") for i, c in enumerate(rval_cols)]))
@@ -320,7 +318,7 @@ def _nearest_combine(left: DataFrame, prev: DataFrame, nxt: DataFrame,
     nx = nxt.select(rid, *[F.col(f"`{c}`").alias(na[c]) for c in val_cols])
     j = p.join(nx, rid)
     # NTZ-safe numeric view of the axis (TIMESTAMP_NTZ forbids direct
-    # numeric casts — dtutil module docstring; r1 hard-error class)
+    # numeric casts — dtutil module docstring)
     from ..dtutil import axis_double
     ax_on, ax_p, ax_n = (axis_double(j, c) for c in (on, pa[axis], na[axis]))
     d_p = F.abs(ax_on - ax_p)

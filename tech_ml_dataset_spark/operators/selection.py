@@ -19,6 +19,8 @@ from collections.abc import Callable, Iterable, Mapping
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
+from ..dtutil import materialize
+
 IDX_COL = "__row_idx__"
 
 
@@ -33,8 +35,7 @@ def _free_name(cols, base: str) -> str:
     return f"{base}{i}"
 
 
-def _contiguous_index(df: DataFrame, order_within, name: str, *,
-                      materialize: bool = True) -> DataFrame:
+def _contiguous_index(df: DataFrame, order_within, name: str) -> DataFrame:
     """Contiguous 0-based global index WITHOUT a single-partition window.
 
     ``row_number() over (ORDER BY ...)`` with no partitioning funnels every
@@ -53,7 +54,7 @@ def _contiguous_index(df: DataFrame, order_within, name: str, *,
     across the cluster; the only single-partition window runs over ≤
     #partitions rows.
 
-    The r11 shape numbers rows from ``monotonically_increasing_id``'s bit
+    This shape numbers rows from ``monotonically_increasing_id``'s bit
     layout (pid = id >> 33, in-partition position = id & (2^33-1) — the
     documented contract of the expression) after an in-partition sort,
     instead of a ``row_number() OVER (PARTITION BY pid ORDER BY ...)``
@@ -66,18 +67,15 @@ def _contiguous_index(df: DataFrame, order_within, name: str, *,
     past the checkpoint, only the broadcast-offset join. (2^33 rows per
     partition is monotonically_increasing_id's own documented bound.)
 
-    The plan FORKS at the tagged frame (offsets branch + data branch), so
-    by default the frame is materialized ONCE via ``localCheckpoint`` —
-    otherwise each branch re-executes the upstream lineage, and a
-    nondeterministic upstream (range-exchange bound sampling, round-robin
-    repartition, ``sample``) can give the branches DIFFERENT partition
-    contents, silently duplicating/skipping index values. The checkpoint
-    stores each partition's blocks on first computation and truncates
-    lineage, so both branches read identical blocks; losing an executor
-    then fails the job loudly instead of corrupting indices. Callers that
-    guarantee a deterministic single-pass source (a fresh file scan with no
-    shuffle above it) may pass ``materialize=False`` to keep the
-    zero-materialization in-plan shape."""
+    The plan FORKS at the tagged frame (offsets branch + data branch), and
+    the frame holds mono ids, so it is materialized ONCE, eagerly
+    (:func:`dtutil.materialize`): otherwise each branch re-executes the
+    upstream lineage, and a nondeterministic upstream (range-exchange
+    bound sampling, round-robin repartition, ``sample``) can give the
+    branches DIFFERENT partition contents, silently duplicating/skipping
+    index values.
+
+    ``order_within=None`` numbers each partition in its arrival order."""
     pid = _free_name(df.columns, "__pid__")
     off = _free_name(df.columns, "__off__")
     mono = _free_name(df.columns, "__mono__")
@@ -87,14 +85,7 @@ def _contiguous_index(df: DataFrame, order_within, name: str, *,
         df = df.sortWithinPartitions(*order_cols)
     # the mono projection is nondeterministic, so Catalyst will not push
     # it below the sort; it numbers the SORTED partition stream
-    tagged = df.withColumn(mono, F.monotonically_increasing_id())
-    if materialize:
-        # eager: the offsets branch and the data branch fork inside ONE
-        # action; a lazy checkpoint would let tasks of both branches
-        # compute an uncached nondeterministic partition concurrently on
-        # different executors and disagree (review r3) — materialize as
-        # its own job first
-        tagged = tagged.localCheckpoint(eager=True)
+    tagged = materialize(df.withColumn(mono, F.monotonically_increasing_id()))
     tagged = tagged.withColumn(pid, F.shiftrightunsigned(mono, 33)
                                .cast("int"))
     woff = W.orderBy(pid).rowsBetween(W.unboundedPreceding, -1)
@@ -135,8 +126,7 @@ def contiguous_scan_index(df: DataFrame, name: str = IDX_COL) -> DataFrame:
     within partition + broadcast offsets. The input is materialized once
     (see ``_contiguous_index``) so the two plan branches agree even when
     the input recomputes nondeterministically."""
-    tagged = df.withColumn(name, F.monotonically_increasing_id())
-    return _contiguous_index(tagged, [name], name)
+    return _contiguous_index(df, None, name)
 
 
 def select_columns(df: DataFrame, cols) -> DataFrame:
@@ -152,7 +142,7 @@ def select_columns(df: DataFrame, cols) -> DataFrame:
     cols = [cols] if isinstance(cols, str) else list(cols)
     # dedupe STRING names only (first position wins); Column objects are
     # unhashable (pyspark defines __eq__ without __hash__) and pass
-    # through untouched (r5 review)
+    # through untouched
     seen, out = set(), []
     for c in cols:
         if isinstance(c, str):
@@ -185,7 +175,7 @@ def rename_columns(df: DataFrame, mapping) -> DataFrame:
     mapping = list(mapping)
     if mapping and all(isinstance(x, (tuple, list)) and len(x) == 2
                        for x in mapping):
-        # (old, new) pair sequence — the pre-r5 dict(mapping) form
+        # (old, new) pair sequence, read as dict(mapping)
         return df.withColumnsRenamed(dict(mapping))
     names = list(mapping)
     if len(names) != len(df.columns):
@@ -543,7 +533,7 @@ def append_columns(df: DataFrame, other: DataFrame, *, order_by=None,
     ``other_order_by`` for an explicit total order) and join on it.
     Column-name collisions raise — the reference would produce a
     duplicate-named dataset, which Spark cannot represent. Row-count
-    mismatches raise too (r5 review: an inner index join would silently
+    mismatches raise too (an inner index join would silently
     TRUNCATE to the shorter side — data loss, where the reference errors
     on mismatched column lengths). The check costs two count actions;
     this is a bounded-convenience API, not a scan path."""

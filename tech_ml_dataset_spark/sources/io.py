@@ -226,13 +226,14 @@ class _Learned(NamedTuple):
     header: tuple[str, ...] | None
 
 
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 # Session confs that change the schema Spark infers from the same files.
 _INFERENCE_CONFS = (
     "spark.sql.caseSensitive",
     "spark.sql.timestampType",
     "spark.sql.legacy.timeParserPolicy",
     "spark.sql.sources.partitionColumnTypeInference.enabled",
-    "spark.sql.legacy.parquet.nanosAsLong",
+    _NANOS_AS_LONG,
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
@@ -267,13 +268,15 @@ def _input_files(path, fmt: str) -> list[tuple[str, os.stat_result]] | None:
         return None
 
 
-def _schema_key(spark, fmt, opts, files) -> tuple:
+def _schema_key(spark, fmt, opts, files, confs) -> tuple:
     """Cache key of one read: the format, the sorted reader options, the
     ``(file, size, mtime_ns)`` fingerprint of the input and the values of
-    the session confs that change inference."""
+    the confs that change inference, as the session sees them with
+    ``confs`` on top."""
     return (fmt, tuple(sorted((k, str(v)) for k, v in opts.items())),
             tuple((p, st.st_size, st.st_mtime_ns) for p, st in files),
-            tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS))
+            tuple(confs.get(c, spark.conf.get(c, None))
+                  for c in _INFERENCE_CONFS))
 
 
 def _nanos_columns(files, path) -> tuple[str, ...]:
@@ -300,23 +303,32 @@ def _load_inferred(spark, fmt: str, opts: dict, path,
     :func:`_schema_key` and later reads of the unchanged input load with
     ``reader.schema(cached)``: no job, the same DataFrame. Inputs
     :func:`_input_files` does not list bypass the cache. Parquet reads
-    note the input's nanosecond columns; ``nanos_as_long`` turns on
-    ``spark.sql.legacy.parquet.nanosAsLong`` when there are any."""
+    note the input's nanosecond columns; with ``nanos_as_long`` an input
+    that has any loads with ``spark.sql.legacy.parquet.nanosAsLong`` set
+    on a clone of the session. The scan reads the conf from the session
+    that built its relation, so the frame, rebound to ``spark``, reads the
+    columns as longs while ``spark`` itself never sees the conf."""
+    confs = {_NANOS_AS_LONG: "true"} if nanos_as_long else {}
     files = _input_files(path, fmt)
-    key = None if files is None else _schema_key(spark, fmt, opts, files)
-    reader = spark.read.format(fmt).options(**opts)
+    key = None if files is None \
+        else _schema_key(spark, fmt, opts, files, confs)
     with _schema_cache_lock:
         learned = _schema_cache.get(key)
         if learned is not None:
             _schema_cache.move_to_end(key)
+    ns_cols = learned.ns_cols if learned is not None \
+        else _nanos_columns(files or (), path) if fmt == "parquet" else ()
+    on_clone = bool(ns_cols) and nanos_as_long
+    session = SparkSession(spark.sparkContext, _clone_session(spark, confs)) \
+        if on_clone else spark
+    reader = session.read.format(fmt).options(**opts)
     if learned is not None:
-        return reader.schema(learned.schema).load(path), learned
-    ns_cols = _nanos_columns(files or (), path) if fmt == "parquet" else ()
-    if ns_cols and nanos_as_long:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        if key is not None:  # the schema below is inferred under it
-            key = _schema_key(spark, fmt, opts, files)
+        reader = reader.schema(learned.schema)
     df = reader.load(path)
+    if on_clone:
+        df = _rebind(df, spark)
+    if learned is not None:
+        return df, learned
     header = None
     if fmt == "csv" and str(opts.get("header", "")).lower() == "true":
         header = _peek_csv_header(spark, path, opts, 0)
@@ -1240,6 +1252,23 @@ def merge_upsert(spark: SparkSession, target_path: str, source: DataFrame,
     return {k: stats[k] for k in ("matched", "inserted", "rows_after")}
 
 
+def _clone_session(spark: SparkSession, confs: Mapping):
+    """A throwaway JVM clone of ``spark``'s session: same SparkContext
+    and catalog, a copy of every SQL conf at call time, plus ``confs``."""
+    clone = spark._jsparkSession.cloneSession()
+    for key, value in confs.items():
+        clone.conf().set(key, value)
+    return clone
+
+
+def _rebind(df: DataFrame, spark: SparkSession, jsession=None) -> DataFrame:
+    """``df``'s logical plan as a frame of ``jsession`` (default:
+    ``spark``'s own JVM session), seen from Python through ``spark``."""
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        jsession or spark._jsparkSession, df._jdf.logicalPlan())
+    return DataFrame(jdf, spark)
+
+
 def _observe_on_clone(df: DataFrame, *metrics, confs=None):
     """``(df.observe(obs, *metrics), obs)`` with ``df`` rebound to a
     throwaway clone of its session: same SparkContext and catalog, a
@@ -1252,13 +1281,9 @@ def _observe_on_clone(df: DataFrame, *metrics, confs=None):
     from pyspark.sql import Observation
 
     s = df.sparkSession
-    clone = s._jsparkSession.cloneSession()
-    for key, value in (confs or {}).items():
-        clone.conf().set(key, value)
-    jdf = s._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-        clone, df._jdf.logicalPlan())
+    clone = _rebind(df, s, _clone_session(s, confs or {}))
     obs = Observation()
-    return DataFrame(jdf, s).observe(obs, *metrics), obs
+    return clone.observe(obs, *metrics), obs
 
 
 def _merge_observed(spark: SparkSession, target_path: str,

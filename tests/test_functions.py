@@ -1154,6 +1154,33 @@ def test_kneser_ney_nondegenerate_vector(spark):
     assert math.isclose(out[2], -math.log2(0.5), abs_tol=1e-9)
 
 
+@pytest.mark.parametrize("score", [
+    lambda df, **kw: txt.unigram_logprob_score(df, **kw),
+    lambda df, **kw: txt.bigram_logprob_score(df, **kw),
+    lambda df, **kw: txt.kneser_ney_bigram_score(df, **kw),
+    lambda df, **kw: txt.dsir_logweights(df, df.filter(F.col("doc_id") < 3),
+                                         k=2, **kw),
+], ids=["unigram", "bigram", "kneser_ney", "dsir"])
+def test_lm_scorer_shuffled_fallback_matches_broadcast(spark, score):
+    """Above ``broadcast_vocab_max`` a corpus LM scorer warns and joins its
+    vocab tables shuffled; the scores equal the broadcast run's."""
+    df = spark.createDataFrame(
+        [(1, "the cat sat on the mat"), (2, "the dog sat on the log"),
+         (3, "a cat and a dog"), (4, "x"), (5, None)],
+        "doc_id int, text string")
+
+    def rows(out):
+        return sorted(tuple(round(v, 9) if isinstance(v, float) else v
+                            for v in r) for r in out.collect())
+
+    want = rows(score(df))
+    with pytest.warns(RuntimeWarning, match="broadcast_vocab_max=0"):
+        got = score(df, broadcast_vocab_max=0)
+    assert "BroadcastHashJoin" not in got._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert rows(got) == want
+
+
 def test_token_budget_mix(spark):
     """r10: token-budget source mixing — per source, the md5-priority
     prefix whose inclusive running token sum fits the budget

@@ -738,3 +738,34 @@ def test_snapshot_normalise_masks_lambda_ids():
             == snap.normalise(site.format("<unknown>"), "/x")
             == ["MapPartitionsRDD[n] at localCheckpoint at <reflect>:0, "
                 "ExistingRDD"])
+
+
+def test_materialize_is_the_only_checkpoint_call():
+    """Every checkpoint in the package and the registry goes through
+    ``dtutil.materialize``, the one place that decides where and when an
+    intermediate is kept (no Spark)."""
+    import ast
+    import glob
+    import os
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    call = re.compile(r"localCheckpoint\(|\.checkpoint\(")
+    dtutil = os.path.join(root, "tech_ml_dataset_spark", "dtutil.py")
+    with open(dtutil) as f:
+        (fn,) = [n for n in ast.parse(f.read()).body
+                 if isinstance(n, ast.FunctionDef) and n.name == "materialize"]
+    stray, inside = [], 0
+    for pkg in ("tech_ml_dataset_spark", "registry"):
+        for path in glob.glob(os.path.join(root, pkg, "**", "*.py"),
+                              recursive=True):
+            with open(path) as f:
+                for no, line in enumerate(f, 1):
+                    if not call.search(line):
+                        continue
+                    if path == dtutil and fn.lineno <= no <= fn.end_lineno:
+                        inside += 1
+                    else:
+                        stray.append(f"{os.path.relpath(path, root)}:{no}")
+    assert stray == []
+    assert inside == 2  # the reliable and the local branch

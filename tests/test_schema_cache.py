@@ -120,3 +120,28 @@ def test_partitioned_nanos_table_reads(spark, tmp_path):
     finally:
         if before is not None:
             spark.conf.set(key, before)
+
+
+def test_nanos_read_leaves_the_session_conf_alone(spark, count_jobs,
+                                                  tmp_path):
+    """A timestamp[ns] table loads on a session clone that carries
+    ``nanosAsLong``: the caller's session keeps its own value of the key,
+    and a repeat read still launches no job."""
+    p = str(tmp_path / "ns.parquet")
+    ts = pa.array([1_700_000_000_123_456_789], pa.timestamp("ns"))
+    pq.write_table(pa.table({"ts": ts}), p)
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        first = read_parquet(spark, p)
+        assert spark.conf.get(key, None) is None
+        second, n_second = count_jobs(lambda: read_parquet(spark, p))
+        assert n_second == 0
+        for df in (first, second):
+            assert [r.us for r in df.selectExpr("unix_micros(ts) AS us")
+                    .collect()] == [1_700_000_000_123_456]
+        assert spark.conf.get(key, None) is None
+    finally:
+        if before is not None:
+            spark.conf.set(key, before)

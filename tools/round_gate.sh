@@ -7,10 +7,10 @@ cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.01}"
 
 echo "== 1/8 registry structure, driver window, snapshot normalisation,"
-echo "   class-data-sharing archive"
+echo "   the one checkpoint call, class-data-sharing archive"
 echo "   (no Spark, seconds)"
 python -m pytest tests/test_plans.py tests/test_session.py -q -p no:cacheprovider \
-    -k "test_registry_structure or test_driver_window_integrity or test_snapshot_normalise or test_zip_importer or (test_cds and not test_cds_driver)" \
+    -k "test_registry_structure or test_driver_window_integrity or test_snapshot_normalise or test_materialize_is_the_only or test_zip_importer or (test_cds and not test_cds_driver)" \
     2>&1 | tail -1
 
 echo "== 2/8 Python worker daemon, archive use by driver processes, then sinks:"
