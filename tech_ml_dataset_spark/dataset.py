@@ -477,12 +477,13 @@ class Dataset:
         """Reference ``clone`` (quick-reference "Forcing Lazy Evaluation"):
         realize every pending lazy transformation and return a dataset
         whose reads no longer re-run the producing computation. The Spark
-        analog is an eager checkpoint (:func:`dtutil.materialize`): the
-        plan executes ONCE, partitions persist executor-side (no driver
-        collect), or as files under the checkpoint directory when one is
-        set, and the returned dataset's lineage is truncated to them —
-        downstream iterative reuse (the reference's motivating case)
-        reads stored rows instead of replaying the plan."""
+        analog is an eager local checkpoint (:func:`dtutil.materialize`):
+        the plan executes ONCE, partitions persist executor-side (no driver
+        collect), and the returned dataset's lineage is truncated to the
+        stored blocks — downstream iterative reuse (the reference's
+        motivating case) reads blocks instead of replaying the plan. A
+        lost executor's blocks are not recomputed: the reading job
+        fails."""
         return self._wrap(materialize(self.df))
 
     # ---- display -------------------------------------------------------------------

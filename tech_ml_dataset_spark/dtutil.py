@@ -134,12 +134,9 @@ def materialize(df: DataFrame, *, eager: bool = True) -> DataFrame:
     """Compute ``df`` once and return a frame that reads the stored rows,
     its lineage truncated, so later reads do not re-run the plan.
 
-    Where the rows are kept: when the SparkContext has a checkpoint
-    directory (``spark.checkpoint.dir`` at launch, or ``setCheckpointDir``)
-    they are written there as a reliable checkpoint, which survives the
-    loss of the executor that computed them; otherwise they are a local
-    checkpoint in executor block storage, where a lost block fails the
-    reading job instead of being recomputed.
+    Where the rows are kept: a local checkpoint in executor block
+    storage. A lost block fails the reading job instead of being
+    recomputed; the engine writes no files for its intermediates.
 
     When: ``eager=True`` computes the frame at the call, as jobs of its
     own. Ask for it when either holds:
@@ -157,10 +154,5 @@ def materialize(df: DataFrame, *, eager: bool = True) -> DataFrame:
     (the sampling job of a sort, a totals ``collect``): that job stores
     the rows and later jobs read them, which saves the job an eager
     checkpoint runs to fill its blocks (under AQE a shuffle upstream
-    still runs its map stage at the call). A reliable checkpoint is
-    always eager: a lazy one writes its files in a second job after its
-    first reader, which recomputes the input (a Python UDF upstream runs
-    twice per row)."""
-    if df.sparkSession.sparkContext.getCheckpointDir():
-        return df.checkpoint(eager=True)
+    still runs its map stage at the call)."""
     return df.localCheckpoint(eager=eager)

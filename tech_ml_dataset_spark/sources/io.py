@@ -307,7 +307,11 @@ def _load_inferred(spark, fmt: str, opts: dict, path,
     that has any loads with ``spark.sql.legacy.parquet.nanosAsLong`` set
     on a clone of the session. The scan reads the conf from the session
     that built its relation, so the frame, rebound to ``spark``, reads the
-    columns as longs while ``spark`` itself never sees the conf."""
+    columns as longs while ``spark`` itself never sees the conf. The
+    same holds for every other file-scan conf (``maxPartitionBytes``, the
+    vectorized reader, filter pushdown, the hadoop conf): for such a
+    frame they are fixed when the read is made, and only planner and
+    optimizer confs follow later changes to ``spark``."""
     confs = {_NANOS_AS_LONG: "true"} if nanos_as_long else {}
     files = _input_files(path, fmt)
     key = None if files is None \

@@ -1,98 +1,26 @@
-"""``dtutil.materialize`` keeps an intermediate in executor storage by
-default and under the checkpoint directory when the SparkContext has one.
-SparkContext has no public way to unset a checkpoint directory, so the
-reliable branch runs in a driver process of its own; the test session,
-which has none, gives the rows to compare with."""
+"""``dtutil.materialize`` computes a frame once: an eager request at the
+call, a lazy one in its first reader, and later readers read the stored
+blocks."""
 
-import glob
-import json
-import os
-import subprocess
-import sys
-from urllib.parse import urlparse
-
+import pytest
 from pyspark.sql import functions as F
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-TESTS = os.path.join(REPO, "tests")
 
-
-def _workload(spark):
-    """Rows of ``Dataset.clone()``, ``with_row_index(order_by=...)`` and a
-    lazy ``materialize`` read twice, the Python UDF calls upstream of the
-    lazy request, and the checkpoint files under the checkpoint directory
-    after each step (None without a directory)."""
+@pytest.mark.parametrize("eager", [True, False])
+def test_materialize_runs_the_plan_once(spark, eager):
     from tech_ml_dataset_spark import dtutil
-    from tech_ml_dataset_spark.dataset import Dataset
-    from tech_ml_dataset_spark.operators.selection import with_row_index
 
-    sc = spark.sparkContext
-    ckpt = sc.getCheckpointDir()
-
-    def files():
-        if ckpt is None:
-            return None
-        return len(glob.glob(os.path.join(urlparse(ckpt).path, "rdd-*",
-                                          "part-*")))
-
-    base = spark.range(0, 400, numPartitions=4) \
-        .select(F.col("id"), (F.col("id") * 7 % 400).alias("k"))
-    out = {"files": [files()]}
-    cloned = Dataset(base).clone().df
-    out["files"].append(files())
-    out["clone"] = sorted(map(list, cloned.collect()))
-    indexed = with_row_index(base.repartition(3), order_by="k", name="ix")
-    out["files"].append(files())
-    out["index"] = sorted(map(list, indexed.collect()))
-
-    calls = sc.accumulator(0)
+    calls = spark.sparkContext.accumulator(0)
 
     @F.udf("long")
     def plus_one(x):
         calls.add(1)
         return x + 1
 
-    lazy = dtutil.materialize(base.select(plus_one("id").alias("v")),
-                              eager=False)
-    out["lazy"] = sorted(r.v for r in lazy.collect())
-    out["lazy_sum"] = lazy.agg(F.sum("v")).first()[0]
-    out["files"].append(files())
-    out["udf_calls"] = calls.value
-    return out
-
-
-_CHILD = """
-import json, sys
-sys.path[:0] = [{repo!r}, {tests!r}]
-from tech_ml_dataset_spark import get_spark
-from test_materialize import _workload
-spark = get_spark("ckpt", master="local[2]", extra_conf={{
-    "spark.driver.memory": "1g", "spark.checkpoint.dir": {ckpt!r}}})
-print("OUT", json.dumps(_workload(spark)))
-spark.stop()
-"""
-
-
-def test_reliable_checkpoint_under_a_checkpoint_dir(spark, tmp_path):
-    ckpt = str(tmp_path / "ckpt")
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    proc = subprocess.run(
-        [sys.executable, "-c",
-         _CHILD.format(repo=REPO, tests=TESTS, ckpt=ckpt)],
-        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300)
-    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("OUT ")]
-    assert lines, proc.stderr[-2000:]
-    got = json.loads(lines[0][4:])
-    want = _workload(spark)
-
-    # each step writes checkpoint files: one part file per partition
-    files = got.pop("files")
-    assert files[0] == 0
-    assert files[0] < files[1] < files[2] < files[3], files
-    assert want.pop("files") == [None] * 4
-    # a lazy request is served eagerly: the UDF ran once per row, not once
-    # more for a file write after the first reader
-    assert got["udf_calls"] == want["udf_calls"] == 400
-    assert got == want
-    assert want["index"] == sorted([i, (i * 7) % 400, (i * 7) % 400]
-                                   for i in range(400))
+    base = spark.range(0, 400, numPartitions=4)
+    stored = dtutil.materialize(base.select(plus_one("id").alias("v")),
+                                eager=eager)
+    assert calls.value == (400 if eager else 0)
+    assert sorted(r.v for r in stored.collect()) == list(range(1, 401))
+    assert stored.agg(F.sum("v")).first()[0] == 400 * 401 // 2
+    assert calls.value == 400

@@ -768,4 +768,4 @@ def test_materialize_is_the_only_checkpoint_call():
                     else:
                         stray.append(f"{os.path.relpath(path, root)}:{no}")
     assert stray == []
-    assert inside == 2  # the reliable and the local branch
+    assert inside == 1
