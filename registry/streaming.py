@@ -1,4 +1,5 @@
-"""Streaming queries: event-time windows and micro-batch sink replays."""
+"""Streaming queries: event-time windows and micro-batch sinks driven by a
+loop over fixed batches."""
 
 from __future__ import annotations
 
@@ -22,17 +23,15 @@ from tech_ml_dataset_spark.streaming import windows as sw
             ORDER BY doc_id
         """)
 def streaming_text_dedup_replay_docs(spark, sf_dir):
-    """THIRD streaming surface in the oracle gate (completes the sink
-    family: media fingerprints, CDC upsert, now crawl text dedup):
-    drive streaming/windows.py's text_dedup_batch_apply — the exact
+    """The crawl text-dedup sink in the oracle gate: a loop calls
+    streaming/windows.py's text_dedup_batch_apply — the exact
     foreachBatch body, incl. the exact incremental_dedup history pass
-    (semi + anti join on md5 fingerprints) — through replay_text_dedup
-    at fixed boundaries (batch = doc_id // 50 over doc_id < 200) with a
-    colliding text law ('txt ' || doc_id % 45). Accept law closed form:
-    each distinct text accepted exactly once, in its earliest batch, by
-    the exact_dedup min-id survivor — since batch index grows with
-    doc_id, that is simply the minimum doc_id of the class."""
-    from tech_ml_dataset_spark.streaming.windows import replay_text_dedup
+    (semi + anti join on md5 fingerprints) — at fixed boundaries
+    (batch = doc_id // 50 over doc_id < 200) with a colliding text law
+    ('txt ' || doc_id % 45). Accept law closed form: each distinct text
+    accepted exactly once, in its earliest batch, by the exact_dedup
+    min-id survivor — since batch index grows with doc_id, that is
+    simply the minimum doc_id of the class."""
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200) \
         .select("doc_id",
@@ -43,7 +42,8 @@ def streaming_text_dedup_replay_docs(spark, sf_dir):
                            & (F.col("doc_id") < (i + 1) * 50))
                for i in range(4)]
     d = _scratch_dir("spark_graft_txtdedup_")
-    replay_text_dedup(batches, d)
+    for i, b in enumerate(batches):
+        sw.text_dedup_batch_apply(b, i, d)
     out = spark.read.parquet(d)
     return out.select("doc_id", "text",
                       F.col("batch_id").cast("long").alias("batch_id")) \
@@ -64,19 +64,15 @@ def streaming_text_dedup_replay_docs(spark, sf_dir):
             ORDER BY o_orderkey
         """)
 def streaming_upsert_replay_orders(spark, sf_dir):
-    """STREAMING CDC upsert promoted to the oracle gate (the second
-    streaming surface after the media-dedup sink, same two-arm
-    pattern): drive streaming/windows.py's upsert_batch_apply — the
-    exact function the production sink's foreachBatch invokes — through
-    replay_upsert at FIXED batch boundaries. Three change batches over
-    the orders slice: batch b carries keys with o_orderkey ≡ b (mod 2)
-    and value o_totalprice*(b+1), so even keys are written in batches 0
-    and 2 (last write wins → x3) and odd keys only in batch 1 (→ x2) —
-    a closed-form merge law the oracle replays, proving the
-    copy-on-write MERGE (update + insert arms, the two-rename swap)
-    end-to-end across batches."""
-    from tech_ml_dataset_spark.streaming.windows import replay_upsert
-
+    """The streaming CDC upsert sink in the oracle gate: a loop calls
+    streaming/windows.py's upsert_batch_apply — the exact function the
+    production sink's foreachBatch invokes — at FIXED batch boundaries.
+    Three change batches over the orders slice: batch b carries keys
+    with o_orderkey ≡ b (mod 2) and value o_totalprice*(b+1), so even
+    keys are written in batches 0 and 2 (last write wins → x3) and odd
+    keys only in batch 1 (→ x2) — a closed-form merge law the oracle
+    replays, proving the copy-on-write MERGE (update + insert arms, the
+    two-rename swap) end-to-end across batches."""
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 600) \
         .select("o_orderkey", "o_totalprice")
     batches = [
@@ -88,7 +84,9 @@ def streaming_upsert_replay_orders(spark, sf_dir):
     ]
     d = _scratch_dir("spark_graft_upsert_")
     target = d + "/target"
-    replay_upsert(batches, target, "o_orderkey", sequence_by="seq")
+    for i, b in enumerate(batches):
+        sw.upsert_batch_apply(b, target, "o_orderkey", sequence_by="seq",
+                              batch_id=i)
     back = spark.read.parquet(target)
     return back.select("o_orderkey", _r4b(F.col("val")).alias("val"),
                        F.col("seq").cast("long").alias("last_batch")) \
@@ -113,11 +111,10 @@ def streaming_upsert_replay_orders(spark, sf_dir):
             ORDER BY doc_id
         """)
 def streaming_fp_dedup_replay_docs(spark, sf_dir):
-    """STREAMING media-dedup sink promoted to the oracle gate (r6
-    verdict #9): drive streaming/windows.py's
-    fingerprint_dedup_batch_apply — the exact function the production
-    sink's foreachBatch invokes — through replay_fingerprint_dedup at
-    FIXED micro-batch boundaries (batch = doc_id // 50, four batches of
+    """The streaming media-dedup sink in the oracle gate: a loop calls
+    streaming/windows.py's fingerprint_dedup_batch_apply — the exact
+    function the production sink's foreachBatch invokes — at FIXED
+    micro-batch boundaries (batch = doc_id // 50, four batches of
     the doc_id < 200 slice), with a colliding deterministic fingerprint
     law fp = doc_id % 37 (distance-0 exact matching). The sink's accept
     law then has a closed form the oracle replays: each fingerprint is
@@ -128,16 +125,14 @@ def streaming_fp_dedup_replay_docs(spark, sf_dir):
     The production streaming arm (real readStream + foreachBatch +
     at-least-once replay idempotency) keeps its e2e pytest evidence —
     the same two-arm pattern as :abb and the reservoir."""
-    from tech_ml_dataset_spark.streaming.windows import \
-        replay_fingerprint_dedup
-
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200) \
         .select("doc_id", (F.col("doc_id") % 37).cast("long").alias("fp"))
     batches = [docs.filter((F.col("doc_id") >= i * 50)
                            & (F.col("doc_id") < (i + 1) * 50))
                for i in range(4)]
     path = _scratch_dir("spark_graft_stream_fp_")
-    replay_fingerprint_dedup(batches, path, fp_col="fp")
+    for i, b in enumerate(batches):
+        sw.fingerprint_dedup_batch_apply(b, i, path, fp_col="fp")
     out = spark.read.parquet(path)
     return out.select("doc_id", "fp",
                       F.col("batch_id").cast("long").alias("batch_id")) \

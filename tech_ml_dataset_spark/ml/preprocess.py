@@ -212,11 +212,14 @@ def fit_std_scale(df: DataFrame, columns: Sequence[str]) -> dict:
 
 
 def transform_std_scale(df: DataFrame, fitted: dict) -> DataFrame:
-    """``transform-std-scale`` (math.clj:262): (x - mean) / std."""
+    """``transform-std-scale`` (math.clj:262): (x - centre) / scale for
+    each fitted column — mean and std from :func:`fit_std_scale`, median
+    and IQR from :func:`fit_robust_scale` (as ``transform_robust_scale``).
+    A zero or NULL scale (a constant column) divides by 1."""
     out = df
-    for c, (mean, std) in fitted["stats"].items():
-        denom = std if std not in (None, 0.0) else 1.0
-        out = out.withColumn(c, (F.col(c) - F.lit(mean)) / F.lit(denom))
+    for c, (centre, scale) in fitted["stats"].items():
+        denom = scale if scale not in (None, 0.0) else 1.0
+        out = out.withColumn(c, (F.col(c) - F.lit(centre)) / F.lit(denom))
     return out
 
 
@@ -266,13 +269,8 @@ def fit_robust_scale(df: DataFrame, columns: Sequence[str], *,
     return {"columns": list(columns), "stats": stats}
 
 
-def transform_robust_scale(df: DataFrame, fitted: dict) -> DataFrame:
-    """(x - median) / IQR; zero/NULL IQR (constant column) divides by 1."""
-    out = df
-    for c, (med, iqr) in fitted["stats"].items():
-        denom = iqr if iqr not in (None, 0.0) else 1.0
-        out = out.withColumn(c, (F.col(c) - F.lit(med)) / F.lit(denom))
-    return out
+# (x - median) / IQR: the same centre-and-scale transform
+transform_robust_scale = transform_std_scale
 
 
 def bucketize(df: DataFrame, colname: str, splits: Sequence[float], *,

@@ -22,7 +22,7 @@ from collections import OrderedDict
 from collections.abc import Iterable, Mapping
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 from ._dataset import list_files, scan_units, write_parts
@@ -226,14 +226,14 @@ class _Learned(NamedTuple):
     header: tuple[str, ...] | None
 
 
-_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
-# Session confs that change the schema Spark infers from the same files.
+# Session confs that change the schema Spark infers from the same files
+# (``nanosAsLong`` is not one: every parquet read sets it where it
+# matters, see :func:`_load_inferred`).
 _INFERENCE_CONFS = (
     "spark.sql.caseSensitive",
     "spark.sql.timestampType",
     "spark.sql.legacy.timeParserPolicy",
     "spark.sql.sources.partitionColumnTypeInference.enabled",
-    _NANOS_AS_LONG,
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
@@ -268,33 +268,34 @@ def _input_files(path, fmt: str) -> list[tuple[str, os.stat_result]] | None:
         return None
 
 
-def _schema_key(spark, fmt, opts, files, confs) -> tuple:
+def _schema_key(spark, fmt, opts, files) -> tuple:
     """Cache key of one read: the format, the sorted reader options, the
-    ``(file, size, mtime_ns)`` fingerprint of the input and the values of
-    the confs that change inference, as the session sees them with
-    ``confs`` on top."""
+    ``(file, size, mtime_ns)`` fingerprint of the input and the session's
+    values of the confs that change inference."""
     return (fmt, tuple(sorted((k, str(v)) for k, v in opts.items())),
             tuple((p, st.st_size, st.st_mtime_ns) for p, st in files),
-            tuple(confs.get(c, spark.conf.get(c, None))
-                  for c in _INFERENCE_CONFS))
+            tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS))
 
 
 def _nanos_columns(files, path) -> tuple[str, ...]:
     """TIMESTAMP(NANOS) columns of a parquet input, from the footer of its
-    first data file (driver-side metadata only, no data read)."""
+    first data file (driver-side metadata only, no data read). INT96
+    columns (Spark's default timestamp encoding) are not nanosecond
+    columns: Spark reads them as timestamps, and pyarrow would report
+    them as ``timestamp[ns]`` unless told otherwise."""
     target = next((p for p, _ in files
                    if not os.path.basename(p).startswith("_")), path)
     try:
         import pyarrow.parquet as pq
-        schema = pq.read_schema(target)
+        with pq.ParquetFile(target, coerce_int96_timestamp_unit="us") as pf:
+            schema = pf.schema_arrow
     except Exception:
         return ()
     return tuple(f.name for f in schema
                  if str(f.type).startswith("timestamp[ns"))
 
 
-def _load_inferred(spark, fmt: str, opts: dict, path,
-                   *, nanos_as_long: bool = False
+def _load_inferred(spark, fmt: str, opts: dict, path
                    ) -> tuple[DataFrame, _Learned]:
     """``spark.read.format(fmt).options(**opts).load(path)`` with the
     schema inferred once per input. Inference is a Spark job for parquet
@@ -302,42 +303,49 @@ def _load_inferred(spark, fmt: str, opts: dict, path,
     read of an input stores what it learned (:class:`_Learned`) under
     :func:`_schema_key` and later reads of the unchanged input load with
     ``reader.schema(cached)``: no job, the same DataFrame. Inputs
-    :func:`_input_files` does not list bypass the cache. Parquet reads
-    note the input's nanosecond columns; with ``nanos_as_long`` an input
-    that has any loads with ``spark.sql.legacy.parquet.nanosAsLong`` set
-    on a clone of the session. The scan reads the conf from the session
-    that built its relation, so the frame, rebound to ``spark``, reads the
-    columns as longs while ``spark`` itself never sees the conf. The
-    same holds for every other file-scan conf (``maxPartitionBytes``, the
-    vectorized reader, filter pushdown, the hadoop conf): for such a
-    frame they are fixed when the read is made, and only planner and
-    optimizer confs follow later changes to ``spark``."""
-    confs = {_NANOS_AS_LONG: "true"} if nanos_as_long else {}
+    :func:`_input_files` does not list bypass the cache.
+
+    Spark's TimestampType is microseconds and its parquet reader rejects
+    TIMESTAMP(NANOS) columns outright. A parquet input that has any
+    (found from the footer of its first data file) loads with
+    ``spark.sql.legacy.parquet.nanosAsLong`` set on a clone of the
+    session, and each such column is truncated ns -> us with integer
+    division (plain ``/`` would round-trip through double and lose
+    precision at 1e18; truncation matches DuckDB, whose TIMESTAMP is also
+    us). The scan reads the conf from the session that built its
+    relation, so the frame, rebound to ``spark``, reads the columns as
+    longs while ``spark`` itself never sees the conf. The same holds for
+    every other file-scan conf (``maxPartitionBytes``, the vectorized
+    reader, filter pushdown, the hadoop conf): for such a frame they are
+    fixed when the read is made, and only planner and optimizer confs
+    follow later changes to ``spark``."""
     files = _input_files(path, fmt)
-    key = None if files is None \
-        else _schema_key(spark, fmt, opts, files, confs)
+    key = None if files is None else _schema_key(spark, fmt, opts, files)
     with _schema_cache_lock:
         learned = _schema_cache.get(key)
         if learned is not None:
             _schema_cache.move_to_end(key)
     ns_cols = learned.ns_cols if learned is not None \
         else _nanos_columns(files or (), path) if fmt == "parquet" else ()
-    on_clone = bool(ns_cols) and nanos_as_long
-    session = SparkSession(spark.sparkContext, _clone_session(spark, confs)) \
-        if on_clone else spark
+    session = SparkSession(spark.sparkContext, _clone_session(
+        spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"})) \
+        if ns_cols else spark
     reader = session.read.format(fmt).options(**opts)
     if learned is not None:
         reader = reader.schema(learned.schema)
-    df = reader.load(path)
-    if on_clone:
-        df = _rebind(df, spark)
+    raw = reader.load(path)
+    df = raw
+    if ns_cols:
+        df = _rebind(raw, spark)
+        for c in ns_cols:
+            df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
     if learned is not None:
         return df, learned
     header = None
     if fmt == "csv" and str(opts.get("header", "")).lower() == "true":
         header = _peek_csv_header(spark, path, opts, 0)
     # a copy: the cached value must not alias the caller's df.schema
-    learned = _Learned(StructType.fromJson(df.schema.jsonValue()), ns_cols,
+    learned = _Learned(StructType.fromJson(raw.schema.jsonValue()), ns_cols,
                        None if header is None else tuple(header))
     if key is not None and learned.schema.fields:
         with _schema_cache_lock:
@@ -781,31 +789,18 @@ def write(df: DataFrame, path: str, *, file_type: str | None = None,
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet read that tolerates TIMESTAMP(NANOS) columns.
-
-    Spark's TimestampType is microseconds and its parquet reader rejects
-    nanosecond columns outright. We detect them from the footer of the
-    first data file (driver-side metadata only — no data read; partitioned
-    directories included), read them as raw int64 via
-    ``spark.sql.legacy.parquet.nanosAsLong``, and truncate ns -> us with
-    integer division (plain ``/`` would round-trip through double and lose
-    precision at 1e18). Truncation matches DuckDB, whose TIMESTAMP is also us.
+    """Parquet read that tolerates TIMESTAMP(NANOS) columns (read as
+    microsecond timestamps, truncated; see :func:`_load_inferred`).
 
     The schema is inferred once per input (see :func:`to_dataset`): a
     repeated read of an unchanged local file or directory reuses the
     schema and nanosecond columns of the first one and launches no Spark
     job. The key is the ``(file, size, mtime_ns)`` of every file Spark
     would read plus the session confs that change inference
-    (``nanosAsLong``, ``binaryAsString``, ``int96AsTimestamp``,
-    ``mergeSchema``, ...); remote URIs and globs are inferred every time.
+    (``binaryAsString``, ``int96AsTimestamp``, ``mergeSchema``, ...);
+    remote URIs and globs are inferred every time.
     """
-    from pyspark.sql import functions as F
-
-    df, learned = _load_inferred(spark, "parquet", {}, path,
-                                 nanos_as_long=True)
-    for c in learned.ns_cols:
-        df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-    return df
+    return _load_inferred(spark, "parquet", {}, path)[0]
 
 
 def read_arrow(spark: SparkSession, path: str) -> DataFrame:

@@ -137,11 +137,12 @@ def stateful_running_agg(df: DataFrame, keys: Sequence[str], value_col: str
         fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout)
 
 
-def read_stream(spark, path: str, schema, *, fmt: str = "parquet",
+def read_stream(spark, path: str, schema, *,
                 max_files_per_trigger: int | None = None) -> DataFrame:
-    """File-source stream over a directory (the scalable ingest pattern:
-    writers land files, the stream picks them up incrementally)."""
-    reader = spark.readStream.format(fmt).schema(schema)
+    """File-source stream over a directory of parquet files (the scalable
+    ingest pattern: writers land files, the stream picks them up
+    incrementally)."""
+    reader = spark.readStream.format("parquet").schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.load(path)
@@ -195,14 +196,13 @@ def stream_stream_join(left: DataFrame, right: DataFrame, on, *,
     return lw.join(rw, cond, how)
 
 
-def foreach_batch_sink(df: DataFrame, batch_fn, *, checkpoint: str,
-                       output_mode: str = "update"):
+def foreach_batch_sink(df: DataFrame, batch_fn, *, checkpoint: str):
     """``foreachBatch`` sink: the exactly-once escape hatch for sinks Spark
     lacks a connector for. ``batch_fn(batch_df, batch_id)`` — idempotent on
     ``batch_id`` replays (checkpoint-tracked), each batch a normal batch
     DataFrame so any writer works. Returns the started query handle."""
     return (df.writeStream.foreachBatch(batch_fn)
-              .outputMode(output_mode)
+              .outputMode("update")
               .option("checkpointLocation", checkpoint)
               .trigger(availableNow=True).start())
 
@@ -218,13 +218,10 @@ def run_to_memory(df: DataFrame, name: str, *, output_mode: str = "complete"):
 
 
 def streaming_upsert_sink(df: DataFrame, target_path: str, keys, *,
-                          checkpoint: str, fmt: str = "parquet",
-                          when_matched: str = "update",
-                          dedupe_batch: bool = True,
+                          checkpoint: str, when_matched: str = "update",
                           sequence_by: str | None = None):
     """Continuously MERGE a change stream into a parquet target: each
-    micro-batch runs :func:`~tech_ml_dataset_spark.sources.io.merge_upsert`
-    (copy-on-write, crash-safe two-rename swap) via foreachBatch — the
+    micro-batch runs :func:`upsert_batch_apply` via foreachBatch — the
     streaming CDC-apply pattern for targets without a Delta/Iceberg log.
 
     Within a batch, the LAST change per key wins, ordered by
@@ -245,7 +242,7 @@ def streaming_upsert_sink(df: DataFrame, target_path: str, keys, *,
 
     Returns the started query handle (availableNow trigger)."""
     keys = [keys] if isinstance(keys, str) else list(keys)
-    if dedupe_batch and sequence_by is None:
+    if sequence_by is None:
         import warnings
         warnings.warn(
             "streaming_upsert_sink: no sequence_by column — falling back "
@@ -255,65 +252,44 @@ def streaming_upsert_sink(df: DataFrame, target_path: str, keys, *,
             "survivor.", UserWarning, stacklevel=2)
 
     def _apply(batch_df: DataFrame, batch_id: int):
-        upsert_batch_apply(batch_df, target_path, keys, fmt=fmt,
+        upsert_batch_apply(batch_df, target_path, keys,
                            when_matched=when_matched,
-                           dedupe_batch=dedupe_batch,
                            sequence_by=sequence_by, batch_id=batch_id)
 
     return foreach_batch_sink(df, _apply, checkpoint=checkpoint)
 
 
 def upsert_batch_apply(batch_df: DataFrame, target_path: str, keys, *,
-                       fmt: str = "parquet",
                        when_matched: str = "update",
-                       dedupe_batch: bool = True,
                        sequence_by: str | None = None,
                        batch_id: int | None = None) -> None:
-    """ONE micro-batch of the CDC upsert sink — the exact function
-    :func:`streaming_upsert_sink`'s foreachBatch invokes, exposed so
-    :func:`replay_upsert` can drive the identical code path at
-    deterministic batch boundaries (the fingerprint-dedup two-arm
-    pattern): within-batch last-change-wins by ``sequence_by``, then
-    the crash-safe copy-on-write MERGE (an empty batch leaves the
-    target untouched). Logs one INFO record: ``rows_in`` is the changes
-    merged (after last-change-wins), ``rows_out`` matched + inserted;
-    every count is observed on the merge's one write."""
+    """ONE micro-batch of the CDC upsert sink, the function
+    :func:`streaming_upsert_sink`'s foreachBatch calls. A loop over an
+    ordered list of batches (``for i, b in enumerate(batches):
+    upsert_batch_apply(b, target, keys, batch_id=i)``) runs the same code
+    at fixed batch boundaries: within-batch last-change-wins by
+    ``sequence_by``, then the crash-safe copy-on-write
+    :func:`~tech_ml_dataset_spark.sources.io.merge_upsert` into the
+    parquet target (an empty batch leaves the target untouched). Logs
+    one INFO record: ``rows_in`` is the changes merged (after
+    last-change-wins), ``rows_out`` matched + inserted; every count is
+    observed on the merge's one write."""
+    from pyspark.sql import Window as W
     from ..sources.io import _merge_observed
 
     t0 = time.perf_counter()
     keys = [keys] if isinstance(keys, str) else list(keys)
-    src = batch_df
-    if dedupe_batch:
-        from pyspark.sql import Window as W, functions as SF
-        order = (SF.col(sequence_by).desc() if sequence_by
-                 else SF.monotonically_increasing_id().desc())
-        w = W.partitionBy(*keys).orderBy(order)
-        src = (src.withColumn("__rn__", SF.row_number().over(w))
-                  .filter(SF.col("__rn__") == 1).drop("__rn__"))
+    order = (F.col(sequence_by).desc() if sequence_by
+             else F.monotonically_increasing_id().desc())
+    w = W.partitionBy(*keys).orderBy(order)
+    src = (batch_df.withColumn("__rn__", F.row_number().over(w))
+                   .filter(F.col("__rn__") == 1).drop("__rn__"))
     st = _merge_observed(batch_df.sparkSession, target_path, src, keys,
-                         fmt=fmt, when_matched=when_matched,
+                         fmt="parquet", when_matched=when_matched,
                          insert_unmatched=True)
     _log_batch("upsert_batch", batch_id, st["source_rows"],
                st["matched"] + st["inserted"], t0,
                matched=st["matched"], inserted=st["inserted"])
-
-
-def replay_upsert(batches, target_path: str, keys, *,
-                  fmt: str = "parquet", when_matched: str = "update",
-                  sequence_by: str | None = None) -> None:
-    """Deterministic batch-replay arm of :func:`streaming_upsert_sink`
-    (the two-arm pattern that promoted the media-dedup sink): apply the
-    SAME per-batch function over an EXPLICIT ordered list of batch
-    DataFrames. The resulting target has a closed form a SQL oracle
-    replays — for every key, the surviving row comes from the LAST
-    batch containing the key (and within that batch, the max
-    ``sequence_by``) — which hash-checks the sink's merge law
-    end-to-end; the production streaming arm keeps its e2e pytest
-    evidence (real readStream, replay idempotency)."""
-    for i, b in enumerate(batches):
-        upsert_batch_apply(b, target_path, keys, fmt=fmt,
-                           when_matched=when_matched,
-                           sequence_by=sequence_by, batch_id=i)
 
 
 def _batch_history(spark, corpus_path: str, batch_id: int, op: str,
@@ -397,10 +373,8 @@ def streaming_dedup_sink(df: DataFrame, corpus_path: str, *,
     persisted fingerprint column (or table) to probe instead of
     re-normalizing every accepted text per batch.
 
-    Returns the started query handle (availableNow trigger).
-
-    The per-batch logic lives in :func:`text_dedup_batch_apply` (shared
-    with the oracle-able :func:`replay_text_dedup` deterministic arm)."""
+    Returns the started query handle (availableNow trigger). Each batch
+    runs :func:`text_dedup_batch_apply`."""
     from ..sources.io import _require_local_path
     corpus_path = _require_local_path(corpus_path, "streaming_dedup_sink")
 
@@ -414,17 +388,17 @@ def streaming_dedup_sink(df: DataFrame, corpus_path: str, *,
 def text_dedup_batch_apply(batch_df: DataFrame, batch_id: int,
                            corpus_path: str, *, text_col: str = "text",
                            id_col: str = "doc_id") -> None:
-    """ONE micro-batch of the crawl-ingest text-dedup sink — the exact
-    function :func:`streaming_dedup_sink`'s foreachBatch invokes,
-    exposed for the :func:`replay_text_dedup` deterministic arm (the
-    two-arm pattern shared with the fingerprint and upsert sinks).
-    Logs one INFO record (``rows_in`` batch rows, ``rows_out`` rows
-    accepted), both observed on the corpus write."""
+    """ONE micro-batch of the crawl-ingest text-dedup sink, the function
+    :func:`streaming_dedup_sink`'s foreachBatch calls; a loop over an
+    ordered batch list calls it with ``batch_id=i``. Each distinct text
+    is accepted once: in its earliest batch, by the
+    :func:`~tech_ml_dataset_spark.functions.dedup.exact_dedup` survivor
+    within that batch. Logs one INFO record (``rows_in`` batch
+    rows, ``rows_out`` rows accepted), both observed on the corpus write;
+    an empty batch writes no partition and logs ``rows_in=0``."""
     from ..functions.dedup import exact_dedup, incremental_dedup
 
     t0 = time.perf_counter()
-    if not batch_df.take(1):
-        return
     hist = _batch_history(batch_df.sparkSession, corpus_path, batch_id,
                           "text_dedup_batch")
     fresh = exact_dedup(batch_df, text_col, id_col)
@@ -435,42 +409,25 @@ def text_dedup_batch_apply(batch_df: DataFrame, batch_id: int,
                t0)
 
 
-def replay_text_dedup(batches, corpus_path: str, *,
-                      text_col: str = "text",
-                      id_col: str = "doc_id") -> None:
-    """Deterministic batch-replay arm of :func:`streaming_dedup_sink`:
-    the same per-batch function over an explicit ordered batch list.
-    The accepted corpus has a closed form (each distinct text accepted
-    exactly once — in its earliest batch, by the exact_dedup survivor
-    within that batch), which a SQL oracle replays; the production
-    streaming arm keeps its e2e pytest evidence (history probe, replay
-    idempotency)."""
-    for i, b in enumerate(batches):
-        text_dedup_batch_apply(b, i, corpus_path, text_col=text_col,
-                               id_col=id_col)
-
-
 def fingerprint_dedup_batch_apply(batch_df: DataFrame, batch_id: int,
                                   corpus_path: str, *, fp_col: str,
                                   id_col: str = "doc_id",
                                   max_distance: int = 0,
                                   band_bits: int = 16) -> None:
-    """ONE micro-batch of the media-fingerprint dedup sink — the exact
-    function :func:`streaming_fingerprint_dedup_sink`'s foreachBatch
-    invokes, exposed so :func:`replay_fingerprint_dedup` can drive the
-    identical code path at deterministic batch boundaries (the two-arm
-    production/replay pattern): dedup within the batch (greedy
-    keep-lowest-id over the banded Hamming pairs), probe the accepted
-    corpus' fingerprints excluding this batch_id, append survivors under
-    ``batch_id=N`` with dynamic partition overwrite. Logs one INFO
-    record (``rows_in`` batch rows, ``rows_out`` rows accepted), both
-    observed on the corpus write."""
+    """ONE micro-batch of the media-fingerprint dedup sink, the function
+    :func:`streaming_fingerprint_dedup_sink`'s foreachBatch calls; a loop
+    over an ordered batch list calls it with ``batch_id=i``. Dedups
+    within the batch (greedy keep-lowest-id over the banded Hamming
+    pairs), probes the accepted corpus' fingerprints excluding this
+    batch_id, and writes survivors under ``batch_id=N`` with dynamic
+    partition overwrite. With ``max_distance=0`` each fingerprint is
+    accepted once: in its earliest batch, by the lowest id within that
+    batch. Logs one INFO record (``rows_in`` batch rows, ``rows_out``
+    rows accepted), both observed on the corpus write."""
     from ..functions.dedup import (_drop_named, hamming_dedup_pairs,
                                    hamming_pairs_between)
 
     t0 = time.perf_counter()
-    if not batch_df.take(1):
-        return
     hist = _batch_history(batch_df.sparkSession, corpus_path, batch_id,
                           "fingerprint_dedup_batch")
     fresh = _drop_named(batch_df,
@@ -488,30 +445,6 @@ def fingerprint_dedup_batch_apply(batch_df: DataFrame, batch_id: int,
     m = _write_batch(fresh, corpus_path, batch_id, batch_df)
     _log_batch("fingerprint_dedup_batch", batch_id, m["rows_in"],
                m["rows_out"], t0)
-
-
-def replay_fingerprint_dedup(batches, corpus_path: str, *, fp_col: str,
-                             id_col: str = "doc_id",
-                             max_distance: int = 0,
-                             band_bits: int = 16) -> None:
-    """Deterministic batch-replay arm of
-    :func:`streaming_fingerprint_dedup_sink` (the two-arm pattern that
-    promoted the :abb fill and the reservoir sampler from rows-only):
-    apply the SAME per-batch function the streaming sink's foreachBatch
-    calls — :func:`fingerprint_dedup_batch_apply`, byte-for-byte the
-    same dedup/probe/write logic — over an EXPLICIT ordered list of
-    batch DataFrames, so micro-batch boundaries are fixed by the caller
-    instead of source file-listing order. With ``max_distance=0`` the
-    resulting corpus has a closed form a SQL oracle replays (each
-    fingerprint accepted exactly once: in its earliest batch, by the
-    lowest id within that batch), which hash-checks the sink's accept
-    law end-to-end; the production streaming arm keeps its e2e pytest
-    evidence (real readStream/foreachBatch, at-least-once replay)."""
-    for i, b in enumerate(batches):
-        fingerprint_dedup_batch_apply(b, i, corpus_path, fp_col=fp_col,
-                                      id_col=id_col,
-                                      max_distance=max_distance,
-                                      band_bits=band_bits)
 
 
 def streaming_fingerprint_dedup_sink(df: DataFrame, corpus_path: str, *,
@@ -532,11 +465,8 @@ def streaming_fingerprint_dedup_sink(df: DataFrame, corpus_path: str, *,
 
     Replay idempotency: the same ``batch_id=N`` corpus layout as
     :func:`streaming_dedup_sink`. Local-filesystem target only (same
-    contract). Returns the started query handle.
-
-    The per-batch logic lives in :func:`fingerprint_dedup_batch_apply`
-    (shared with the oracle-able :func:`replay_fingerprint_dedup`
-    deterministic arm)."""
+    contract). Returns the started query handle. Each batch runs
+    :func:`fingerprint_dedup_batch_apply`."""
     from ..sources.io import _require_local_path
     corpus_path = _require_local_path(corpus_path,
                                       "streaming_fingerprint_dedup_sink")
@@ -576,40 +506,56 @@ def streaming_neardup_sink(df: DataFrame, corpus_path: str, *,
     verify; the 100 TB of accepted text is never re-scanned.
 
     Local-filesystem target only (directory probe uses os.path — the
-    streaming_dedup_sink contract). Each batch logs one INFO record
-    (op ``neardup_batch``; ``rows_in`` batch rows, ``rows_out`` docs
-    accepted), observed on the docs write. Returns the started query
-    handle (availableNow trigger)."""
+    streaming_dedup_sink contract). Each batch runs
+    :func:`neardup_batch_apply`. Returns the started query handle
+    (availableNow trigger)."""
+    from ..sources.io import _require_local_path
+    corpus_path = _require_local_path(corpus_path, "streaming_neardup_sink")
+
+    def _apply(batch_df: DataFrame, batch_id: int):
+        neardup_batch_apply(batch_df, batch_id, corpus_path,
+                            text_col=text_col, id_col=id_col, k=k,
+                            n_hashes=n_hashes, bands=bands,
+                            threshold=threshold, seed=seed, hash_fn=hash_fn)
+
+    return foreach_batch_sink(df, _apply, checkpoint=checkpoint)
+
+
+def neardup_batch_apply(batch_df: DataFrame, batch_id: int,
+                        corpus_path: str, *, text_col: str = "text",
+                        id_col: str = "doc_id", k: int = 5,
+                        n_hashes: int = 64, bands: int = 16,
+                        threshold: float = 0.8, seed: int = 42,
+                        hash_fn: str = "xxhash64") -> None:
+    """ONE micro-batch of the MinHash near-dup sink, the function
+    :func:`streaming_neardup_sink`'s foreachBatch calls; a loop over an
+    ordered batch list calls it with ``batch_id=i``. Minhash-dedups the
+    batch, drops docs that near-match the accepted index (earlier
+    batches only), then writes the survivors to ``docs`` and their bands
+    and shingle sets to ``index/bands`` and ``index/shingles``, each
+    under ``batch_id=N``. Logs one INFO record (op ``neardup_batch``;
+    ``rows_in`` batch rows, ``rows_out`` docs accepted), observed on the
+    docs write."""
     from ..functions.dedup import (_drop_named, _shingle_and_band,
                                    _verified_cross_pairs, minhash_dedup)
-    from ..sources.io import _require_local_path
-    op = "streaming_neardup_sink"
-    corpus_path = _require_local_path(corpus_path, op)
+    op = "neardup_batch"
     params = dict(k=k, n_hashes=n_hashes, bands=bands, seed=seed,
                   hash_fn=hash_fn)
 
-    def _apply(batch_df: DataFrame, batch_id: int):
-        t0 = time.perf_counter()
-        if not batch_df.take(1):
-            return
-        spark = batch_df.sparkSession
-        fresh = minhash_dedup(batch_df, id_col, text_col,
-                              threshold=threshold, **params)
-        band_h = _batch_history(spark, corpus_path, batch_id, op,
-                                "/index/bands")
-        if band_h is not None:
-            sh_h = _batch_history(spark, corpus_path, batch_id, op,
-                                  "/index/shingles")
-            sh_n, band_n = _shingle_and_band(fresh, id_col, text_col,
-                                             **params)
-            matched = _verified_cross_pairs(sh_n, band_n, sh_h, band_h,
-                                            id_col, threshold)
-            fresh = _drop_named(fresh, matched, "new_id", id_col)
-        sh, banded = _shingle_and_band(fresh, id_col, text_col, **params)
-        m = _write_batch(fresh, corpus_path + "/docs", batch_id, batch_df)
-        _write_batch(banded, corpus_path + "/index/bands", batch_id)
-        _write_batch(sh, corpus_path + "/index/shingles", batch_id)
-        _log_batch("neardup_batch", batch_id, m["rows_in"], m["rows_out"],
-                   t0)
-
-    return foreach_batch_sink(df, _apply, checkpoint=checkpoint)
+    t0 = time.perf_counter()
+    spark = batch_df.sparkSession
+    fresh = minhash_dedup(batch_df, id_col, text_col, threshold=threshold,
+                          **params)
+    band_h = _batch_history(spark, corpus_path, batch_id, op, "/index/bands")
+    if band_h is not None:
+        sh_h = _batch_history(spark, corpus_path, batch_id, op,
+                              "/index/shingles")
+        sh_n, band_n = _shingle_and_band(fresh, id_col, text_col, **params)
+        matched = _verified_cross_pairs(sh_n, band_n, sh_h, band_h, id_col,
+                                        threshold)
+        fresh = _drop_named(fresh, matched, "new_id", id_col)
+    sh, banded = _shingle_and_band(fresh, id_col, text_col, **params)
+    m = _write_batch(fresh, corpus_path + "/docs", batch_id, batch_df)
+    _write_batch(banded, corpus_path + "/index/bands", batch_id)
+    _write_batch(sh, corpus_path + "/index/shingles", batch_id)
+    _log_batch(op, batch_id, m["rows_in"], m["rows_out"], t0)

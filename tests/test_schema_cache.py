@@ -145,3 +145,42 @@ def test_nanos_read_leaves_the_session_conf_alone(spark, count_jobs,
     finally:
         if before is not None:
             spark.conf.set(key, before)
+
+
+def test_to_dataset_reads_nanos_like_read_parquet(spark, tmp_path):
+    """Path-based ``to_dataset`` takes the same parquet read path as
+    ``read_parquet``: a timestamp[ns] file loads (it used to fail with
+    PARQUET_TYPE_ILLEGAL) and the session never sees ``nanosAsLong``."""
+    p = str(tmp_path / "ns.parquet")
+    ts = pa.array([1_700_000_000_123_456_789, None], pa.timestamp("ns"))
+    pq.write_table(pa.table({"k": [1, 2], "ts": ts}), p)
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        via_to_dataset = to_dataset(spark, p)
+        via_read_parquet = read_parquet(spark, p)
+        assert via_to_dataset.dtypes == via_read_parquet.dtypes \
+            == [("k", "bigint"), ("ts", "timestamp")]
+        assert _rows(via_to_dataset) == _rows(via_read_parquet)
+        assert sorted(r.us for r in via_to_dataset.selectExpr(
+            "unix_micros(ts) AS us").collect() if r.us is not None) == \
+            [1_700_000_000_123_456]
+        assert spark.conf.get(key, None) is None
+    finally:
+        if before is not None:
+            spark.conf.set(key, before)
+
+
+def test_spark_written_int96_timestamps_read_back(spark, tmp_path):
+    """Spark writes timestamps as INT96, which pyarrow reports as
+    timestamp[ns]: such a column is not a nanosecond column and must
+    read back as the same timestamps through both read paths."""
+    p = str(tmp_path / "int96.parquet")
+    src = spark.createDataFrame([(1, "2024-01-02 03:04:05.123456")],
+                                "k long, s string") \
+        .selectExpr("k", "CAST(s AS TIMESTAMP) AS ts")
+    src.write.parquet(p)
+    for df in (read_parquet(spark, p), to_dataset(spark, p)):
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        assert _rows(df) == _rows(src)

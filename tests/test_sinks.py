@@ -8,9 +8,10 @@ Two protocols are under test. The crash-safe swap (``sources.io``
 (``streaming.windows`` ``_batch_history`` / ``_write_batch``) has three:
 ``text_dedup_batch_apply`` (exact text dedup),
 ``fingerprint_dedup_batch_apply`` (64-bit media fingerprints) and
-``streaming_neardup_sink`` (MinHash, corpus plus LSH index). A fault at
+``neardup_batch_apply`` (MinHash, corpus plus LSH index). A fault at
 any step followed by a replay of the same batch or call must give the
-table an uninterrupted run gives.
+table an uninterrupted run gives. A replay is a plain loop over the
+batch function, ``for i, b in enumerate(batches): apply(b, i, ...)``.
 """
 
 import logging
@@ -140,41 +141,50 @@ def _fp_apply(batch, batch_id, corpus):
                                           fp_col="fp")
 
 
-# (batches, one batch, replay) per batch_id corpus sink
+# (batches, one batch, the tables under the corpus path) per batch_id
+# corpus sink
 _CORPUS_SINKS = {
-    "text": (_doc_batches, windows.text_dedup_batch_apply,
-             windows.replay_text_dedup),
-    "fingerprint": (_fp_batches, _fp_apply,
-                    lambda bs, corpus: windows.replay_fingerprint_dedup(
-                        bs, corpus, fp_col="fp")),
+    "text": (_doc_batches, windows.text_dedup_batch_apply, ("",)),
+    "fingerprint": (_fp_batches, _fp_apply, ("",)),
+    "neardup": (_doc_batches, windows.neardup_batch_apply,
+                ("/docs", "/index/bands", "/index/shingles")),
 }
+
+
+def _tables(spark, corpus, tables):
+    return [_rows(spark, corpus + t) for t in tables]
 
 
 @pytest.mark.parametrize("land_files", [False, True])
 def test_text_dedup_replay_after_failed_write_matches_clean_run(
         spark, tmp_path, monkeypatch, land_files):
-    """Also run on the fingerprint sink: the same corpus layout."""
+    """Run on every corpus sink, with the fault at each table's write."""
     real = DataFrameWriter.parquet
-    for sink, (make, apply, replay) in _CORPUS_SINKS.items():
+    for sink, (make, apply, tables) in _CORPUS_SINKS.items():
         batches = make(spark)
         clean = str(tmp_path / f"{sink}_clean")
-        replay(batches, clean)
-        want = _rows(spark, clean)
-
-        corpus = str(tmp_path / f"{sink}_faulted")
         for i, b in enumerate(batches):
-            if i == 2:
-                def parquet(self, path, *a, **kw):
-                    if land_files:
-                        real(self, path, *a, **kw)
-                    raise Injected("corpus write")
+            apply(b, i, clean)
+        want = _tables(spark, clean, tables)
 
-                with monkeypatch.context() as m:
-                    m.setattr(DataFrameWriter, "parquet", parquet)
-                    with pytest.raises(Injected):
-                        apply(b, i, corpus)
-            apply(b, i, corpus)
-        assert _rows(spark, corpus) == want, sink
+        for n, table in enumerate(tables):
+            corpus = str(tmp_path / f"{sink}_faulted{n}")
+
+            def parquet(self, path, *a, **kw):
+                if path != corpus + table:
+                    return real(self, path, *a, **kw)
+                if land_files:
+                    real(self, path, *a, **kw)
+                raise Injected("corpus write")
+
+            for i, b in enumerate(batches):
+                if i == 2:
+                    with monkeypatch.context() as m:
+                        m.setattr(DataFrameWriter, "parquet", parquet)
+                        with pytest.raises(Injected):
+                            apply(b, i, corpus)
+                apply(b, i, corpus)
+            assert _tables(spark, corpus, tables) == want, (sink, table)
 
 
 @pytest.mark.parametrize("sink", sorted(_CORPUS_SINKS))
@@ -182,15 +192,17 @@ def test_corpus_sink_path_schemes(spark, tmp_path, monkeypatch, sink):
     """A file:// corpus dedups across batches exactly like the plain
     path (its earlier batches used to go unseen: os.path.isdir does not
     read URIs), and a remote corpus raises before anything is written."""
-    _, apply, replay = _CORPUS_SINKS[sink]
-    value, schema = (("same text", "doc_id long, text string")
-                     if sink == "text" else (42, "doc_id long, fp long"))
+    _, apply, tables = _CORPUS_SINKS[sink]
+    value, schema = ((42, "doc_id long, fp long") if sink == "fingerprint"
+                     else ("same text", "doc_id long, text string"))
     batches = [spark.createDataFrame([(i, value)], schema) for i in (1, 2)]
     plain, uri = str(tmp_path / "plain"), str(tmp_path / "uri")
-    replay(batches, plain)
-    replay(batches, "file://" + uri)
-    assert [r["doc_id"] for r in spark.read.parquet(plain).collect()] == [1]
-    assert _rows(spark, uri) == _rows(spark, plain)
+    for i, b in enumerate(batches):
+        apply(b, i, plain)
+        apply(b, i, "file://" + uri)
+    docs = spark.read.parquet(plain + tables[0])
+    assert [r["doc_id"] for r in docs.collect()] == [1]
+    assert _tables(spark, uri, tables) == _tables(spark, plain, tables)
 
     def parquet(self, path, *a, **kw):
         raise Injected(f"write to {path}")
@@ -219,6 +231,8 @@ def test_text_dedup_jobs_per_batch_do_not_grow_with_history(
         _, jobs[i] = count_jobs(
             lambda: windows.text_dedup_batch_apply(b, i, corpus))
     assert jobs[4] <= jobs[2], jobs
+    # 4 for the first batch, 10 once there is history to probe
+    assert max(jobs.values()) <= 10, jobs
 
 
 def test_exact_incremental_dedup_plan_runs_no_python(spark):
@@ -251,26 +265,51 @@ def test_upsert_batch_jobs(spark, tmp_path, count_jobs):
 def test_sink_batches_log_one_record_each(spark, tmp_path, caplog):
     tgt = str(tmp_path / "t")
     _orders(spark, tgt)
-    docs, fps = _doc_batches(spark), _fp_batches(spark)
     with caplog.at_level(logging.INFO, logger="tech_ml_dataset_spark"):
         windows.upsert_batch_apply(_changes(spark), tgt, "id", batch_id=3)
-        for i in (0, 1):
-            windows.text_dedup_batch_apply(docs[i], i,
-                                           str(tmp_path / "corpus"))
-        for i in (0, 1):
-            _fp_apply(fps[i], i, str(tmp_path / "fp_corpus"))
+        for sink, (make, apply, _) in _CORPUS_SINKS.items():
+            for i, b in enumerate(make(spark)[:2]):
+                apply(b, i, str(tmp_path / sink))
     recs = [r for r in caplog.records if r.name == "tech_ml_dataset_spark"]
     assert [r.op for r in recs] == ["upsert_batch"] + \
-        ["text_dedup_batch"] * 2 + ["fingerprint_dedup_batch"] * 2
-    up, d0, d1, f0, f1 = recs
+        ["text_dedup_batch"] * 2 + ["fingerprint_dedup_batch"] * 2 + \
+        ["neardup_batch"] * 2
+    up, *corpus_recs = recs
     assert (up.batch_id, up.rows_in, up.rows_out) == (3, 20, 20)
     assert (up.matched, up.inserted) == (10, 10)
     # batch 0 keeps one doc per text class 0..5; batch 1 re-sends classes
-    # 6, 0..4 and accepts only class 6; the fingerprints follow suit
-    for r0, r1 in ((d0, d1), (f0, f1)):
-        assert (r0.batch_id, r0.rows_in, r0.rows_out) == (0, 6, 6)
-        assert (r1.batch_id, r1.rows_in, r1.rows_out) == (1, 6, 1)
+    # 6, 0..4 and accepts only class 6; the fingerprints and the near-dup
+    # docs follow suit
+    for first, second in zip(corpus_recs[::2], corpus_recs[1::2]):
+        assert (first.batch_id, first.rows_in, first.rows_out) == (0, 6, 6)
+        assert (second.batch_id, second.rows_in, second.rows_out) \
+            == (1, 6, 1)
     assert all(r.levelno == logging.INFO and r.seconds > 0 for r in recs)
+
+
+@pytest.mark.parametrize("sink", sorted(_CORPUS_SINKS))
+def test_corpus_sink_empty_batch_changes_nothing(spark, tmp_path, caplog,
+                                                 sink):
+    """An empty batch writes no partition: an existing corpus keeps its
+    rows, a new corpus reads as no history, and the batch logs one
+    record with ``rows_in=0``."""
+    make, apply, tables = _CORPUS_SINKS[sink]
+    batches = make(spark)
+    empty = batches[0].limit(0)
+    corpus, fresh = str(tmp_path / "corpus"), str(tmp_path / "fresh")
+    for i, b in enumerate(batches[:2]):
+        apply(b, i, corpus)
+    before = _tables(spark, corpus, tables)
+    with caplog.at_level(logging.INFO, logger="tech_ml_dataset_spark"):
+        apply(empty, 2, corpus)
+        apply(empty, 0, fresh)
+    assert _tables(spark, corpus, tables) == before
+    recs = [r for r in caplog.records if r.name == "tech_ml_dataset_spark"]
+    assert [(r.batch_id, r.rows_in, r.rows_out) for r in recs] == \
+        [(2, 0, 0), (0, 0, 0)]
+    apply(batches[0], 1, fresh)
+    docs = spark.read.parquet(fresh + tables[0]).collect()
+    assert sorted(r["doc_id"] for r in docs) == list(range(6))
 
 
 def test_session_still_serializes_after_sink_batches(spark, tmp_path):

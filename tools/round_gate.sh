@@ -14,11 +14,14 @@ python -m pytest tests/test_plans.py tests/test_session.py -q -p no:cacheprovide
     2>&1 | tail -1
 
 echo "== 2/8 Python worker daemon, archive use by driver processes, then sinks:"
-echo "   fault replays, merge_upsert contract, jobs per batch (~5 min)"
+echo "   fault replays, merge_upsert contract, jobs per batch, the streaming"
+echo "   sink wrappers (~7 min)"
 python -m pytest tests/test_session.py -q -x -p no:cacheprovider \
     -k "test_worker_task or test_python_udf or test_cds_driver" 2>&1 | tail -1
 python -m pytest tests/test_sinks.py tests/test_models_io.py -q \
     -x -p no:cacheprovider -k "test_sinks or merge_upsert" 2>&1 | tail -1
+python -m pytest tests/test_streaming.py -q -x -p no:cacheprovider -k sink \
+    2>&1 | tail -1
 
 echo "== 3/8 full-registry vanilla sweep (the canonical correctness gate)"
 python tools/verify_local.py --vanilla "$SF" 2>&1 | tr '\r' '\n' \
