@@ -46,10 +46,6 @@ class Dataset:
         """Eager count (an action, like the reference's ds/row-count)."""
         return self.df.count()
 
-    @property
-    def shape(self) -> tuple[int, int]:
-        return (self.row_count(), self.column_count())
-
     def dtypes(self) -> dict[str, str]:
         return dict(self.df.dtypes)
 

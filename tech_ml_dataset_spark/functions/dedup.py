@@ -392,6 +392,18 @@ def _band_candidates(band_a: DataFrame, sh_a: DataFrame, id_col: str,
                    names=names, carry=_SETS)
 
 
+def _verified_pairs(band_a: DataFrame, sh_a: DataFrame, id_col: str,
+                    threshold: float, band_b: DataFrame | None = None,
+                    sh_b: DataFrame | None = None) -> DataFrame:
+    """The MinHash pair rule, written once: band candidates
+    (:func:`_band_candidates`) whose exact shingle Jaccard is >=
+    ``threshold``. ``(id_a, id_b, jaccard)`` within ``band_a``,
+    ``(new_id, hist_id, jaccard)`` against ``band_b``."""
+    return _jaccard_at_least(
+        _band_candidates(band_a, sh_a, id_col, band_b, sh_b), threshold,
+        _SELF if band_b is None else _CROSS)
+
+
 def minhash_dedup_pairs(df: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text", *, k: int = 5,
                         n_hashes: int = 64, bands: int = 16,
@@ -401,10 +413,11 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str = "doc_id",
     shingle sets. Output: (id_a, id_b, jaccard) with jaccard >= threshold.
     ``hash_fn`` as in :func:`minhash_candidates` ("md5" = engine-portable
     hashing so the banding law is independently verifiable)."""
-    return _jaccard_at_least(
-        minhash_candidates(df, id_col, text_col, k=k, n_hashes=n_hashes,
-                           bands=bands, seed=seed, hash_fn=hash_fn),
-        threshold)
+    sh, banded = _shingle_and_band(df, id_col, text_col, k=k,
+                                   n_hashes=n_hashes, bands=bands, seed=seed,
+                                   hash_fn=hash_fn)
+    # both sides of the self-join read it, as in minhash_candidates
+    return _verified_pairs(materialize(banded), sh, id_col, threshold)
 
 
 def minhash_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
@@ -1140,18 +1153,7 @@ def minhash_pairs_between(new_batch: DataFrame, historical: DataFrame,
     sh_h, band_h = _shingle_and_band(historical, id_col, text_col, k=k,
                                      n_hashes=n_hashes, bands=bands,
                                      seed=seed, hash_fn=hash_fn)
-    return _verified_cross_pairs(sh_n, band_n, sh_h, band_h, id_col,
-                                 threshold)
-
-
-def _verified_cross_pairs(sh_n: DataFrame, band_n: DataFrame,
-                          sh_h: DataFrame, band_h: DataFrame,
-                          id_col: str, threshold: float) -> DataFrame:
-    """Shared back half of the cross-corpus paths: band candidates
-    between the two banded tables, exact-Jaccard verify."""
-    return _jaccard_at_least(
-        _band_candidates(band_n, sh_n, id_col, band_h, sh_h), threshold,
-        _CROSS)
+    return _verified_pairs(band_n, sh_n, id_col, threshold, band_h, sh_h)
 
 
 def minhash_dedup_incremental(new_batch: DataFrame, historical: DataFrame,
@@ -1168,51 +1170,96 @@ def minhash_dedup_incremental(new_batch: DataFrame, historical: DataFrame,
     return _drop_named(new_batch, pairs, "new_id", id_col)
 
 
-def minhash_index_write(df: DataFrame, path: str, id_col: str = "doc_id",
-                        text_col: str = "text", *, k: int = 5,
-                        n_hashes: int = 64, bands: int = 16, seed: int = 42,
-                        hash_fn: str = "xxhash64",
-                        mode: str = "overwrite") -> None:
-    """Persist the LSH index of a corpus for cross-run incremental dedup:
-    ``<path>/bands`` (id, band, band_key), ``<path>/shingles`` (id,
-    shingle set — needed for the exact verify), and ``<path>/params`` (a
-    one-row table pinning k/n_hashes/bands/seed/hash_fn — probing with
-    mismatched parameters silently finds nothing, so
-    :func:`minhash_index_probe` validates against it). ``mode="append"``
-    adds a newly accepted batch; ids must stay globally unique across
-    appends (parameters are re-validated, not re-written). Plain parquet
-    append is NOT crash-atomic — a job that dies mid-append can leave
-    partial files in the index. For continuous ingest use
-    :func:`~tech_ml_dataset_spark.streaming.windows.streaming_neardup_sink`
-    instead: its batch_id partitions + dynamic overwrite make replays
-    converge (tested)."""
-    spark = df.sparkSession
-    if mode == "append":
-        _minhash_index_params(spark, path, k=k, n_hashes=n_hashes,
-                              bands=bands, seed=seed, hash_fn=hash_fn,
-                              id_col=id_col)
-    sh, banded = _shingle_and_band(df, id_col, text_col, k=k,
-                                   n_hashes=n_hashes, bands=bands, seed=seed,
-                                   hash_fn=hash_fn)
-    banded.write.mode(mode).parquet(path + "/bands")
-    sh.write.mode(mode).parquet(path + "/shingles")
-    if mode != "append":
-        spark.createDataFrame(
-            [(k, n_hashes, bands, seed, hash_fn, id_col)],
-            "k int, n_hashes int, bands int, seed int, hash_fn string, "
-            "id_col string"
-        ).coalesce(1).write.mode("overwrite").parquet(path + "/params")
+def _index_params(path: str, op: str, params: dict, *,
+                  create: bool = False) -> str:
+    """Check ``params`` against the ones stored in the MinHash index at
+    ``path`` (``<path>/params.json``) and return the local path. A
+    mismatch raises: a probe with other banding parameters silently finds
+    nothing. A missing index raises too, unless ``create``, which stores
+    ``params`` for the batches to come. Read and written on the driver,
+    so the check runs no Spark job."""
+    import json
+    import os
 
+    from ..sources.io import _require_local_path
 
-def _minhash_index_params(spark, path: str, **expect) -> None:
-    row = spark.read.parquet(path + "/params").collect()[0].asDict()
-    bad = {p: (row[p], v) for p, v in expect.items() if row[p] != v}
+    path = _require_local_path(path, op)
+    meta = os.path.join(path, "params.json")
+    if not os.path.exists(meta):
+        if not create:
+            raise ValueError(f"{op}: no minhash index at {path}")
+        os.makedirs(path, exist_ok=True)
+        with open(meta + ".tmp", "w") as f:
+            json.dump(params, f)
+        os.replace(meta + ".tmp", meta)
+        return path
+    with open(meta) as f:
+        stored = json.load(f)
+    bad = {p: (stored.get(p), v) for p, v in params.items()
+           if stored.get(p) != v}
     if bad:
         raise ValueError(
             f"minhash index at {path} was built with different parameters "
             f"(stored, requested): {bad} — near-dup recall guarantees only "
             f"hold when banding parameters match; rebuild the index or "
             f"pass the stored parameters.")
+    return path
+
+
+def _index_write(sh: DataFrame, banded: DataFrame, path: str,
+                 batch_id: int) -> None:
+    """Write one batch of shingle sets and band keys into the MinHash
+    index at ``path``: ``bands/batch_id=N`` and ``shingles/batch_id=N``,
+    each by dynamic partition overwrite, so a rerun of ``batch_id``
+    rewrites that batch and no other."""
+    from ..sources.io import _write_batch
+
+    _write_batch(banded, path + "/bands", batch_id)
+    _write_batch(sh, path + "/shingles", batch_id)
+
+
+def _index_pairs(band_n: DataFrame, sh_n: DataFrame, path: str,
+                 id_col: str, threshold: float, op: str,
+                 batch_id: int | None = None) -> DataFrame:
+    """``(new_id, hist_id, jaccard)`` pairs of a banded batch against the
+    MinHash index at ``path``, batch ``batch_id`` left out (none when
+    ``None``). The index side is read pre-banded: only its band keys and
+    the candidates' shingle sets are scanned. An index with no such batch
+    is empty history."""
+    from ..sources.io import _batch_history
+
+    spark = band_n.sparkSession
+    band_h = _batch_history(spark, path, batch_id, op, "/bands")
+    if band_h is None:
+        band_h, sh_h = band_n.limit(0), sh_n.limit(0)
+    else:
+        sh_h = _batch_history(spark, path, batch_id, op, "/shingles")
+    return _verified_pairs(band_n, sh_n, id_col, threshold, band_h, sh_h)
+
+
+def minhash_index_write(df: DataFrame, path: str, id_col: str = "doc_id",
+                        text_col: str = "text", *, k: int = 5,
+                        n_hashes: int = 64, bands: int = 16, seed: int = 42,
+                        hash_fn: str = "xxhash64", batch_id: int = 0) -> None:
+    """Persist the LSH index of a corpus for cross-run incremental dedup,
+    one batch at a time: ``<path>/bands/batch_id=N`` (id, band,
+    band_key), ``<path>/shingles/batch_id=N`` (id, shingle set, for the
+    exact verify) and ``<path>/params.json``, which pins
+    k/n_hashes/bands/seed/hash_fn/id_col. The first write stores the
+    parameters; a later write or probe with other ones raises before
+    anything is written. Each batch is written by dynamic partition
+    overwrite: writing ``batch_id=N`` again, for instance after a failed
+    write, replaces that batch and keeps the others. Ids must be unique
+    across batches. The path must be local (the batches are listed with
+    ``os.listdir``); any other scheme raises.
+    :func:`~tech_ml_dataset_spark.streaming.windows.neardup_batch_apply`
+    keeps its ``<corpus>/index`` in this layout."""
+    banding = dict(k=k, n_hashes=n_hashes, bands=bands, seed=seed,
+                   hash_fn=hash_fn)
+    path = _index_params(path, "minhash_index_write",
+                         dict(banding, id_col=id_col), create=True)
+    sh, banded = _shingle_and_band(df, id_col, text_col, **banding)
+    _index_write(sh, banded, path, batch_id)
 
 
 def minhash_index_probe(new_batch: DataFrame, path: str,
@@ -1220,22 +1267,19 @@ def minhash_index_probe(new_batch: DataFrame, path: str,
                         k: int = 5, n_hashes: int = 64, bands: int = 16,
                         threshold: float = 0.8, seed: int = 42,
                         hash_fn: str = "xxhash64") -> DataFrame:
-    """Band ``new_batch`` and join it against a persisted LSH index
-    (:func:`minhash_index_write`) — (new_id, hist_id, jaccard) pairs with
-    jaccard >= threshold. Validates the banding parameters against the
-    index's stored ones first. The historical side is read pre-banded
-    (no re-shingling of the 100 TB corpus); only the band keys and the
-    candidate rows' shingle sets are scanned."""
-    spark = new_batch.sparkSession
-    _minhash_index_params(spark, path, k=k, n_hashes=n_hashes, bands=bands,
-                          seed=seed, hash_fn=hash_fn, id_col=id_col)
-    sh_n, band_n = _shingle_and_band(new_batch, id_col, text_col, k=k,
-                                     n_hashes=n_hashes, bands=bands,
-                                     seed=seed, hash_fn=hash_fn)
-    band_h = spark.read.parquet(path + "/bands")
-    sh_h = spark.read.parquet(path + "/shingles")
-    return _verified_cross_pairs(sh_n, band_n, sh_h, band_h, id_col,
-                                 threshold)
+    """Band ``new_batch`` and join it against every batch of a persisted
+    LSH index (:func:`minhash_index_write`): (new_id, hist_id, jaccard)
+    pairs with jaccard >= threshold. Validates the banding parameters
+    against the index's stored ones first. The historical side is read
+    pre-banded (no re-shingling of the 100 TB corpus); only the band keys
+    and the candidate rows' shingle sets are scanned."""
+    banding = dict(k=k, n_hashes=n_hashes, bands=bands, seed=seed,
+                   hash_fn=hash_fn)
+    path = _index_params(path, "minhash_index_probe",
+                         dict(banding, id_col=id_col))
+    sh_n, band_n = _shingle_and_band(new_batch, id_col, text_col, **banding)
+    return _index_pairs(band_n, sh_n, path, id_col, threshold,
+                        "minhash_index_probe")
 
 
 def fuzzy_join(left: DataFrame, right: DataFrame, text_col: str = "text",

@@ -25,9 +25,15 @@ def token_count(text: Column) -> Column:
     (explicit guard: non-ANSI size(NULL) is -1, ANSI is NULL — the guard
     makes the result session-independent)."""
     t = F.trim(text)
+    return _n_tokens(text, t, F.split(t, _WS))
+
+
+def _n_tokens(text: Column, trimmed: Column, toks: Column) -> Column:
+    """:func:`token_count` of ``text`` given its trimmed form and its
+    token array."""
     return F.when(text.isNull(), F.lit(None).cast("int")) \
-            .when(F.length(t) == 0, F.lit(0)) \
-            .otherwise(F.size(F.split(t, _WS)))
+            .when(F.length(trimmed) == 0, F.lit(0)) \
+            .otherwise(F.size(toks))
 
 
 def char_count(text: Column) -> Column:
@@ -37,9 +43,13 @@ def char_count(text: Column) -> Column:
 def avg_token_length(text: Column) -> Column:
     """Mean token length — a classic quality-score feature."""
     t = F.trim(text)
-    toks = F.split(t, _WS)
+    return _avg_len(t, F.split(t, _WS))
+
+
+def _avg_len(trimmed: Column, toks: Column) -> Column:
+    """:func:`avg_token_length` given the trimmed text and its tokens."""
     total = F.aggregate(toks, F.lit(0), lambda acc, x: acc + F.length(x))
-    return F.when(F.length(t) == 0, F.lit(None).cast("double")) \
+    return F.when(F.length(trimmed) == 0, F.lit(None).cast("double")) \
             .otherwise(total.cast("double") / F.size(toks))
 
 
@@ -71,16 +81,10 @@ def stopword_ratio(text: Column, stopwords: tuple[str, ...] = (
 def quality_score(text: Column) -> Column:
     """Composite quality score in [0,1]: length band + punctuation band +
     mean-token-length band. Deterministic and cheap; a stand-in for the
-    classifier-based scores real pipelines train."""
-    n_tok = token_count(text)
-    len_ok = F.when((n_tok >= 5) & (n_tok <= 100000), 1.0).otherwise(0.0)
-    len_ok = F.when(text.isNull(), F.lit(None).cast("double")) \
-              .otherwise(len_ok)  # NULL text -> NULL score, not a number
-    pr = F.coalesce(punct_ratio(text), F.lit(0.0))
-    punct_ok = F.when(pr <= 0.2, 1.0).otherwise(F.greatest(F.lit(0.0), 1.0 - (pr - 0.2) * 4.0))
-    atl = F.coalesce(avg_token_length(text), F.lit(0.0))
-    atl_ok = F.when((atl >= 2.0) & (atl <= 12.0), 1.0).otherwise(0.5)
-    return (len_ok + punct_ok + atl_ok) / 3.0
+    classifier-based scores real pipelines train. NULL text scores
+    NULL."""
+    return _quality_from(token_count(text), punct_ratio(text),
+                         avg_token_length(text))
 
 
 # Minimal per-language character/stopword signatures for n-gram-free
@@ -97,20 +101,7 @@ _LANG_MARKERS: dict[str, tuple[str, ...]] = {
 def lang_id(text: Column) -> Column:
     """Heuristic language ID: CJK codepoint detection first, then stopword
     marker voting; 'unknown' when nothing matches. Pure Catalyst exprs."""
-    has_cjk = F.length(F.regexp_replace(text, r"[^一-鿿]", "")) > 0
-    toks = F.split(F.lower(F.trim(text)), _WS)
-    expr = F.lit("unknown")
-    best = F.lit(0)
-    scores = {}
-    for lang, markers in _LANG_MARKERS.items():
-        arr = F.array(*[F.lit(m) for m in markers])
-        scores[lang] = F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
-    # pick argmax via chained comparisons (ties -> first in dict order)
-    for lang in _LANG_MARKERS:
-        cond = scores[lang] > best
-        expr = F.when(cond, F.lit(lang)).otherwise(expr)
-        best = F.greatest(best, scores[lang])
-    return F.when(has_cjk, F.lit("zh")).otherwise(expr)
+    return _lang_from(text, F.split(F.lower(F.trim(text)), _WS))
 
 
 # GPT-2-style pre-tokenizer pattern, restricted to constructs RE2 (DuckDB)
@@ -451,20 +442,18 @@ def _staged_features(df: DataFrame, text_col: str):
         "__toks__": F.split(F.lower(F.trim(t)), _WS),
     })
     toks = F.col("__toks__")
-    n_tok = F.when(F.length("__t__") == 0, F.lit(0)).otherwise(F.size(toks))
-    pr = F.when(F.length(t) == 0, F.lit(None).cast("double")).otherwise(
-        (F.length(t) - F.length(F.regexp_replace(t, r"[\p{Punct}]", "")))
-        .cast("double") / F.length(t))
+    n_tok = _n_tokens(t, F.col("__t__"), toks)
     # token lengths are case-invariant for the ASCII corpora we target, so
     # the lowercased array serves both counting and length features
-    atl = F.when(F.length("__t__") == 0, F.lit(None).cast("double")).otherwise(
-        F.aggregate(toks, F.lit(0), lambda a, x: a + F.length(x))
-        .cast("double") / F.size(toks))
-    return staged, toks, n_tok, pr, atl
+    atl = _avg_len(F.col("__t__"), toks)
+    return staged, toks, n_tok, punct_ratio(t), atl
 
 
 def _quality_from(n_tok: Column, pr: Column, atl: Column) -> Column:
-    len_ok = F.when((n_tok >= 5) & (n_tok <= 100000), 1.0).otherwise(0.0)
+    """:func:`quality_score` from the token count, punctuation ratio and
+    mean token length; a NULL count (NULL text) scores NULL."""
+    len_ok = F.when(n_tok.isNull(), F.lit(None).cast("double")) \
+              .when((n_tok >= 5) & (n_tok <= 100000), 1.0).otherwise(0.0)
     pr0 = F.coalesce(pr, F.lit(0.0))
     punct_ok = F.when(pr0 <= 0.2, 1.0).otherwise(
         F.greatest(F.lit(0.0), 1.0 - (pr0 - 0.2) * 4.0))
@@ -474,6 +463,9 @@ def _quality_from(n_tok: Column, pr: Column, atl: Column) -> Column:
 
 
 def _lang_from(text: Column, toks: Column) -> Column:
+    """:func:`lang_id` of ``text`` given its lowercased token array; the
+    marker argmax is chained comparisons (ties go to the first language
+    in ``_LANG_MARKERS``)."""
     has_cjk = F.length(F.regexp_replace(text, r"[^一-鿿]", "")) > 0
     expr = F.lit("unknown")
     best = F.lit(0)

@@ -1285,6 +1285,54 @@ def _observe_on_clone(df: DataFrame, *metrics, confs=None):
     return clone.observe(obs, *metrics), obs
 
 
+def _batch_history(spark, corpus_path: str, batch_id: int | None,
+                   op: str, sub: str = "") -> DataFrame | None:
+    """The batches of the ``batch_id``-partitioned table at
+    ``corpus_path + sub`` other than ``batch_id`` (every batch when it is
+    ``None``), or ``None`` when no such batch is written. The current
+    batch is left out by a partition filter, so a replayed batch never
+    dedups against its own half-written partition. The batches are found
+    with ``os.listdir``, so the path must be local:
+    :func:`_require_local_path` raises for any other scheme before
+    anything is written, and a ``file://`` path is listed without its
+    scheme."""
+    path = _require_local_path(corpus_path, op) + sub
+    current = f"batch_id={batch_id}"
+    if not os.path.isdir(path) or not any(
+            f.startswith("batch_id=") and f != current
+            for f in os.listdir(path)):
+        return None
+    hist = spark.read.parquet(path)
+    if batch_id is None:
+        return hist
+    return hist.filter(F.col("batch_id") != batch_id)
+
+
+def _write_batch(rows: DataFrame, path: str, batch_id: int,
+                 batch: DataFrame | None = None) -> dict:
+    """Write ``rows`` as partition ``batch_id=N`` of the table at
+    ``path`` with dynamic partition overwrite, so a replayed batch
+    rewrites its own partition and no other. The conf is set on the
+    session clone the write runs on (:func:`_observe_on_clone`), never
+    on the caller's session. Returns the write's observation:
+    ``rows_out``, the rows written, and with ``batch`` also ``rows_in``,
+    the batch's row count. The batch's rows ride the write plan up to
+    the observation and are filtered out right after it, so no extra
+    job counts them."""
+    tagged = rows.withColumn("__w__", F.lit(True))
+    metrics = [F.count_if("__w__").alias("rows_out")]
+    if batch is not None:
+        tagged = tagged.unionByName(batch.withColumn("__w__", F.lit(False)))
+        metrics.append(F.count_if(~F.col("__w__")).alias("rows_in"))
+    out, obs = _observe_on_clone(
+        tagged, *metrics,
+        confs={"spark.sql.sources.partitionOverwriteMode": "dynamic"})
+    (out.filter("__w__").drop("__w__")
+        .withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite").partitionBy("batch_id").parquet(path))
+    return obs.get
+
+
 def _merge_observed(spark: SparkSession, target_path: str,
                     source: DataFrame, keys, *, fmt: str,
                     when_matched: str, insert_unmatched: bool) -> dict:

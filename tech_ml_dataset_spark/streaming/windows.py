@@ -12,13 +12,13 @@ correctness oracle checks; the streaming form is the production path.
 from __future__ import annotations
 
 import logging
-import os
 import time
 from collections.abc import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..operators.aggregate import resolve_reducer
+from ..sources.io import _batch_history, _require_local_path, _write_batch
 
 _log = logging.getLogger("tech_ml_dataset_spark")
 
@@ -292,55 +292,6 @@ def upsert_batch_apply(batch_df: DataFrame, target_path: str, keys, *,
                matched=st["matched"], inserted=st["inserted"])
 
 
-def _batch_history(spark, corpus_path: str, batch_id: int, op: str,
-                   sub: str = "") -> DataFrame | None:
-    """The earlier batches of the ``batch_id``-partitioned corpus table at
-    ``corpus_path + sub``, or ``None`` when no other batch is written.
-    The current batch is left out (a partition filter), so a replayed
-    batch never dedups against its own half-written partition. The
-    earlier batches are found with ``os.listdir``, so the path must be
-    local: :func:`~tech_ml_dataset_spark.sources.io._require_local_path`
-    raises for any other scheme before anything is written, and a
-    ``file://`` path is listed without its scheme."""
-    from ..sources.io import _require_local_path
-
-    path = _require_local_path(corpus_path, op) + sub
-    current = f"batch_id={batch_id}"
-    if not os.path.isdir(path) or not any(
-            f.startswith("batch_id=") and f != current
-            for f in os.listdir(path)):
-        return None
-    return spark.read.parquet(path).filter(F.col("batch_id") != batch_id)
-
-
-def _write_batch(rows: DataFrame, path: str, batch_id: int,
-                 batch: DataFrame | None = None) -> dict:
-    """Write ``rows`` as partition ``batch_id=N`` of the table at
-    ``path`` with dynamic partition overwrite, so a replayed batch
-    rewrites its own partition and no other. The conf is set on the
-    session clone the write runs on
-    (:func:`~tech_ml_dataset_spark.sources.io._observe_on_clone`), never
-    on the caller's session. Returns the write's observation:
-    ``rows_out``, the rows written, and with ``batch`` also ``rows_in``,
-    the batch's row count. The batch's rows ride the write plan up to
-    the observation and are filtered out right after it, so no extra
-    job counts them."""
-    from ..sources.io import _observe_on_clone
-
-    tagged = rows.withColumn("__w__", F.lit(True))
-    metrics = [F.count_if("__w__").alias("rows_out")]
-    if batch is not None:
-        tagged = tagged.unionByName(batch.withColumn("__w__", F.lit(False)))
-        metrics.append(F.count_if(~F.col("__w__")).alias("rows_in"))
-    out, obs = _observe_on_clone(
-        tagged, *metrics,
-        confs={"spark.sql.sources.partitionOverwriteMode": "dynamic"})
-    (out.filter("__w__").drop("__w__")
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite").partitionBy("batch_id").parquet(path))
-    return obs.get
-
-
 def streaming_dedup_sink(df: DataFrame, corpus_path: str, *,
                          checkpoint: str, text_col: str = "text",
                          id_col: str = "doc_id"):
@@ -353,8 +304,10 @@ def streaming_dedup_sink(df: DataFrame, corpus_path: str, *,
 
     Replay idempotency (the part foreachBatch does NOT give for free):
     accepted docs land under ``batch_id=N`` partition directories, written
-    with dynamic partition OVERWRITE (:func:`_write_batch`) — and the
-    history read EXCLUDES the current batch id (:func:`_batch_history`),
+    with dynamic partition OVERWRITE
+    (:func:`~tech_ml_dataset_spark.sources.io._write_batch`) — and the
+    history read EXCLUDES the current batch id
+    (:func:`~tech_ml_dataset_spark.sources.io._batch_history`),
     so a replayed batch N never deduplicates against its own failed
     half-write and simply rewrites its directory. At-least-once delivery
     therefore converges to exactly the same corpus. The fingerprint and
@@ -375,7 +328,6 @@ def streaming_dedup_sink(df: DataFrame, corpus_path: str, *,
 
     Returns the started query handle (availableNow trigger). Each batch
     runs :func:`text_dedup_batch_apply`."""
-    from ..sources.io import _require_local_path
     corpus_path = _require_local_path(corpus_path, "streaming_dedup_sink")
 
     def _apply(batch_df: DataFrame, batch_id: int):
@@ -467,7 +419,6 @@ def streaming_fingerprint_dedup_sink(df: DataFrame, corpus_path: str, *,
     :func:`streaming_dedup_sink`. Local-filesystem target only (same
     contract). Returns the started query handle. Each batch runs
     :func:`fingerprint_dedup_batch_apply`."""
-    from ..sources.io import _require_local_path
     corpus_path = _require_local_path(corpus_path,
                                       "streaming_fingerprint_dedup_sink")
 
@@ -489,11 +440,13 @@ def streaming_neardup_sink(df: DataFrame, corpus_path: str, *,
     """Continuous crawl ingest with NEAR-duplicate dedup — the MinHash
     face of :func:`streaming_dedup_sink`: each micro-batch is (a)
     minhash-deduped within itself and (b) probed against the persisted
-    LSH index of everything already accepted (``<corpus_path>/index`` —
-    the :func:`~tech_ml_dataset_spark.functions.dedup.minhash_index_write`
-    layout plus a batch_id partition level); survivors land under
-    ``<corpus_path>/docs/batch_id=N`` and their bands/shingles are
-    appended to the index under the same batch_id.
+    LSH index of everything already accepted (``<corpus_path>/index``, a
+    :func:`~tech_ml_dataset_spark.functions.dedup.minhash_index_write`
+    index that :func:`~tech_ml_dataset_spark.functions.dedup.minhash_index_probe`
+    reads); survivors land under ``<corpus_path>/docs/batch_id=N`` and
+    their bands/shingles are written to the index under the same
+    batch_id. The index stores its banding parameters, and a batch with
+    other ones raises.
 
     Replay idempotency: all three tables use the ``batch_id=N`` corpus
     layout of :func:`streaming_dedup_sink`, and the index read EXCLUDES
@@ -509,7 +462,6 @@ def streaming_neardup_sink(df: DataFrame, corpus_path: str, *,
     streaming_dedup_sink contract). Each batch runs
     :func:`neardup_batch_apply`. Returns the started query handle
     (availableNow trigger)."""
-    from ..sources.io import _require_local_path
     corpus_path = _require_local_path(corpus_path, "streaming_neardup_sink")
 
     def _apply(batch_df: DataFrame, batch_id: int):
@@ -529,33 +481,40 @@ def neardup_batch_apply(batch_df: DataFrame, batch_id: int,
                         hash_fn: str = "xxhash64") -> None:
     """ONE micro-batch of the MinHash near-dup sink, the function
     :func:`streaming_neardup_sink`'s foreachBatch calls; a loop over an
-    ordered batch list calls it with ``batch_id=i``. Minhash-dedups the
-    batch, drops docs that near-match the accepted index (earlier
-    batches only), then writes the survivors to ``docs`` and their bands
-    and shingle sets to ``index/bands`` and ``index/shingles``, each
-    under ``batch_id=N``. Logs one INFO record (op ``neardup_batch``;
-    ``rows_in`` batch rows, ``rows_out`` docs accepted), observed on the
-    docs write."""
-    from ..functions.dedup import (_drop_named, _shingle_and_band,
-                                   _verified_cross_pairs, minhash_dedup)
+    ordered batch list calls it with ``batch_id=i``. A doc is dropped when
+    it near-matches a doc with a smaller id in the batch (the
+    :func:`~tech_ml_dataset_spark.functions.dedup.minhash_dedup` rule)
+    or a doc of an earlier batch in ``<corpus_path>/index``, a
+    :func:`~tech_ml_dataset_spark.functions.dedup.minhash_index_write`
+    index. The batch is shingled and banded once; both pair sets come
+    from that one banded table, and the surviving ids are materialized
+    once. The survivors go to ``docs`` and their shingle sets and bands
+    to the index, each under ``batch_id=N``. Banding parameters other
+    than the index's stored ones raise before anything is written. Logs
+    one INFO record (op ``neardup_batch``; ``rows_in`` batch rows,
+    ``rows_out`` docs accepted), observed on the docs write."""
+    from ..dtutil import materialize
+    from ..functions.dedup import (_drop_named, _index_pairs, _index_params,
+                                   _index_write, _shingle_and_band,
+                                   _verified_pairs)
     op = "neardup_batch"
-    params = dict(k=k, n_hashes=n_hashes, bands=bands, seed=seed,
-                  hash_fn=hash_fn)
+    banding = dict(k=k, n_hashes=n_hashes, bands=bands, seed=seed,
+                   hash_fn=hash_fn)
+    corpus_path = _require_local_path(corpus_path, op)
+    index = _index_params(corpus_path + "/index", op,
+                          dict(banding, id_col=id_col), create=True)
 
     t0 = time.perf_counter()
-    spark = batch_df.sparkSession
-    fresh = minhash_dedup(batch_df, id_col, text_col, threshold=threshold,
-                          **params)
-    band_h = _batch_history(spark, corpus_path, batch_id, op, "/index/bands")
-    if band_h is not None:
-        sh_h = _batch_history(spark, corpus_path, batch_id, op,
-                              "/index/shingles")
-        sh_n, band_n = _shingle_and_band(fresh, id_col, text_col, **params)
-        matched = _verified_cross_pairs(sh_n, band_n, sh_h, band_h, id_col,
-                                        threshold)
-        fresh = _drop_named(fresh, matched, "new_id", id_col)
-    sh, banded = _shingle_and_band(fresh, id_col, text_col, **params)
-    m = _write_batch(fresh, corpus_path + "/docs", batch_id, batch_df)
-    _write_batch(banded, corpus_path + "/index/bands", batch_id)
-    _write_batch(sh, corpus_path + "/index/shingles", batch_id)
+    sh, banded = _shingle_and_band(batch_df, id_col, text_col, **banding)
+    # read by both sides of the self-join, the index probe and the write
+    banded = materialize(banded)
+    within = _verified_pairs(banded, sh, id_col, threshold)
+    across = _index_pairs(banded, sh, index, id_col, threshold, op, batch_id)
+    keep = materialize(_drop_named(
+        _drop_named(batch_df.select(id_col), within, "id_b", id_col),
+        across, "new_id", id_col))
+    m = _write_batch(batch_df.join(keep, id_col, "left_semi"),
+                     corpus_path + "/docs", batch_id, batch_df)
+    _index_write(sh.join(keep, id_col, "left_semi"),
+                 banded.join(keep, id_col, "left_semi"), index, batch_id)
     _log_batch(op, batch_id, m["rows_in"], m["rows_out"], t0)

@@ -1,5 +1,7 @@
 """Tests for the dedup family: exact, MinHash+LSH, SimHash, n-gram Jaccard."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -100,9 +102,9 @@ def test_minhash_dedup_incremental(spark, docs):
 
 def test_minhash_index_write_probe_roundtrip(spark, docs, tmp_path):
     """Persisted LSH index: probe finds the same pairs as the direct
-    cross-corpus join; append grows the index; mismatched banding
-    parameters raise instead of silently finding nothing."""
-    import pytest as _pt
+    cross-corpus join; a second batch grows the index and rewriting it
+    replaces it; mismatched banding parameters and a remote path raise
+    instead of silently finding nothing."""
     path = str(tmp_path / "lsh_index")
     hist = docs.filter(F.col("doc_id") == 1)
     dd.minhash_index_write(hist, path, n_hashes=64, bands=16)
@@ -111,19 +113,25 @@ def test_minhash_index_write_probe_roundtrip(spark, docs, tmp_path):
            for r in dd.minhash_index_probe(new, path, threshold=0.5,
                                            n_hashes=64, bands=16).collect()}
     assert got == {(2, 1), (3, 1)}
-    # append the rest of the corpus, re-probe: doc 4 now matches itself
-    dd.minhash_index_write(docs.filter(F.col("doc_id") == 4), path,
-                           n_hashes=64, bands=16, mode="append")
-    got2 = {(r["new_id"], r["hist_id"])
+    # write the rest of the corpus as batch 1, twice (a rerun after a
+    # failed write), re-probe: doc 4 now matches itself, once
+    for _ in range(2):
+        dd.minhash_index_write(docs.filter(F.col("doc_id") == 4), path,
+                               n_hashes=64, bands=16, batch_id=1)
+    got2 = [(r["new_id"], r["hist_id"])
             for r in dd.minhash_index_probe(new, path, threshold=0.5,
-                                            n_hashes=64, bands=16).collect()}
-    assert got2 == {(2, 1), (3, 1), (4, 4)}
-    with _pt.raises(ValueError, match="different parameters"):
+                                            n_hashes=64, bands=16).collect()]
+    assert sorted(got2) == [(2, 1), (3, 1), (4, 4)]
+    with pytest.raises(ValueError, match="different parameters"):
         dd.minhash_index_probe(new, path, threshold=0.5,
                                n_hashes=32, bands=8)
-    with _pt.raises(ValueError, match="different parameters"):
+    with pytest.raises(ValueError, match="different parameters"):
         dd.minhash_index_write(hist, path, n_hashes=32, bands=8,
-                               mode="append")
+                               batch_id=2)
+    assert sorted(f for f in os.listdir(path + "/bands")
+                  if f.startswith("batch_id=")) == ["batch_id=0", "batch_id=1"]
+    with pytest.raises(ValueError, match="s3a"):
+        dd.minhash_index_write(hist, "s3a://bucket/lsh_index")
 
 
 def test_simhash_md5_hash_fn(spark, docs):
@@ -212,8 +220,8 @@ def test_dedup_clusters_chain_diameter(spark):
 
 
 def test_dedup_clusters_warns_on_nonconvergence(spark):
-    """ADVICE r2 (low): exhausting max_iter used to return silently wrong
-    (non-converged) labels; now it warns so callers can raise max_iter."""
+    """Exhausting max_iter used to return silently wrong (non-converged)
+    labels; now it warns so callers can raise max_iter."""
     import warnings
     pairs = spark.createDataFrame([(i, i + 1) for i in range(7)], ["id_a", "id_b"])
     nodes = spark.createDataFrame([(i,) for i in range(8)], ["doc_id"])
@@ -303,7 +311,7 @@ def test_similarity_join_max_df_bounds_index(spark, docs):
 
 
 def test_similarity_join_max_df_keeps_full_prefix_length(spark):
-    """ADVICE r3: with max_df set, __n__ used to count only tokens
+    """With max_df set, __n__ used to count only tokens
     SURVIVING the max_df filter, shrinking prefixes and losing candidate
     pairs beyond the documented index-truncation effect. Construction:
     A = w1..w9 a0, B = w1..w9 b0 (J = 9/11 ≈ 0.818 ≥ t=0.8); three filler
@@ -324,7 +332,7 @@ def test_similarity_join_max_df_keeps_full_prefix_length(spark):
 
 
 def test_similarity_join_prefix_ceil_is_exact_arithmetic(spark):
-    """r4 review: ceil over binary floats over-ceils at exact products
+    """Ceil over binary floats over-ceils at exact products
     (0.07*100 = 7.000000000000001 -> ceil 8), shortening the prefix by one
     and silently losing qualifying pairs. Construction: left doc A holds
     100 distinct words, 7 of them shared with right doc B (J = 7/100 =
@@ -468,7 +476,7 @@ def test_semdedup_max_cluster_size_sub_buckets(spark):
 
 
 def test_shingles_short_docs_emit_partial_gram(spark):
-    """r4 review: the zip_with shingle rewrite returned an EMPTY array for
+    """The zip_with shingle rewrite returned an EMPTY array for
     docs with fewer than k tokens, where the original law (and every
     DuckDB oracle, via the clamping slice over greatest(n-k+1, 1)) emits
     ONE partial gram — all tokens joined. Consequences of the empty law:
@@ -588,7 +596,7 @@ def test_fuzzy_join_matches_bruteforce(spark):
 
 
 def test_exact_substring_dedup_maximal_spans(spark):
-    """r8 (Lee et al. 2022 ExactSubstr): a duplicated run LONGER than k
+    """Lee et al. 2022 ExactSubstr: a duplicated run LONGER than k
     is removed in its ENTIRETY from every non-canonical occurrence
     (overlapping k-windows union to the maximal span), the canonical
     (lowest id, pos) occurrence survives intact, unique text is
@@ -621,7 +629,7 @@ def test_exact_substring_dedup_maximal_spans(spark):
 
 
 def test_survivor_election_plans_are_window_free(spark):
-    """r8 skew hardening pinned at the PLAN level: the keep_by argmax
+    """Skew hardening pinned at the PLAN level: the keep_by argmax
     paths and the span-dedup canonical elections compile to partial-
     aggregable HashAggregates + joins — no Window operator (whose
     per-fingerprint partition funnels hot keys through one reducer)."""

@@ -916,6 +916,23 @@ def test_text_stats_null_semantics(spark):
     assert r[2]["tc"] == 7 and r[2]["q"] > 0.5 and 0 < r[2]["sw"] < 1
 
 
+def test_fused_text_features_match_the_column_functions(spark):
+    """with_quality_lang gives what lang_id, quality_score and
+    token_count give, NULL text included (the fused path scored a NULL
+    text 0.5 with -1 tokens)."""
+    df = spark.createDataFrame(
+        [(1, None), (2, "the cat sat on a mat ok"), (3, ""),
+         (4, "你好 世界"), (5, "!!! ??? ...")], "doc_id long, text string")
+    fused = {r["doc_id"]: (r["lang_pred"], r["quality"], r["n_tokens"])
+             for r in txt.with_quality_lang(df).collect()}
+    t = F.col("text")
+    cols = {r[0]: tuple(r[1:]) for r in df.select(
+        "doc_id", txt.lang_id(t), txt.quality_score(t),
+        txt.token_count(t)).collect()}
+    assert fused == cols
+    assert fused[1][1:] == (None, None)
+
+
 def test_quality_classifier_separates_good_from_garbage(spark):
     from tech_ml_dataset_spark.functions import text as txt
     good = [(i, f"a clear readable sentence about topic {i} with "

@@ -1232,14 +1232,17 @@ def test_distinct_reducer_sorted_issue_314(spark):
 
 
 def test_small_api_batch(spark):
-    """dataset_api.clj small-surface parity: shape (column-major), row-at
-    / rowvec-at with negative indices, empty-column detection in ONE agg
-    pass, positional append-columns, and column metadata round-trip."""
+    """dataset_api.clj small-surface parity: shape (column-major, on the
+    frame and on the Dataset wrapper), row-at / rowvec-at with negative
+    indices, empty-column detection in ONE agg pass, positional
+    append-columns, and column metadata round-trip."""
+    from tech_ml_dataset_spark.dataset import Dataset
     from tech_ml_dataset_spark.operators import colmap as cm
     df = spark.createDataFrame(
         [(1, "a", None), (2, "b", None), (3, "c", None)],
         "i long, s string, z string")
     assert sel.shape(df) == [3, 3]
+    assert Dataset(df.select("i", "s")).shape() == [2, 3]
     assert sel.row_at(df, 1, order_by="i") == {"i": 2, "s": "b", "z": None}
     assert sel.row_at(df, -1, order_by="i")["i"] == 3
     assert sel.rowvec_at(df, -3, order_by="i") == [1, "a", None]

@@ -740,6 +740,33 @@ def test_snapshot_normalise_masks_lambda_ids():
                 "ExistingRDD"])
 
 
+def test_no_function_is_defined_twice():
+    """No module or class body in the package, the registry or the tests
+    binds one function name twice: the later definition silently replaces
+    the earlier one (no Spark)."""
+    import ast
+    import glob
+    import os
+    from collections import Counter
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    defs = (ast.FunctionDef, ast.AsyncFunctionDef)
+    twice = []
+    for pkg in ("tech_ml_dataset_spark", "registry", "tests"):
+        for path in glob.glob(os.path.join(root, pkg, "**", "*.py"),
+                              recursive=True):
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            bodies = [tree] + [n for n in ast.walk(tree)
+                               if isinstance(n, ast.ClassDef)]
+            for body in bodies:
+                names = Counter(n.name for n in body.body
+                                if isinstance(n, defs))
+                twice += [f"{os.path.relpath(path, root)}:{name}"
+                          for name, n in names.items() if n > 1]
+    assert twice == []
+
+
 def test_materialize_is_the_only_checkpoint_call():
     """Every checkpoint in the package and the registry goes through
     ``dtutil.materialize``, the one place that decides where and when an

@@ -5,10 +5,11 @@ Two protocols are under test. The crash-safe swap (``sources.io``
 ``_recover_swap`` / ``_swap_in``) has two users: the copy-on-write MERGE
 ``merge_upsert`` (behind ``streaming.windows.upsert_batch_apply``) and
 ``compact_files``. The ``batch_id=N`` corpus layout
-(``streaming.windows`` ``_batch_history`` / ``_write_batch``) has three:
+(``sources.io`` ``_batch_history`` / ``_write_batch``) has three:
 ``text_dedup_batch_apply`` (exact text dedup),
 ``fingerprint_dedup_batch_apply`` (64-bit media fingerprints) and
-``neardup_batch_apply`` (MinHash, corpus plus LSH index). A fault at
+``neardup_batch_apply`` (MinHash, corpus plus a ``minhash_index_write``
+index). A fault at
 any step followed by a replay of the same batch or call must give the
 table an uninterrupted run gives. A replay is a plain loop over the
 batch function, ``for i, b in enumerate(batches): apply(b, i, ...)``.
@@ -36,6 +37,10 @@ def _rows(spark, path):
 def _leftovers(path, tag):
     return [p for p in (f"{path}.__{tag}_tmp__", f"{path}.__{tag}_old__")
             if os.path.exists(p)]
+
+
+def _batch_dirs(path):
+    return sorted(f for f in os.listdir(path) if f.startswith("batch_id="))
 
 
 def _part_files(path):
@@ -233,6 +238,37 @@ def test_text_dedup_jobs_per_batch_do_not_grow_with_history(
     assert jobs[4] <= jobs[2], jobs
     # 4 for the first batch, 10 once there is history to probe
     assert max(jobs.values()) <= 10, jobs
+
+
+def test_neardup_jobs_per_batch(spark, tmp_path, count_jobs):
+    """A near-dup batch is shingled and banded once and its surviving ids
+    materialized once: 20 jobs with no history, 26 with it (banding per
+    step and lazy writes ran 30 and 78)."""
+    corpus = str(tmp_path / "corpus")
+    jobs = [count_jobs(lambda: windows.neardup_batch_apply(b, i, corpus))[1]
+            for i, b in enumerate(_doc_batches(spark))]
+    assert jobs[0] <= 20 and max(jobs) <= 26, jobs
+
+
+def test_neardup_index_keeps_its_banding_parameters(spark, tmp_path):
+    """The sink's index is a MinHash index: minhash_index_probe reads it,
+    and a batch banded with other parameters raises before anything is
+    written (it used to accept an exact duplicate of an accepted doc)."""
+    from tech_ml_dataset_spark.functions import dedup as dd
+
+    corpus = str(tmp_path / "corpus")
+    first, again = [spark.createDataFrame([(i, "the same text")],
+                                          "doc_id long, text string")
+                    for i in (1, 2)]
+    windows.neardup_batch_apply(first, 0, corpus, k=5)
+    tables = ("/docs", "/index/bands", "/index/shingles")
+    before = _tables(spark, corpus, tables)
+    with pytest.raises(ValueError, match="different parameters"):
+        windows.neardup_batch_apply(again, 1, corpus, k=3)
+    assert _tables(spark, corpus, tables) == before
+    assert [_batch_dirs(corpus + t) for t in tables] == [["batch_id=0"]] * 3
+    pairs = dd.minhash_index_probe(again, corpus + "/index").collect()
+    assert [tuple(r) for r in pairs] == [(2, 1, 1.0)]
 
 
 def test_exact_incremental_dedup_plan_runs_no_python(spark):

@@ -60,7 +60,7 @@ def test_streaming_end_to_end(spark, sf_dir, tmp_path):
 
 
 def test_watermark_append_late_drop_law(spark, tmp_path):
-    """r8: the append-mode watermark semantics pinned EXACTLY, not just
+    """The append-mode watermark semantics pinned EXACTLY, not just
     'some windows emitted': with one file per micro-batch (explicit
     mtimes fix the source order), a late row still >= the watermark
     merges into its hour window, a row older than the watermark is
@@ -254,7 +254,7 @@ def test_streaming_upsert_sink_merges_batches(spark, tmp_path):
 def test_streaming_upsert_sink_warns_without_sequence_by(spark, tmp_path):
     """No sequence_by -> monotonically_increasing_id fallback, which is
     only replay-stable for single-partition batches; the sink must say so
-    up front (ADVICE r3)."""
+    up front."""
     import pytest as _pt
     tgt = str(tmp_path / "tgt2")
     spark.createDataFrame([(1, 1.0)], ["id", "v"]).write.parquet(tgt)

@@ -7,20 +7,22 @@ cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.01}"
 
 echo "== 1/8 registry structure, driver window, snapshot normalisation,"
-echo "   the one checkpoint call, class-data-sharing archive"
-echo "   (no Spark, seconds)"
+echo "   the one checkpoint call, no function defined twice,"
+echo "   class-data-sharing archive (no Spark, seconds)"
 python -m pytest tests/test_plans.py tests/test_session.py -q -p no:cacheprovider \
-    -k "test_registry_structure or test_driver_window_integrity or test_snapshot_normalise or test_materialize_is_the_only or test_zip_importer or (test_cds and not test_cds_driver)" \
+    -k "test_registry_structure or test_driver_window_integrity or test_snapshot_normalise or test_materialize_is_the_only or test_no_function_is_defined_twice or test_zip_importer or (test_cds and not test_cds_driver)" \
     2>&1 | tail -1
 
 echo "== 2/8 Python worker daemon, archive use by driver processes, then sinks:"
 echo "   fault replays, merge_upsert contract, jobs per batch, the streaming"
-echo "   sink wrappers (~7 min)"
+echo "   sink wrappers, the MinHash index (~7 min)"
 python -m pytest tests/test_session.py -q -x -p no:cacheprovider \
     -k "test_worker_task or test_python_udf or test_cds_driver" 2>&1 | tail -1
 python -m pytest tests/test_sinks.py tests/test_models_io.py -q \
     -x -p no:cacheprovider -k "test_sinks or merge_upsert" 2>&1 | tail -1
 python -m pytest tests/test_streaming.py -q -x -p no:cacheprovider -k sink \
+    2>&1 | tail -1
+python -m pytest tests/test_dedup.py -q -x -p no:cacheprovider -k minhash \
     2>&1 | tail -1
 
 echo "== 3/8 full-registry vanilla sweep (the canonical correctness gate)"
